@@ -14,8 +14,9 @@ object ProfileOne {
     // protocol-v2 split grain (TimeQueries has the same knob)
     val maxPart = sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES",
       (128L * 1024 * 1024).toString)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.files.maxPartitionBytes", maxPart)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

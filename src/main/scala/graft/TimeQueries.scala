@@ -14,7 +14,7 @@ object TimeQueries {
     val dir = args(0)
     val names = args(1).split(",").toSeq
     val runs = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // match BenchHeavy's protocol-v2 split grain when timing against the
     // heavy dir (its 1 MB row groups only split under a small bound):
     // SPARK_GRAFT_MAX_PARTITION_BYTES=131072

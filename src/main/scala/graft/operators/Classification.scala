@@ -114,18 +114,16 @@ object Classification {
     //    into one graft_nb_seen codegen loop, so scoring is a pure
     //    projection: no per-token rows, no lookup join, no per-doc
     //    re-aggregate;
-    //  - JOIN (the 100 TB-vocabulary path, and the A/B baseline —
-    //    GRAFT_NB_FUSED=0 forces it): per-doc tf frame (shuffle-free off
-    //    the scan), ONE token-keyed lookup join (broadcast under the
-    //    bound, else key-bounded shuffle-hash), ONE per-doc aggregate
-    //    (partial aggregation collapses per doc map-side).
+    //  - JOIN (the 100 TB-vocabulary path; `fused = Some(false)` pins
+    //    it): per-doc tf frame (shuffle-free off the scan), ONE
+    //    token-keyed lookup join (broadcast under the bound, else
+    //    key-bounded shuffle-hash), ONE per-doc aggregate (partial
+    //    aggregation collapses per doc map-side).
     // cnt ≤ vocab × nLabels bounds the collect decision exactly:
     // cnt > maxFusedVocabRows × nLabels ⇒ vocab > maxFusedVocabRows.
-    val wantFused = fused.getOrElse(
-      sys.env.get("GRAFT_NB_FUSED").forall(_ != "0"))
     val collected =
-      if ((wantFused || fused.contains(true)) &&
-          cnt <= maxFusedVocabRows * nLabels) Some(cCounts.collect())
+      if (fused.getOrElse(true) && cnt <= maxFusedVocabRows * nLabels)
+        Some(cCounts.collect())
       else None
     val vocab: Long = collected match {
       case Some(rows) =>
@@ -144,7 +142,7 @@ object Classification {
             s"($maxFusedVocabRows) — use the join form or raise the bound")
         true
       case Some(false) => false
-      case None => wantFused && vocab <= maxFusedVocabRows
+      case None => vocab <= maxFusedVocabRows
     }
     val labelRows = nbLabelRows(spark, lsRows, nTrain, vocab, quantScale)
     val labels = labelRows.map(_._1)

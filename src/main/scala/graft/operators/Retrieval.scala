@@ -46,13 +46,13 @@ object Retrieval {
   /** Largest distinct-query count [[bm25RankQueries]] routes to the FUSED
     * (Q-pass) kernel by default; above it the r15 single-pass MULTI
     * kernel takes over (the join form is never routed — it is dominated
-    * at every measured Q — and stays available as a pinned A/B shape).
-    * Measured crossover (AbBm25Multi, bigram 931-token vocabulary,
-    * factor 30, best-of-5, r15): Q=2 fused 2.57 s vs multi 2.90; Q=4
+    * at every measured Q — and is reachable only by pinning it).
+    * Measured crossover (BASELINE r15: bigram 931-token vocabulary,
+    * factor 30, best-of-5): Q=2 fused 2.57 s vs multi 2.90; Q=4
     * 2.92 vs 2.96 (wash); Q=8 multi ahead 3.13 vs 3.36 and the lead
     * grows with Q (Q=64: 7.41 vs 11.15). Was 32 in r13/r14 when the
-    * choice was fused-vs-join. Callers pin a shape with the `fused`
-    * param or the GRAFT_BM25_MULTI_FUSED env.
+    * choice was fused-vs-join. The per-call `fused` param is the only
+    * pin.
     */
   val FusedQueryRouteMax: Long = 4L
 
@@ -124,7 +124,7 @@ object Retrieval {
     val qdist = query.select("token").distinct()
     Ann.requireSmallQuerySet(qdist, "bm25Rank query", Ann.DefaultMaxQueryRows)
     // two plan shapes with byte-identical scores (td49/td53 oracle hashes
-    // hold on either; the A/B dial is GRAFT_BM25_FUSED=0/1):
+    // hold on either; the per-call `fused` param pins one):
     //  - FUSED — THE DEFAULT since r12: the query set collects
     //    (query-sized — already the broadcast bound above) and inlines
     //    into two codegen expressions. Census pass: graft_query_hits
@@ -137,24 +137,15 @@ object Retrieval {
     //    per-doc re-aggregate. The r11 wash was a narrow-vocabulary
     //    artifact: the fixture's 31-word universe lets a one-doc query
     //    cover ~80% of all tokens, so the cut kills almost nothing. The
-    //    r12 same-session A/B (AbBm25Bigram, factor 30) reads unigram
+    //    r12 same-session A/B (BASELINE r12, factor 30) reads unigram
     //    join 2.69 s vs fused 2.68 s (wash) but bigram — 931 tokens,
     //    query covering ~6%, the direction every real vocabulary goes —
     //    join 2.68 s vs fused 2.09 s best-of-5: the fusion's saved
     //    explode volume GROWS with the vocabulary, which is the 100 TB
     //    regime (BASELINE r12).
-    //  - JOIN: the r9 candidate-cut shape below — the GRAFT_BM25_FUSED=0
-    //    fallback and A/B baseline, row-identity spec-pinned.
-    val useFused = fused.getOrElse(
-      sys.env.get("GRAFT_BM25_FUSED") match {
-        case None | Some("1") => true
-        case Some("0") => false
-        // fail loud: a typo'd dial ("false", "") silently selecting the
-        // fused kernel would corrupt an A/B's join arm
-        case Some(other) => throw new IllegalArgumentException(
-          s"GRAFT_BM25_FUSED must be 0 or 1, got '$other'")
-      })
-    if (useFused) {
+    //  - JOIN: the r9 candidate-cut shape below — reached only with
+    //    `fused = Some(false)`, row-identity spec-pinned.
+    if (fused.getOrElse(true)) {
       val qTokens = qdist.collect().map(_.getString(0)).sorted
       val qIdx = qTokens.zipWithIndex.toMap
       val dfRows = docs.select(F.queryHits(toks, qIdx).as("__h"))
@@ -313,8 +304,7 @@ object Retrieval {
     Ann.requireSmallQuerySet(qTerms, "bm25RankQueries query set",
       Ann.DefaultMaxQueryRows)
     // three plan shapes with byte-identical output (the bm25Rank A/B
-    // discipline, extended to the multi-query kernel — r12 verdict #6;
-    // dial GRAFT_BM25_MULTI_FUSED=0/1/2, measured by graft.AbBm25Multi):
+    // discipline, extended to the multi-query kernel — r12 verdict #6):
     //  - MULTI — the r15 kernel and the default past Q = 4: ONE
     //    graft_query_hits census pass over the UNION token set, then ONE
     //    graft_bm25q_multi projection scoring EVERY query in the same
@@ -331,7 +321,7 @@ object Retrieval {
     //    a shared census, then the per-(query, doc) aggregate and a
     //    query-partitioned rank window — one corpus pass regardless of
     //    Q, at the cost of explode volume and two shuffles.
-    // Routing (r15, AbBm25Multi bigram 931-token vocab, factor 30,
+    // Routing (BASELINE r15, bigram 931-token vocab, factor 30,
     // best-of-5): fused still wins the tiny-Q end — Q=2 fused 2.57 s vs
     // multi 2.90 vs join 3.59; Q=4 fused 2.92 vs multi 2.96 — while the
     // multi kernel wins everywhere past it and grows its lead with Q:
@@ -343,21 +333,9 @@ object Retrieval {
     // routing's extra distinct-count job is gone. All three shapes are
     // byte-identical (A/B parity-asserted + the routing spec), so
     // routing never changes results; decisions in BASELINE.md
-    // r13/r14/r15; override per-call via `fused` or process-wide via
-    // the env (0=join, 1=fused, 2=multi).
-    val pinned: Option[String] = fused match {
-      case Some(true) => Some("fused")
-      case Some(false) => Some("join")
-      case None => sys.env.get("GRAFT_BM25_MULTI_FUSED") match {
-        case Some("1") => Some("fused")
-        case Some("0") => Some("join")
-        case Some("2") => Some("multi")
-        case None => None
-        case Some(other) => throw new IllegalArgumentException(
-          s"GRAFT_BM25_MULTI_FUSED must be 0, 1 or 2, got '$other'")
-      }
-    }
-    if (pinned.contains("join")) {
+    // r13/r14/r15; the per-call `fused` param pins a shape
+    // (Some(true) = fused, Some(false) = join).
+    if (fused.contains(false)) {
       // the bm25Rank candidate-cut shape (see its comment): the broadcast
       // token-set cut rides the explode into both consumers, and the
       // census carries df for every term ANY query uses before fanning
@@ -396,8 +374,7 @@ object Retrieval {
       // workaround was process-global, not per-call)
       if (qRows.isEmpty) return emptyRanked(docs, idCol, qTerms)
       val qGroups = qRows.groupBy(_._1).toSeq.sortBy(_._1.toString)
-      val mode = pinned.getOrElse(
-        if (qGroups.length <= FusedQueryRouteMax) "fused" else "multi")
+      val multi = fused.isEmpty && qGroups.length > FusedQueryRouteMax
       // shared census: one graft_query_hits pass over the union token set
       // serves every query in either kernel
       val unionTokens = qRows.map(_._2).distinct.sorted
@@ -409,7 +386,7 @@ object Retrieval {
         .collect()
       val dfArr = new Array[Long](unionTokens.length)
       dfRows.foreach(r => dfArr(r.getInt(0)) = r.getLong(1))
-      if (mode == "multi") {
+      if (multi) {
         val querySlots: Seq[Seq[Int]] = qGroups
           .map { case (_, rows) => rows.map(r => qIdx(r._2)).distinct.sorted }
         val qids = qGroups.map(_._1)

@@ -521,9 +521,8 @@ object TextAnalysis {
     *
     * Falls back to the r15 join composition — component operators,
     * verbatim — when either model exceeds its inline bound at 100 TB
-    * vocabularies (`fused = Some(false)` or GRAFT_GATE_FUSED=0 pins the
-    * fallback for A/B; parity is spec-pinned and the td54/td58/q60/q61
-    * oracles ride both shapes).
+    * vocabularies (`fused = Some(false)` pins the fallback; parity is
+    * spec-pinned and the td54/td58/q60/q61 oracles ride both shapes).
     */
   def modelGate(train: DataFrame, docs: DataFrame, idCol: String,
       textCol: String, ruleText: Column, labelCol: String,
@@ -531,8 +530,7 @@ object TextAnalysis {
       fused: Option[Boolean] = None): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     val F = graft.functions.GraftFunctions
-    val useFused = fused.getOrElse(
-      sys.env.get("GRAFT_GATE_FUSED").forall(_ != "0"))
+    val useFused = fused.getOrElse(true)
     val lmM = if (useFused) lmInlineModel(train, textCol) else None
     val nbM =
       if (useFused) Classification.nbInlineModel(train, textCol, labelCol)

@@ -466,7 +466,7 @@ object Dedup extends QuerySet {
     * synthesizes the adversarial real-world shape deterministically from
     * doc_ids alone: consecutive ids form twin PAIRS sharing 21 md5-hex
     * tokens unique to the pair — an effectively unbounded vocabulary, the
-    * AbBm25Bigram direction — with the analytic cluster frame (pair
+    * wide-vocabulary direction BASELINE r12 measured for BM25 — with the analytic cluster frame (pair
     * minimum) standing in for dd36. Cluster-safe assignment keeps every
     * twin pair on one side of the boundary: its contamination count MUST
     * read 0 while the naive doc-hash split strands ~90% of eval docs'

@@ -515,6 +515,13 @@ class CurationSpec extends AnyFunSuite with SparkTestBase {
     assert(labels.forall(_._2 == 1L), "every chain member labels to the min id")
   }
 
+  test("dupClusters rejects non-bigint ids, naming the type it got") {
+    import spark.implicits._
+    val pairs = Seq(("a", "b"), ("b", "c")).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalArgumentException](TextDedup.dupClusters(pairs))
+    assert(e.getMessage.contains("string"), e.getMessage)
+  }
+
   test("dupClusters storage hygiene: the loop leaves at most one persisted " +
       "generation and the bench's between-entry sweep frees it (r16)") {
     import spark.implicits._
@@ -542,7 +549,7 @@ class CurationSpec extends AnyFunSuite with SparkTestBase {
       "at few partitions with the fixed point unchanged (r16)") {
     import spark.implicits._
     // two components + a chain; the adaptive grain (derived from the edge
-    // count) must not change the result vs the DataFrame loop pinned above
+    // count) must not change the hand-computed components below
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L), (12L, 13L),
       (20L, 21L)).toDF("doc_a", "doc_b")
     val got = TextDedup.dupClusters(pairs).collect()

@@ -163,52 +163,12 @@ class PlanContractsSpec extends AnyFunSuite with SparkTestBase {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
-  test("checkpoint preserves the edge frame's partitioning: per-round join exchanges only the label side") {
-    import spark.implicits._
-    // the dupClusters per-round contract: the edge frame is repartitioned +
-    // sorted on src ONCE at checkpoint, and every round's neighbor join
-    // must exchange only the O(nodes) label frame. This rides on Spark
-    // preserving outputPartitioning/outputOrdering through
-    // Dataset.localCheckpoint (LogicalRDD) — if an upgrade drops that, the
-    // multi-billion-row edge side reshuffles EVERY round and this pins it.
-    // pin the 100 TB planner decision: labels past the broadcast threshold
-    // (at bench scale a node frame broadcasts and neither side exchanges —
-    // also fine; the contract protects the big-cluster SMJ path)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val n = spark.sessionState.conf.numShufflePartitions
-      val edges = (1L to 2000L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
-        .toDF("src", "dst")
-        .repartition(n, col("src")).sortWithinPartitions("src")
-        .localCheckpoint(true)
-      val labels = (1L to 2001L).map(i => (i, i)).toDF("id", "label")
-        .localCheckpoint(true)
-      val joined = edges.join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id")).agg(min(col("label")).as("nbr"))
-      val plan = joined.queryExecution.executedPlan.toString
-      // exactly two exchanges: the label side into the sort-merge join and
-      // the min-by-dst aggregate — NONE on the checkpointed edge side, and
-      // no edge re-sort either (the materialized ordering survives)
-      assert(countOf(plan, "Exchange hashpartitioning") == 2,
-        s"expected label-side + aggregate exchanges only:\n$plan")
-      assert(countOf(plan, "Sort ") == 1,
-        s"expected a sort on the label side only:\n$plan")
-      assert(joined.count() == 2001L)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-    }
-  }
-
   test("rdd cluster loop: the partitioner-aligned edge join is narrow — " +
       "no shuffle dependency between the persisted edges and a round's " +
       "neighbor join (the r15 dupClustersRdd contract)") {
-    // the RDD loop's analogue of the two DataFrame-loop contracts below:
-    // edges partitionBy(part) once, labels come out of reduceByKey(part),
-    // so every round's edges.join(labels) must be a narrow cogroup — the
+    // the cluster loop's edge-layout contract: edges partitionBy(part)
+    // once, labels come out of reduceByKey(part), so every round's
+    // edges.join(labels) must be a narrow cogroup — the
     // multi-billion-row edge side never reshuffles. Pinned by dependency
     // TYPE: walking the join's DAG down to the persisted parents must
     // cross zero ShuffleDependency edges.
@@ -235,54 +195,6 @@ class PlanContractsSpec extends AnyFunSuite with SparkTestBase {
       "edges.join(labels) must be partitioner-aligned (narrow)")
     assert(joined.count() == 4000L)
     edges.unpersist(false)
-  }
-
-  test("persist-cached edge frame keeps its partitioning: merge-hinted round join exchanges only the label side") {
-    import spark.implicits._
-    // dupClusters no longer localCheckpoints its edge frame — it
-    // persist()s the repartitioned+sorted plan (columnar InMemoryRelation;
-    // see the OOM note at TextDedup.dupClusters) and merge-hints every
-    // round join. This pins THAT mechanism: InMemoryRelation must preserve
-    // the cached plan's outputPartitioning/outputOrdering so the
-    // multi-billion-row edge side neither re-exchanges nor re-sorts in any
-    // round — only the O(nodes) label frame moves.
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val n = spark.sessionState.conf.numShufflePartitions
-      val edges = (1L to 2000L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
-        .toDF("src", "dst")
-        .repartition(n, col("src")).sortWithinPartitions("src")
-        .persist()
-      edges.count() // materialize the cache, as the operator's count() does
-      val labels = (1L to 2001L).map(i => (i, i)).toDF("id", "label")
-      val joined = edges
-        .join(labels.withColumnRenamed("id", "src").hint("merge"), "src")
-        .groupBy(col("dst").as("id")).agg(min(col("label")).as("nbr"))
-      // count by tree traversal, not plan-string grep: the InMemoryRelation
-      // prints its CACHED build plan (whose one-time repartition+sort is
-      // already materialized and never re-executes) inside the string, but
-      // the executed tree stops at the InMemoryTableScan leaf
-      val planTree = joined.queryExecution.executedPlan
-      val plan = planTree.toString
-      assert(plan.contains("InMemoryTableScan"),
-        s"edge side must read from the columnar cache:\n$plan")
-      val exchanges = planTree.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
-      assert(exchanges.size == 2,
-        s"expected label-side + aggregate exchanges only:\n$plan")
-      val sorts = planTree.collect {
-        case s: org.apache.spark.sql.execution.SortExec => s }
-      assert(sorts.size == 1,
-        s"expected a sort on the label side only:\n$plan")
-      assert(joined.count() == 2001L)
-      edges.unpersist(false)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-    }
   }
 
   test("pqTopK touches the corpus through codes only: one broadcast, one window exchange") {
@@ -600,7 +512,7 @@ class PlanContractsSpec extends AnyFunSuite with SparkTestBase {
     assert(fusedPlan.contains("TakeOrderedAndProject"),
       s"top-k must not global-sort:\n$fusedPlan")
     assert(fusedOut.count() > 0)
-    // JOIN fallback (GRAFT_BM25_FUSED=0): the query terms and the
+    // JOIN fallback (`fused = Some(false)`): the query terms and the
     // query-cut census broadcast back onto the shuffle-free tf frame —
     // the corpus side must never broadcast and never sort-merge
     val out = Retrieval.bm25Rank(docs, "doc_id", "text", query, topK = 10,

@@ -132,24 +132,40 @@ class TextDedupSpec extends AnyFunSuite with SparkTestBase {
     // on a real cluster local checkpoints die with their executors — the
     // reliable knob persists the posting frame to the checkpoint dir
     // instead; results must be identical either way
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+    val ccDir = java.nio.file.Files.createTempDirectory("graft-ckpt-cc").toFile
     try {
-      spark.sparkContext.setCheckpointDir(dir)
+      spark.sparkContext.setCheckpointDir(dir.toString)
       val local = TextDedup.ngramJaccardPairs(docs, "doc_id", "text", "source",
         0.3, maxDocFreq = 3)
       val reliable = TextDedup.ngramJaccardPairs(docs, "doc_id", "text", "source",
         0.3, maxDocFreq = 3, reliable = true)
       assert(reliable.collect().toSet == local.collect().toSet)
       // the reliable checkpoint actually landed in the configured dir
-      assert(new java.io.File(dir).listFiles().nonEmpty)
-      // dupClusters carries the same knob through its iterative loop
+      assert(dir.listFiles().nonEmpty)
+      // dupClusters carries the same knob through its iterative loop; it
+      // runs under its own fresh dir, so what lands there is the loop's
       val pairs = local.select("doc_a", "doc_b")
       val localClusters = TextDedup.dupClusters(pairs).collect().toSet
+      assert(ccDir.listFiles().isEmpty)
+      spark.sparkContext.setCheckpointDir(ccDir.toString)
+      val ccRoot = new java.io.File(
+        java.net.URI.create(spark.sparkContext.getCheckpointDir.get))
+      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
       val reliableClusters = TextDedup.dupClusters(pairs, reliable = true)
         .collect().toSet
       assert(reliableClusters == localClusters)
+      assert(ccRoot.listFiles().nonEmpty,
+        "reliable dupClusters wrote no checkpoint")
+      // the storage-hygiene bound holds in reliable mode too: the loop
+      // leaves at most its final label generation persisted
+      val leaked =
+        spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+      assert(leaked.size <= 1,
+        s"reliable dupClusters leaked ${leaked.size} persisted RDDs")
     } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+      org.apache.commons.io.FileUtils.deleteDirectory(ccDir)
     }
   }
 
