@@ -7,9 +7,10 @@ import org.apache.spark.sql.SparkSession
   * is a session-factory change rather than a conf scavenger hunt.
   *
   * What it encodes (and why — the 100 TB design defaults):
-  *  - graft function extensions (graft_dot / graft_minhash /
-  *    graft_minhash_u / graft_nfc / graft_shingles) injected into every
-  *    session;
+  *  - the native `graft_*` functions (the operators' codegen kernels):
+  *    `GraftExtensions` injects the text kernels when the context is
+  *    created, and [[getOrCreate]] registers the whole family
+  *    (`GraftFunctions.register`) on any session;
   *  - AQE on with skew-join splitting and partition coalescing — runtime
   *    re-planning is the first defense against skewed partners/keys;
   *  - 128 MB file partitions (one task ≈ one parquet row-group span);

@@ -11,9 +11,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** All Gopher rule-screen counters (Rae et al. 2021, arXiv:2112.11446
   * §A.1.1) in ONE pass over the text — the raw integer counts only; the
-  * caller derives the ratio signals with the SAME Column arithmetic as
-  * the composable form (`TextAnalysis.gopherExprs`), so every double is
-  * bit-identical and only the counting fuses.
+  * caller (`TextAnalysis.gopherExprs`) derives the ratio signals with the
+  * SAME Column arithmetic as the composable per-signal form that
+  * `CurationSpec`'s gopher parity test keeps as its reference, so every
+  * double is bit-identical and only the counting fuses.
   *
   * The composable form builds each signal from its own `split`: the
   * whitespace word split is re-evaluated per signal (Catalyst's

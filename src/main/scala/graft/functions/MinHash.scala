@@ -10,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass k-permutation MinHash over a shingle array.
   *
-  * Semantics are EXACTLY the composable form used by
-  * `TextDedup.minhashSignatures`:
+  * Semantics are EXACTLY the composable form that `ArrayDotSpec`'s
+  * graft_minhash parity test keeps as its reference:
   * `array_min(transform(shingles, x => md5(concat(lit(i.toString), x))))`
   * for every seed i in 1..k — but computed in a single traversal of the
   * shingle array inside JIT-compiled code. The higher-order form evaluates

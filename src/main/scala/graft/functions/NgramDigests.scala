@@ -11,7 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * text — the candidate unit of exact-substring dedup
   * (`TextDedup.substringDedup`, Lee et al. 2021-style span removal).
   *
-  * Semantics are EXACTLY the composable form:
+  * Semantics are EXACTLY the composable form that `TextDedupSpec`'s
+  * substringDedup parity test keeps as its reference:
   * {{{
   *   when(size(t) >= n,
   *     transform(sequence(1, size(t) - n + 1),

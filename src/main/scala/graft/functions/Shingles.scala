@@ -10,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Distinct word-bigram shingles of a space-separated text — the unit every
   * Jaccard/MinHash dedup operator consumes.
   *
-  * Semantics are EXACTLY the composable form in
-  * `TextDedup.bigramShingles`:
+  * Semantics are EXACTLY the composable form that `ArrayDotSpec`'s
+  * graft_shingles parity test keeps as its reference:
   * {{{
   *   array_distinct(zip_with(
   *     slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1),

@@ -11,7 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * statistic behind Gopher-style top-token/top-bigram shares
   * (`TextAnalysis.repetition`).
   *
-  * Semantics match the composable sorted-run fold exactly:
+  * Semantics match the composable sorted-run fold exactly (the reference
+  * of `CurationSpec`'s repetition parity test):
   * {{{
   *   aggregate(array_sort(arr), struct("" as prev, 0 as run, 0 as best),
   *     (acc, x) => ...longest equal run...).best

@@ -13,19 +13,15 @@ import org.apache.spark.sql.functions._
   * (reciprocal-rank fusion) into one list.
   *
   * Scale contracts (100 TB stance):
-  *  - [[bm25Rank]] runs ZERO corpus-wide exchanges (r9), and since r12
-  *    defaults to the FUSED kernel (the wide-vocabulary A/B winner —
-  *    see the in-method note): the census is a `graft_query_hits`
-  *    matched-slot explode (candidate-sized from the first row) and the
-  *    score ONE `graft_bm25q` codegen projection — no joins at all. The
-  *    join fallback keeps the r9 shape: the broadcast query-term cut
-  *    lands directly on the `graft_tf` explode (the td45 machinery), so
-  *    only the candidate (doc, query-term) rows — the inverted-index
-  *    probe set, Σ_t df(t) — survive into the df census (a query-sized
-  *    exchange) and the scoring aggregate; the resulting ≤|query|
-  *    (token, df) rows broadcast back onto the same frame. Either way
-  *    the final top-k is `TakeOrderedAndProject` — per-partition heaps,
-  *    no global sort.
+  *  - [[bm25Rank]] runs ZERO corpus-wide exchanges (r9) on the FUSED
+  *    kernel (the wide-vocabulary A/B winner since r12 — see the
+  *    in-method note): the census is a `graft_query_hits` matched-slot
+  *    explode (candidate-sized from the first row) and the score ONE
+  *    `graft_bm25q` codegen projection — no joins at all. The final
+  *    top-k is `TakeOrderedAndProject` — per-partition heaps, no global
+  *    sort. [[bm25RankFromIndex]] keeps the join shape for a maintained
+  *    index: the broadcast query-term cut lands on the postings, and the
+  *    ≤|query| (token, df) census rows broadcast back onto them.
   *  - BM25 arithmetic is INTEGER-exact, not float: with k1 = 1.2 and
   *    b = 0.75 the score term
   *    `idf · tf(k1+1) / (tf + k1(1 − b + b·dl/avgdl))` clears to the
@@ -45,14 +41,11 @@ object Retrieval {
 
   /** Largest distinct-query count [[bm25RankQueries]] routes to the FUSED
     * (Q-pass) kernel by default; above it the r15 single-pass MULTI
-    * kernel takes over (the join form is never routed — it is dominated
-    * at every measured Q — and is reachable only by pinning it).
-    * Measured crossover (BASELINE r15: bigram 931-token vocabulary,
-    * factor 30, best-of-5): Q=2 fused 2.57 s vs multi 2.90; Q=4
-    * 2.92 vs 2.96 (wash); Q=8 multi ahead 3.13 vs 3.36 and the lead
-    * grows with Q (Q=64: 7.41 vs 11.15). Was 32 in r13/r14 when the
-    * choice was fused-vs-join. The per-call `fused` param is the only
-    * pin.
+    * kernel takes over. Measured crossover (BASELINE r15: bigram
+    * 931-token vocabulary, factor 30, best-of-5): Q=2 fused 2.57 s vs
+    * multi 2.90; Q=4 2.92 vs 2.96 (wash); Q=8 multi ahead 3.13 vs 3.36
+    * and the lead grows with Q (Q=64: 7.41 vs 11.15). Was 32 in r13/r14
+    * when the choice was fused-vs-join.
     */
   val FusedQueryRouteMax: Long = 4L
 
@@ -88,8 +81,7 @@ object Retrieval {
     * @return (rank, doc_id, bm25q) — bm25q is the quantized integer score
     */
   def bm25Rank(docs: DataFrame, idCol: String, textCol: String,
-      query: DataFrame, topK: Int, quantScale: Long = 1024L,
-      fused: Option[Boolean] = None): DataFrame = {
+      query: DataFrame, topK: Int, quantScale: Long = 1024L): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     val F = graft.functions.GraftFunctions
     val toks = split(col(textCol), " ")
@@ -103,93 +95,35 @@ object Retrieval {
     require(nDocs >= 1, "bm25Rank: empty corpus")
     requireNoBm25Overflow("bm25Rank", nDocs, totTok, row.getLong(2),
       quantScale)
-    // per-document tf: one fused projection (graft_tf carries n_terms =
-    // dl inside each struct) — zero pre-join shuffles; the broadcast
-    // query cut lands DIRECTLY on the explode (r9): non-query tokens die
-    // map-side, so only the candidate (doc, query-term) rows — Σ_t
-    // df(t), the inverted-index probe set — survive into either
-    // consumer. The census exchange is query-sized and its partial agg
-    // touches only candidate rows; nothing corpus-wide ever shuffles.
-    // (The r8 form censused the FULL vocabulary first — a token-stream
-    // partial-agg for df values the query cut then discarded; measured
-    // A/B at the heavy tier the cut is cost-neutral at fixture
-    // vocabulary sizes and strictly better-shaped at corpus ones.) The
-    // frame is deliberately NOT checkpointed: an A/B showed
-    // materializing the candidate frame costs what the saved re-explode
-    // gains, and at 100 TB a hostile high-df query would make the
-    // cached frame corpus-sized — recomputing two cheap map passes
-    // keeps memory flat. A degenerate all-stopword query still pays
-    // candidate volume — the economics td45's maxDf cap documents;
-    // production drops ultra-high-df terms, whose idf ≈ 0.
     val qdist = query.select("token").distinct()
     Ann.requireSmallQuerySet(qdist, "bm25Rank query", Ann.DefaultMaxQueryRows)
-    // two plan shapes with byte-identical scores (td49/td53 oracle hashes
-    // hold on either; the per-call `fused` param pins one):
-    //  - FUSED — THE DEFAULT since r12: the query set collects
-    //    (query-sized — already the broadcast bound above) and inlines
-    //    into two codegen expressions. Census pass: graft_query_hits
-    //    emits only the MATCHED slots per document, so the explode is
-    //    candidate-sized from the start (the join form generates every
-    //    distinct token of every document and cuts afterwards); its
-    //    counts ARE the df values (query-sized driver array). Scoring
-    //    pass: graft_bm25q computes the whole quantized score per
-    //    document in one projection — no per-token rows, no joins, no
-    //    per-doc re-aggregate. The r11 wash was a narrow-vocabulary
-    //    artifact: the fixture's 31-word universe lets a one-doc query
-    //    cover ~80% of all tokens, so the cut kills almost nothing. The
-    //    r12 same-session A/B (BASELINE r12, factor 30) reads unigram
-    //    join 2.69 s vs fused 2.68 s (wash) but bigram — 931 tokens,
-    //    query covering ~6%, the direction every real vocabulary goes —
-    //    join 2.68 s vs fused 2.09 s best-of-5: the fusion's saved
-    //    explode volume GROWS with the vocabulary, which is the 100 TB
-    //    regime (BASELINE r12).
-    //  - JOIN: the r9 candidate-cut shape below — reached only with
-    //    `fused = Some(false)`, row-identity spec-pinned.
-    if (fused.getOrElse(true)) {
-      val qTokens = qdist.collect().map(_.getString(0)).sorted
-      val qIdx = qTokens.zipWithIndex.toMap
-      val dfRows = docs.select(F.queryHits(toks, qIdx).as("__h"))
-        .filter(col("__h").isNotNull)
-        .select(explode(col("__h")).as("__i"))
-        .groupBy("__i").agg(count(lit(1)).as("df"))
-        .collect()
-      val dfArr = new Array[Long](qTokens.length)
-      dfRows.foreach(r => dfArr(r.getInt(0)) = r.getLong(1))
-      val scored = docs.select(col(idCol).as("doc_id"),
-          F.bm25q(toks, qIdx, dfArr.toSeq, nDocs, totTok, quantScale)
-            .as("bm25q"))
-        .filter(col("bm25q").isNotNull)
-      rankTail(scored, topK)
-    } else {
-      val qtf = docs.select(col(idCol).as("doc_id"),
-          explode(F.termFreq(toks)).as("t"))
-        .select(col("doc_id"), col("t.token").as("token"),
-          col("t.tf").as("tf"), col("t.n_terms").as("dl"))
-        .join(broadcast(qdist), Seq("token"))
-      // df census over the candidate frame (its rows are (doc, token)-
-      // distinct, so a plain count IS the document frequency — identical
-      // to the full-vocab census at the query's terms)
-      val census = qtf.groupBy("token").agg(count(lit(1)).as("df"))
-      scoreTop(qtf.join(broadcast(census), Seq("token")), nDocs, totTok,
-        quantScale, topK)
-    }
-  }
-
-  /** The quantized score + top-k tail shared by [[bm25Rank]] and
-    * [[bm25RankFromIndex]] — candWithDf carries (doc_id, tf, dl, df)
-    * for every surviving (doc, query-term) row.
-    */
-  private def scoreTop(candWithDf: DataFrame, nDocs: Long, totTok: Long,
-      quantScale: Long, topK: Int): DataFrame = {
-    val q = quantScale
-    val scored = candWithDf
-      .withColumn("tfq",
-        expr(s"(22L * ${totTok}L * tf * ${q}L) DIV " +
-          s"(10L * ${totTok}L * tf + 3L * ${totTok}L + 9L * ${nDocs}L * dl)"))
-      .withColumn("idfq",
-        expr(s"((2L * ${nDocs}L - 2L * df + 1L) * ${q}L) DIV (2L * df + 1L)"))
-      .groupBy("doc_id")
-      .agg(sum(col("tfq") * col("idfq")).as("bm25q"))
+    // the query set collects (query-sized — already the broadcast bound
+    // above) and inlines into two codegen expressions. Census pass:
+    // graft_query_hits emits only the MATCHED slots per document, so the
+    // explode is candidate-sized from the start; its counts ARE the df
+    // values (query-sized driver array). Scoring pass: graft_bm25q
+    // computes the whole quantized score per document in one projection
+    // — no per-token rows, no joins, no per-doc re-aggregate. The r12
+    // same-session A/B against the r9 candidate-cut join shape (BASELINE
+    // r12, factor 30) read unigram join 2.69 s vs fused 2.68 s (wash:
+    // the fixture's 31-word universe lets a one-doc query cover ~80% of
+    // all tokens) but bigram — 931 tokens, query covering ~6%, the
+    // direction every real vocabulary goes — join 2.68 s vs fused 2.09 s
+    // best-of-5: the fusion's saved explode volume GROWS with the
+    // vocabulary, which is the 100 TB regime.
+    val qTokens = qdist.collect().map(_.getString(0)).sorted
+    val qIdx = qTokens.zipWithIndex.toMap
+    val dfRows = docs.select(F.queryHits(toks, qIdx).as("__h"))
+      .filter(col("__h").isNotNull)
+      .select(explode(col("__h")).as("__i"))
+      .groupBy("__i").agg(count(lit(1)).as("df"))
+      .collect()
+    val dfArr = new Array[Long](qTokens.length)
+    dfRows.foreach(r => dfArr(r.getInt(0)) = r.getLong(1))
+    val scored = docs.select(col(idCol).as("doc_id"),
+        F.bm25q(toks, qIdx, dfArr.toSeq, nDocs, totTok, quantScale)
+          .as("bm25q"))
+      .filter(col("bm25q").isNotNull)
     rankTail(scored, topK)
   }
 
@@ -204,8 +138,8 @@ object Retrieval {
   }
 
   /** Empty (query_id, rank, doc_id, bm25q) frame typed from the caller's
-    * inputs — the empty-query-set result of every [[bm25RankQueries]]
-    * shape (r13 advice).
+    * inputs — the empty-query-set result of [[bm25RankQueries]] (r13
+    * advice).
     */
   private def emptyRanked(docs: DataFrame, idCol: String,
       qTerms: DataFrame): DataFrame = {
@@ -268,27 +202,34 @@ object Retrieval {
     Ann.requireSmallQuerySet(qcut, "bm25RankFromIndex query",
       Ann.DefaultMaxQueryRows)
     val censusAtQuery = census.join(broadcast(qcut), Seq("token"))
-    val cand = postings.join(broadcast(qcut), Seq("token"))
+    val q = quantScale
+    val scored = postings.join(broadcast(qcut), Seq("token"))
       .join(broadcast(censusAtQuery), Seq("token"))
-    scoreTop(cand, nDocs, totTok, quantScale, topK)
+      .withColumn("tfq",
+        expr(s"(22L * ${totTok}L * tf * ${q}L) DIV " +
+          s"(10L * ${totTok}L * tf + 3L * ${totTok}L + 9L * ${nDocs}L * dl)"))
+      .withColumn("idfq",
+        expr(s"((2L * ${nDocs}L - 2L * df + 1L) * ${q}L) DIV (2L * df + 1L)"))
+      .groupBy("doc_id")
+      .agg(sum(col("tfq") * col("idfq")).as("bm25q"))
+    rankTail(scored, topK)
   }
 
   /** [[bm25Rank]] for a BATCH of queries — the production retrieval
     * shape (an evaluation set, a deduplication probe set, a RAG query
-    * log): one corpus df census and one tf frame serve EVERY query; the
-    * query set (query_id, token) broadcasts, scoring fans out only on
-    * matching (doc, token, query) triples, and the per-query top-k is a
-    * query-partitioned window (bounded by each query's candidate count —
-    * never a global sort). Same integer-exact arithmetic as the
+    * log): one corpus df census serves EVERY query; the query set
+    * (query_id, token) collects and inlines into the scoring kernels,
+    * and the per-query top-k never globally sorts (a per-query
+    * TakeOrderedAndProject, or past [[FusedQueryRouteMax]] queries a
+    * query-partitioned window). Same integer-exact arithmetic as the
     * single-query form.
     *
-    * @param queries (query_id, token) frame; model-sized (broadcast)
+    * @param queries (query_id, token) frame; model-sized (collected)
     * @return (query_id, rank, doc_id, bm25q)
     */
   def bm25RankQueries(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, topK: Int,
-      quantScale: Long = 1024L,
-      fused: Option[Boolean] = None): DataFrame = {
+      quantScale: Long = 1024L): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     val F = graft.functions.GraftFunctions
     val toks = split(col(textCol), " ")
@@ -303,125 +244,85 @@ object Retrieval {
     val qTerms = queries.select(col("query_id"), col("token")).distinct()
     Ann.requireSmallQuerySet(qTerms, "bm25RankQueries query set",
       Ann.DefaultMaxQueryRows)
-    // three plan shapes with byte-identical output (the bm25Rank A/B
+    // two kernels with byte-identical output (the bm25Rank A/B
     // discipline, extended to the multi-query kernel — r12 verdict #6):
-    //  - MULTI — the r15 kernel and the default past Q = 4: ONE
-    //    graft_query_hits census pass over the UNION token set, then ONE
-    //    graft_bm25q_multi projection scoring EVERY query in the same
-    //    pass (per-slot contributions computed once and shared across
-    //    queries, thread-local slot tallies — see Bm25FusedUtil), explode
-    //    of the candidate-sized (query, score) hits, and the
-    //    query-partitioned top-k window (WindowGroupLimit keeps
-    //    per-partition heaps, so the exchange carries ~topK rows per
-    //    query per partition). Two corpus passes at ANY Q.
+    //  - MULTI — the r15 kernel, past Q = 4: ONE graft_query_hits census
+    //    pass over the UNION token set, then ONE graft_bm25q_multi
+    //    projection scoring EVERY query in the same pass (per-slot
+    //    contributions computed once and shared across queries,
+    //    thread-local slot tallies — see Bm25FusedUtil), explode of the
+    //    candidate-sized (query, score) hits, and the query-partitioned
+    //    top-k window (WindowGroupLimit keeps per-partition heaps, so the
+    //    exchange carries ~topK rows per query per partition). Two corpus
+    //    passes at ANY Q.
     //  - FUSED (the r13/r14 default): the census pass, then per query
     //    one graft_bm25q projection + its own TakeOrderedAndProject —
     //    Q corpus map passes, zero joins, no partitionBy window.
-    //  - JOIN: one termFreq explode cut to the union token set feeding
-    //    a shared census, then the per-(query, doc) aggregate and a
-    //    query-partitioned rank window — one corpus pass regardless of
-    //    Q, at the cost of explode volume and two shuffles.
     // Routing (BASELINE r15, bigram 931-token vocab, factor 30,
     // best-of-5): fused still wins the tiny-Q end — Q=2 fused 2.57 s vs
-    // multi 2.90 vs join 3.59; Q=4 fused 2.92 vs multi 2.96 — while the
-    // multi kernel wins everywhere past it and grows its lead with Q:
-    // Q=8 multi 3.13 vs fused 3.36, Q=16 multi 3.69 vs fused 4.39 vs
-    // join 5.60, Q=64 multi 7.41 vs fused 11.15 vs join 10.43 (the old
-    // fused≤32<join routing is strictly dominated at both of its ends).
-    // So: fused at Q ≤ FusedQueryRouteMax (= 4), multi above, join only
-    // when pinned. Q comes from the collected query rows — the r13/r14
-    // routing's extra distinct-count job is gone. All three shapes are
-    // byte-identical (A/B parity-asserted + the routing spec), so
+    // multi 2.90 vs the r9 join shape 3.59; Q=4 fused 2.92 vs multi
+    // 2.96 — while the multi kernel wins everywhere past it and grows its
+    // lead with Q: Q=8 multi 3.13 vs fused 3.36, Q=16 multi 3.69 vs
+    // fused 4.39 vs join 5.60, Q=64 multi 7.41 vs fused 11.15 vs join
+    // 10.43. So: fused at Q ≤ FusedQueryRouteMax (= 4), multi above. Q
+    // comes from the collected query rows (no extra job). Both kernels
+    // are byte-identical (parity-asserted in the routing spec), so
     // routing never changes results; decisions in BASELINE.md
-    // r13/r14/r15; the per-call `fused` param pins a shape
-    // (Some(true) = fused, Some(false) = join).
-    if (fused.contains(false)) {
-      // the bm25Rank candidate-cut shape (see its comment): the broadcast
-      // token-set cut rides the explode into both consumers, and the
-      // census carries df for every term ANY query uses before fanning
-      // out per query_id
-      val qtf = docs.select(col(idCol).as("doc_id"),
-          explode(F.termFreq(toks)).as("t"))
-        .select(col("doc_id"), col("t.token").as("token"),
-          col("t.tf").as("tf"), col("t.n_terms").as("dl"))
-        .join(broadcast(qTerms.select("token").distinct()), Seq("token"))
-      val census = qtf.groupBy("token").agg(count(lit(1)).as("df"))
-        .join(broadcast(qTerms), Seq("token"))
-      val q = quantScale
-      val scored = qtf.join(broadcast(census), Seq("token"))
-        .withColumn("tfq",
-          expr(s"(22L * ${totTok}L * tf * ${q}L) DIV " +
-            s"(10L * ${totTok}L * tf + 3L * ${totTok}L + 9L * ${nDocs}L * dl)"))
-        .withColumn("idfq",
-          expr(s"((2L * ${nDocs}L - 2L * df + 1L) * ${q}L) DIV (2L * df + 1L)"))
-        .groupBy("query_id", "doc_id")
-        .agg(sum(col("tfq") * col("idfq")).as("bm25q"))
+    // r13/r14/r15.
+    // The query table collects ONCE — query-sized, already inside the
+    // broadcast bound checked above.
+    val qRows = qTerms.collect()
+      .map(r => (r.get(0), r.getString(1)))
+    // empty query set → empty typed frame (r13 advice: a require() here
+    // was a silent API behavior change for library callers)
+    if (qRows.isEmpty) return emptyRanked(docs, idCol, qTerms)
+    val qGroups = qRows.groupBy(_._1).toSeq.sortBy(_._1.toString)
+    // shared census: one graft_query_hits pass over the union token set
+    // serves every query in either kernel
+    val unionTokens = qRows.map(_._2).distinct.sorted
+    val qIdx = unionTokens.zipWithIndex.toMap
+    val dfRows = docs.select(F.queryHits(toks, qIdx).as("__h"))
+      .filter(col("__h").isNotNull)
+      .select(explode(col("__h")).as("__i"))
+      .groupBy("__i").agg(count(lit(1)).as("df"))
+      .collect()
+    val dfArr = new Array[Long](unionTokens.length)
+    dfRows.foreach(r => dfArr(r.getInt(0)) = r.getLong(1))
+    if (qGroups.length > FusedQueryRouteMax) {
+      val querySlots: Seq[Seq[Int]] = qGroups
+        .map { case (_, rows) => rows.map(r => qIdx(r._2)).distinct.sorted }
+      val qids = qGroups.map(_._1)
+      val scored = docs.select(col(idCol).as("doc_id"),
+          F.bm25qMulti(toks, qIdx, dfArr.toSeq, querySlots, nDocs, totTok,
+            quantScale).as("__qs"))
+        .filter(col("__qs").isNotNull)
+        .select(col("doc_id"), explode(col("__qs")).as("__e"))
+        .select(col("__e.q").as("__qi"), col("doc_id"),
+          col("__e.bm25q").as("bm25q"))
       val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id")
+        .partitionBy("__qi")
         .orderBy(col("bm25q").desc, col("doc_id").asc)
       scored.withColumn("rank", row_number().over(w))
         .filter(col("rank") <= topK)
+        .withColumn("query_id",
+          element_at(array(qids.map(lit(_)): _*), col("__qi") + 1))
         .select(col("query_id"), col("rank"), col("doc_id"), col("bm25q"))
     } else {
-      // the query table collects ONCE — query-sized, already inside the
-      // broadcast bound checked above; the distinct query count routes
-      // (no extra job)
-      val qRows = qTerms.collect()
-        .map(r => (r.get(0), r.getString(1)))
-      // empty query set → empty typed frame, matching the join form's
-      // behavior (r13 advice: the r13 require() here was a silent API
-      // behavior change for library callers, and the suggested env-var
-      // workaround was process-global, not per-call)
-      if (qRows.isEmpty) return emptyRanked(docs, idCol, qTerms)
-      val qGroups = qRows.groupBy(_._1).toSeq.sortBy(_._1.toString)
-      val multi = fused.isEmpty && qGroups.length > FusedQueryRouteMax
-      // shared census: one graft_query_hits pass over the union token set
-      // serves every query in either kernel
-      val unionTokens = qRows.map(_._2).distinct.sorted
-      val qIdx = unionTokens.zipWithIndex.toMap
-      val dfRows = docs.select(F.queryHits(toks, qIdx).as("__h"))
-        .filter(col("__h").isNotNull)
-        .select(explode(col("__h")).as("__i"))
-        .groupBy("__i").agg(count(lit(1)).as("df"))
-        .collect()
-      val dfArr = new Array[Long](unionTokens.length)
-      dfRows.foreach(r => dfArr(r.getInt(0)) = r.getLong(1))
-      if (multi) {
-        val querySlots: Seq[Seq[Int]] = qGroups
-          .map { case (_, rows) => rows.map(r => qIdx(r._2)).distinct.sorted }
-        val qids = qGroups.map(_._1)
-        val scored = docs.select(col(idCol).as("doc_id"),
-            F.bm25qMulti(toks, qIdx, dfArr.toSeq, querySlots, nDocs, totTok,
-              quantScale).as("__qs"))
-          .filter(col("__qs").isNotNull)
-          .select(col("doc_id"), explode(col("__qs")).as("__e"))
-          .select(col("__e.q").as("__qi"), col("doc_id"),
-            col("__e.bm25q").as("bm25q"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("__qi")
-          .orderBy(col("bm25q").desc, col("doc_id").asc)
-        scored.withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= topK)
-          .withColumn("query_id",
-            element_at(array(qids.map(lit(_)): _*), col("__qi") + 1))
-          .select(col("query_id"), col("rank"), col("doc_id"), col("bm25q"))
-      } else {
-        qGroups
-          .map { case (qid, rows) =>
-            val qTok = rows.map(_._2).distinct.sorted
-            val qIdxQ = qTok.zipWithIndex.toMap
-            val dfQ = qTok.map(t => dfArr(qIdx(t))).toSeq
-            val scored = docs.select(col(idCol).as("doc_id"),
-                F.bm25q(toks, qIdxQ, dfQ, nDocs, totTok, quantScale)
-                  .as("bm25q"))
-              .filter(col("bm25q").isNotNull)
-            rankTail(scored, topK)
-              .withColumn("query_id", lit(qid))
-              .select(col("query_id"), col("rank"), col("doc_id"),
-                col("bm25q"))
-          }
-          .reduce(_ unionByName _)
-      }
+      qGroups
+        .map { case (qid, rows) =>
+          val qTok = rows.map(_._2).distinct.sorted
+          val qIdxQ = qTok.zipWithIndex.toMap
+          val dfQ = qTok.map(t => dfArr(qIdx(t))).toSeq
+          val scored = docs.select(col(idCol).as("doc_id"),
+              F.bm25q(toks, qIdxQ, dfQ, nDocs, totTok, quantScale)
+                .as("bm25q"))
+            .filter(col("bm25q").isNotNull)
+          rankTail(scored, topK)
+            .withColumn("query_id", lit(qid))
+            .select(col("query_id"), col("rank"), col("doc_id"),
+              col("bm25q"))
+        }
+        .reduce(_ unionByName _)
     }
   }
 

@@ -121,16 +121,10 @@ object TextAnalysis {
     * (digest-equality-as-content-equality, the TextDedup stance).
     */
   def familiarity(docs: DataFrame, idCol: String, textCol: String,
-      ref: DataFrame, refTextCol: String, fast: Boolean = false): DataFrame = {
+      ref: DataFrame, refTextCol: String): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
     def windows(c: Column): Column =
-      if (fast) graft.functions.GraftFunctions.ngramDigests(c, 2)
-      else {
-        val t = toks(c)
-        when(size(t) >= 2,
-          transform(sequence(lit(1), size(t) - 1),
-            j => md5(concat(element_at(t, j), lit(" "), element_at(t, j + 1)))))
-          .otherwise(array().cast("array<string>"))
-      }
+      graft.functions.GraftFunctions.ngramDigests(c, 2)
     val census = ref.select(explode(windows(col(refTextCol))).as("__h"))
       .groupBy("__h").agg(count(lit(1)).as("__rc"))
     val scored = docs
@@ -152,11 +146,9 @@ object TextAnalysis {
   }
 
   def contamination(docs: DataFrame, idCol: String, textCol: String,
-      benchmark: DataFrame, benchTextCol: String,
-      fast: Boolean = false): DataFrame = {
-    // fast = the native graft_shingles loop (identical output, parity
-    // spec-pinned at TextDedupSpec; requires GraftFunctions.register) —
-    // the shingle computation dominates this scan-shaped screen.
+      benchmark: DataFrame, benchTextCol: String): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
+    val F = graft.functions.GraftFunctions
     // ONE corpus pass (r16, guide §1.2): the r15 form computed each
     // document's shingles TWICE over two scans (one exploded branch for
     // the shared-count join, one size() branch re-joined by doc_id).
@@ -167,11 +159,10 @@ object TextAnalysis {
     // two-scan form (spec + oracle pinned), at one scan, one shingle
     // evaluation and one join fewer.
     val benchSh = benchmark
-      .select(explode(TextDedup.bigramShingles(col(benchTextCol), fast))
-        .as("shingle"))
+      .select(explode(F.shingles(col(benchTextCol))).as("shingle"))
       .distinct()
     docs.select(col(idCol).as("doc_id"),
-        TextDedup.bigramShingles(col(textCol), fast).as("__sh"))
+        F.shingles(col(textCol)).as("__sh"))
       .select(col("doc_id"), size(col("__sh")).as("n_shingles"),
         explode_outer(col("__sh")).as("shingle"))
       .join(broadcast(benchSh.withColumn("__hit", lit(1))),
@@ -228,75 +219,38 @@ object TextAnalysis {
 
   /** Within-document repetition metrics (the Gopher-style repetition
     * screens): distinct-token ratio, the most frequent token's share, and
-    * the most frequent word-bigram's share. Per-row O(n log n): the top
-    * frequency is the longest equal-run of the SORTED array, computed by a
-    * single fold — not the naive distinct × filter scan, which is
-    * quadratic interpreted-lambda work on long documents. No shuffle.
+    * the most frequent word-bigram's share. The top frequencies are one
+    * codegen'd O(n) hash-count pass each (`graft_top_freq`). No shuffle.
     */
-  def repetition(docs: DataFrame, idCol: String, textCol: String,
-      fast: Boolean = false): DataFrame = {
+  def repetition(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
     val t = toks(col(textCol))
-    if (fast) {
-      // graft_top_freq: one codegen'd O(n) hash-count pass instead of the
-      // interpreted O(n log n) sorted-run fold (requires
-      // GraftFunctions.register; parity spec-pinned). Tokens are counted
-      // raw; bigram multiplicity counts the native window DIGESTS
-      // (graft_ngram_digests n=2) — digest-equality-as-content-equality,
-      // the same stance as every digest screen in TextDedup. The bigram
-      // denominator size(t)-1 is the window count; a 1-token doc divides
-      // 0 by 0 with the SAME outcome as the composable form's
-      // empty-bigram division (error under ANSI, engine default
-      // otherwise) — behavior parity, pinned by the CurationSpec note.
-      val nTok = size(t)
-      val f = graft.functions.GraftFunctions
-      return docs.select(col(idCol),
-        nTok.as("n_tokens"),
-        round(size(array_distinct(t)).cast("double") / nTok, 6)
-          .as("distinct_token_ratio"),
-        round(f.topFreq(t).cast("double") / nTok, 6).as("top_token_share"),
-        round(f.topFreq(f.ngramDigests(col(textCol), 2)).cast("double")
-          / (nTok - 1), 6).as("top_bigram_share"))
-    }
-    // NON-distinct bigrams — repetition needs multiplicity
-    val bg = zip_with(
-      slice(t, lit(1), size(t) - 1),
-      slice(t, lit(2), size(t) - 1),
-      (x, y) => concat(x, lit(" "), y))
+    // Tokens are counted raw; bigram multiplicity counts the native window
+    // DIGESTS (graft_ngram_digests n=2) — digest-equality-as-content-
+    // equality, the same stance as every digest screen in TextDedup. The
+    // bigram denominator size(t)-1 is the window count; a 1-token doc
+    // divides 0 by 0 (error under ANSI, engine default otherwise).
+    val nTok = size(t)
+    val f = graft.functions.GraftFunctions
     docs.select(col(idCol),
-      size(t).as("n_tokens"),
-      round(size(array_distinct(t)).cast("double") / size(t), 6)
+      nTok.as("n_tokens"),
+      round(size(array_distinct(t)).cast("double") / nTok, 6)
         .as("distinct_token_ratio"),
-      topRunShare(t).as("top_token_share"),
-      topRunShare(bg).as("top_bigram_share"))
-  }
-
-  /** Composable top-share: longest equal run of the sorted array over its
-    * size, one fold — shared by [[repetition]]'s slow path and
-    * [[curationPipeline]]'s slow path (the fast twin is `graft_top_freq`).
-    */
-  private def topRunShare(arr: Column): Column = {
-    val folded = aggregate(array_sort(arr),
-      struct(lit("").as("prev"), lit(0).as("run"), lit(0).as("best")),
-      (acc, x) => {
-        val run = when(x === acc.getField("prev"),
-          acc.getField("run") + 1).otherwise(lit(1))
-        struct(x.as("prev"), run.as("run"),
-          greatest(acc.getField("best"), run).as("best"))
-      })
-    round(folded.getField("best").cast("double") / size(arr), 6)
+      round(f.topFreq(t).cast("double") / nTok, 6).as("top_token_share"),
+      round(f.topFreq(f.ngramDigests(col(textCol), 2)).cast("double")
+        / (nTok - 1), 6).as("top_bigram_share"))
   }
 
   /** Content fingerprints: normalized md5, token min-hash, head shingle. */
   def fingerprints(docs: DataFrame, idCol: String, textCol: String,
-      headTokens: Int = 5, fast: Boolean = false): DataFrame = {
+      headTokens: Int = 5): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
     val t = toks(col(textCol))
     // a 1-token window's space-joined content IS the token, so the native
-    // n-gram digest loop computes exactly transform(t, md5) with no
-    // interpreted lambda or per-token UTF8String round-trip (fast requires
-    // GraftFunctions.register; parity spec-pinned)
+    // n-gram digest loop computes md5 of every token with no interpreted
+    // lambda or per-token UTF8String round-trip
     val tokenHashes =
-      if (fast) graft.functions.GraftFunctions.ngramDigests(col(textCol), 1)
-      else transform(t, x => md5(x))
+      graft.functions.GraftFunctions.ngramDigests(col(textCol), 1)
     docs.select(
       col(idCol),
       md5(lower(col(textCol))).as("content_fp"),
@@ -328,53 +282,32 @@ object TextAnalysis {
   val GopherStopwords: Seq[String] =
     Seq("the", "be", "to", "of", "and", "that", "have", "with")
 
-  /** The Gopher signal expressions over a text column plus the keep
-    * conjunction, as raw columns — shared by [[gopherScreen]] and the
-    * fused [[curationPipeline]] projection. The keep conjunction is built
-    * from the same raw expressions as the named signals (identical
-    * values, so the td37 oracle is unaffected by where keep is computed).
+  /** The Gopher signal expressions plus the keep conjunction, as raw
+    * columns over a pre-projected `graft_gopher_stats` struct column
+    * `statsCol` (all eight counters in one fused pass) — shared by
+    * [[gopherScreen]] and the fused [[curationPipeline]] / [[modelGate]]
+    * projections. The caller MUST project the struct in its own select so
+    * the expression evaluates once; CollapseProject keeps the boundary
+    * because the non-cheap struct is referenced by every signal. The keep
+    * conjunction is built from the same raw expressions as the named
+    * signals (identical values, so the td37 oracle is unaffected by where
+    * keep is computed).
     */
-  private def gopherExprs(textCol: String,
+  private def gopherExprs(statsCol: String,
       minWords: Int, maxWords: Int,
       minMeanWordLen: Double, maxMeanWordLen: Double,
       maxSymbolRatio: Double, maxBulletRatio: Double,
       maxEllipsisRatio: Double, minAlphaRatio: Double,
-      stopwords: Seq[String], minStopHits: Int,
-      statsCol: Option[String] = None): (Seq[Column], Column) = {
-    // Raw integer counts: either the composable per-signal expressions
-    // (each re-splits the text; the HOF lambdas run interpreted) or ONE
-    // pre-projected `graft_gopher_stats` struct attribute (single fused
-    // pass — the caller MUST project the struct in its own select so the
-    // expression evaluates once; CollapseProject keeps the boundary
-    // because the non-cheap struct is referenced by every signal). The
-    // ratio arithmetic below is IDENTICAL either way, so the doubles are
-    // bit-for-bit the same and the td37/td40 oracles see no difference.
-    val (nWords, wordLenSum, symbolHits, nLines, bulletHits, ellipsisHits,
-        alphaWords, stopHits) = statsCol match {
-      case Some(g) =>
-        (col(g).getField("n_words"), col(g).getField("word_len_sum"),
-          col(g).getField("symbol_hits"), col(g).getField("n_lines"),
-          col(g).getField("bullet_hits"), col(g).getField("ellipsis_hits"),
-          col(g).getField("alpha_words"), col(g).getField("stop_hits"))
-      case None =>
-        val words = split(col(textCol), "[ \\t\\n]+")
-        val lines = split(col(textCol), "\n")
-        (size(words),
-          aggregate(words, lit(0), (a, x) => a + length(x)),
-          regexp_count(col(textCol), lit("#"))
-            + regexp_count(col(textCol), lit("\\.\\.\\.|…")),
-          size(lines),
-          size(filter(lines, l => regexp_like(l, lit("^[ \\t]*[-*•]")))),
-          size(filter(lines, l => regexp_like(l, lit("(\\.\\.\\.|…)[ \\t]*$")))),
-          size(filter(words, w => regexp_like(w, lit("[A-Za-z]")))),
-          size(filter(
-            array(stopwords.map(lit(_)): _*), w => array_contains(words, w))))
-    }
-    val meanWordLen = wordLenSum.cast("double") / nWords
-    val symbolRatio = symbolHits.cast("double") / nWords
-    val bulletRatio = bulletHits.cast("double") / nLines
-    val ellipsisRatio = ellipsisHits.cast("double") / nLines
-    val alphaRatio = alphaWords.cast("double") / nWords
+      minStopHits: Int): (Seq[Column], Column) = {
+    val g = col(statsCol)
+    val nWords = g.getField("n_words")
+    val nLines = g.getField("n_lines")
+    val stopHits = g.getField("stop_hits")
+    val meanWordLen = g.getField("word_len_sum").cast("double") / nWords
+    val symbolRatio = g.getField("symbol_hits").cast("double") / nWords
+    val bulletRatio = g.getField("bullet_hits").cast("double") / nLines
+    val ellipsisRatio = g.getField("ellipsis_hits").cast("double") / nLines
+    val alphaRatio = g.getField("alpha_words").cast("double") / nWords
     val keep = nWords.between(minWords, maxWords) &&
       meanWordLen.between(minMeanWordLen, maxMeanWordLen) &&
       symbolRatio < maxSymbolRatio &&
@@ -397,20 +330,52 @@ object TextAnalysis {
       maxSymbolRatio: Double = 0.1, maxBulletRatio: Double = 0.9,
       maxEllipsisRatio: Double = 0.3, minAlphaRatio: Double = 0.8,
       stopwords: Seq[String] = GopherStopwords,
-      minStopHits: Int = 2, fast: Boolean = false): DataFrame = {
-    // `fast` counts every signal in one fused pass (graft_gopher_stats —
-    // identical output, spec-pinned parity); projected in its OWN select
-    // so the struct evaluates once per row
-    val (in, statsCol) =
-      if (fast) {
-        graft.functions.GraftFunctions.register(docs.sparkSession)
-        (docs.withColumn("__g", graft.functions.GraftFunctions
-          .gopherStats(col(textCol), stopwords)), Some("__g"))
-      } else (docs, None)
-    val (signals, keep) = gopherExprs(textCol, minWords, maxWords,
+      minStopHits: Int = 2): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
+    val (signals, keep) = gopherExprs("__g", minWords, maxWords,
       minMeanWordLen, maxMeanWordLen, maxSymbolRatio, maxBulletRatio,
-      maxEllipsisRatio, minAlphaRatio, stopwords, minStopHits, statsCol)
-    in.select(col(idCol) +: signals :+ keep.as("keep"): _*)
+      maxEllipsisRatio, minAlphaRatio, minStopHits)
+    docs.withColumn("__g",
+        graft.functions.GraftFunctions.gopherStats(col(textCol), stopwords))
+      .select(col(idCol) +: signals :+ keep.as("keep"): _*)
+  }
+
+  /** Canonical normalization column (NFC + lower + whitespace collapse) —
+    * the same form [[normalize]] emits; shared by [[curationPipeline]]
+    * and [[modelGate]].
+    */
+  private def normCol(text: Column): Column = trim(regexp_replace(
+    lower(graft.functions.GraftFunctions.nfc(text)), "\\s+", " "))
+
+  /** Thresholds of the composed rule screen: [[curationPipeline]]'s
+    * defaults, and the fixed rule arm of [[modelGate]] in both its shapes.
+    */
+  private val RuleMinWords = 10
+  private val RuleMaxTopTokenShare = 0.2
+  private val RuleMinDistinctRatio = 0.3
+
+  /** The composed rule screen — the Gopher screen over normalized text ∧
+    * the repetition screen — as (n_words, distinct_token_ratio,
+    * top_token_share, keep) over pre-bound `__norm` / `__g` projection
+    * columns, so [[curationPipeline]] and [[modelGate]] build the
+    * IDENTICAL expression. Callers must project `__norm` (the normalized
+    * text) and `__g` (`graft_gopher_stats` over it) as their own columns
+    * first so the stats struct evaluates once (the q60 barrier
+    * discipline).
+    */
+  private def ruleScreen(minWords: Int, maxTopTokenShare: Double,
+      minDistinctRatio: Double): (Column, Column, Column, Column) = {
+    val (signals, gopherKeep) = gopherExprs("__g", minWords, 100000,
+      3.0, 10.0, 0.1, 0.9, 0.3, 0.8, 2)
+    val t = toks(col("__norm"))
+    val nTok = size(t)
+    val distinctRatio =
+      round(size(array_distinct(t)).cast("double") / nTok, 6)
+    val topTokenShare =
+      round(graft.functions.GraftFunctions.topFreq(t).cast("double") / nTok, 6)
+    (signals.head, distinctRatio, topTokenShare,
+      gopherKeep && topTokenShare <= maxTopTokenShare &&
+        distinctRatio >= minDistinctRatio)
   }
 
   /** The composed text-curation front door — normalize → Gopher quality
@@ -428,74 +393,29 @@ object TextAnalysis {
     * before or after — those are the shuffling stages and compose at the
     * frame level.
     */
-  /** Canonical normalization column (NFC + lower + whitespace collapse) —
-    * the same form [[normalize]] emits; shared by [[curationPipeline]]
-    * and [[modelGate]].
-    */
-  private def normCol(text: Column): Column = trim(regexp_replace(
-    lower(graft.functions.GraftFunctions.nfc(text)), "\\s+", " "))
-
-  /** The rule screen's `keep` boolean in its FAST (fused-stats) form,
-    * over pre-bound `__norm` / `__g` projection columns — extracted so
-    * [[curationPipeline]] and [[modelGate]] build the IDENTICAL
-    * expression. Callers must project `__norm` (the normalized text) and
-    * `__g` (`graft_gopher_stats` over it) as their own columns first so
-    * the stats struct evaluates once (the q60 barrier discipline).
-    */
-  private def gopherKeepColFast(minWords: Int, maxTopTokenShare: Double,
-      minDistinctRatio: Double): Column = {
-    val (_, gopherKeep) = gopherExprs("__norm", minWords, 100000,
-      3.0, 10.0, 0.1, 0.9, 0.3, 0.8, GopherStopwords, 2, Some("__g"))
-    val t = toks(col("__norm"))
-    val nTok = size(t)
-    val distinctRatio =
-      round(size(array_distinct(t)).cast("double") / nTok, 6)
-    val topTokenShare =
-      round(graft.functions.GraftFunctions.topFreq(t).cast("double") / nTok, 6)
-    gopherKeep && topTokenShare <= maxTopTokenShare &&
-      distinctRatio >= minDistinctRatio
-  }
-
   def curationPipeline(docs: DataFrame, idCol: String, textCol: String,
-      minWords: Int = 10, maxTopTokenShare: Double = 0.2,
-      minDistinctRatio: Double = 0.3, fast: Boolean = false): DataFrame = {
+      minWords: Int = RuleMinWords,
+      maxTopTokenShare: Double = RuleMaxTopTokenShare,
+      minDistinctRatio: Double = RuleMinDistinctRatio): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    val normExpr = normCol(col(textCol))
-    val n0 = docs.select(col(idCol), normExpr.as("__norm"))
-    // `fast` fuses the seven Gopher counters into one pass over the
-    // normalized text (graft_gopher_stats, its own projection so it
-    // evaluates once); the composable form re-splits per signal with
-    // interpreted HOF lambdas — measured as the pipeline's dominant cost
-    // at the heavy tier
-    val (n, statsCol) =
-      if (fast) (n0.withColumn("__g", graft.functions.GraftFunctions
-        .gopherStats(col("__norm"), GopherStopwords)), Some("__g"))
-      else (n0, None)
-    val (signals, gopherKeep) = gopherExprs("__norm", minWords, 100000,
-      3.0, 10.0, 0.1, 0.9, 0.3, 0.8, GopherStopwords, 2, statsCol)
-    val t = toks(col("__norm"))
-    val nTok = size(t)
-    val distinctRatio =
-      round(size(array_distinct(t)).cast("double") / nTok, 6)
-    val topTokenShare =
-      if (fast)
-        round(graft.functions.GraftFunctions.topFreq(t).cast("double") / nTok, 6)
-      else topRunShare(t)
+    // the seven Gopher counters fuse into one pass over the normalized
+    // text (graft_gopher_stats, its own projection so it evaluates once)
+    val n = docs.select(col(idCol), normCol(col(textCol)).as("__norm"))
+      .withColumn("__g", graft.functions.GraftFunctions
+        .gopherStats(col("__norm"), GopherStopwords))
+    val (nWords, distinctRatio, topTokenShare, keep) =
+      ruleScreen(minWords, maxTopTokenShare, minDistinctRatio)
     val tn = col("__norm")
     val clean = regexp_replace(regexp_replace(regexp_replace(tn,
       emailRe, "[EMAIL]"), ipv4Re, "[IP]"), phoneRe, "[PHONE]")
     val nRedactions = (regexp_count(tn, lit(emailRe))
       + regexp_count(tn, lit(ipv4Re))
       + regexp_count(tn, lit(phoneRe))).cast("long")
-    val keepCol =
-      if (fast) gopherKeepColFast(minWords, maxTopTokenShare, minDistinctRatio)
-      else gopherKeep && topTokenShare <= maxTopTokenShare &&
-        distinctRatio >= minDistinctRatio
     n.select(col(idCol),
-      signals.head, // n_words
+      nWords,
       distinctRatio.as("distinct_token_ratio"),
       topTokenShare.as("top_token_share"),
-      keepCol.as("keep"),
+      keep.as("keep"),
       clean.as("clean_text"),
       nRedactions.as("n_redactions"))
   }
@@ -537,6 +457,8 @@ object TextAnalysis {
       else None
     (lmM, nbM) match {
       case (Some((biM, wM, lpq0V)), Some((labelRows, lut))) =>
+        val (_, _, _, ruleKeep) = ruleScreen(RuleMinWords,
+          RuleMaxTopTokenShare, RuleMinDistinctRatio)
         docs
           .filter(size(toks(col(textCol))) >= 2)
           .select(col(idCol) +: col(labelCol) +: col(textCol) +:
@@ -546,7 +468,7 @@ object TextAnalysis {
           .withColumn("__s", F.lmScore(toks(col(textCol)), biM, wM, lpq0V))
           .withColumn("__sc", F.nbSeen(toks(col(textCol)), lut, labelRows.size))
           .select(col(idCol) +:
-            gopherKeepColFast(10, 0.2, 0.3).as("keep") +:
+            ruleKeep.as("keep") +:
             col("__s.n_bigrams").as("n_bigrams") +:
             col("__s.sum_lpq").as("sum_lpq") +:
             Classification.nbArgmax(labelRows, col("__sc.n_d"),
@@ -554,8 +476,7 @@ object TextAnalysis {
             col(labelCol) +: extra.map { case (nm, _) => col(nm) }: _*)
       case _ =>
         val cur = curationPipeline(
-            docs.select(col(idCol), ruleText.as("__rt")), idCol, "__rt",
-            fast = true)
+            docs.select(col(idCol), ruleText.as("__rt")), idCol, "__rt")
           .select(col(idCol), col("keep"))
         val lm = lmDocScore(train, docs, idCol, textCol)
           .select(col("doc_id").as(idCol), col("n_bigrams"), col("sum_lpq"))

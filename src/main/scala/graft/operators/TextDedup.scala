@@ -47,25 +47,6 @@ object TextDedup {
         sort_array(collect_list(col("doc_id"))).as("ids"),
         first(col("__text")).as("__text"))
 
-  /** Distinct word-bigram shingles — the MinHash/Jaccard unit.
-    *
-    * `fast = true` computes them in one fused codegen loop via the native
-    * `graft_shingles` expression (identical output, spec-pinned parity;
-    * requires `GraftFunctions.register`). The composable default
-    * interprets three HOF lambdas and materializes two slices + a zipped
-    * array per row — at corpus scale the shingle computation dominates the
-    * (codegen'd) joins around it.
-    */
-  def bigramShingles(text: Column, fast: Boolean = false): Column =
-    if (fast) graft.functions.GraftFunctions.shingles(text)
-    else {
-      val t = toks(text)
-      array_distinct(zip_with(
-        slice(t, lit(1), size(t) - 1),
-        slice(t, lit(2), size(t) - 1),
-        (x, y) => concat(x, lit(" "), y)))
-    }
-
   /** Exact content dedup: groups by md5(text); canonical row = min id. */
   def exactDedup(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.groupBy(md5(col(textCol)).as("fp"))
@@ -160,7 +141,8 @@ object TextDedup {
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       blockCol: String, threshold: Double, maxDocFreq: Long = 0L,
-      fast: Boolean = false, reliable: Boolean = false): DataFrame = {
+      reliable: Boolean = false): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
     // materialized frames are each consumed 2-3 times — rebuilding beats
     // nothing here, and plan truncation keeps the self-join analyzable.
     // Local checkpoints die with their executors, so on a real cluster
@@ -185,7 +167,8 @@ object TextDedup {
         first(col("__text")).as("__text")))
     // 2. inverted index over representatives only
     val sh0 = groups.select(col("rep").as("doc_id"), col("block"),
-      col("gsize"), explode(bigramShingles(col("__text"), fast)).as("shingle"))
+      col("gsize"), explode(graft.functions.GraftFunctions.shingles(col("__text")))
+        .as("shingle"))
     val sh = materialize(if (maxDocFreq > 0) {
         // df = sum of group sizes: the cap keeps counting DOCUMENTS, so
         // capped results are identical to the uncollapsed formulation
@@ -234,52 +217,43 @@ object TextDedup {
     cross.unionByName(within).select("doc_a", "doc_b", "common", "jaccard")
   }
 
-  /** k seeded-md5 MinHash signature columns mh1..mhk.
-    *
-    * `fast = true` computes all k signatures in ONE traversal of the
-    * shingle array via the native `graft_minhash` expression
-    * (graft.functions.MinHashSigs — requires `GraftFunctions.register`):
-    * identical bytes, but the default composable form evaluates k
-    * interpreted lambda trees per shingle (higher-order function bodies
-    * are not code-generated), which at production signature widths
-    * (k = 64-128) is the whole cost of the signature stage.
+  /** k seeded-md5 MinHash signature columns mh1..mhk: signature i is the
+    * minimum of md5(i || shingle) over the document's bigram shingles, all
+    * k computed in ONE traversal of the shingle array by the native
+    * `graft_minhash` expression (graft.functions.MinHashSigs).
     */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-      k: Int, fast: Boolean = false, extraCols: Seq[String] = Nil): DataFrame =
-    if (fast) {
-      val sig = graft.functions.GraftFunctions.minhash(
-        bigramShingles(col(textCol), fast = true), k)
-      docs.select(col(idCol).as("doc_id") +: extraCols.map(col) ++:
-        (1 to k).map(i => element_at(sig, lit(i)).as(s"mh$i")): _*)
-    } else {
-      val sigs = (1 to k).map(i =>
-        array_min(transform(bigramShingles(col(textCol)),
-          x => md5(concat(lit(i.toString), x)))).as(s"mh$i"))
-      docs.select(col(idCol).as("doc_id") +: extraCols.map(col) ++: sigs: _*)
-    }
+      k: Int, extraCols: Seq[String] = Nil): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
+    val sig = graft.functions.GraftFunctions.minhash(
+      graft.functions.GraftFunctions.shingles(col(textCol)), k)
+    docs.select(col(idCol).as("doc_id") +: extraCols.map(col) ++:
+      (1 to k).map(i => element_at(sig, lit(i)).as(s"mh$i")): _*)
+  }
 
   /** Production-scale MinHash (Broder's estimator): ONE md5 digest per
     * shingle, k universal-hash permutations of the truncated digest —
     * k× fewer digest computations than the seeded-md5 form, the version a
     * 100 TB dedup runs at k = 64-128. Signature values are longs (cheaper
-    * to band/compare than 32-char hex strings). Requires
-    * `GraftFunctions.register`; coefficients are deterministic and
-    * engine-reproducible (graft.functions.MinHashUtil.aCoef/bCoef).
+    * to band/compare than 32-char hex strings). Coefficients are
+    * deterministic and engine-reproducible
+    * (graft.functions.MinHashUtil.aCoef/bCoef).
     */
   def minhashSignaturesUniversal(docs: DataFrame, idCol: String,
       textCol: String, k: Int): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sig = graft.functions.GraftFunctions.minhashU(
-      bigramShingles(col(textCol), fast = true), k)
+      graft.functions.GraftFunctions.shingles(col(textCol)), k)
     docs.select(col(idCol).as("doc_id") +:
       (1 to k).map(i => element_at(sig, lit(i)).as(s"mh$i")): _*)
   }
 
   /** (doc_id, bucket) rows: one banded-minhash bucket id per band per doc. */
   private def lshBandBuckets(docs: DataFrame, idCol: String, textCol: String,
-      bands: Int, rowsPerBand: Int, fast: Boolean,
+      bands: Int, rowsPerBand: Int,
       extraCols: Seq[String] = Nil): DataFrame = {
     val k = bands * rowsPerBand
-    val sigs = minhashSignatures(docs, idCol, textCol, k, fast, extraCols)
+    val sigs = minhashSignatures(docs, idCol, textCol, k, extraCols)
     val bandCols = (0 until bands).map { b =>
       val parts = (1 to rowsPerBand).map(r => col(s"mh${b * rowsPerBand + r}"))
       concat(lit(s"${b + 1}:"), md5(concat(parts: _*)))
@@ -302,8 +276,8 @@ object TextDedup {
     * NULL-key drop of the SQL oracle's equi-join.
     */
   def bandPostings(docs: DataFrame, idCol: String, textCol: String,
-      bands: Int, rowsPerBand: Int, fast: Boolean = false): DataFrame =
-    lshBandBuckets(docs, idCol, textCol, bands, rowsPerBand, fast)
+      bands: Int, rowsPerBand: Int): DataFrame =
+    lshBandBuckets(docs, idCol, textCol, bands, rowsPerBand)
 
   /** Incremental duplicate-cluster maintenance (r13) — the operator that
     * makes dd56's "clusters are maintained, never rebuilt per split"
@@ -339,12 +313,12 @@ object TextDedup {
     */
   def mergeClusters(existingLabels: DataFrame, existingPostings: DataFrame,
       batch: DataFrame, idCol: String, textCol: String,
-      bands: Int, rowsPerBand: Int, fast: Boolean = false,
+      bands: Int, rowsPerBand: Int,
       maxIter: Int = 20): (DataFrame, DataFrame) = {
     // three consumers (internal pairs, cross probe, the returned store
     // rows) — materialize so the k-digest signature stage runs once
-    val newPost = bandPostings(batch, idCol, textCol, bands, rowsPerBand,
-      fast).localCheckpoint(false)
+    val newPost = bandPostings(batch, idCol, textCol, bands, rowsPerBand)
+      .localCheckpoint(false)
     val internal = newPost.select(col("doc_id").as("doc_a"), col("bucket"))
       .join(newPost.select(col("doc_id").as("doc_b"), col("bucket")),
         "bucket")
@@ -393,8 +367,7 @@ object TextDedup {
     * exact dedup on the band hash instead of pairwise scoring.
     */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
-      bands: Int, rowsPerBand: Int, maxBucketSize: Long = 0L,
-      fast: Boolean = false): DataFrame = {
+      bands: Int, rowsPerBand: Int, maxBucketSize: Long = 0L): DataFrame = {
     // round-5 collapse (the simhashNearPairs treatment): identical texts
     // share every signature and hence every band bucket, so signatures —
     // k digests per shingle, the dominant cost — are computed once per
@@ -409,7 +382,7 @@ object TextDedup {
     // checkpoint-materialize so the signature stage (k digests per
     // shingle) runs once, not once per branch (the tokenBudget pattern)
     val bandsDf = lshBandBuckets(textGroups(docs, idCol, textCol), "rep",
-      "__text", bands, rowsPerBand, fast, extraCols = Seq("ids"))
+      "__text", bands, rowsPerBand, extraCols = Seq("ids"))
       .localCheckpoint(false)
     val capped =
       if (maxBucketSize > 0) {
@@ -728,13 +701,20 @@ object TextDedup {
       splitCol: String, contaminatedAt: Double = 0.5): DataFrame = {
     require(contaminatedAt > 0 && contaminatedAt <= 1,
       s"contaminatedAt must be in (0, 1], got $contaminatedAt")
+    graft.functions.GraftFunctions.register(split.sparkSession)
+    val shingles = graft.functions.GraftFunctions.shingles(col(textCol))
+    // explode_OUTER on both sides: a plain explode lets the optimizer
+    // infer `size(arr) > 0 AND isnotnull(arr)` from the generator and
+    // push it below the projection, evaluating the shingle kernel twice
+    // more per row inside a Filter; the null shingle rows it emits
+    // instead never match the inner equi-join on `shingle`
     val trainSh = split.filter(col(splitCol) === "train")
-      .select(explode(bigramShingles(col(textCol))).as("shingle"))
+      .select(explode_outer(shingles).as("shingle"))
       .distinct()
     val evalDocs = split.filter(!(col(splitCol) <=> "train"))
-      .select(col(idCol).as("doc_id"), bigramShingles(col(textCol)).as("__sh"))
+      .select(col(idCol).as("doc_id"), shingles.as("__sh"))
     val shared = evalDocs
-      .select(col("doc_id"), explode(col("__sh")).as("shingle"))
+      .select(col("doc_id"), explode_outer(col("__sh")).as("shingle"))
       .join(trainSh, Seq("shingle"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
     // null/missing text audits as ZERO shingles (it contributes no rows to
@@ -859,13 +839,15 @@ object TextDedup {
       bands: Int, rowsPerBand: Int, threshold: Double,
       maxBucketSize: Long = 0L, maxIter: Int = 20, fast: Boolean = false,
       reliable: Boolean = false): DataFrame = {
+    // `fast` is ignored; medbench's CurationChain passes it by name
+    graft.functions.GraftFunctions.register(docs.sparkSession)
     // stage 0: the shared exact-duplicate collapse — one scan of the corpus
     val groups = textGroups(docs, idCol, textCol).localCheckpoint(false)
     // stage 1: banding over representatives only; `ids` rides along unused
     // so the frame is shared with minhashLshPairs' shape (and the bucket
     // cap keeps counting DOCUMENTS via member counts, not groups)
     val bandsDf = lshBandBuckets(groups, "rep", "__text", bands, rowsPerBand,
-      fast, extraCols = Seq("ids")).localCheckpoint(false)
+      extraCols = Seq("ids")).localCheckpoint(false)
     val capped =
       if (maxBucketSize > 0) {
         val oversize = bandsDf.groupBy("bucket")
@@ -887,7 +869,7 @@ object TextDedup {
     // shingle array to the pair (bounded by LSH fan-out) and intersect
     // locally; round(j, 6) matches ngramJaccardPairs' scorer exactly
     val shArr = groups.select(col("rep"),
-      bigramShingles(col("__text"), fast).as("__sh"))
+      graft.functions.GraftFunctions.shingles(col("__text")).as("__sh"))
     val verified = cand
       .join(shArr.select(col("rep").as("rep_a"), col("__sh").as("__sh_a")), "rep_a")
       .join(shArr.select(col("rep").as("rep_b"), col("__sh").as("__sh_b")), "rep_b")
@@ -951,9 +933,9 @@ object TextDedup {
     */
   def dedupAgainstReference(ref: DataFrame, batch: DataFrame, idCol: String,
       textCol: String, bands: Int, rowsPerBand: Int, threshold: Double,
-      maxBucketSize: Long = 0L, fast: Boolean = false): DataFrame =
+      maxBucketSize: Long = 0L): DataFrame =
     dedupAgainstIndex(
-      buildReferenceIndex(ref, idCol, textCol, bands, rowsPerBand, fast),
+      buildReferenceIndex(ref, idCol, textCol, bands, rowsPerBand),
       batch, idCol, textCol, threshold, maxBucketSize)
 
   /** Prebuilt reference-side index for [[dedupAgainstIndex]]: the three
@@ -972,13 +954,14 @@ object TextDedup {
     */
   final case class ReferenceDedupIndex(digests: DataFrame,
       bandBuckets: DataFrame, shingles: DataFrame,
-      bands: Int, rowsPerBand: Int, fast: Boolean)
+      bands: Int, rowsPerBand: Int)
 
   /** Build the [[ReferenceDedupIndex]] for a reference corpus. Lazy: no
     * job runs until the first screening batch needs a frame.
     */
   def buildReferenceIndex(ref: DataFrame, idCol: String, textCol: String,
-      bands: Int, rowsPerBand: Int, fast: Boolean = false): ReferenceDedupIndex = {
+      bands: Int, rowsPerBand: Int): ReferenceDedupIndex = {
+    graft.functions.GraftFunctions.register(ref.sparkSession)
     val rGroups = textGroups(ref, idCol, textCol).localCheckpoint(false)
     // distinct digests fall out of the grouping — and the grouping KEY
     // (__tkey) already IS md5(__text), so reuse it instead of re-hashing
@@ -988,14 +971,14 @@ object TextDedup {
     val digests = rGroups.select(col("__tkey").as("__fp"))
       .localCheckpoint(false)
     val rBands = lshBandBuckets(rGroups, "rep", "__text", bands, rowsPerBand,
-      fast, extraCols = Seq("ids"))
+      extraCols = Seq("ids"))
       .select(col("doc_id").as("r_rep"),
         col("ids").as("__r_ids"), col("bucket"))
       .localCheckpoint(false)
     val rSh = rGroups.select(col("rep").as("r_rep"),
-      bigramShingles(col("__text"), fast).as("__sh_r"))
+      graft.functions.GraftFunctions.shingles(col("__text")).as("__sh_r"))
       .localCheckpoint(false)
-    ReferenceDedupIndex(digests, rBands, rSh, bands, rowsPerBand, fast)
+    ReferenceDedupIndex(digests, rBands, rSh, bands, rowsPerBand)
   }
 
   /** [[dedupAgainstReference]] against a prebuilt [[ReferenceDedupIndex]]
@@ -1005,8 +988,8 @@ object TextDedup {
   def dedupAgainstIndex(index: ReferenceDedupIndex, batch: DataFrame,
       idCol: String, textCol: String, threshold: Double,
       maxBucketSize: Long = 0L): DataFrame = {
+    graft.functions.GraftFunctions.register(batch.sparkSession)
     val bands = index.bands; val rowsPerBand = index.rowsPerBand
-    val fast = index.fast
     // 1. exact screen on content digests
     val fresh = batch.withColumn("__fp", md5(col(textCol)))
       .join(index.digests, Seq("__fp"), "left_anti").drop("__fp")
@@ -1014,7 +997,7 @@ object TextDedup {
     //    side's buckets come prebuilt from the index
     val bGroups = textGroups(fresh, idCol, textCol).localCheckpoint(false)
     val bBands = lshBandBuckets(bGroups, "rep", "__text", bands, rowsPerBand,
-      fast, extraCols = Seq("ids"))
+      extraCols = Seq("ids"))
       .select(col("doc_id").as("b_rep"), col("ids"), col("bucket"))
     val rBands = index.bandBuckets
     val (bCapped, rCapped) =
@@ -1033,7 +1016,7 @@ object TextDedup {
       .select("b_rep", "r_rep").distinct()
     // 3. verify on candidates only; reference shingles come from the index
     val bSh = bGroups.select(col("rep").as("b_rep"),
-      bigramShingles(col("__text"), fast).as("__sh_b"))
+      graft.functions.GraftFunctions.shingles(col("__text")).as("__sh_b"))
     val matchedReps = cand
       .join(bSh, "b_rep").join(index.shingles, "r_rep")
       .withColumn("__common", size(array_intersect(col("__sh_b"), col("__sh_r"))))
@@ -1086,26 +1069,17 @@ object TextDedup {
     * two doc-count-row exchanges (starts groupBy, prep join).
     */
   def substringDedup(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, minDocs: Long = 2L, fast: Boolean = false): DataFrame = {
+      n: Int, minDocs: Long = 2L): DataFrame = {
     require(n >= 1, s"window length must be >= 1 token, got $n")
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    val base = docs.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-      .withColumn("__tk", split(col("__text"), " "))
-    // `fast` computes the window digests in one fused codegen loop
-    // (graft_ngram_digests — identical output, spec-pinned parity); the
-    // composable form interprets a lambda and allocates a slice + joined
-    // string PER WINDOW, which is the dominant cost of the whole operator
-    // at corpus scale.
-    // sequence(1, m) DESCENDS when m < 1 — guard short docs to no windows
-    val windowDigests =
-      if (fast) graft.functions.GraftFunctions.ngramDigests(col("__text"), n)
-      else when(size(col("__tk")) >= n,
-        transform(sequence(lit(1), size(col("__tk")) - n + 1),
-          j => md5(array_join(slice(col("__tk"), j, lit(n)), " "))))
-        .otherwise(array().cast("array<string>"))
-    val prep = base
-      .select(col("doc_id"), windowDigests.as("__ws"), col("__text"))
+    // the window digests come from one fused codegen loop
+    // (graft_ngram_digests): an interpreted per-window lambda allocating a
+    // slice + joined string PER WINDOW was the dominant cost of the whole
+    // operator at corpus scale
+    val prep = docs.select(col(idCol).as("doc_id"),
+        graft.functions.GraftFunctions.ngramDigests(col(textCol), n).as("__ws"),
+        col(textCol).as("__text"))
       .localCheckpoint(false)
     val win = prep
       .select(col("doc_id"), posexplode(col("__ws")).as(Seq("__p0", "__h")))
@@ -1128,13 +1102,12 @@ object TextDedup {
     * run monitors (dropped buckets ⇒ candidate recall loss on boilerplate).
     */
   def minhashLshBucketStats(docs: DataFrame, idCol: String, textCol: String,
-      bands: Int, rowsPerBand: Int, maxBucketSize: Long,
-      fast: Boolean = false): DataFrame =
+      bands: Int, rowsPerBand: Int, maxBucketSize: Long): DataFrame =
     // same collapsed banding as minhashLshPairs, so the audit costs what
     // the operator it monitors costs; bucket_size keeps DOCUMENT-count
     // semantics via the member arrays
     lshBandBuckets(textGroups(docs, idCol, textCol), "rep", "__text",
-      bands, rowsPerBand, fast, extraCols = Seq("ids"))
+      bands, rowsPerBand, extraCols = Seq("ids"))
       .groupBy("bucket").agg(sum(size(col("ids"))).as("bucket_size"))
       .withColumn("dropped",
         lit(maxBucketSize > 0) && col("bucket_size") > maxBucketSize)
@@ -1271,10 +1244,12 @@ object TextDedup {
     * boundedness, never a false positive).
     */
   def ngramContainmentPairs(docs: DataFrame, idCol: String, textCol: String,
-      blockCol: String, threshold: Double, maxDocFreq: Long = 0L,
-      fast: Boolean = false): DataFrame = {
+      blockCol: String, threshold: Double,
+      maxDocFreq: Long = 0L): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sh0 = docs.select(col(idCol).as("doc_id"), col(blockCol).as("block"),
-      explode(bigramShingles(col(textCol), fast)).as("shingle"))
+      explode(graft.functions.GraftFunctions.shingles(col(textCol)))
+        .as("shingle"))
       .localCheckpoint(true)
     val n = sh0.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val sh =

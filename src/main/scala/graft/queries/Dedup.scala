@@ -45,7 +45,7 @@ object Dedup extends QuerySet {
   def dd31(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     TextDedup.ngramJaccardPairs(Q.t(s, dir, "documents"),
-      "doc_id", "text", blockCol = "source", threshold = 0.5, fast = true)
+      "doc_id", "text", blockCol = "source", threshold = 0.5)
   }
 
   /** MinHash signature per document: k=4 seeded-md5 permutations, computed
@@ -55,7 +55,7 @@ object Dedup extends QuerySet {
   def dd32(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     TextDedup.minhashSignatures(Q.t(s, dir, "documents"), "doc_id", "text",
-      k = 4, fast = true)
+      k = 4)
   }
 
   /** MinHash LSH candidate pairs: 2 bands × 2 rows per band (signatures
@@ -64,7 +64,7 @@ object Dedup extends QuerySet {
   def dd33(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     TextDedup.minhashLshPairs(Q.t(s, dir, "documents"),
-      "doc_id", "text", bands = 2, rowsPerBand = 2, fast = true)
+      "doc_id", "text", bands = 2, rowsPerBand = 2)
   }
 
   /** SimHash (16-bit) fingerprints. */
@@ -144,7 +144,7 @@ object Dedup extends QuerySet {
     graft.functions.GraftFunctions.register(s)
     TextDedup.ngramJaccardPairs(Q.t(s, dir, "documents"),
       "doc_id", "text", blockCol = "source", threshold = 0.5,
-      maxDocFreq = 40L, fast = true)
+      maxDocFreq = 40L)
   }
 
   /** dd33 with the LSH bucket cap ENGAGED (buckets over 4 docs dropped
@@ -153,8 +153,7 @@ object Dedup extends QuerySet {
   def dd42(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     TextDedup.minhashLshPairs(Q.t(s, dir, "documents"),
-      "doc_id", "text", bands = 2, rowsPerBand = 2, maxBucketSize = 4L,
-      fast = true)
+      "doc_id", "text", bands = 2, rowsPerBand = 2, maxBucketSize = 4L)
   }
 
   /** dd40 with the chunk-bucket cap ENGAGED (buckets over 8 docs dropped
@@ -203,8 +202,7 @@ object Dedup extends QuerySet {
     graft.functions.GraftFunctions.register(s)
     TextDedup.nearDedupPipeline(
       Q.t(s, dir, "documents").select("doc_id", "text", "source", "lang"),
-      "doc_id", "text", bands = 2, rowsPerBand = 2, threshold = 0.5,
-      fast = true)
+      "doc_id", "text", bands = 2, rowsPerBand = 2, threshold = 0.5)
       .select("doc_id", "source", "lang")
   }
 
@@ -222,8 +220,7 @@ object Dedup extends QuerySet {
     TextDedup.dedupAgainstReference(
       all.filter(col("doc_id") % 2 === 0),
       all.filter(col("doc_id") % 2 === 1),
-      "doc_id", "text", bands = 2, rowsPerBand = 2, threshold = 0.5,
-      fast = true)
+      "doc_id", "text", bands = 2, rowsPerBand = 2, threshold = 0.5)
       .select("doc_id", "source", "lang")
   }
 
@@ -297,7 +294,7 @@ object Dedup extends QuerySet {
           lit(" subscribe to our newsletter for daily updates and exclusive offers today"))
           .otherwise(lit(""))).as("text"))
     graft.operators.TextDedup.substringDedup(injected, "doc_id", "text",
-      n = 5, fast = true)
+      n = 5)
   }
 
   /** Incremental semantic screen vs a reference corpus (dd51): the odd
@@ -350,7 +347,7 @@ object Dedup extends QuerySet {
   def dd53(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     TextDedup.ngramContainmentPairs(Q.t(s, dir, "documents"),
-      "doc_id", "text", blockCol = "source", threshold = 0.3, fast = true)
+      "doc_id", "text", blockCol = "source", threshold = 0.3)
   }
 
   /** Leakage-safe train/val/test split (dd54, r12): dd36's duplicate
@@ -516,10 +513,10 @@ object Dedup extends QuerySet {
     val emptyPost = Seq.empty[(Long, String)].toDF("doc_id", "bucket")
     val (l1, p1) = TextDedup.mergeClusters(emptyLabels, emptyPost,
       all.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-      bands = 2, rowsPerBand = 2, fast = true)
+      bands = 2, rowsPerBand = 2)
     val (l2, _) = TextDedup.mergeClusters(l1, p1,
       all.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-      bands = 2, rowsPerBand = 2, fast = true)
+      bands = 2, rowsPerBand = 2)
     l2
   }
 

@@ -202,8 +202,7 @@ object MultimodalQueries extends QuerySet {
     val all = Q.t(s, dir, "documents")
     val paired = all.filter(col("doc_id") < 64)
     val cap = graft.operators.TextAnalysis
-      .curationPipeline(TextOps.q40Injected(paired), "doc_id", "text",
-        fast = true)
+      .curationPipeline(TextOps.q40Injected(paired), "doc_id", "text")
       .select(col("doc_id"), col("keep"))
     val nb = graft.operators.Classification.nbClassify(
         train = all.filter(col("doc_id") % 2 === 0), test = paired,

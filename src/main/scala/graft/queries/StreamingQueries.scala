@@ -166,7 +166,7 @@ object StreamingQueries extends QuerySet {
     // later micro-batch reads the checkpointed frames (r6 verdict #2 — the
     // per-batch form re-shuffled the full reference corpus per trigger)
     val refIndex = graft.operators.TextDedup.buildReferenceIndex(
-      ref, "doc_id", "text", bands = 2, rowsPerBand = 2, fast = true)
+      ref, "doc_id", "text", bands = 2, rowsPerBand = 2)
     val schema = s.read.parquet(staged.toString).schema
     val feed = s.readStream.schema(schema).parquet(staged.toString)
       .filter(col("doc_id") % 2 === 1)
@@ -326,7 +326,7 @@ object StreamingQueries extends QuerySet {
               lit(" and so that was the end of it all"))
               .otherwise(lit(""))).as("text"))
         graft.operators.TextAnalysis
-          .curationPipeline(injected, "doc_id", "text", fast = true)
+          .curationPipeline(injected, "doc_id", "text")
           .write.mode("append").parquet(out)
       }
       .option("checkpointLocation", tmp("graft_st53_ckpt"))
@@ -1705,7 +1705,7 @@ object StreamingQueries extends QuerySet {
               beforeBatch = batchId)
           val (labels, post) = graft.operators.TextDedup.mergeClusters(
             prevLabels, prevPost, batch, "doc_id", "text",
-            bands = 2, rowsPerBand = 2, fast = true)
+            bands = 2, rowsPerBand = 2)
           graft.streaming.PostingsStore.write(post, postDir, batchId)
           graft.streaming.DurableState.commit(stateDir, batchId,
             Seq("labels" -> labels))

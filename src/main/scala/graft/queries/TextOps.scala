@@ -79,8 +79,7 @@ object TextOps extends QuerySet {
     */
   def q29(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    TextAnalysis.fingerprints(Q.t(s, dir, "documents"), "doc_id", "text",
-      fast = true)
+    TextAnalysis.fingerprints(Q.t(s, dir, "documents"), "doc_id", "text")
   }
 
   /** Benchmark-contamination screen — distinct-shingle overlap of every
@@ -91,7 +90,7 @@ object TextOps extends QuerySet {
     graft.functions.GraftFunctions.register(s)
     val docs = Q.t(s, dir, "documents")
     TextAnalysis.contamination(docs, "doc_id", "text",
-      docs.filter(col("doc_id") % 50 === 0), "text", fast = true)
+      docs.filter(col("doc_id") % 50 === 0), "text")
   }
 
   /** Canonical normalization (NFC + lower + whitespace collapse) via the
@@ -107,8 +106,7 @@ object TextOps extends QuerySet {
     */
   def q32(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    TextAnalysis.repetition(Q.t(s, dir, "documents"), "doc_id", "text",
-      fast = true)
+    TextAnalysis.repetition(Q.t(s, dir, "documents"), "doc_id", "text")
   }
 
   /** BPE-style pre-token counting next to the whitespace count — the two
@@ -233,7 +231,7 @@ object TextOps extends QuerySet {
     graft.functions.GraftFunctions.register(s)
     val docs = Q.t(s, dir, "documents")
     TextAnalysis.familiarity(docs, "doc_id", "text",
-      docs.filter(col("doc_id") % 10 === 0), "text", fast = true)
+      docs.filter(col("doc_id") % 10 === 0), "text")
   }
 
   /** Composed per-document curation pipeline (td40): normalize → Gopher
@@ -265,7 +263,7 @@ object TextOps extends QuerySet {
     // injected docs face the remaining screens; the odd half pins the
     // stopword-floor rejection
     TextAnalysis.curationPipeline(q40Injected(Q.t(s, dir, "documents")),
-      "doc_id", "text", fast = true)
+      "doc_id", "text")
   }
 
   /** BPE pair census (td41): the top-10 adjacent character pairs over the

@@ -6,6 +6,17 @@ import graft.SparkTestBase
 
 class ArrayDotSpec extends AnyFunSuite with SparkTestBase {
 
+  /** The composable form of distinct word-bigram shingles — the reference
+    * graft_shingles (and, through it, graft_minhash) is pinned against.
+    */
+  private def hofShingles(text: org.apache.spark.sql.Column) = {
+    val t = split(text, " ")
+    array_distinct(zip_with(
+      slice(t, lit(1), size(t) - 1),
+      slice(t, lit(2), size(t) - 1),
+      (x, y) => concat(x, lit(" "), y)))
+  }
+
   test("graft_dot matches the higher-order fold bit-for-bit") {
     GraftFunctions.register(spark)
     import spark.implicits._
@@ -40,10 +51,11 @@ class ArrayDotSpec extends AnyFunSuite with SparkTestBase {
   test("graft_minhash matches the k-pass higher-order form byte-for-byte") {
     GraftFunctions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val hof = graft.operators.TextDedup
-      .minhashSignatures(docs, "doc_id", "text", k = 4)
+    val hof = docs.select(col("doc_id") +: (1 to 4).map(i =>
+      array_min(transform(hofShingles(col("text")),
+        x => md5(concat(lit(i.toString), x)))).as(s"mh$i")): _*)
     val fast = graft.operators.TextDedup
-      .minhashSignatures(docs, "doc_id", "text", k = 4, fast = true)
+      .minhashSignatures(docs, "doc_id", "text", k = 4)
     val joined = hof.withColumnRenamed("mh1", "h1").withColumnRenamed("mh2", "h2")
       .withColumnRenamed("mh3", "h3").withColumnRenamed("mh4", "h4")
       .join(fast, "doc_id")
@@ -65,10 +77,9 @@ class ArrayDotSpec extends AnyFunSuite with SparkTestBase {
       .toDF("doc_id", "text")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text")).unionByName(tricky)
-    val hof = docs.select(col("doc_id"),
-      graft.operators.TextDedup.bigramShingles(col("text")).as("sh"))
+    val hof = docs.select(col("doc_id"), hofShingles(col("text")).as("sh"))
     val fast = docs.select(col("doc_id"),
-      graft.operators.TextDedup.bigramShingles(col("text"), fast = true).as("sf"))
+      GraftFunctions.shingles(col("text")).as("sf"))
     val joined = hof.join(fast, "doc_id")
     assert(joined.filter(col("sh") =!= col("sf")).count() == 0,
       "native shingles must equal the HOF form element-for-element")

@@ -812,6 +812,22 @@ class CurationSpec extends AnyFunSuite with SparkTestBase {
     assert(plan.contains("WindowGroupLimit"), plan)
   }
 
+  /** Composable top share — the reference graft_top_freq is pinned
+    * against: the longest equal run of the SORTED array over its size,
+    * one interpreted fold.
+    */
+  private def topRunShare(arr: org.apache.spark.sql.Column) = {
+    val folded = aggregate(array_sort(arr),
+      struct(lit("").as("prev"), lit(0).as("run"), lit(0).as("best")),
+      (acc, x) => {
+        val run = when(x === acc.getField("prev"),
+          acc.getField("run") + 1).otherwise(lit(1))
+        struct(x.as("prev"), run.as("run"),
+          greatest(acc.getField("best"), run).as("best"))
+      })
+    round(folded.getField("best").cast("double") / size(arr), 6)
+  }
+
   test("repetition fast path (graft_top_freq) is output-identical to the sorted-run fold") {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
@@ -828,9 +844,18 @@ class CurationSpec extends AnyFunSuite with SparkTestBase {
       df.collect().map(r => r.getLong(0) ->
         (r.getInt(1), r.getDouble(2),
           r.getDouble(3), Option(r.get(4)).map(_.toString))).toMap
-    val slow = canon(TextAnalysis.repetition(docs, "doc_id", "text"))
-    val fast = canon(TextAnalysis.repetition(docs, "doc_id", "text",
-      fast = true))
+    // the composable reference (sorted-run top shares)
+    val t = split(col("text"), " ")
+    // NON-distinct bigrams — repetition needs multiplicity
+    val bg = zip_with(slice(t, lit(1), size(t) - 1),
+      slice(t, lit(2), size(t) - 1), (x, y) => concat(x, lit(" "), y))
+    val slow = canon(docs.select(col("doc_id"),
+      size(t).as("n_tokens"),
+      round(size(array_distinct(t)).cast("double") / size(t), 6)
+        .as("distinct_token_ratio"),
+      topRunShare(t).as("top_token_share"),
+      topRunShare(bg).as("top_bigram_share")))
+    val fast = canon(TextAnalysis.repetition(docs, "doc_id", "text"))
     assert(fast.keySet == slow.keySet)
     // NaN != NaN under ==, so compare via the stringified option
     fast.keys.foreach { k =>
@@ -960,13 +985,60 @@ class CurationSpec extends AnyFunSuite with SparkTestBase {
     ).toDF("doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.toSeq.toList).toList.sortBy(_.head.toString)
-    val slowG = rows(TextAnalysis.gopherScreen(docs, "doc_id", "text"))
-    val fastG = rows(TextAnalysis.gopherScreen(docs, "doc_id", "text",
-      fast = true))
+    // the composable reference: every counter from its own split, the
+    // HOF lambdas interpreted; ratio arithmetic and the keep conjunction
+    // as in the operator (gopherScreen's default thresholds but minWords)
+    def gopherSlow(text: org.apache.spark.sql.Column, minWords: Int) = {
+      val words = split(text, "[ \\t\\n]+")
+      val lines = split(text, "\n")
+      val nWords = size(words)
+      val nLines = size(lines)
+      val stopHits = size(filter(array(TextAnalysis.GopherStopwords
+        .map(lit(_)): _*), w => array_contains(words, w)))
+      val meanWordLen =
+        aggregate(words, lit(0), (a, x) => a + length(x)).cast("double") /
+          nWords
+      val symbolRatio = (regexp_count(text, lit("#"))
+        + regexp_count(text, lit("\\.\\.\\.|…"))).cast("double") / nWords
+      val bulletRatio = size(filter(lines,
+        l => regexp_like(l, lit("^[ \\t]*[-*•]")))).cast("double") / nLines
+      val ellipsisRatio = size(filter(lines,
+        l => regexp_like(l, lit("(\\.\\.\\.|…)[ \\t]*$")))).cast("double") /
+          nLines
+      val alphaRatio = size(filter(words,
+        w => regexp_like(w, lit("[A-Za-z]")))).cast("double") / nWords
+      val keep = nWords.between(minWords, 100000) &&
+        meanWordLen.between(3.0, 10.0) && symbolRatio < 0.1 &&
+        bulletRatio < 0.9 && ellipsisRatio < 0.3 && alphaRatio > 0.8 &&
+        stopHits >= 2
+      (Seq(nWords.as("n_words"), meanWordLen.as("mean_word_len"),
+        symbolRatio.as("symbol_ratio"), bulletRatio.as("bullet_ratio"),
+        ellipsisRatio.as("ellipsis_ratio"), alphaRatio.as("alpha_ratio"),
+        stopHits.as("n_stop_hits")), keep)
+    }
+    val (signalsG, keepG) = gopherSlow(col("text"), 50)
+    val slowG = rows(docs.select(col("doc_id") +: signalsG :+
+      keepG.as("keep"): _*))
+    val fastG = rows(TextAnalysis.gopherScreen(docs, "doc_id", "text"))
     assert(fastG == slowG)
-    val slowP = rows(TextAnalysis.curationPipeline(docs, "doc_id", "text"))
-    val fastP = rows(TextAnalysis.curationPipeline(docs, "doc_id", "text",
-      fast = true))
+    // curationPipeline's reference: the Gopher screen (minWords 10) and the
+    // sorted-run repetition screen over the normalized text, PII redaction
+    // of the same text
+    val norm = TextAnalysis.normalize(docs, "doc_id", "text")
+    val (signalsP, keepP) = gopherSlow(col("norm_text"), 10)
+    val t = split(col("norm_text"), " ")
+    val distinctRatio = round(size(array_distinct(t)).cast("double") /
+      size(t), 6)
+    val topTokenShare = topRunShare(t)
+    val pii = TextAnalysis.redactPii(norm, "doc_id", "norm_text")
+      .select(col("doc_id"), col("redacted_text").as("clean_text"),
+        (col("n_emails") + col("n_ips") + col("n_phones")).as("n_redactions"))
+    val slowP = rows(norm.select(col("doc_id"), signalsP.head,
+        distinctRatio.as("distinct_token_ratio"),
+        topTokenShare.as("top_token_share"),
+        (keepP && topTokenShare <= 0.2 && distinctRatio >= 0.3).as("keep"))
+      .join(pii, "doc_id"))
+    val fastP = rows(TextAnalysis.curationPipeline(docs, "doc_id", "text"))
     assert(fastP == slowP)
     // the fused pass stays a pure projection and the stats struct is
     // evaluated ONCE (a collapsed plan would inline graft_gopher_stats
@@ -974,7 +1046,7 @@ class CurationSpec extends AnyFunSuite with SparkTestBase {
     // constant-folding the local fixture away
     val pdocs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
-    val plan = TextAnalysis.gopherScreen(pdocs, "doc_id", "text", fast = true)
+    val plan = TextAnalysis.gopherScreen(pdocs, "doc_id", "text")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
     assert("graft_gopher_stats".r.findAllIn(plan).length == 1, plan)

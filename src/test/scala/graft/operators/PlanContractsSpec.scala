@@ -230,7 +230,7 @@ class PlanContractsSpec extends AnyFunSuite with SparkTestBase {
     // reintroduces a self-join (or worse, a cartesian product) must fail
     for (pairs <- Seq(
         TextDedup.minhashLshPairs(docs, "doc_id", "text", bands = 2,
-          rowsPerBand = 2, fast = true),
+          rowsPerBand = 2),
         TextDedup.simhashNearPairs(docs, "doc_id", "text", maxHamming = 3))) {
       val plan = pairs.queryExecution.executedPlan.toString
       assert(!plan.contains("Join") && !plan.contains("CartesianProduct"),
@@ -260,7 +260,7 @@ class PlanContractsSpec extends AnyFunSuite with SparkTestBase {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       for ((name, capped) <- Seq(
           "minhashLshPairs" -> TextDedup.minhashLshPairs(docs, "doc_id", "text",
-            bands = 2, rowsPerBand = 2, maxBucketSize = 8L, fast = true),
+            bands = 2, rowsPerBand = 2, maxBucketSize = 8L),
           "simhashNearPairs" -> TextDedup.simhashNearPairs(docs, "doc_id", "text",
             maxHamming = 3, maxBucketSize = 8L),
           "lshNearPairs" -> Ann.lshNearPairs(emb, "vec_id", "emb",
@@ -273,7 +273,7 @@ class PlanContractsSpec extends AnyFunSuite with SparkTestBase {
             docs.filter(col("doc_id") % 2 === 0),
             docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
             bands = 2, rowsPerBand = 2, threshold = 0.5,
-            maxBucketSize = 8L, fast = true))) {
+            maxBucketSize = 8L))) {
         val plan = capped.queryExecution.executedPlan.toString
         assert(!plan.contains("BroadcastExchange"),
           s"$name cap side over threshold must not broadcast:\n$plan")
@@ -294,7 +294,7 @@ class PlanContractsSpec extends AnyFunSuite with SparkTestBase {
       spark.listenerManager.register(listener)
       try {
         TextDedup.ngramJaccardPairs(docs, "doc_id", "text", blockCol = "source",
-          threshold = 0.5, maxDocFreq = 8L, fast = true).count()
+          threshold = 0.5, maxDocFreq = 8L).count()
         // listener delivery is async — poll for the plan containing the
         // hot-shingle anti-join
         val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
@@ -419,8 +419,7 @@ class PlanContractsSpec extends AnyFunSuite with SparkTestBase {
   test("curationPipeline is one fused projection: no exchange, no join") {
     graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val out = TextAnalysis.curationPipeline(docs, "doc_id", "text",
-      fast = true)
+    val out = TextAnalysis.curationPipeline(docs, "doc_id", "text")
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"),
       s"four row-wise stages must compose into one map stage:\n$plan")
@@ -503,7 +502,7 @@ class PlanContractsSpec extends AnyFunSuite with SparkTestBase {
     // corpus scan — no joins anywhere, and the top-k cut never
     // global-sorts
     val fusedOut = Retrieval.bm25Rank(docs, "doc_id", "text", query,
-      topK = 10, fused = Some(true))
+      topK = 10)
     val fusedPlan = fusedOut.queryExecution.executedPlan.toString
     assert(fusedPlan.contains("graft_bm25q"),
       s"fused scoring expression missing:\n$fusedPlan")
@@ -512,19 +511,6 @@ class PlanContractsSpec extends AnyFunSuite with SparkTestBase {
     assert(fusedPlan.contains("TakeOrderedAndProject"),
       s"top-k must not global-sort:\n$fusedPlan")
     assert(fusedOut.count() > 0)
-    // JOIN fallback (`fused = Some(false)`): the query terms and the
-    // query-cut census broadcast back onto the shuffle-free tf frame —
-    // the corpus side must never broadcast and never sort-merge
-    val out = Retrieval.bm25Rank(docs, "doc_id", "text", query, topK = 10,
-      fused = Some(false))
-    val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"),
-      s"query-sized sides must broadcast:\n$plan")
-    assert(!plan.contains("SortMergeJoin"),
-      s"no sort-merge anywhere in a lookup-shaped query:\n$plan")
-    assert(plan.contains("TakeOrderedAndProject"),
-      s"top-k must not global-sort:\n$plan")
-    assert(out.count() > 0)
   }
 
   test("lmDocScore fast path scores as a pure projection: no exchange, no join") {

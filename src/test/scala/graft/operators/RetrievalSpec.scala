@@ -1,10 +1,37 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 
 class RetrievalSpec extends AnyFunSuite with SparkTestBase {
+
+  /** The join-shaped BM25 reference: [[Retrieval.bm25RankFromIndex]] over
+    * the corpus' own postings and df census, with the corpus scalars
+    * computed as [[Retrieval.bm25Rank]] computes them.
+    */
+  private def bm25ViaIndex(docs: DataFrame, query: DataFrame,
+      topK: Int): DataFrame = {
+    val postings = Retrieval.bm25Postings(docs, "doc_id", "text")
+    val census = postings.groupBy("token").agg(count(lit(1)).as("df"))
+    val dl = size(split(col("text"), " ")).cast("long")
+    val r = docs.agg(count(lit(1)), sum(dl), max(dl)).head
+    Retrieval.bm25RankFromIndex(postings, census, r.getLong(0),
+      r.getLong(1), r.getLong(2), query, topK)
+  }
+
+  /** Per-query reference for [[Retrieval.bm25RankQueries]]: `rank` run on
+    * each query_id's tokens alone, unioned.
+    */
+  private def perQuery(queries: DataFrame, topK: Int)(
+      rank: (DataFrame, Int) => DataFrame): DataFrame =
+    queries.select("query_id").distinct().collect().map(_.get(0))
+      .map(qid => rank(queries.filter(col("query_id") === lit(qid))
+          .select("token"), topK)
+        .select(lit(qid).as("query_id"), col("rank"), col("doc_id"),
+          col("bm25q")))
+      .reduce(_ unionByName _)
 
   test("bm25Rank ranks the rare-term match above the common-term match") {
     import spark.implicits._
@@ -37,10 +64,9 @@ class RetrievalSpec extends AnyFunSuite with SparkTestBase {
       .unionByName(Seq(9L).toDF("doc_id")
         .withColumn("text", lit(null).cast("string"))) // null text
     val query = Seq("the", "zebra", "cat", "unicorn").toDF("token")
-    val joinOut = Retrieval.bm25Rank(docs, "doc_id", "text", query,
-      topK = 10, fused = Some(false))
+    val joinOut = bm25ViaIndex(docs, query, topK = 10)
     val fusedOut = Retrieval.bm25Rank(docs, "doc_id", "text", query,
-      topK = 10, fused = Some(true))
+      topK = 10)
     assert(joinOut.except(fusedOut).count() == 0 &&
       fusedOut.except(joinOut).count() == 0,
       s"fused/join divergence:\n${joinOut.collect().toSeq}\n" +
@@ -154,7 +180,8 @@ class RetrievalSpec extends AnyFunSuite with SparkTestBase {
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
     // 33 distinct query ids — past FusedQueryRouteMax, so the default
-    // routes the MULTI kernel while both pinned shapes must agree with it
+    // routes the MULTI kernel; the per-query kernel and the join-shaped
+    // index scorer, run one query at a time, must agree with it
     val qs = docs.filter(col("doc_id") < 33)
       .select(col("doc_id").as("query_id"),
         explode(split(col("text"), " ")).as("token"))
@@ -162,10 +189,9 @@ class RetrievalSpec extends AnyFunSuite with SparkTestBase {
     assert(Retrieval.FusedQueryRouteMax == 4L)
     val routed = Retrieval.bm25RankQueries(docs, "doc_id", "text", qs,
       topK = 3)
-    val fusedR = Retrieval.bm25RankQueries(docs, "doc_id", "text", qs,
-      topK = 3, fused = Some(true))
-    val joinR = Retrieval.bm25RankQueries(docs, "doc_id", "text", qs,
-      topK = 3, fused = Some(false))
+    val fusedR = perQuery(qs, topK = 3)(
+      Retrieval.bm25Rank(docs, "doc_id", "text", _, _))
+    val joinR = perQuery(qs, topK = 3)(bm25ViaIndex(docs, _, _))
     assert(routed.except(joinR).count() == 0 &&
       joinR.except(routed).count() == 0)
     assert(fusedR.except(joinR).count() == 0 &&
@@ -194,11 +220,10 @@ class RetrievalSpec extends AnyFunSuite with SparkTestBase {
       (14L, "fox"),
       (15L, "stripes")).toDF("query_id", "token")
     val multi = Retrieval.bm25RankQueries(docs, "doc_id", "text", qs,
-      topK = 3) // default = the multi kernel
-    val fusedR = Retrieval.bm25RankQueries(docs, "doc_id", "text", qs,
-      topK = 3, fused = Some(true))
-    val joinR = Retrieval.bm25RankQueries(docs, "doc_id", "text", qs,
-      topK = 3, fused = Some(false))
+      topK = 3) // routed = the multi kernel
+    val fusedR = perQuery(qs, topK = 3)(
+      Retrieval.bm25Rank(docs, "doc_id", "text", _, _))
+    val joinR = perQuery(qs, topK = 3)(bm25ViaIndex(docs, _, _))
     assert(multi.except(fusedR).count() == 0 &&
       fusedR.except(multi).count() == 0)
     assert(multi.except(joinR).count() == 0 &&
@@ -232,16 +257,13 @@ class RetrievalSpec extends AnyFunSuite with SparkTestBase {
       .parquet("/root/testdata/sf0.001/documents.parquet")
     val none = Seq.empty[(Long, String)].toDF("query_id", "token")
     val f = Retrieval.bm25RankQueries(docs, "doc_id", "text", none,
-      topK = 5, fused = Some(true))
+      topK = 5)
     assert(f.count() == 0)
     assert(f.columns.toSeq == Seq("query_id", "rank", "doc_id", "bm25q"))
     assert(f.schema("query_id").dataType == none.schema("query_id").dataType)
     assert(f.schema("rank").dataType ==
       org.apache.spark.sql.types.IntegerType)
     assert(f.schema("doc_id").dataType == docs.schema("doc_id").dataType)
-    val j = Retrieval.bm25RankQueries(docs, "doc_id", "text", none,
-      topK = 5, fused = Some(false))
-    assert(j.count() == 0 && j.columns.toSeq == f.columns.toSeq)
   }
 
   test("bm25RankFromIndex on merged batch partials equals bm25Rank one-shot") {

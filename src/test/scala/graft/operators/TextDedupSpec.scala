@@ -20,7 +20,8 @@ class TextDedupSpec extends AnyFunSuite with SparkTestBase {
     assert(capped.count() <= full.count())
     // the fixture corpus has shingles above the cap, so the knob engages
     val hotShingles = docs
-      .select(col("doc_id"), explode(TextDedup.bigramShingles(col("text"))).as("s"))
+      .select(col("doc_id"),
+        explode(graft.functions.GraftFunctions.shingles(col("text"))).as("s"))
       .groupBy("s").count().filter(col("count") > 3)
     assert(hotShingles.count() > 0)
   }
@@ -266,9 +267,9 @@ class TextDedupSpec extends AnyFunSuite with SparkTestBase {
     // dd36 clustering, dd38 apply — the sequence the pipeline composes
     def handWired(cap: Long): Set[Long] = {
       val cand = TextDedup.minhashLshPairs(corpus, "doc_id", "text",
-        bands = 2, rowsPerBand = 2, maxBucketSize = cap, fast = true)
+        bands = 2, rowsPerBand = 2, maxBucketSize = cap)
       val sh = corpus.select(col("doc_id"),
-        TextDedup.bigramShingles(col("text"), fast = true).as("sh"))
+        graft.functions.GraftFunctions.shingles(col("text")).as("sh"))
       val verified = cand
         .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
         .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
@@ -283,8 +284,7 @@ class TextDedupSpec extends AnyFunSuite with SparkTestBase {
     }
     def pipeline(cap: Long): Set[Long] =
       TextDedup.nearDedupPipeline(corpus, "doc_id", "text",
-        bands = 2, rowsPerBand = 2, threshold = 0.5, maxBucketSize = cap,
-        fast = true)
+        bands = 2, rowsPerBand = 2, threshold = 0.5, maxBucketSize = cap)
         .select("doc_id").collect().map(_.getLong(0)).toSet
     val uncapped = handWired(0L)
     assert(pipeline(0L) == uncapped)
@@ -341,7 +341,7 @@ class TextDedupSpec extends AnyFunSuite with SparkTestBase {
     val ref = refRows.toDF("doc_id", "text").as[(Long, String)]
       .map { r => acc.add(1); r }.toDF("doc_id", "text")
     val index = TextDedup.buildReferenceIndex(ref, "doc_id", "text",
-      bands = 2, rowsPerBand = 2, fast = true)
+      bands = 2, rowsPerBand = 2)
     val batch1 = Seq(
       (1L, s"reference document number 3 with shared boilerplate text"), // exact dup
       (3L, "a genuinely new arrival with its own wording")
@@ -432,10 +432,29 @@ class TextDedupSpec extends AnyFunSuite with SparkTestBase {
       (6L, ""),
       (7L, "naïve café über one two three four five emoji 🎉 end")
     ).toDF("doc_id", "text")
-    val slow = TextDedup.substringDedup(docs, "doc_id", "text", n = 5)
+    // the composable reference: substringDedup with each window digested
+    // by an interpreted lambda (sequence(1, m) DESCENDS when m < 1 —
+    // short docs are guarded to no windows)
+    val words = split(col("text"), " ")
+    val prep = docs.select(col("doc_id"),
+      when(size(words) >= 5,
+        transform(sequence(lit(1), size(words) - 4),
+          j => md5(array_join(slice(words, j, lit(5)), " "))))
+        .otherwise(array().cast("array<string>")).as("__ws"),
+      col("text").as("__text"))
+    val win = prep
+      .select(col("doc_id"), posexplode(col("__ws")).as(Seq("__p0", "__h")))
+    val hot = win.groupBy("__h").agg(countDistinct(col("doc_id")).as("__df"))
+      .filter(col("__df") >= 2).select("__h")
+    val starts = win.join(hot, Seq("__h"), "left_semi")
+      .groupBy("doc_id").agg(collect_list(col("__p0")).as("__starts"))
+    val slow = prep.join(starts, Seq("doc_id"), "left")
+      .select(col("doc_id"), graft.functions.GraftFunctions.stripSpans(
+        col("__text"), coalesce(col("__starts"), array().cast("array<int>")),
+        5).as("__s"))
+      .select(col("doc_id"), col("__s.text"), col("__s.n_removed"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    val fast = TextDedup.substringDedup(docs, "doc_id", "text", n = 5,
-        fast = true)
+    val fast = TextDedup.substringDedup(docs, "doc_id", "text", n = 5)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(fast == slow)
     // and the raw digest arrays agree window-for-window
@@ -505,8 +524,7 @@ class TextDedupSpec extends AnyFunSuite with SparkTestBase {
         coalesce(col("__newtext"), lit("")).as("text"),
         (col("__ntok") - coalesce(col("__kept"), lit(0L))).as("n_removed"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    val sweep = TextDedup.substringDedup(docs, "doc_id", "text", n = n,
-        fast = true)
+    val sweep = TextDedup.substringDedup(docs, "doc_id", "text", n = n)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(sweep == relational)
     // interpreted eval agrees with codegen (the NgramDigestUtil idiom both
