@@ -1,15 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchHarness.session(defaultCpus = 4, sfDir)
     // warm the JVM/codegen/parquet-footer paths so query 1 isn't charged
     // for session startup; pre-write the x12 corpus so driver-side file
     // generation isn't billed to the first x12_* query, and pre-fill the
@@ -23,7 +16,8 @@ object Bench {
       graft.x12.X12TestDataGen.writeCorpus(
         s"${System.getProperty("java.io.tmpdir")}/graft_x12_corpus_v1", 45, seed = 42L)
       SparkEntry.queries("x12_61_silver_parse")(spark, sfDir).count()
-    } catch { case _: Throwable => }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] warmup FAILED: ${e.getMessage}") }
     // drift canary (r13 verdict #2): pinned query timed warm at sweep
     // start and again at sweep end — see BenchHarness.canaryOnce
     val canaryStart = try BenchHarness.canaryWarm(spark, sfDir)

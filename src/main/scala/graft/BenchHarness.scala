@@ -3,11 +3,34 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 
-/** Shared plumbing for the bench mains (Bench, BenchHeavy): JSON escaping,
-  * the DuckDB oracle-timing sidecar, and the distributed-parse throughput
-  * point — one copy of the hung-child/timeout/stdout-drain logic.
+/** Shared plumbing for the measurement mains (Bench, BenchHeavy, Verify,
+  * Explain, TimeQueries, MakeHeavy): the one session they run on, JSON
+  * escaping, the DuckDB oracle-timing sidecar, and the distributed-parse
+  * throughput point — one copy of the hung-child/timeout/stdout-drain logic.
   */
 object BenchHarness {
+
+  /** The session every measurement main runs on: `local[SPARK_GRAFT_CPUS]`
+    * (`defaultCpus` when unset) built by [[GraftSession.getOrCreate]] with
+    * shuffle partitions = cpus and the UI off. File scans split at the
+    * grain of `dataDir` ([[fitSplitGrain]]).
+    */
+  def session(defaultCpus: Int, dataDir: String): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(defaultCpus)
+    val spark = GraftSession.getOrCreate(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.ui.enabled", "false"), shufflePartitions = cpus)
+    spark.sparkContext.setLogLevel("WARN")
+    fitSplitGrain(spark, dataDir)
+    spark
+  }
+
+  /** Split this session's file scans at `dir`'s grain
+    * ([[BenchHeavy.splitGrain]]), worked out from the dir itself.
+    */
+  def fitSplitGrain(spark: SparkSession, dir: String): Unit =
+    spark.conf.set("spark.sql.files.maxPartitionBytes",
+      BenchHeavy.splitGrain(dir))
 
   /** The timed action for every benched query: execute the query's OWN
     * physical plan and drain every output row (r7 measurement-basis fix).
@@ -105,6 +128,10 @@ object BenchHarness {
         System.err.println(s"[bench] sidecar write to $dir failed: ${e.getMessage}") }
   }
 
+  /** JSON string escape: backslash, quote, and ALL control chars (< 0x20)
+    * — a tab or CR in an oracle SQL string would otherwise make a
+    * reader's `json.load` fail.
+    */
   def escJson(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
@@ -114,6 +141,13 @@ object BenchHarness {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
+
+  /** The `oracle_sql.json` body (entry name → DuckDB SQL) that the oracle
+    * sidecar times and Verify's dump ships for the hash compare.
+    */
+  def oracleSqlJson(oracleSql: Map[String, String]): String =
+    oracleSql.map { case (k, v) => s"${escJson(k)}: ${escJson(v)}" }
+      .mkString("{", ",", "}")
 
   /** Time each DuckDB oracle over the same tables via the python sidecar
     * (driver-side tooling, not a library dependency). Returns the sidecar's
@@ -129,9 +163,7 @@ object BenchHarness {
       sparkTimingsJson: String, timeoutMinutes: Long): String = try {
     val dir = Files.createTempDirectory("graft_bench")
     val of = dir.resolve("oracle_sql.json")
-    Files.writeString(of, oracleSql
-      .map { case (k, v) => s"${escJson(k)}: ${escJson(v)}" }
-      .mkString("{", ",", "}"))
+    Files.writeString(of, oracleSqlJson(oracleSql))
     val tf = dir.resolve("spark_timings.json")
     Files.writeString(tf, sparkTimingsJson)
     // stderr inherits (no pipe to fill and deadlock on); stdout drains on

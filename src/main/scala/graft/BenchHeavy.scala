@@ -162,6 +162,46 @@ object BenchHeavy {
     "dd45_neardedup_pipeline", "dd55_split_leakage_audit",
     "dd56_split_audit_prebuilt")
 
+  /** The heavy dir's manifest; its presence marks a dir [[ensureHeavyDir]]
+    * built.
+    */
+  val ManifestName = "_manifest.txt"
+
+  /** Scan split grain (`spark.sql.files.maxPartitionBytes`) for `dir`: a
+    * heavy dir (it carries [[ManifestName]]) splits at 128 KiB, matching
+    * [[replicate]]'s ~1 MB uncompressed row groups so a 32-core session
+    * scans with 32 tasks; any other dir keeps [[GraftSession]]'s 128 MiB.
+    */
+  def splitGrain(dir: String): Long =
+    if (Files.exists(Paths.get(dir, ManifestName))) 128L * 1024
+    else 128L * 1024 * 1024
+
+  /** Replicate `base`'s documents, embeddings, events and lineitem tables
+    * `factor`x into `target` and stamp its manifest. A target whose
+    * manifest already carries this stamp is left untouched. Returns the
+    * stamp.
+    */
+  def ensureHeavyDir(spark: SparkSession, base: String, factor: Int,
+      target: java.nio.file.Path): String = {
+    Files.createDirectories(target)
+    val manifest = target.resolve(ManifestName)
+    // v3 (r9): events joins the replicated set for q58's heavy row —
+    // same ts/user_id per replica, offset event_ids, so every user's
+    // rolling window runs factor× deeper. v4 (r9): lineitem joins for the
+    // q01/q08 rows — offset orderkeys keep the countDistinct cardinality
+    // scaling with the corpus.
+    val stamp = s"base=$base factor=$factor v=4"
+    if (!Files.exists(manifest) || Files.readString(manifest) != stamp) {
+      for ((table, idCol) <- Seq("documents" -> "doc_id",
+          "embeddings" -> "vec_id", "events" -> "event_id",
+          "lineitem" -> "l_orderkey"))
+        replicate(spark, s"$base/$table.parquet",
+          target.resolve(s"$table.parquet"), idCol, factor)
+      Files.writeString(manifest, stamp)
+    }
+    stamp
+  }
+
   /** Replicate a table `factor`x with offset ids, written as ONE parquet
     * file so the DuckDB sidecar's `FROM 'path.parquet'` view works — but
     * with SMALL ROW GROUPS (protocol v2): a coalesce(1) default write
@@ -169,7 +209,7 @@ object BenchHeavy {
     * split, so every heavy corpus scan ran as ONE task on a 32-core
     * session — the tier was measuring single-thread scan starvation, not
     * operator shape, for scan-bound entries. Small row groups plus the
-    * session's matching `files.maxPartitionBytes` make the same single
+    * matching [[splitGrain]] make the same single
     * file splittable for BOTH engines (DuckDB parallelizes by row group
     * too), which is the honest stand-in for a real multi-file corpus.
     */
@@ -194,44 +234,17 @@ object BenchHeavy {
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_HEAVY_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val heavyDir = Paths.get(
       s"${System.getProperty("java.io.tmpdir")}/graft_sfheavy_v1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // split the small-but-dense heavy files at row-group grain (see
-      // replicate's scaladoc) — matches the ~1 MB uncompressed row
-      // groups so a 32-core session actually scans with 32 tasks
-      .config("spark.sql.files.maxPartitionBytes", (128 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    Files.createDirectories(heavyDir)
-    val manifest = heavyDir.resolve("_manifest.txt")
-    // v3 (r9): events joins the replicated set for q58's heavy row —
-    // same ts/user_id per replica, offset event_ids, so every user's
-    // rolling window runs factor× deeper. v4 (r9): lineitem joins for the
-    // q01/q08 rows — offset orderkeys keep the countDistinct cardinality
-    // scaling with the corpus.
-    val stamp = s"base=$base factor=$factor v=4"
-    if (!Files.exists(manifest) || Files.readString(manifest) != stamp) {
-      replicate(spark, s"$base/documents.parquet",
-        heavyDir.resolve("documents.parquet"), "doc_id", factor)
-      replicate(spark, s"$base/embeddings.parquet",
-        heavyDir.resolve("embeddings.parquet"), "vec_id", factor)
-      replicate(spark, s"$base/events.parquet",
-        heavyDir.resolve("events.parquet"), "event_id", factor)
-      replicate(spark, s"$base/lineitem.parquet",
-        heavyDir.resolve("lineitem.parquet"), "l_orderkey", factor)
-      Files.writeString(manifest, stamp)
-    }
+    val spark = BenchHarness.session(defaultCpus = 32, base)
+    ensureHeavyDir(spark, base, factor, heavyDir)
     val dir = heavyDir.toString
+    BenchHarness.fitSplitGrain(spark, dir)
 
     // warm codegen/session paths off the clock
     try spark.read.parquet(s"$dir/documents.parquet").agg(count(lit(1))).collect()
-    catch { case _: Throwable => }
+    catch { case e: Throwable =>
+      System.err.println(s"[bench-heavy] warmup FAILED: ${e.getMessage}") }
     // drift canary (r13 verdict #2) — same pinned query as graft.Bench,
     // over the heavy documents table
     val canaryStart = try BenchHarness.canaryWarm(spark, dir)

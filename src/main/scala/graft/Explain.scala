@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection: prints the formatted physical plan for the named
   * queries (or all). Usage: runMain graft.Explain <sfDir> [name ...]
   */
@@ -10,12 +8,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchHarness.session(defaultCpus = 4, sfDir)
     names.foreach { n =>
       SparkEntry.queries.get(n).foreach { fn =>
         println(s"\n===== $n =====")

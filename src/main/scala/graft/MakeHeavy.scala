@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import java.nio.file.Paths
 
 /** Scaling-curve fixture builder (r9, verdict #7): replicate the sf0.1
   * tables at an arbitrary factor into an arbitrary dir — protocol-v2
@@ -18,27 +17,8 @@ object MakeHeavy {
     val target = Paths.get(args(0))
     val factor = args(1).toInt
     val base = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Files.createDirectories(target)
-    val stamp = s"base=$base factor=$factor v=4"
-    val manifest = target.resolve("_manifest.txt")
-    if (!Files.exists(manifest) || Files.readString(manifest) != stamp) {
-      BenchHeavy.replicate(spark, s"$base/documents.parquet",
-        target.resolve("documents.parquet"), "doc_id", factor)
-      BenchHeavy.replicate(spark, s"$base/embeddings.parquet",
-        target.resolve("embeddings.parquet"), "vec_id", factor)
-      BenchHeavy.replicate(spark, s"$base/events.parquet",
-        target.resolve("events.parquet"), "event_id", factor)
-      BenchHeavy.replicate(spark, s"$base/lineitem.parquet",
-        target.resolve("lineitem.parquet"), "l_orderkey", factor)
-      Files.writeString(manifest, stamp)
-    }
+    val spark = BenchHarness.session(defaultCpus = 32, base)
+    val stamp = BenchHeavy.ensureHeavyDir(spark, base, factor, target)
     println(s"heavy dir ready: $target ($stamp)")
     spark.stop()
   }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * registry shape) multiply-add nodes per code column and again per query
   * LUT — and that EXPRESSION SIZE, not the arithmetic, was the measured
   * cost: ~2 s of driver planning + codegen compile per sim4x/sim5x run
-  * against a 0.9 s execution stage (ProfileOne, sf0.1, r15). These two
+  * against a 0.9 s execution stage (stage table, sf0.1, r15). These two
   * expressions compute the identical values in tight loops with the
   * codebook inlined as data, so the plan carries two small nodes instead
   * of thousands.

@@ -36,18 +36,6 @@ object Ann {
     */
   val DefaultMaxQueryRows: Long = 100000L
 
-  /** Fail-loud guard in front of every forced broadcast of a
-    * caller-supplied frame (query sets, centroid sets, blocklists): the
-    * "small frame" caller contract, enforced instead of assumed. Costs
-    * one `limit(max+1).count()` job — CollectLimit executes partitions
-    * incrementally and stops as soon as max+1 rows exist, so an oversized
-    * set is rejected early and a small set pays ~one filtered scan, noise
-    * next to the search it precedes. Shared across operator objects
-    * (Curation's blocklist guard rides it too). The probe limit clamps to
-    * Int.MaxValue WITHOUT computing maxRows+1 first — maxRows =
-    * Long.MaxValue must mean "effectively unbounded", not an overflow
-    * that wraps to limit(0) and silently disables the guard.
-    */
   /** Build two independent (typically checkpoint-materializing) frames
     * overlapped — under AQE a lazy localCheckpoint runs its non-final
     * stages at construction time, so sequential construction serializes
@@ -62,6 +50,18 @@ object Ann {
     (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
   }
 
+  /** Fail-loud guard in front of every forced broadcast of a
+    * caller-supplied frame (query sets, centroid sets, blocklists): the
+    * "small frame" caller contract, enforced instead of assumed. Costs
+    * one `limit(max+1).count()` job — CollectLimit executes partitions
+    * incrementally and stops as soon as max+1 rows exist, so an oversized
+    * set is rejected early and a small set pays ~one filtered scan, noise
+    * next to the search it precedes. Shared across operator objects
+    * (Curation's blocklist guard rides it too). The probe limit clamps to
+    * Int.MaxValue WITHOUT computing maxRows+1 first — maxRows =
+    * Long.MaxValue must mean "effectively unbounded", not an overflow
+    * that wraps to limit(0) and silently disables the guard.
+    */
   private[operators] def requireSmallQuerySet(q: DataFrame, what: String,
       maxRows: Long): Unit = {
     require(maxRows >= 1, s"maxQueryRows must be >= 1, got $maxRows")

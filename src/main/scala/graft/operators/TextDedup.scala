@@ -480,25 +480,17 @@ object TextDedup {
     import org.apache.spark.rdd.RDD
     import org.apache.spark.storage.StorageLevel
     import spark.implicits._
-    // progress logging for the converge loop (off by default): an
-    // iterative stage with no per-round signal is undebuggable on a
-    // cluster — set GRAFT_CC_LOG=1 to see round/changed/seconds on stderr
-    val ccLog = sys.env.contains("GRAFT_CC_LOG")
-    def logRound(tag: String, t0: Long, extra: => String): Unit = if (ccLog)
-      System.err.println(
-        f"[dupClusters] $tag ${(System.nanoTime - t0) / 1e9}%.2fs $extra")
     // reliable mode marks each generation before the job that first
     // computes it; Spark writes it to the checkpoint dir once that job
     // ends (a generation first computed inside a LATER generation's job
     // is skipped — the later write truncates the lineage past it)
     def mark[T](rdd: RDD[T]): RDD[T] = { if (reliable) rdd.checkpoint(); rdd }
-    val tE = System.nanoTime
     // SCALE-ADAPTIVE loop grain (r16; guide §2.2 "fewer, larger reduce
     // partitions"): the loop's stage count is fixed (~3 exchanges × rounds)
     // but every stage pays a per-task scheduling floor, so running a
     // few-thousand-edge graph at `spark.sql.shuffle.partitions` tasks is
     // pure overhead — measured at sf0.1/32 partitions as ~0.5 s per
-    // convergence-check job against ~3k live label rows (GRAFT_CC_LOG).
+    // convergence-check job against ~3k live label rows.
     // The partition count therefore derives from the MEASURED edge count
     // (graft.cc.rowsPerPartition edges per task, default 2M ≈ 32 MB of
     // serialized long pairs), capped at the session's shuffle partitions —
@@ -521,7 +513,7 @@ object TextDedup {
     // PACKED edge storage (r16; guide §1.2 per-task work): every round
     // re-reads the whole edge set, and the r15 form paid ~150 ms/round at
     // sf0.1 re-deserializing the MEMORY_AND_DISK_SER boxed (Long, Long)
-    // tuples through the join's cogroup (ProfileOne stage table — the
+    // tuples through the join's cogroup (TimeQueries stage table — the
     // `map at TextDedup` stages reading input=50k). The edges now persist
     // DESERIALIZED but packed as two primitive long[] per partition:
     // 16 bytes/edge — SMALLER than the serialized-tuple form (which the
@@ -567,14 +559,12 @@ object TextDedup {
       acc.iterator.map { case (id, m) => (id, (id, math.min(id, m))) }
     }, preservesPartitioning = false)
       .persist(StorageLevel.MEMORY_AND_DISK))
-    logRound("edges+round1", tE, s"fused edges=$edgeCnt parts=$n")
     var labels: RDD[(Long, Long)] =
       withOld.mapValues(_._2)
     val superseded = scala.collection.mutable.Buffer[RDD[_]]()
     var converged = false
     var i = 1
     while (!converged && i < maxIter) {
-      val tR = System.nanoTime
       val prev = labels
       // neighbor-min: label(src) resolves LOCALLY against the co-located
       // label partition (zipPartitions + primitive map — no cogroup, no
@@ -616,7 +606,6 @@ object TextDedup {
           (id, (o, math.min(o, inc.get(id, Long.MaxValue)))) }
       }.persist(StorageLevel.MEMORY_AND_DISK))
       i += 1
-      logRound(s"round $i build", tR, "")
       // convergence is checked every SECOND round: the count is the round's
       // only job (it is what materializes `updated`), so skipping it on odd
       // rounds folds two rounds of pointer-jumping into one job and halves
@@ -632,8 +621,7 @@ object TextDedup {
         // working set at one label generation
         superseded.foreach(_.unpersist(false))
         superseded.clear()
-        logRound(s"round $i", tR, s"changed=$changed")
-      } else logRound(s"round $i", tR, "deferred")
+      }
       superseded += withOld
       withOld = updated
       labels = updated.mapValues(_._2)
