@@ -79,8 +79,7 @@ object Dedup extends QuerySet {
     graft.functions.GraftFunctions.register(s0)
     val s = s0
     val e = Q.t(s, dir, "embeddings").select(
-      col("vec_id"), col("label"),
-      transform(col("embedding"), x => x.cast("double")).as("emb"))
+      col("vec_id"), col("label"), Q.embDouble)
     import graft.functions.GraftFunctions.{dot => gdot}
     val withNorm = e.withColumn("norm", sqrt(gdot(col("emb"), col("emb"))))
     val cosine = gdot(col("x.emb"), col("y.emb")) / (col("x.norm") * col("y.norm"))
@@ -231,14 +230,8 @@ object Dedup extends QuerySet {
   private def semanticDedupQ(s0: SparkSession, dir: String,
       maxClusterSize: Long): DataFrame = {
     graft.functions.GraftFunctions.register(s0)
-    val e = Q.t(s0, dir, "embeddings").select(
-      col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("emb"))
-    val centroids = e.filter(col("vec_id") < 8).select(
-      col("vec_id").as("centroid_id"), col("emb").as("c_emb"),
-      sqrt(graft.functions.GraftFunctions.dot(col("emb"), col("emb")))
-        .as("c_norm"))
-    graft.operators.Ann.semanticDedup(e, "vec_id", "emb", centroids,
+    val e = Q.vecEmb(Q.t(s0, dir, "embeddings"))
+    graft.operators.Ann.semanticDedup(e, "vec_id", "emb", Q.fixedCentroids(e),
       threshold = 0.3, maxClusterSize = maxClusterSize)
   }
 
@@ -266,9 +259,7 @@ object Dedup extends QuerySet {
     */
   def dd49(s0: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s0)
-    val e = Q.t(s0, dir, "embeddings").select(
-      col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("emb"))
+    val e = Q.vecEmb(Q.t(s0, dir, "embeddings"))
     val fitted = graft.operators.Ann.kmeansCentroids(
       graft.operators.Ann.kmeansFit(e, "vec_id", "emb", k = 8, iters = 2,
         dim = 64))
@@ -307,13 +298,8 @@ object Dedup extends QuerySet {
     */
   def dd51(s0: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s0)
-    val e = Q.t(s0, dir, "embeddings").select(
-      col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("emb"))
-    val centroids = e.filter(col("vec_id") < 8).select(
-      col("vec_id").as("centroid_id"), col("emb").as("c_emb"),
-      sqrt(graft.functions.GraftFunctions.dot(col("emb"), col("emb")))
-        .as("c_norm"))
+    val e = Q.vecEmb(Q.t(s0, dir, "embeddings"))
+    val centroids = Q.fixedCentroids(e)
     val index = graft.operators.Ann.buildSemanticIndex(
       e.filter(col("vec_id") % 2 === 0), "vec_id", "emb", centroids)
     graft.operators.Ann.semanticScreen(index,

@@ -35,6 +35,27 @@ object Q {
     if (name == "events") df.withColumn("ts", normTs(df, "ts")) else df
   }
 
+  /** The fixture's float `embedding` as `emb: double[]`, so every dot and
+    * norm folds in double like the oracle's `list_sum`.
+    */
+  def embDouble: Column =
+    transform(col("embedding"), x => x.cast("double")).as("emb")
+
+  /** (vec_id, emb) of an embeddings frame — the fixture table or a
+    * streamed batch of it.
+    */
+  def vecEmb(df: DataFrame): DataFrame = df.select(col("vec_id"), embDouble)
+
+  /** The 8 fixed centroids: the vec_id < 8 vectors of a (vec_id, emb)
+    * frame with their norms (deterministic and SQL-joinable; production
+    * trains k-means offline).
+    */
+  def fixedCentroids(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < 8).select(
+      col("vec_id").as("centroid_id"), col("emb").as("c_emb"),
+      sqrt(graft.functions.GraftFunctions.dot(col("emb"), col("emb")))
+        .as("c_norm"))
+
   /** ts column normalized to TimestampType regardless of the fixture's
     * physical parquet type (long nanos | TIMESTAMP_NTZ micros | TIMESTAMP).
     * The session TZ is pinned to UTC, so the NTZ→TZ cast preserves the wall

@@ -31,9 +31,7 @@ object Similarity extends QuerySet {
   }
 
   private def embD(s: SparkSession, dir: String): DataFrame =
-    Q.t(s, dir, "embeddings").select(
-      col("vec_id"), col("label"),
-      transform(col("embedding"), x => x.cast("double")).as("emb"))
+    Q.t(s, dir, "embeddings").select(col("vec_id"), col("label"), Q.embDouble)
 
   /** Brute-force cosine top-k: queries = vec_id < 10, k = 5. */
   def sim36(s0: SparkSession, dir: String): DataFrame =
@@ -50,15 +48,8 @@ object Similarity extends QuerySet {
     Ann.lshNearPairs(embD(withDot(s0), dir), "vec_id", "emb",
       planes = 8, dim = 64, threshold = 0.25)
 
-  /** Fixed centroids = the vec_id<8 embeddings (deterministic and
-    * SQL-joinable; production trains k-means offline).
-    */
-  private def centroids(s: SparkSession, dir: String): DataFrame = {
-    val e = embD(s, dir)
-    e.filter(col("vec_id") < 8).select(
-      col("vec_id").as("centroid_id"), col("emb").as("c_emb"),
-      sqrt(graft.functions.GraftFunctions.dot(col("emb"), col("emb"))).as("c_norm"))
-  }
+  private def centroids(s: SparkSession, dir: String): DataFrame =
+    Q.fixedCentroids(embD(s, dir))
 
   /** IVF coarse assignment to the nearest of 8 fixed centroids. */
   def sim39(s0: SparkSession, dir: String): DataFrame = {

@@ -1,10 +1,12 @@
 package graft.queries
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.sql.{Date, Timestamp}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.streaming.{EventStreaming, X12Streaming}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import graft.streaming.{DurableState, EventStreaming, PostingsStore,
+  X12Streaming}
 import graft.x12.{SilverRecord, X12Silver, X12TestDataGen}
 
 /** Driver-visible streaming entries (SURVEY §2.10 T1/T2/T4 + stateful
@@ -36,6 +38,90 @@ object StreamingQueries extends QuerySet {
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
+
+  // ---------------------------------------------------------------------
+  // The drain harness: every entry stages its feed, drains it with one
+  // AvailableNow query, and `require`s the result against its batch twin.
+  // ---------------------------------------------------------------------
+
+  /** Copy fixture table `name` into a temp dir keyed by the sf dir: the
+    * file streaming source requires a DIRECTORY, and the fixture table is
+    * a single parquet file. Copied UNCONDITIONALLY — a size-keyed skip
+    * would silently stream a stale file after a fixture regeneration of
+    * equal byte size. Pins the nanos-as-long read `Q.t` pins for every
+    * fixture read, so the staged schema reads the same way.
+    */
+  private def stageFixture(s: SparkSession, dir: String,
+      name: String): String = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
+    val staged = Paths.get(
+      s"${System.getProperty("java.io.tmpdir")}/graft_stream_${name}_$key")
+    Files.createDirectories(staged)
+    Files.copy(Paths.get(s"$dir/$name.parquet"),
+      staged.resolve(s"$name.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    staged.toString
+  }
+
+  /** Stage `df` as `n` single-file parts, range-partitioned on `byRange`
+    * (part-file NAME order = range order); returns the staged dir.
+    */
+  private def stageRanges(df: DataFrame, n: Int, byRange: Column*): String = {
+    val d = tmp("graft_stream_stage")
+    df.repartitionByRange(n, byRange: _*).write.mode("overwrite").parquet(d)
+    d
+  }
+
+  /** The parquet parts of a staged dir, in part-name order. */
+  private def partFiles(staged: String): Seq[java.io.File] =
+    new java.io.File(staged).listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
+
+  /** `readStream` of a staged dir with the staged files' schema;
+    * `perTrigger` > 0 caps the files each micro-batch takes.
+    */
+  private def feed(s: SparkSession, path: String,
+      perTrigger: Int = 0): DataFrame = {
+    val r = s.readStream.schema(s.read.parquet(path).schema)
+    (if (perTrigger > 0) r.option("maxFilesPerTrigger", perTrigger) else r)
+      .parquet(path)
+  }
+
+  /** Start `w` as one AvailableNow query on checkpoint `ckpt` (a fresh
+    * dir unless a restart reuses one) and block until it has drained.
+    */
+  private def drain[T](w: DataStreamWriter[T],
+      ckpt: String = tmp("graft_stream_ckpt")): Unit =
+    w.option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
+  /** The parity check: `got` must hold exactly `twin`'s distinct rows —
+    * `missing` counts twin rows the drain lost, `extra` rows it added.
+    */
+  private def requireSameRows(twin: DataFrame, got: DataFrame,
+      what: String): Unit = {
+    val missing = twin.except(got).count()
+    val extra = got.except(twin).count()
+    require(missing == 0 && extra == 0,
+      s"$what: missing=$missing extra=$extra")
+  }
+
+  /** transformWithState refuses the default HDFS state store: run `body`
+    * on the RocksDB provider, restoring the session's setting after.
+    */
+  private def withRocksDb[A](s: SparkSession)(body: => A): A = {
+    val k = "spark.sql.streaming.stateStore.providerClass"
+    val prev = s.conf.getOption(k)
+    s.conf.set(k,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally prev match {
+      case Some(p) => s.conf.set(k, p)
+      case None => s.conf.unset(k)
+    }
+  }
 
   /** T1: AvailableNow drain of the streaming silver ingest → partitioned
     * parquet, then parity-checked against the batch parse of the same
@@ -83,14 +169,10 @@ object StreamingQueries extends QuerySet {
       }
       d.toString
     }
-    val deduped = X12Streaming.dedupStream(
-      X12Streaming.silverStream(s, replayDir, "BATCH_S", date, ts))
-    val q = deduped.writeStream.format("memory").queryName("st48_dedup")
-      .option("checkpointLocation", tmp("graft_st48_ckpt"))
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(X12Streaming.dedupStream(
+        X12Streaming.silverStream(s, replayDir, "BATCH_S", date, ts))
+      .writeStream.format("memory").queryName("st48_dedup")
+      .outputMode("append"))
     val out = s.table("st48_dedup")
     val expected = batchSilver(s, landing)
       .select("interchange_control_number", "functional_group_number",
@@ -109,29 +191,11 @@ object StreamingQueries extends QuerySet {
     * populated hour, parity-checked against the batch hour count.
     */
   def st49(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the file streaming source requires a DIRECTORY; the fixture table is a
-    // single parquet file — stage it into a temp dir keyed by the sf-dir
-    // name, copied UNCONDITIONALLY (a size-keyed skip would silently stream
-    // a stale file after a fixture regeneration of equal byte size)
-    val src = Paths.get(s"$dir/events.parquet")
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val staged = Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_st49_events_$key")
-    Files.createDirectories(staged)
-    Files.copy(src, staged.resolve("events.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-    val path = staged.toString
-    val schema = s.read.parquet(path).schema
-    val streamRaw = s.readStream.schema(schema).parquet(path)
+    val streamRaw = feed(s, stageFixture(s, dir, "events"))
     val stream = streamRaw.withColumn("ts", Q.normTs(streamRaw, "ts"))
-    val q = EventStreaming.hourlyHealth(stream).writeStream
+    drain(EventStreaming.hourlyHealth(stream).writeStream
       .format("memory").queryName("st49_health")
-      .option("checkpointLocation", tmp("graft_st49_ckpt"))
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .outputMode("complete"))
     val out = s.table("st49_health")
     val expected = Q.t(s, dir, "events")
       .select(date_trunc("hour", col("ts"))).distinct().count()
@@ -152,13 +216,7 @@ object StreamingQueries extends QuerySet {
     */
   def st50(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val src = Paths.get(s"$dir/documents.parquet")
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val staged = Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_st50_docs_$key")
-    Files.createDirectories(staged)
-    Files.copy(src, staged.resolve("documents.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
+    val staged = stageFixture(s, dir, "documents")
     val all = Q.t(s, dir, "documents")
     val ref = all.filter(col("doc_id") % 2 === 0)
     // the reference index is built ONCE, outside the stream: the ref
@@ -167,30 +225,19 @@ object StreamingQueries extends QuerySet {
     // per-batch form re-shuffled the full reference corpus per trigger)
     val refIndex = graft.operators.TextDedup.buildReferenceIndex(
       ref, "doc_id", "text", bands = 2, rowsPerBand = 2)
-    val schema = s.read.parquet(staged.toString).schema
-    val feed = s.readStream.schema(schema).parquet(staged.toString)
-      .filter(col("doc_id") % 2 === 1)
     val out = tmp("graft_st50_out")
-    val q = feed.writeStream
+    drain(feed(s, staged).filter(col("doc_id") % 2 === 1).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.operators.TextDedup
           .dedupAgainstIndex(refIndex, batch, "doc_id", "text",
             threshold = 0.5)
           .select("doc_id", "source", "lang")
           .write.mode("append").parquet(out)
-      }
-      .option("checkpointLocation", tmp("graft_st50_ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
     val streamed = s.read.parquet(out)
-    val batchTwin = Dedup.dd46(s, dir)
-    val missing = batchTwin.select("doc_id")
-      .except(streamed.select("doc_id")).count()
-    val extra = streamed.select("doc_id")
-      .except(batchTwin.select("doc_id")).count()
-    require(missing == 0 && extra == 0,
-      s"streamed screen diverged from the batch twin: missing=$missing extra=$extra")
+    requireSameRows(Dedup.dd46(s, dir).select("doc_id"),
+      streamed.select("doc_id"),
+      "streamed screen diverged from the batch twin")
     streamed
   }
 
@@ -206,46 +253,22 @@ object StreamingQueries extends QuerySet {
     */
   def st51(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val src = Paths.get(s"$dir/embeddings.parquet")
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val staged = Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_st51_emb_$key")
-    Files.createDirectories(staged)
-    Files.copy(src, staged.resolve("embeddings.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-    def embD(df: DataFrame): DataFrame = df.select(
-      col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("emb"))
-    val all = embD(Q.t(s, dir, "embeddings"))
-    val centroids = all.filter(col("vec_id") < 8).select(
-      col("vec_id").as("centroid_id"), col("emb").as("c_emb"),
-      sqrt(graft.functions.GraftFunctions.dot(col("emb"), col("emb")))
-        .as("c_norm"))
+    val staged = stageFixture(s, dir, "embeddings")
+    val all = Q.vecEmb(Q.t(s, dir, "embeddings"))
+    val centroids = Q.fixedCentroids(all)
     val index = graft.operators.Ann.buildSemanticIndex(
       all.filter(col("vec_id") % 2 === 0), "vec_id", "emb", centroids)
-    val schema = s.read.parquet(staged.toString).schema
-    val feed = s.readStream.schema(schema).parquet(staged.toString)
-      .filter(col("vec_id") % 2 === 1)
     val out = tmp("graft_st51_out")
-    val q = feed.writeStream
+    drain(feed(s, staged).filter(col("vec_id") % 2 === 1).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Ann.semanticScreen(index, embD(batch),
+        graft.operators.Ann.semanticScreen(index, Q.vecEmb(batch),
             "vec_id", "emb", centroids, threshold = 0.3)
           .write.mode("append").parquet(out)
-      }
-      .option("checkpointLocation", tmp("graft_st51_ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
     val streamed = s.read.parquet(out)
-    val batchTwin = Dedup.dd51(s, dir)
-    val missing = batchTwin.select("vec_id")
-      .except(streamed.select("vec_id")).count()
-    val extra = streamed.select("vec_id")
-      .except(batchTwin.select("vec_id")).count()
-    require(missing == 0 && extra == 0,
-      s"streamed semantic screen diverged from the batch twin: " +
-        s"missing=$missing extra=$extra")
+    requireSameRows(Dedup.dd51(s, dir).select("vec_id"),
+      streamed.select("vec_id"),
+      "streamed semantic screen diverged from the batch twin")
     streamed
   }
 
@@ -261,37 +284,20 @@ object StreamingQueries extends QuerySet {
     * semantics (strict overlap vs diff > gap) agree exactly.
     */
   def st52(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val src = Paths.get(s"$dir/events.parquet")
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val staged = Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_st52_events_$key")
-    Files.createDirectories(staged)
-    Files.copy(src, staged.resolve("events.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-    val schema = s.read.parquet(staged.toString).schema
-    val streamRaw = s.readStream.schema(schema).parquet(staged.toString)
+    val streamRaw = feed(s, stageFixture(s, dir, "events"))
     val stream = streamRaw.withColumn("ts", Q.normTs(streamRaw, "ts"))
-    val q = EventStreaming.sessions(stream).writeStream
+    drain(EventStreaming.sessions(stream).writeStream
       .format("memory").queryName("st52_sessions")
-      .option("checkpointLocation", tmp("graft_st52_ckpt"))
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .outputMode("complete"))
     val streamed = s.table("st52_sessions")
     val twin = Extended.q31(s, dir).select(
       col("user_id"), col("session_start"),
       // session_window's end = last event ts + gap
       (col("session_end") + expr("INTERVAL 30 MINUTES")).as("session_end"),
       col("n_events"))
-    val proj = streamed.select("user_id", "session_start", "session_end",
-      "n_events")
-    val missing = twin.except(proj).count()
-    val extra = proj.except(twin).count()
-    require(missing == 0 && extra == 0,
-      s"streamed sessions diverged from the oracled q31 twin: " +
-        s"missing=$missing extra=$extra")
+    requireSameRows(twin, streamed.select("user_id", "session_start",
+        "session_end", "n_events"),
+      "streamed sessions diverged from the oracled q31 twin")
     streamed
   }
 
@@ -306,17 +312,9 @@ object StreamingQueries extends QuerySet {
     */
   def st53(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val src = Paths.get(s"$dir/documents.parquet")
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val staged = Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_st53_docs_$key")
-    Files.createDirectories(staged)
-    Files.copy(src, staged.resolve("documents.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-    val schema = s.read.parquet(staged.toString).schema
-    val feed = s.readStream.schema(schema).parquet(staged.toString)
+    val staged = stageFixture(s, dir, "documents")
     val out = tmp("graft_st53_out")
-    val q = feed.writeStream
+    drain(feed(s, staged).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // same stopword-injection convention as the td40 twin
         val injected = batch.select(
@@ -328,21 +326,12 @@ object StreamingQueries extends QuerySet {
         graft.operators.TextAnalysis
           .curationPipeline(injected, "doc_id", "text")
           .write.mode("append").parquet(out)
-      }
-      .option("checkpointLocation", tmp("graft_st53_ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
     val streamed = s.read.parquet(out)
-    val batchTwin = TextOps.q40(s, dir)
-    val idCols = Seq("doc_id", "keep", "n_redactions")
-    val missing = batchTwin.select(idCols.map(col): _*)
-      .except(streamed.select(idCols.map(col): _*)).count()
-    val extra = streamed.select(idCols.map(col): _*)
-      .except(batchTwin.select(idCols.map(col): _*)).count()
-    require(missing == 0 && extra == 0,
-      s"streamed curation diverged from the td40 twin: " +
-        s"missing=$missing extra=$extra")
+    val idCols = Seq("doc_id", "keep", "n_redactions").map(col)
+    requireSameRows(TextOps.q40(s, dir).select(idCols: _*),
+      streamed.select(idCols: _*),
+      "streamed curation diverged from the td40 twin")
     streamed
   }
 
@@ -355,39 +344,22 @@ object StreamingQueries extends QuerySet {
     * frames — asserted by identity-set parity on (view_id, purchase_id).
     */
   def st54(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val src = Paths.get(s"$dir/events.parquet")
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val staged = Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_st54_events_$key")
-    Files.createDirectories(staged)
-    Files.copy(src, staged.resolve("events.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-    val schema = s.read.parquet(staged.toString).schema
-    def feed(): DataFrame = {
-      val raw = s.readStream.schema(schema).parquet(staged.toString)
+    val staged = stageFixture(s, dir, "events")
+    def events(): DataFrame = {
+      val raw = feed(s, staged)
       raw.withColumn("ts", Q.normTs(raw, "ts"))
     }
     val joined = EventStreaming.viewPurchaseJoin(
-      feed().filter(col("event_type") === "view"),
-      feed().filter(col("event_type") === "purchase"))
+      events().filter(col("event_type") === "view"),
+      events().filter(col("event_type") === "purchase"))
     val out = tmp("graft_st54_out")
-    val q = joined.writeStream.format("parquet").option("path", out)
-      .option("checkpointLocation", tmp("graft_st54_ckpt"))
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(joined.writeStream.format("parquet").option("path", out)
+      .outputMode("append"))
     val streamed = s.read.parquet(out)
-    val twin = Extended.q45(s, dir) // the ORACLED batch twin
-    val ids = Seq("view_id", "purchase_id")
-    val missing = twin.select(ids.map(col): _*)
-      .except(streamed.select(ids.map(col): _*)).count()
-    val extra = streamed.select(ids.map(col): _*)
-      .except(twin.select(ids.map(col): _*)).count()
-    require(missing == 0 && extra == 0,
-      s"stream-stream join diverged from the batch twin: " +
-        s"missing=$missing extra=$extra")
+    val ids = Seq("view_id", "purchase_id").map(col)
+    requireSameRows(Extended.q45(s, dir).select(ids: _*), // the ORACLED twin
+      streamed.select(ids: _*),
+      "stream-stream join diverged from the batch twin")
     streamed
   }
 
@@ -399,16 +371,7 @@ object StreamingQueries extends QuerySet {
     * cast, so partition order cannot move them).
     */
   def st55(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val src = Paths.get(s"$dir/events.parquet")
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val staged = Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_st55_events_$key")
-    Files.createDirectories(staged)
-    Files.copy(src, staged.resolve("events.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-    val schema = s.read.parquet(staged.toString).schema
-    val raw = s.readStream.schema(schema).parquet(staged.toString)
+    val raw = feed(s, stageFixture(s, dir, "events"))
     val stream = raw.withColumn("ts", Q.normTs(raw, "ts"))
     val agg = stream
       .withWatermark("ts", "2 hours")
@@ -416,19 +379,11 @@ object StreamingQueries extends QuerySet {
       .agg(count(lit(1)).as("cnt"), Q.dsum(col("value")).as("sum_value"))
       .select(unix_timestamp(col("window.start")).as("ws"),
         col("event_type"), col("cnt"), col("sum_value"))
-    val q = agg.writeStream.format("memory").queryName("st55_sliding")
-      .option("checkpointLocation", tmp("graft_st55_ckpt"))
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(agg.writeStream.format("memory").queryName("st55_sliding")
+      .outputMode("complete"))
     val streamed = s.table("st55_sliding")
-    val twin = Extended.q53(s, dir) // the ORACLED batch twin
-    val missing = twin.except(streamed).count()
-    val extra = streamed.except(twin).count()
-    require(missing == 0 && extra == 0,
-      s"streamed sliding windows diverged from the q53 twin: " +
-        s"missing=$missing extra=$extra")
+    requireSameRows(Extended.q53(s, dir), streamed, // the ORACLED batch twin
+      "streamed sliding windows diverged from the q53 twin")
     streamed
   }
 
@@ -451,42 +406,26 @@ object StreamingQueries extends QuerySet {
     */
   def st56(s: SparkSession, dir: String): DataFrame = {
     val orders = Q.t(s, dir, "orders")
-    val schema = orders.schema
     val stateDir = tmp("graft_st56_state")
     val files = stageEach((0 until 3).map(i =>
       orders.filter(col("o_orderkey") % 3 === i)))
-    restartDrain(files, phase1 = 2) { (feed, ckpt) =>
-      s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-        .writeStream
+    restartDrain(files, phase1 = 2) { d =>
+      feed(s, d, perTrigger = 1).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val partial = batch.groupBy("o_orderpriority").agg(
             count(lit(1)).as("cnt"),
             sum(col("o_totalprice").cast("decimal(18,2)")).as("sum_dec"),
             max(col("o_orderdate")).as("max_date"))
-          val merged =
-            graft.streaming.DurableState.latestBefore(stateDir, batchId) match {
-              case None => partial
-              case Some(v) =>
-                graft.streaming.DurableState
-                  .read(batch.sparkSession, stateDir, v, "gold")
-                  .unionByName(partial).groupBy("o_orderpriority").agg(
-                    sum(col("cnt")).as("cnt"),
-                    sum(col("sum_dec")).cast("decimal(18,2)").as("sum_dec"),
-                    max(col("max_date")).as("max_date"))
-            }
-          graft.streaming.DurableState.commit(stateDir, batchId,
-            Seq("gold" -> merged))
-          graft.streaming.DurableState.prune(stateDir, keep = 2)
+          DurableState.fold(batch.sparkSession, stateDir, batchId)(prior =>
+            Seq("gold" ->
+              prior.fold(partial)(_("gold")
+                .unionByName(partial).groupBy("o_orderpriority").agg(
+                  sum(col("cnt")).as("cnt"),
+                  sum(col("sum_dec")).cast("decimal(18,2)").as("sum_dec"),
+                  max(col("max_date")).as("max_date")))))
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
-    val v = graft.streaming.DurableState
-      .latestBefore(stateDir, Long.MaxValue)
-      .getOrElse(sys.error("st56: no committed gold state"))
-    val state = graft.streaming.DurableState.read(s, stateDir, v, "gold")
+    val state = DurableState.newest(s, stateDir)("gold")
     val out = state.select(col("o_orderpriority"),
       col("cnt").cast("long").as("cnt"),
       col("sum_dec").cast("double").as("sum_price"),
@@ -498,12 +437,8 @@ object StreamingQueries extends QuerySet {
     def cents(df: DataFrame): DataFrame = df.select(
       col("o_orderpriority"), col("cnt"),
       round(col("sum_price"), 2).as("sum_c"), col("max_date"))
-    val twin = cents(Extended.q26(s, dir)) // the ORACLED batch twin
-    val missing = twin.except(cents(out)).count()
-    val extra = cents(out).except(twin).count()
-    require(missing == 0 && extra == 0,
-      s"maintained gold state diverged from the q26 twin: " +
-        s"missing=$missing extra=$extra")
+    requireSameRows(cents(Extended.q26(s, dir)), cents(out), // ORACLED twin
+      "maintained gold state diverged from the q26 twin")
     out
   }
 
@@ -525,43 +460,25 @@ object StreamingQueries extends QuerySet {
     */
   def st57(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    def embD(df: DataFrame): DataFrame = df.select(
-      col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("emb"))
-    val all = embD(Q.t(s, dir, "embeddings"))
-    val centroids = all.filter(col("vec_id") < 8).select(
-      col("vec_id").as("centroid_id"), col("emb").as("c_emb"),
-      sqrt(graft.functions.GraftFunctions.dot(col("emb"), col("emb")))
-        .as("c_norm"))
-    val staged = tmp("graft_st57_feed")
-    Q.t(s, dir, "embeddings").filter(col("vec_id") % 2 === 1)
-      .repartitionByRange(3, col("vec_id"))
-      .write.mode("overwrite").parquet(staged)
+    val all = Q.vecEmb(Q.t(s, dir, "embeddings"))
+    val centroids = Q.fixedCentroids(all)
+    val staged = stageRanges(
+      Q.t(s, dir, "embeddings").filter(col("vec_id") % 2 === 1),
+      3, col("vec_id"))
     var corpus = all.filter(col("vec_id") % 2 === 0).localCheckpoint(true)
     var graph = graft.operators.Ann
       .knnGraph(corpus, "vec_id", "emb", centroids, k = 3)
       .localCheckpoint(true)
-    val schema = s.read.parquet(staged).schema
-    val feed = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged)
-    val q = feed.writeStream
+    drain(feed(s, staged, perTrigger = 1).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = embD(batch)
+        val b = Q.vecEmb(batch)
         graph = graft.operators.Ann.knnGraphIncrementalBatch(
           graph, corpus, b, "vec_id", "emb", centroids, k = 3)
           .localCheckpoint(true)
         corpus = corpus.unionByName(b).localCheckpoint(true)
-      }
-      .option("checkpointLocation", tmp("graft_st57_ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val twin = Similarity.sim52(s, dir) // the ORACLED batch twin
-    val missing = twin.except(graph).count()
-    val extra = graph.except(twin).count()
-    require(missing == 0 && extra == 0,
-      s"maintained kNN graph diverged from the sim52 batch twin: " +
-        s"missing=$missing extra=$extra")
+      })
+    requireSameRows(Similarity.sim52(s, dir), graph, // the ORACLED twin
+      "maintained kNN graph diverged from the sim52 batch twin")
     graph
   }
 
@@ -580,23 +497,13 @@ object StreamingQueries extends QuerySet {
     * the documented at-least-once tradeoff of bounded state.
     */
   def st58(s: SparkSession, dir: String): DataFrame = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val staged = tmp(s"graft_st58_feed_$key")
     val ev = Q.t(s, dir, "events")
-    ev.unionByName(ev).repartitionByRange(3, col("event_id"))
-      .write.mode("overwrite").parquet(staged)
-    val schema = s.read.parquet(staged).schema
-    val feed = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged)
-    val deduped = feed
+    val staged = stageRanges(ev.unionByName(ev), 3, col("event_id"))
+    val deduped = feed(s, staged, perTrigger = 1)
       .withWatermark("ts", "3650 days")
       .dropDuplicatesWithinWatermark("event_id")
-    val q = deduped.writeStream.format("memory").queryName("st58_dedup")
-      .option("checkpointLocation", tmp("graft_st58_ckpt"))
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(deduped.writeStream.format("memory").queryName("st58_dedup")
+      .outputMode("append"))
     val streamed = s.table("st58_dedup")
     val batchIds = Q.t(s, dir, "events").select("event_id").distinct()
     val n = streamed.count()
@@ -619,43 +526,18 @@ object StreamingQueries extends QuerySet {
     * the full key set.
     */
   def st59(s: SparkSession, dir: String): DataFrame = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val staged = tmp(s"graft_st59_feed_$key")
-    Q.t(s, dir, "events").repartitionByRange(3, col("event_id"))
-      .write.mode("overwrite").parquet(staged)
-    val prevProvider =
-      s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val schema = s.read.parquet(staged).schema
-      val feed = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
-      val q = EventStreaming.runningCounts(feed)
+    val staged = stageRanges(Q.t(s, dir, "events"), 3, col("event_id"))
+    withRocksDb(s) {
+      drain(EventStreaming.runningCounts(feed(s, staged, perTrigger = 1))
         .toDF("user_id", "running_cnt")
         .writeStream.format("memory").queryName("st59_counts")
-        .option("checkpointLocation", tmp("graft_st59_ckpt"))
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .outputMode("append"))
       val streamed = s.table("st59_counts")
         .groupBy("user_id").agg(max(col("running_cnt")).as("n_events"))
-      val twin = Q.t(s, dir, "events")
-        .groupBy("user_id").agg(count(lit(1)).as("n_events"))
-      val missing = twin.except(streamed).count()
-      val extra = streamed.except(twin).count()
-      require(missing == 0 && extra == 0,
-        s"transformWithState running counts diverged from the batch " +
-          s"aggregate: missing=$missing extra=$extra")
+      requireSameRows(Q.t(s, dir, "events")
+          .groupBy("user_id").agg(count(lit(1)).as("n_events")), streamed,
+        "transformWithState running counts diverged from the batch aggregate")
       streamed
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -673,56 +555,30 @@ object StreamingQueries extends QuerySet {
     */
   def st60(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val staged = tmp(s"graft_st60_feed_$key")
-    Q.t(s, dir, "events")
-      .select(col("user_id"), col("ts"), col("event_id"),
-        round(col("value") * 100).cast("long").as("c"))
-      .repartitionByRange(3, col("ts"), col("event_id"))
-      .write.mode("overwrite").parquet(staged)
+    val staged = stageRanges(Q.t(s, dir, "events")
+        .select(col("user_id"), col("ts"), col("event_id"),
+          round(col("value") * 100).cast("long").as("c")),
+      3, col("ts"), col("event_id"))
     // the file source orders its triggers by MODIFICATION TIME, and the
     // three parts land with one mtime — stagger them in part-name order
     // so trigger order IS event-time order (the staging contract
     // rollingAnomaly documents)
-    new java.io.File(staged).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1000000000000L + i * 60000L)
-      }
-    val prevProvider =
-      s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val schema = s.read.parquet(staged).schema
-      val feed = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(staged)
+    partFiles(staged).zipWithIndex.foreach { case (f, i) =>
+      f.setLastModified(1000000000000L + i * 60000L)
+    }
+    withRocksDb(s) {
+      val events = feed(s, staged, perTrigger = 1)
         .select(col("user_id"), unix_micros(col("ts")).as("tsu"),
           col("event_id"), col("c"))
         .as[(Long, Long, Long, Long)]
-      val q = EventStreaming.rollingAnomaly(feed)
+      drain(EventStreaming.rollingAnomaly(events)
         .toDF("event_id", "user_id", "c", "dev", "is_anomaly")
         .writeStream.format("memory").queryName("st60_anomaly")
-        .option("checkpointLocation", tmp("graft_st60_ckpt"))
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .outputMode("append"))
       val streamed = s.table("st60_anomaly")
-      val twin = Extended.q58(s, dir) // the ORACLED batch twin
-      val missing = twin.except(streamed).count()
-      val extra = streamed.except(twin).count()
-      require(missing == 0 && extra == 0,
-        s"streamed rolling anomaly diverged from the oracled q58 twin: " +
-          s"missing=$missing extra=$extra")
+      requireSameRows(Extended.q58(s, dir), streamed, // the ORACLED twin
+        "streamed rolling anomaly diverged from the oracled q58 twin")
       streamed
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -740,18 +596,13 @@ object StreamingQueries extends QuerySet {
     */
   def st61(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val staged = tmp(s"graft_st61_feed_$key")
-    Q.t(s, dir, "documents").filter(col("doc_id") % 2 === 0)
-      .repartitionByRange(3, col("doc_id"))
-      .write.mode("overwrite").parquet(staged)
-    val schema = s.read.parquet(staged).schema
-    val feed = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged)
+    val staged = stageRanges(
+      Q.t(s, dir, "documents").filter(col("doc_id") % 2 === 0),
+      3, col("doc_id"))
     var counts: DataFrame = null
     var stats: DataFrame = null
     var nTrain = 0L
-    val q = feed.writeStream
+    drain(feed(s, staged, perTrigger = 1).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val c = graft.operators.Classification.nbCensus(batch, "text", "lang")
         val st = graft.operators.Classification
@@ -764,19 +615,11 @@ object StreamingQueries extends QuerySet {
             .agg(sum(col("docs_l")).as("docs_l"),
               sum(col("tok_l")).as("tok_l"))).localCheckpoint(true)
         nTrain += batch.count()
-      }
-      .option("checkpointLocation", tmp("graft_st61_ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
     val out = graft.operators.Classification.nbClassifyFromModel(
       counts, stats, nTrain, Q.t(s, dir, "documents"), "doc_id", "text")
-    val twin = TextOps.nbLangClassify(s, dir) // the ORACLED td52 twin
-    val missing = twin.except(out).count()
-    val extra = out.except(twin).count()
-    require(missing == 0 && extra == 0,
-      s"maintained NB model diverged from the one-shot td52 twin: " +
-        s"missing=$missing extra=$extra")
+    requireSameRows(TextOps.nbLangClassify(s, dir), out, // ORACLED td52 twin
+      "maintained NB model diverged from the one-shot td52 twin")
     out
   }
 
@@ -821,24 +664,16 @@ object StreamingQueries extends QuerySet {
     val scalarsBatch = s.range(1).select(
       lit(r.getLong(0)).as("n_docs"), lit(r.getLong(1)).as("tot_tok"),
       lit(r.getLong(2)).as("max_dl"))
-    val (census, scalars) =
-      graft.streaming.DurableState.latestBefore(stateDir, batchId) match {
-        case None => (c, scalarsBatch)
-        case Some(v) =>
-          val pc = graft.streaming.DurableState.read(s, stateDir, v, "census")
-          val ps = graft.streaming.DurableState.read(s, stateDir, v, "scalars")
-          (pc.unionByName(c).groupBy("token").agg(sum(col("df")).as("df")),
-            ps.unionByName(scalarsBatch).agg(
-              sum(col("n_docs")).as("n_docs"),
-              sum(col("tot_tok")).as("tot_tok"),
-              max(col("max_dl")).as("max_dl")))
-      }
-    graft.streaming.DurableState.commit(stateDir, batchId,
-      Seq("census" -> census, "scalars" -> scalars))
-    // retention: a maintenance query otherwise accumulates one
-    // model-sized version per trigger forever; keep = 2 preserves the
-    // version a replaying batch merges from
-    graft.streaming.DurableState.prune(stateDir, keep = 2)
+    // the fold's keep = 2 retention: a maintenance query otherwise
+    // accumulates one model-sized version per trigger forever
+    DurableState.fold(s, stateDir, batchId)(prior => Seq(
+      "census" -> prior.fold(c)(_("census").unionByName(c)
+        .groupBy("token").agg(sum(col("df")).as("df"))),
+      "scalars" -> prior.fold(scalarsBatch)(_("scalars")
+        .unionByName(scalarsBatch).agg(
+          sum(col("n_docs")).as("n_docs"),
+          sum(col("tot_tok")).as("tot_tok"),
+          max(col("max_dl")).as("max_dl")))))
     val rows = p.count()
     val bytes = graft.streaming.PostingsStore.batchBytes(postingsDir, batchId)
     rowLog(batchId) = (rows, bytes)
@@ -878,11 +713,9 @@ object StreamingQueries extends QuerySet {
     */
   private def rankFromMaintainedIndex(s: SparkSession, postingsDir: String,
       stateDir: String, dir: String, topK: Int): DataFrame = {
-    val v = graft.streaming.DurableState
-      .latestBefore(stateDir, Long.MaxValue)
-      .getOrElse(sys.error("maintained index: no committed state"))
-    val census = graft.streaming.DurableState.read(s, stateDir, v, "census")
-    val sc = graft.streaming.DurableState.read(s, stateDir, v, "scalars").head
+    val state = DurableState.newest(s, stateDir)
+    val census = state("census")
+    val sc = state("scalars").head
     val postings = graft.streaming.PostingsStore.read(s, postingsDir)
     val query = Q.t(s, dir, "documents").filter(col("doc_id") === 0)
       .select(explode(split(col("text"), " ")).as("token")).distinct()
@@ -925,33 +758,21 @@ object StreamingQueries extends QuerySet {
     */
   def st66(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val staged = tmp(s"graft_st66_feed_$key")
-    Q.t(s, dir, "documents")
-      .repartitionByRange(12, col("doc_id"))
-      .write.mode("overwrite").parquet(staged)
-    val schema = s.read.parquet(staged).schema
-    val nStaged = new java.io.File(staged).listFiles()
-      .count(_.getName.endsWith(".parquet"))
+    val staged = stageRanges(Q.t(s, dir, "documents"), 12, col("doc_id"))
+    val nStaged = partFiles(staged).size
     require(nStaged == 12,
       s"st66 staging must yield 12 single-file batches, got $nStaged")
-    val feed = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged)
     val postingsDir = tmp("graft_st66_postings")
     val stateDir = tmp("graft_st66_state")
     val rowLog = scala.collection.mutable.LinkedHashMap.empty[Long, (Long, Long)]
     val compactLog = scala.collection.mutable.ArrayBuffer
       .empty[graft.streaming.PostingsStore.Compaction]
-    val q = feed.writeStream
+    drain(feed(s, staged, perTrigger = 1).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         indexMaintenanceBatch(postingsDir, stateDir, rowLog,
           compactEvery = 2, mergeWidth = 3, compactLog = compactLog)(
           batch, batchId)
-      }
-      .option("checkpointLocation", tmp("graft_st66_ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
     // batch-proportional evidence: every trigger wrote exactly its batch —
     // the logged per-batch rows sum to the on-disk total (a history
     // rewrite would overshoot, a lossy compaction would undershoot),
@@ -1006,12 +827,8 @@ object StreamingQueries extends QuerySet {
     require(live.size == 4 && live.count(_.contains("batch_id=-")) == 2,
       s"in-flight compaction did not bound the partition count: $live")
     val out = rankFromMaintainedIndex(s, postingsDir, stateDir, dir, topK = 10)
-    val twin = TextOps.bm25TopK(s, dir) // the ORACLED td49 twin
-    val missing = twin.except(out).count()
-    val extra = out.except(twin).count()
-    require(missing == 0 && extra == 0,
-      s"maintained BM25 index diverged from the one-shot td49 twin: " +
-        s"missing=$missing extra=$extra")
+    requireSameRows(TextOps.bm25TopK(s, dir), out, // the ORACLED td49 twin
+      "maintained BM25 index diverged from the one-shot td49 twin")
     out
   }
 
@@ -1033,20 +850,13 @@ object StreamingQueries extends QuerySet {
     * (part-file NAME order = range order, the st60 staging contract),
     * held OUTSIDE the feed dir until revealed.
     */
-  private def stageParts(df: DataFrame, n: Int,
-      byRange: Seq[org.apache.spark.sql.Column]): Seq[java.nio.file.Path] = {
-    val d = tmp("graft_recov_stage")
-    df.repartitionByRange(n, byRange: _*)
-      .write.mode("overwrite").parquet(d)
-    new java.io.File(d).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .map(_.toPath).toSeq
-  }
+  private def stageParts(df: DataFrame, n: Int, byRange: Column*): Seq[Path] =
+    partFiles(stageRanges(df, n, byRange: _*)).map(_.toPath)
 
   /** Stage each frame as its own single-file part (for feeds whose parts
     * are not a range split — e.g. st62's deliberate full replay).
     */
-  private def stageEach(parts: Seq[DataFrame]): Seq[java.nio.file.Path] =
+  private def stageEach(parts: Seq[DataFrame]): Seq[Path] =
     parts.map { df =>
       val d = tmp("graft_recov_stage")
       df.coalesce(1).write.mode("overwrite").parquet(d)
@@ -1059,38 +869,25 @@ object StreamingQueries extends QuerySet {
     * feed dir (mtimes staggered in part order so trigger order is part
     * order), run the query to AvailableNow completion — the kill point —
     * then reveal the remainder and run a NEW query instance against the
-    * SAME feed dir and checkpoint. `run(feedDir, ckptDir)` must build the
-    * stream from scratch each time (fresh readStream + writeStream), as a
-    * real restarted driver would.
+    * SAME feed dir and checkpoint. `run(feedDir)` must build the stream
+    * from scratch each time (fresh readStream + writeStream), as a real
+    * restarted driver would; it returns the writer, [[drain]] starts it.
     */
-  private def restartDrain(files: Seq[java.nio.file.Path], phase1: Int,
-      betweenPhases: () => Unit = () => ())
-      (run: (String, String) => org.apache.spark.sql.streaming.StreamingQuery)
-      : Unit = {
-    val feed = tmp("graft_recov_feed")
+  private def restartDrain(files: Seq[Path], phase1: Int,
+      betweenPhases: () => Unit = () => ())(
+      run: String => DataStreamWriter[Row]): Unit = {
+    val feedDir = tmp("graft_recov_feed")
     val ckpt = tmp("graft_recov_ckpt")
     def reveal(r: Range): Unit = r.foreach { i =>
-      val dst = Paths.get(feed).resolve(f"p$i%03d.parquet")
+      val dst = Paths.get(feedDir).resolve(f"p$i%03d.parquet")
       Files.move(files(i), dst, StandardCopyOption.REPLACE_EXISTING)
       dst.toFile.setLastModified(1000000000000L + i * 60000L)
     }
     reveal(0 until phase1)
-    run(feed, ckpt).awaitTermination()
+    drain(run(feedDir), ckpt)
     betweenPhases() // maintenance window: the query is stopped (st68)
     reveal(phase1 until files.length)
-    run(feed, ckpt).awaitTermination()
-  }
-
-  private def withRocksDb[A](s: SparkSession)(body: => A): A = {
-    val k = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(k)
-    s.conf.set(k,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => s.conf.set(k, p)
-      case None => s.conf.unset(k)
-    }
+    drain(run(feedDir), ckpt)
   }
 
   /** st58's watermark-dedup state across a restart (st62): phase 1 drains
@@ -1105,21 +902,16 @@ object StreamingQueries extends QuerySet {
   def st62(s: SparkSession, dir: String): DataFrame = {
     val ev = Q.t(s, dir, "events")
     val out = tmp("graft_st62_out")
-    val schema = ev.schema
     val files = stageEach(Seq(
       ev.filter(col("event_id") % 2 === 0),
       ev.filter(col("event_id") % 2 === 1),
       ev)) // phase 2: every id replayed
-    restartDrain(files, phase1 = 2) { (feed, ckpt) =>
-      s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+    restartDrain(files, phase1 = 2) { d =>
+      feed(s, d, perTrigger = 1)
         .withWatermark("ts", "3650 days")
         .dropDuplicatesWithinWatermark("event_id")
         .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
     val streamed = s.read.parquet(out)
     val batchIds = ev.select("event_id").distinct()
@@ -1142,28 +934,18 @@ object StreamingQueries extends QuerySet {
   def st63(s: SparkSession, dir: String): DataFrame = withRocksDb(s) {
     val ev = Q.t(s, dir, "events")
     val out = tmp("graft_st63_out")
-    val schema = ev.schema
     val files = stageEach((0 until 3).map(i =>
       ev.filter(col("event_id") % 3 === i)))
-    restartDrain(files, phase1 = 2) { (feed, ckpt) =>
-      EventStreaming.runningCounts(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(feed))
+    restartDrain(files, phase1 = 2) { d =>
+      EventStreaming.runningCounts(feed(s, d, perTrigger = 1))
         .toDF("user_id", "running_cnt")
         .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
     val streamed = s.read.parquet(out)
       .groupBy("user_id").agg(max(col("running_cnt")).as("n_events"))
-    val twin = ev.groupBy("user_id").agg(count(lit(1)).as("n_events"))
-    val missing = twin.except(streamed).count()
-    val extra = streamed.except(twin).count()
-    require(missing == 0 && extra == 0,
-      s"running counts diverged after checkpoint restart: " +
-        s"missing=$missing extra=$extra")
+    requireSameRows(ev.groupBy("user_id").agg(count(lit(1)).as("n_events")),
+      streamed, "running counts diverged after checkpoint restart")
     streamed
   }
 
@@ -1181,29 +963,20 @@ object StreamingQueries extends QuerySet {
       .select(col("user_id"), col("ts"), col("event_id"),
         round(col("value") * 100).cast("long").as("c"))
     val out = tmp("graft_st64_out")
-    val schema = staged.schema
-    val files = stageParts(staged, 3, Seq(col("ts"), col("event_id")))
-    restartDrain(files, phase1 = 2) { (feed, ckpt) =>
+    val files = stageParts(staged, 3, col("ts"), col("event_id"))
+    restartDrain(files, phase1 = 2) { d =>
       EventStreaming.rollingAnomaly(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(feed)
+          feed(s, d, perTrigger = 1)
             .select(col("user_id"), unix_micros(col("ts")).as("tsu"),
               col("event_id"), col("c"))
             .as[(Long, Long, Long, Long)])
         .toDF("event_id", "user_id", "c", "dev", "is_anomaly")
         .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
     val streamed = s.read.parquet(out)
-    val twin = Extended.q58(s, dir) // the ORACLED batch twin
-    val missing = twin.except(streamed).count()
-    val extra = streamed.except(twin).count()
-    require(missing == 0 && extra == 0,
-      s"rolling-anomaly state diverged after checkpoint restart: " +
-        s"missing=$missing extra=$extra")
+    requireSameRows(Extended.q58(s, dir), streamed, // the ORACLED twin
+      "rolling-anomaly state diverged after checkpoint restart")
     streamed
   }
 
@@ -1220,55 +993,34 @@ object StreamingQueries extends QuerySet {
   def st65(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val train = Q.t(s, dir, "documents").filter(col("doc_id") % 2 === 0)
-    val schema = train.schema
     val stateDir = tmp("graft_st65_state")
     // train is the even-doc_id half, so doc_id % 6 ∈ {0,2,4} splits it
     // into three parts without float division
     val files = stageEach((0 until 3).map(i =>
       train.filter(col("doc_id") % 6 === i * 2)))
-    restartDrain(files, phase1 = 2) { (feed, ckpt) =>
-      s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-        .writeStream
+    restartDrain(files, phase1 = 2) { d =>
+      feed(s, d, perTrigger = 1).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val c = graft.operators.Classification.nbCensus(batch, "text", "lang")
           val st = graft.operators.Classification
             .nbLabelStats(batch, "text", "lang")
-          val (counts, stats) =
-            graft.streaming.DurableState.latestBefore(stateDir, batchId) match {
-              case None => (c, st)
-              case Some(v) =>
-                val pc = graft.streaming.DurableState
-                  .read(s, stateDir, v, "counts")
-                val ps = graft.streaming.DurableState
-                  .read(s, stateDir, v, "stats")
-                (pc.unionByName(c).groupBy("label", "token")
-                    .agg(sum(col("c")).as("c")),
-                  ps.unionByName(st).groupBy("label")
-                    .agg(sum(col("docs_l")).as("docs_l"),
-                      sum(col("tok_l")).as("tok_l")))
-            }
-          graft.streaming.DurableState.commit(stateDir, batchId,
-            Seq("counts" -> counts, "stats" -> stats))
-          graft.streaming.DurableState.prune(stateDir, keep = 2)
+          DurableState.fold(s, stateDir, batchId)(prior => Seq(
+            "counts" -> prior.fold(c)(_("counts").unionByName(c)
+              .groupBy("label", "token").agg(sum(col("c")).as("c"))),
+            "stats" -> prior.fold(st)(_("stats").unionByName(st)
+              .groupBy("label").agg(sum(col("docs_l")).as("docs_l"),
+                sum(col("tok_l")).as("tok_l")))))
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
-    val v = graft.streaming.DurableState.latestBefore(stateDir, Long.MaxValue)
-      .getOrElse(sys.error("st65: no committed model state"))
-    val counts = graft.streaming.DurableState.read(s, stateDir, v, "counts")
-    val stats = graft.streaming.DurableState.read(s, stateDir, v, "stats")
+    val state = DurableState.newest(s, stateDir)
+    val counts = state("counts")
+    val stats = state("stats")
     val nTrain = stats.agg(sum(col("docs_l"))).head.getLong(0)
     val out = graft.operators.Classification.nbClassifyFromModel(
       counts, stats, nTrain, Q.t(s, dir, "documents"), "doc_id", "text")
-    val twin = TextOps.nbLangClassify(s, dir) // the ORACLED td52 twin
-    val missing = twin.except(out).count()
-    val extra = out.except(twin).count()
-    require(missing == 0 && extra == 0,
-      s"durably maintained NB model diverged from the one-shot td52 twin " +
-        s"after checkpoint restart: missing=$missing extra=$extra")
+    requireSameRows(TextOps.nbLangClassify(s, dir), out, // ORACLED td52 twin
+      "durably maintained NB model diverged from the one-shot td52 twin " +
+        "after checkpoint restart")
     out
   }
 
@@ -1293,7 +1045,6 @@ object StreamingQueries extends QuerySet {
   def st67(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val docs = Q.t(s, dir, "documents")
-    val schema = docs.schema
     val postingsDir = tmp("graft_st67_postings")
     val stateDir = tmp("graft_st67_state")
     val rowLog = scala.collection.mutable.LinkedHashMap.empty[Long, (Long, Long)]
@@ -1301,18 +1052,13 @@ object StreamingQueries extends QuerySet {
       .empty[graft.streaming.PostingsStore.Compaction]
     val files = stageEach((0 until 3).map(i =>
       docs.filter(col("doc_id") % 3 === i)))
-    restartDrain(files, phase1 = 2) { (feed, ckpt) =>
-      s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-        .writeStream
+    restartDrain(files, phase1 = 2) { d =>
+      feed(s, d, perTrigger = 1).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           indexMaintenanceBatch(postingsDir, stateDir, rowLog,
             compactEvery = 2, mergeWidth = 2, compactLog = compactLog)(
             batch, batchId)
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
     val onDisk = graft.streaming.PostingsStore.read(s, postingsDir).count()
     val logged = rowLog.values.map(_._1).sum
@@ -1328,12 +1074,9 @@ object StreamingQueries extends QuerySet {
     require(live.size == 2 && live.count(_.contains("batch_id=-")) == 1,
       s"post-restart in-flight compaction did not fold phase 1: $live")
     val out = rankFromMaintainedIndex(s, postingsDir, stateDir, dir, topK = 10)
-    val twin = TextOps.bm25TopK(s, dir) // the ORACLED td49 twin
-    val missing = twin.except(out).count()
-    val extra = out.except(twin).count()
-    require(missing == 0 && extra == 0,
-      s"maintained BM25 index diverged from the one-shot td49 twin " +
-        s"after checkpoint restart: missing=$missing extra=$extra")
+    requireSameRows(TextOps.bm25TopK(s, dir), out, // the ORACLED td49 twin
+      "maintained BM25 index diverged from the one-shot td49 twin " +
+        "after checkpoint restart")
     out
   }
 
@@ -1355,7 +1098,6 @@ object StreamingQueries extends QuerySet {
   def st68(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val docs = Q.t(s, dir, "documents")
-    val schema = docs.schema
     val postingsDir = tmp("graft_st68_postings")
     val stateDir = tmp("graft_st68_state")
     val rowLog = scala.collection.mutable.LinkedHashMap.empty[Long, (Long, Long)]
@@ -1366,16 +1108,11 @@ object StreamingQueries extends QuerySet {
       val live = graft.streaming.PostingsStore.livePaths(postingsDir)
       require(live.size == 1 && live.head.contains("batch_id=-"),
         s"compaction must leave one negative-id segment, got $live")
-    }) { (feed, ckpt) =>
-      s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-        .writeStream
+    }) { d =>
+      feed(s, d, perTrigger = 1).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           indexMaintenanceBatch(postingsDir, stateDir, rowLog)(batch, batchId)
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
     val live = graft.streaming.PostingsStore.livePaths(postingsDir)
     require(live.size == 2,
@@ -1385,12 +1122,9 @@ object StreamingQueries extends QuerySet {
     require(logged == onDisk,
       s"compaction changed the row count: logged $logged, sink holds $onDisk")
     val out = rankFromMaintainedIndex(s, postingsDir, stateDir, dir, topK = 10)
-    val twin = TextOps.bm25TopK(s, dir) // the ORACLED td49 twin
-    val missing = twin.except(out).count()
-    val extra = out.except(twin).count()
-    require(missing == 0 && extra == 0,
-      s"compacted-then-extended BM25 index diverged from the one-shot " +
-        s"td49 twin: missing=$missing extra=$extra")
+    requireSameRows(TextOps.bm25TopK(s, dir), out, // the ORACLED td49 twin
+      "compacted-then-extended BM25 index diverged from the one-shot " +
+        "td49 twin")
     out
   }
 
@@ -1440,15 +1174,9 @@ object StreamingQueries extends QuerySet {
     */
   def st69(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    def embD(df: DataFrame): DataFrame = df.select(
-      col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("emb"))
     val allRaw = Q.t(s, dir, "embeddings")
-    val all = embD(allRaw)
-    val centroids = all.filter(col("vec_id") < 8).select(
-      col("vec_id").as("centroid_id"), col("emb").as("c_emb"),
-      sqrt(graft.functions.GraftFunctions.dot(col("emb"), col("emb")))
-        .as("c_norm"))
+    val all = Q.vecEmb(allRaw)
+    val centroids = Q.fixedCentroids(all)
     val graphDir = tmp("graft_st69_graph")
     val corpusDir = tmp("graft_st69_corpus")
     val corpus0Dir = tmp("graft_st69_corpus0")
@@ -1482,7 +1210,6 @@ object StreamingQueries extends QuerySet {
     // after the drain
     val readLog = scala.collection.mutable.LinkedHashMap
       .empty[Long, (Seq[Long], Long, Map[Long, Long])]
-    val schema = allRaw.schema
     // batch 1 is deliberately a SINGLE vector: its trigger touches one
     // cell of 8, so its logged read is strictly below the accumulated
     // corpus — the pruning evidence the post-drain require checks
@@ -1490,13 +1217,11 @@ object StreamingQueries extends QuerySet {
       allRaw.filter(col("vec_id") % 6 === 1 && col("vec_id") =!= 1),
       allRaw.filter(col("vec_id") === 1),
       allRaw.filter(col("vec_id") % 6 === 3 || col("vec_id") % 6 === 5)))
-    restartDrain(files, phase1 = 2) { (feed, ckpt) =>
-      s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-        .writeStream
+    restartDrain(files, phase1 = 2) { d =>
+      feed(s, d, perTrigger = 1).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val bAssigned = graft.operators.Ann
-            .ivfAssign(embD(batch), "vec_id", "emb", centroids)
+            .ivfAssign(Q.vecEmb(batch), "vec_id", "emb", centroids)
             .select("vec_id", "centroid_id", "emb", "norm")
             .localCheckpoint(false)
           // the touched-cell set is centroid-bounded (model-sized) —
@@ -1545,9 +1270,6 @@ object StreamingQueries extends QuerySet {
             }
           }
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
     // replay the evidence log: each trigger's read must equal the touched
     // cells' running totals EXACTLY (a read that included an untouched
@@ -1586,12 +1308,9 @@ object StreamingQueries extends QuerySet {
     val maintained = s.read.parquet(graphDir)
       .withColumn("cell", col("cell").cast("long"))
       .select("query_id", "rank", "neighbor_id", "cell", "cos")
-    val twin = Similarity.sim52(s, dir) // the ORACLED batch twin
-    val missing = twin.except(maintained).count()
-    val extra = maintained.except(twin).count()
-    require(missing == 0 && extra == 0,
-      s"durably maintained kNN graph diverged from the sim52 twin " +
-        s"after checkpoint restart: missing=$missing extra=$extra")
+    requireSameRows(Similarity.sim52(s, dir), maintained, // ORACLED twin
+      "durably maintained kNN graph diverged from the sim52 twin " +
+        "after checkpoint restart")
     maintained
   }
 
@@ -1599,9 +1318,9 @@ object StreamingQueries extends QuerySet {
     * td59's word census is MERGEABLE counting (the st61/st66 property),
     * so a streaming corpus keeps a continuously current tokenizer-sizing
     * curve without ever re-scanning history — each micro-batch censuses
-    * ONLY its own documents and folds through
-    * [[graft.streaming.DurableState]] versioned commits (batch b merges
-    * from latestBefore(b), replay-idempotent; `prune(keep = 2)`
+    * ONLY its own documents and folds it through
+    * [[graft.streaming.DurableState.fold]] (batch b merges with the
+    * newest version strictly below b, replay-idempotent, keep = 2
     * retention), the census being MODEL-sized state under the
     * established state-kind split. Kill after batch 1 of 3; the
     * restarted query's batch 2 must find batch 1's census in
@@ -1614,43 +1333,24 @@ object StreamingQueries extends QuerySet {
     */
   def st70(s: SparkSession, dir: String): DataFrame = {
     val docs = Q.t(s, dir, "documents")
-    val schema = docs.schema
     val stateDir = tmp("graft_st70_state")
     val files = stageEach((0 until 3).map(i =>
       docs.filter(col("doc_id") % 3 === i)))
-    restartDrain(files, phase1 = 2) { (feed, ckpt) =>
-      s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-        .writeStream
+    restartDrain(files, phase1 = 2) { d =>
+      feed(s, d, perTrigger = 1).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val c = graft.operators.TextAnalysis.wordCensus(batch, "text")
-          val merged = graft.streaming.DurableState
-            .latestBefore(stateDir, batchId) match {
-            case None => c
-            case Some(v) =>
-              graft.streaming.DurableState.read(s, stateDir, v, "census")
-                .unionByName(c)
-                .groupBy("token").agg(sum(col("cnt")).as("cnt"))
-          }
-          graft.streaming.DurableState.commit(stateDir, batchId,
-            Seq("census" -> merged))
-          graft.streaming.DurableState.prune(stateDir, keep = 2)
+          DurableState.fold(s, stateDir, batchId)(prior => Seq("census" ->
+            prior.fold(c)(_("census").unionByName(c)
+              .groupBy("token").agg(sum(col("cnt")).as("cnt")))))
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
-    val v = graft.streaming.DurableState.latestBefore(stateDir, Long.MaxValue)
-      .getOrElse(sys.error("st70: no committed census"))
-    val census = graft.streaming.DurableState.read(s, stateDir, v, "census")
+    val census = DurableState.newest(s, stateDir)("census")
     val out = graft.operators.TextAnalysis.vocabCoverageFromCensus(census,
       Seq(100L, 1000L, 4000L, 16000L))
-    val twin = TextOps.vocabCoverageCurve(s, dir) // the ORACLED td59 twin
-    val missing = twin.except(out).count()
-    val extra = out.except(twin).count()
-    require(missing == 0 && extra == 0,
-      s"maintained vocab-coverage curve diverged from the one-shot td59 " +
-        s"twin after checkpoint restart: missing=$missing extra=$extra")
+    requireSameRows(TextOps.vocabCoverageCurve(s, dir), out, // ORACLED td59
+      "maintained vocab-coverage curve diverged from the one-shot td59 " +
+        "twin after checkpoint restart")
     out
   }
 
@@ -1676,7 +1376,6 @@ object StreamingQueries extends QuerySet {
     import s.implicits._
     graft.functions.GraftFunctions.register(s)
     val docs = Q.t(s, dir, "documents")
-    val schema = docs.schema
     val postDir = tmp("graft_st71_postings")
     val stateDir = tmp("graft_st71_state")
     val emptyLabels = Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id")
@@ -1684,32 +1383,22 @@ object StreamingQueries extends QuerySet {
     val rowLog = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
     val files = stageEach((0 until 3).map(i =>
       docs.filter(col("doc_id") % 3 === i)))
-    restartDrain(files, phase1 = 2) { (feed, ckpt) =>
-      s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-        .writeStream
+    restartDrain(files, phase1 = 2) { d =>
+      feed(s, d, perTrigger = 1).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val prevLabels = graft.streaming.DurableState
-            .latestBefore(stateDir, batchId) match {
-              case None => emptyLabels
-              case Some(v) => graft.streaming.DurableState
-                .read(s, stateDir, v, "labels")
-            }
-          // live paths resolve EAGERLY here, so the frame is pinned to
-          // partitions strictly below this batch even though it
-          // evaluates after the write below
-          val prevPost =
-            if (graft.streaming.PostingsStore
-                .livePaths(postDir, batchId).isEmpty) emptyPost
-            else graft.streaming.PostingsStore.read(s, postDir,
-              beforeBatch = batchId)
-          val (labels, post) = graft.operators.TextDedup.mergeClusters(
-            prevLabels, prevPost, batch, "doc_id", "text",
-            bands = 2, rowsPerBand = 2)
-          graft.streaming.PostingsStore.write(post, postDir, batchId)
-          graft.streaming.DurableState.commit(stateDir, batchId,
-            Seq("labels" -> labels))
-          graft.streaming.DurableState.prune(stateDir, keep = 2)
+          DurableState.fold(s, stateDir, batchId) { prior =>
+            // live paths resolve EAGERLY here, so the frame is pinned to
+            // partitions strictly below this batch even though it
+            // evaluates after the write below
+            val prevPost =
+              if (PostingsStore.livePaths(postDir, batchId).isEmpty) emptyPost
+              else PostingsStore.read(s, postDir, beforeBatch = batchId)
+            val (labels, post) = graft.operators.TextDedup.mergeClusters(
+              prior.fold(emptyLabels)(_("labels")), prevPost, batch,
+              "doc_id", "text", bands = 2, rowsPerBand = 2)
+            PostingsStore.write(post, postDir, batchId)
+            Seq("labels" -> labels)
+          }
           // evidence read via the store API, not a string-built path
           // (r13 verdict #5: layout coupling broke silently on scheme change)
           val written = graft.streaming.PostingsStore
@@ -1717,13 +1406,8 @@ object StreamingQueries extends QuerySet {
           rowLog(batchId) = written
           System.err.println(s"[st71] batch=$batchId postings_rows=$written")
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
-    val v = graft.streaming.DurableState.latestBefore(stateDir, Long.MaxValue)
-      .getOrElse(sys.error("st71: no committed label state"))
-    val out = graft.streaming.DurableState.read(s, stateDir, v, "labels")
+    val out = DurableState.newest(s, stateDir)("labels")
     // batch-proportional evidence: per-trigger postings writes sum to the
     // on-disk total across the expected 3 triggers
     val onDisk = graft.streaming.PostingsStore.read(s, postDir).count()
@@ -1731,12 +1415,9 @@ object StreamingQueries extends QuerySet {
     require(rowLog.size == 3 && logged == onDisk,
       s"per-trigger postings writes are not batch-proportional: " +
         s"${rowLog.size} triggers logged $logged rows, sink holds $onDisk")
-    val twin = Dedup.dd36(s, dir) // the ORACLED from-scratch twin
-    val missing = twin.except(out).count()
-    val extra = out.except(twin).count()
-    require(missing == 0 && extra == 0,
-      s"maintained cluster store diverged from the from-scratch dd36 " +
-        s"twin after checkpoint restart: missing=$missing extra=$extra")
+    requireSameRows(Dedup.dd36(s, dir), out, // ORACLED from-scratch twin
+      "maintained cluster store diverged from the from-scratch dd36 " +
+        "twin after checkpoint restart")
     out
   }
 
@@ -1756,45 +1437,26 @@ object StreamingQueries extends QuerySet {
     */
   def st72(s: SparkSession, dir: String): DataFrame = {
     val docs = Q.t(s, dir, "documents")
-    val schema = docs.schema
     val stateDir = tmp("graft_st72_state")
     val files = stageEach((0 until 3).map(i =>
       docs.filter(col("doc_id") % 3 === i)))
-    restartDrain(files, phase1 = 2) { (feed, ckpt) =>
-      s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-        .writeStream
+    restartDrain(files, phase1 = 2) { d =>
+      feed(s, d, perTrigger = 1).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val c = batch.groupBy(col("source"))
             .agg(sum(size(split(col("text"), " ")).cast("long"))
               .as("n_tok"))
-          val merged = graft.streaming.DurableState
-            .latestBefore(stateDir, batchId) match {
-            case None => c
-            case Some(v) =>
-              graft.streaming.DurableState.read(s, stateDir, v, "census")
-                .unionByName(c)
-                .groupBy("source").agg(sum(col("n_tok")).as("n_tok"))
-          }
-          graft.streaming.DurableState.commit(stateDir, batchId,
-            Seq("census" -> merged))
-          graft.streaming.DurableState.prune(stateDir, keep = 2)
+          DurableState.fold(s, stateDir, batchId)(prior => Seq("census" ->
+            prior.fold(c)(_("census").unionByName(c)
+              .groupBy("source").agg(sum(col("n_tok")).as("n_tok")))))
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
-    val v = graft.streaming.DurableState.latestBefore(stateDir, Long.MaxValue)
-      .getOrElse(sys.error("st72: no committed census"))
-    val census = graft.streaming.DurableState.read(s, stateDir, v, "census")
+    val census = DurableState.newest(s, stateDir)("census")
     val out = graft.operators.Sampling.epochAllocationFromCensus(census,
       "source", budgetTokens = 1000000L)
-    val twin = Extended.q64(s, dir) // the ORACLED batch twin
-    val missing = twin.except(out).count()
-    val extra = out.except(twin).count()
-    require(missing == 0 && extra == 0,
-      s"maintained allocation table diverged from the one-shot q64 twin " +
-        s"after checkpoint restart: missing=$missing extra=$extra")
+    requireSameRows(Extended.q64(s, dir), out, // the ORACLED batch twin
+      "maintained allocation table diverged from the one-shot q64 twin " +
+        "after checkpoint restart")
     out
   }
 

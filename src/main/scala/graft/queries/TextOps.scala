@@ -450,8 +450,7 @@ object TextOps extends QuerySet {
     val keyword = graft.operators.Retrieval
       .bm25Rank(docs, "doc_id", "text", query, topK = 50)
       .select(col("doc_id").as("id"), col("rank"))
-    val emb = Q.t(s, dir, "embeddings").select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("emb"))
+    val emb = Q.vecEmb(Q.t(s, dir, "embeddings"))
     val dense = graft.operators.Ann
       .cosineTopK(emb, "vec_id", "emb", col("vec_id") === 0, k = 50)
       .select(col("neighbor_id").as("id"), col("rank"))

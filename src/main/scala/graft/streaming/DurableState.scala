@@ -3,32 +3,31 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Durable mergeable-state store for `foreachBatch` model maintenance
-  * (r9, the missing half of the st56/st61 partials idiom; adopted by
-  * st56 itself, st65, and the st66/st67 index census in r10 — st61
-  * remains the deliberately memory-resident form whose durable twin is
-  * st65).
+/** Durable mergeable-state store for `foreachBatch` model maintenance.
   *
   * A `localCheckpoint`-held state frame survives micro-batches but not
   * a query restart — the checkpoint recovers source offsets while the
   * accumulated model silently restarts empty. This store versions the
   * state frames on disk, keyed by the batch id Spark hands
-  * `foreachBatch`, with replay-idempotent commits:
+  * `foreachBatch`. A maintenance loop calls [[fold]] once per trigger
+  * and reads the result back with [[newest]]. The fold's contract:
   *
-  *  - batch `b` MERGES from `latestBefore(b)` — the newest version with
-  *    id STRICTLY below `b`, never its own — and overwrites `v<b>`.
-  *    `foreachBatch` is at-least-once: after an unclean stop the last
-  *    batch can replay with the same id, and because the replay re-reads
-  *    the same prior version and recomputes the same deterministic
-  *    merge, the overwrite converges instead of double-counting;
+  *  - batch `b` MERGES with the newest committed version with id
+  *    STRICTLY below `b` ([[latestBefore]]), never its own, and
+  *    overwrites `v<b>`. `foreachBatch` is at-least-once: after an
+  *    unclean stop the last batch can replay with the same id, and
+  *    because the replay re-reads the same prior version and recomputes
+  *    the same deterministic merge, the overwrite converges instead of
+  *    double-counting;
+  *  - it then prunes with keep = 2 — keep must be >= 2, or the prune
+  *    evicts the version a replaying batch merges from ([[prune]]);
   *  - a version is visible only after its `_COMMIT` marker, written
   *    after every part frame has fully landed — a crash mid-write
   *    leaves an uncommitted dir the next attempt overwrites.
   *
   * At 100 TB the state frames here are MODEL-sized (vocabulary censuses,
   * label stats — the mergeable-partials contract), so a version write is
-  * a model-sized parquet job per trigger, not a data copy; garbage
-  * collection of old versions is the caller's retention policy.
+  * a model-sized parquet job per trigger, not a data copy.
   */
 object DurableState {
 
@@ -55,6 +54,29 @@ object DurableState {
 
   def read(s: SparkSession, root: String, v: Long, part: String): DataFrame =
     s.read.parquet(versionDir(root, v).resolve(part).toString)
+
+  /** One replay-idempotent maintenance step for `batchId`: `step` gets the
+    * parts of the newest committed version strictly below `batchId` (None
+    * before the first commit) and returns the merged parts, which commit
+    * as `v<batchId>`; then [[prune]] with keep = 2. Call it from the
+    * single-writer `foreachBatch` that owns `root`.
+    */
+  def fold(s: SparkSession, root: String, batchId: Long)(
+      step: Option[String => DataFrame] => Seq[(String, DataFrame)]): Unit = {
+    val prior = latestBefore(root, batchId)
+      .map(v => (part: String) => read(s, root, v, part))
+    commit(root, batchId, step(prior))
+    prune(root, keep = 2)
+  }
+
+  /** The parts of the newest committed version; fails loudly when nothing
+    * under `root` has committed yet.
+    */
+  def newest(s: SparkSession, root: String): String => DataFrame = {
+    val v = latestBefore(root, Long.MaxValue)
+      .getOrElse(sys.error(s"no committed state under $root"))
+    part => read(s, root, v, part)
+  }
 
   /** Write every part frame under `v<batchId>`, then commit atomically
     * enough for the single-writer foreachBatch contract (the marker is

@@ -194,22 +194,8 @@ object EventStreaming {
         col("session_window.end").as("session_end"),
         col("n_events"))
 
-  /** Per-key running event counts on the Spark 4 arbitrary-state v2 API
-    * (`transformWithState` + `StatefulProcessor` + typed `ValueState`) —
-    * the successor of `flatMapGroupsWithState` (dedupStream's API): state
-    * variables are named and typed, TTL is first-class, and the state
-    * store is RocksDB-backed (the caller must set
-    * `spark.sql.streaming.stateStore.providerClass` to the RocksDB
-    * provider — transformWithState refuses the default HDFS store).
-    * Emits (user_id, running count) at every trigger a key receives
-    * rows, so the emitted counts are a monotone trace of the state —
-    * `max` per key over the drained output IS the final count, which is
-    * what st59 asserts against the batch aggregate. At 100 TB state is
-    * one long per active key, and TTLConfig bounds key lifetime the way
-    * the watermark bounds dropDuplicatesWithinWatermark.
-    */
   /** Streaming twin of the q58 rolling anomaly screen, on the same
-    * arbitrary-state v2 API: per user, a RING BUFFER of the last 8
+    * arbitrary-state v2 API as [[runningCounts]]: per user, a RING BUFFER of the last 8
     * cent-quantized values lives in a typed `ValueState[Array[Long]]`
     * and every arriving event evaluates the integer-cleared z-score
     * condition against it (8·dev² > 9·(8·Σc² − (Σc)²)) before pushing
@@ -266,6 +252,20 @@ object EventStreaming {
         TimeMode.None(), OutputMode.Append())
   }
 
+  /** Per-key running event counts on the Spark 4 arbitrary-state v2 API
+    * (`transformWithState` + `StatefulProcessor` + typed `ValueState`) —
+    * the successor of `flatMapGroupsWithState` (dedupStream's API): state
+    * variables are named and typed, TTL is first-class, and the state
+    * store is RocksDB-backed (the caller must set
+    * `spark.sql.streaming.stateStore.providerClass` to the RocksDB
+    * provider — transformWithState refuses the default HDFS store).
+    * Emits (user_id, running count) at every trigger a key receives
+    * rows, so the emitted counts are a monotone trace of the state —
+    * `max` per key over the drained output IS the final count, which is
+    * what st59 asserts against the batch aggregate. At 100 TB state is
+    * one long per active key, and TTLConfig bounds key lifetime the way
+    * the watermark bounds dropDuplicatesWithinWatermark.
+    */
   def runningCounts(events: DataFrame, keyCol: String = "user_id")
       : Dataset[(Long, Long)] = {
     import events.sparkSession.implicits._

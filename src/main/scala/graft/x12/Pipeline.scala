@@ -162,18 +162,18 @@ object X12Pipeline {
             else touched(name))
         }
       }
-    if (doWrite) {
-      val overwriteMode = "spark.sql.sources.partitionOverwriteMode"
-      val prevMode = spark.conf.get(overwriteMode)
-      if (incrementalGold) spark.conf.set(overwriteMode, "dynamic")
-      try marts.foreach { case (name, df) =>
-        val w = df.write.mode("overwrite")
-        // summary marts keyed by processing_date partition like the reference
-        // (gold_x12_analytics.py:500 etc.); single-row globals unpartitioned
-        if (!unpartitioned(name))
-          w.partitionBy("processing_date").parquet(s"$outDir/$name")
-        else w.parquet(s"$outDir/$name")
-      } finally if (incrementalGold) spark.conf.set(overwriteMode, prevMode)
+    if (doWrite) marts.foreach { case (name, df) =>
+      // a per-write option, not the session conf, so other writes on this
+      // session keep their own overwrite mode
+      val w =
+        if (incrementalGold)
+          df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        else df.write.mode("overwrite")
+      // summary marts keyed by processing_date partition like the reference
+      // (gold_x12_analytics.py:500 etc.); single-row globals unpartitioned
+      if (!unpartitioned(name))
+        w.partitionBy("processing_date").parquet(s"$outDir/$name")
+      else w.parquet(s"$outDir/$name")
     }
 
     // 997 acknowledgments per trading partner

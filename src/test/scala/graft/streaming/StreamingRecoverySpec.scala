@@ -137,6 +137,28 @@ class StreamingRecoverySpec extends AnyFunSuite with SparkTestBase {
     assert(DurableState.latestBefore(root, 4) === Some(3L))
   }
 
+  test("DurableState.fold merges from strictly below the batch id, a " +
+      "replayed batch converges, and newest fails loudly before a commit") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_dfold_spec").toString
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, sum}
+    intercept[RuntimeException](DurableState.newest(spark, root))
+    def trigger(b: Long, n: Long): Unit =
+      DurableState.fold(spark, root, b) { prior =>
+        val part = Seq(n).toDF("n")
+        Seq("t" -> prior.fold(part)(_("t").unionByName(part)
+          .agg(sum(col("n")).as("n"))))
+      }
+    trigger(0, 1); trigger(1, 10); trigger(2, 100)
+    trigger(2, 100) // replay of the newest batch id
+    assert(DurableState.newest(spark, root)("t").head.getLong(0) === 111L)
+    val left = new java.io.File(root).listFiles()
+      .filter(f => f.isDirectory && f.getName.matches("v\\d{9,}"))
+      .map(_.getName).sorted.toSeq
+    assert(left === Seq("v000000001", "v000000002"), s"got $left")
+  }
+
   test("DurableState keep-floor contract: commit-then-prune inside EVERY " +
       "trigger still leaves the replay's merge source after a kill " +
       "before the checkpoint commit") {

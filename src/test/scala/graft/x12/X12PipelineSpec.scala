@@ -440,6 +440,16 @@ class X12PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(incPairs.exceptAll(refPairs).isEmpty &&
       refPairs.exceptAll(incPairs).isEmpty,
       "incremental pair mart must equal the full-recompute baseline")
+    // a per-date mart: day 2's incremental write replaces only its own
+    // partition, so day 1's rows must still be there next to it
+    val incSummary = spark.read.parquet(s"$inc/gold_transaction_summary")
+      .drop("created_at")
+    val refSummary = spark.read.parquet(s"$ref/gold_transaction_summary")
+      .drop("created_at")
+    assert(incSummary.select("processing_date").distinct().count() == 2)
+    assert(incSummary.exceptAll(refSummary).isEmpty &&
+      refSummary.exceptAll(incSummary).isEmpty,
+      "incremental summary mart must keep day 1's partition")
   }
 
   test("processed-file ledger: a late-arriving file is picked up incrementally") {
