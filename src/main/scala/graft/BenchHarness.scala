@@ -56,7 +56,11 @@ object BenchHarness {
     * is not in `keepIds` — the snapshot taken after the x12 silver
     * pre-fill, so the sweep-shared silver cache (measured separately as
     * x12_parse_tx_per_sec) survives. Blocking unpersist: the blocks must
-    * actually be gone before the next entry's timing starts.
+    * actually be gone before the next entry's timing starts. This frees
+    * localCheckpointed RDDs too, and their lineage is truncated: a plain
+    * persist recomputes after an unpersist, but a localCheckpointed frame
+    * fails with a missing checkpoint block. So a localCheckpointed frame
+    * that later entries reuse must be in `keepIds`.
     */
   def unpersistLeaked(spark: SparkSession, keepIds: Set[Int]): Unit =
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>

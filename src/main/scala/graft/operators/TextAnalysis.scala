@@ -1068,38 +1068,44 @@ object TextAnalysis {
     * `graft_lm_score` takes as plan constants — from ONE census collect
     * (r16; the r15 form paid ~5 driver round-trips per model: the totTok
     * probe, the biL census-census join collect, the wL collect and the
-    * lpq0 literal job). The census splits driver-side (a unigram token
-    * never contains a space), every bigram's `prev` unigram is present
-    * by construction, and the double ratios match the frame expressions
-    * bit-for-bit (long→double casts of counts, one IEEE division); the
-    * log₂ quantization routes through [[log2qLocal]].
+    * lpq0 literal job). The census splits driver-side
+    * ([[lmCensusRatios]]) and the log₂ quantization routes through
+    * [[log2qLocal]].
     */
   private def lmCollectInline(spark: org.apache.spark.sql.SparkSession,
       m: LmModel, quantScale: Long)
     : (Map[String, Long], Map[String, Long], Long) = {
-    val rows = m.census.collect()
-    val uni = new java.util.HashMap[String, Long](rows.length * 2)
-    var totTok = 0L
-    rows.foreach { r =>
-      val t = r.getString(0)
-      if (t.indexOf(' ') < 0) { uni.put(t, r.getLong(1)); totTok += r.getLong(1) }
-    }
-    val den = (5L * totTok).toDouble
-    val bi = rows.filter(_.getString(0).indexOf(' ') >= 0)
-    val biVals = bi.map { r =>
-      val bg = r.getString(0)
-      val pcnt = uni.get(bg.substring(0, bg.indexOf(' ')))
-      r.getLong(1).toDouble / pcnt.toDouble
-    }
-    val uniRows = rows.filter(_.getString(0).indexOf(' ') < 0)
-    val wVals = uniRows.map(r => (r.getLong(1) * 2).toDouble / den)
+    val (bi, w, unseen) = lmCensusRatios(
+      m.census.collect().toSeq.map(r => r.getString(0) -> r.getLong(1)))
     val qs = log2qLocal(spark,
-      (biVals ++ wVals).toIndexedSeq :+ (1L.toDouble / den), quantScale)
+      (bi.map(_._2) ++ w.map(_._2)).toIndexedSeq :+ unseen, quantScale)
     val biM = bi.iterator.zipWithIndex
-      .map { case (r, i) => r.getString(0) -> qs(i) }.toMap
-    val wM = uniRows.iterator.zipWithIndex
-      .map { case (r, i) => r.getString(0) -> qs(bi.length + i) }.toMap
+      .map { case ((g, _), i) => g -> qs(i) }.toMap
+    val wM = w.iterator.zipWithIndex
+      .map { case ((t, _), i) => t -> qs(bi.length + i) }.toMap
     (biM, wM, qs.last)
+  }
+
+  /** The census split of [[lmCollectInline]], over (gram, count) rows in
+    * census order: each bigram's ratio to its `prev` unigram's count, each
+    * unigram's backoff ratio `2·count / 5·totTok`, and the unseen ratio
+    * `1 / 5·totTok`. A unigram never contains a space. The double ratios
+    * match the frame expressions bit-for-bit (long→double casts of counts,
+    * one IEEE division). A bigram whose `prev` unigram is missing breaks
+    * the census invariant and fails loudly, naming the bigram.
+    */
+  private[operators] def lmCensusRatios(census: Seq[(String, Long)])
+    : (Seq[(String, Double)], Seq[(String, Double)], Double) = {
+    val (bigrams, unigrams) = census.partition(_._1.indexOf(' ') >= 0)
+    val den = (5L * unigrams.map(_._2).sum).toDouble
+    val uni = unigrams.toMap
+    val bi = bigrams.map { case (bg, n) =>
+      val prev = bg.substring(0, bg.indexOf(' '))
+      require(uni.contains(prev),
+        s"LM census has bigram '$bg' without its prev unigram '$prev'")
+      bg -> n.toDouble / uni(prev).toDouble
+    }
+    (bi, unigrams.map { case (t, n) => t -> (n * 2).toDouble / den }, 1L.toDouble / den)
   }
 
   /** The inline bigram-LM model of [[lmDocScore]]'s fast path — (bigram

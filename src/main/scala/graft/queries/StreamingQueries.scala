@@ -36,8 +36,14 @@ object StreamingQueries extends QuerySet {
   private def batchSilver(s: SparkSession, landing: String): Dataset[SilverRecord] =
     X12Silver.parse(X12Silver.readFiles(s, landing), "BATCH_S", date, ts)
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+  /** A fresh dir for one drain's checkpoint, feed, sink or state, deleted
+    * when the JVM exits.
+    */
+  private def tmp(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix).toString
+    org.apache.spark.graft.DeleteAtExit(d)
+    d
+  }
 
   // ---------------------------------------------------------------------
   // The drain harness: every entry stages its feed, drains it with one

@@ -147,7 +147,7 @@ object Ack997 {
       .drop("tx_sets")
       .withColumn("ack_filename",
         concat(trim(col("sender_id")), lit("_997_"), lit(batchId), lit(".x12")))
-      .withColumn("generation_timestamp", current_timestamp())
+      .withColumn("generation_timestamp", BuildTime())
   }
 
   /** 997 generation at the (partner, functional group) grain — one ack per
@@ -182,7 +182,7 @@ object Ack997 {
         concat(trim(col("sender_id")), lit("_"), trim(col("receiver_id")),
           lit("_997_"), lit(batchId), lit("_"),
           coalesce(col("functional_group_number"), lit("NOGROUP")), lit(".x12")))
-      .withColumn("generation_timestamp", current_timestamp())
+      .withColumn("generation_timestamp", BuildTime())
   }
 
   /** S9 without the driver loop: partitioned single-column text write — one

@@ -43,7 +43,7 @@ object X12Gold {
         max("processing_timestamp").as("last_processed"),
         countDistinct("interchange_control_number").as("unique_interchanges"),
         countDistinct("file_name").as("unique_files"))
-      .withColumn("created_at", current_timestamp())
+      .withColumn("created_at", BuildTime())
 
   /** Mart 2 — 837 claim analytics (gold_x12_analytics.py:473-502; metric
     * extraction :94-133 re-expressed natively, A19).
@@ -71,7 +71,7 @@ object X12Gold {
       // errors, gold_x12_analytics.py:491); typed equivalent: null payload
       .filter(col("__parsed")).drop("__parsed")
       .withColumn("variance_percentage", pct(col("amount_variance"), col("total_claim_amount")))
-      .withColumn("created_at", current_timestamp())
+      .withColumn("created_at", BuildTime())
   }
 
   /** Mart 3 — 835 payment analytics (gold_x12_analytics.py:514-545; metrics
@@ -98,7 +98,7 @@ object X12Gold {
       .filter(col("__parsed")).drop("__parsed")
       .withColumn("variance_percentage", pct(col("payment_variance"), col("total_charge_amount")))
       .withColumn("payment_ratio", pct(col("total_payment_amount"), col("total_charge_amount")))
-      .withColumn("created_at", current_timestamp())
+      .withColumn("created_at", BuildTime())
   }
 
   /** Mart 4 — 834 enrollment analytics (gold_x12_analytics.py:557-588;
@@ -126,7 +126,7 @@ object X12Gold {
       .filter(col("total_members").isNotNull)
       .withColumn("enrollment_ratio", pct(col("new_enrollments"), col("total_members")))
       .withColumn("termination_ratio", pct(col("terminations"), col("total_members")))
-      .withColumn("created_at", current_timestamp())
+      .withColumn("created_at", BuildTime())
   }
 
   /** Mart 5 — trading partner analytics (gold_x12_analytics.py:600-628, A2:
@@ -153,7 +153,7 @@ object X12Gold {
         min("processing_timestamp").as("first_transaction"),
         max("processing_timestamp").as("last_transaction"))
       .withColumn("trading_partner_id", concat(col("sender_id"), lit("-"), col("receiver_id")))
-      .withColumn("created_at", current_timestamp())
+      .withColumn("created_at", BuildTime())
   }
 
   /** Mart 6 — 278 preauth request analytics (gold_x12_analytics.py:640-671;
@@ -185,7 +185,7 @@ object X12Gold {
         uniqNonEmpty(transform(services, x => x.getField("product_service_id")))
           .as("unique_service_types"))
       .filter(col("total_services").isNotNull)
-      .withColumn("created_at", current_timestamp())
+      .withColumn("created_at", BuildTime())
   }
 
   /** Mart 7 — 279 preauth response analytics (gold_x12_analytics.py:685-723;
@@ -235,7 +235,7 @@ object X12Gold {
       .filter(col("total_review_results").isNotNull)
       .withColumn("approval_rate", pct(col("approved_services"), col("total_review_results")))
       .withColumn("denial_rate", pct(col("denied_services"), col("total_review_results")))
-      .withColumn("created_at", current_timestamp())
+      .withColumn("created_at", BuildTime())
   }
 
   /** Mart 8 — data quality metrics (gold_x12_analytics.py:737-761, A3). */
@@ -255,7 +255,7 @@ object X12Gold {
       .withColumn("high_quality_percentage", col("high_quality_count") / col("total_transactions") * 100)
       .withColumn("medium_quality_percentage", col("medium_quality_count") / col("total_transactions") * 100)
       .withColumn("low_quality_percentage", col("low_quality_count") / col("total_transactions") * 100)
-      .withColumn("created_at", current_timestamp())
+      .withColumn("created_at", BuildTime())
 
   /** Mart 9 — global business KPIs (gold_x12_analytics.py:773-796, A4).
     * Fixes the reference bug of counting a column before it exists
@@ -283,7 +283,7 @@ object X12Gold {
       cnt("277").as("total_claim_status_responses"),
       max("processing_timestamp").as("last_processed"))
       .withColumn("processing_date", lit(processingDate))
-      .withColumn("created_at", current_timestamp())
+      .withColumn("created_at", BuildTime())
   }
 
   /** 100 TB twin of [[businessKpis]]: one pass, no expand — each exact
@@ -317,7 +317,7 @@ object X12Gold {
         coalesce(size(ben), lit(0)).as("total_benefits"),
         uniqNonEmpty(concat(inqTypes, benTypes)).as("unique_service_types"),
         uniqNonEmpty(covLevels).as("unique_coverage_levels"))
-      .withColumn("created_at", current_timestamp())
+      .withColumn("created_at", BuildTime())
   }
 
   /** Mart 11 — 276/277 claim-status metrics (UDF at
@@ -336,7 +336,7 @@ object X12Gold {
           .as("total_payments"),
         uniqNonEmpty(transform(statuses, x => x.getField("health_care_claim_status_code")))
           .as("unique_status_codes"))
-      .withColumn("created_at", current_timestamp())
+      .withColumn("created_at", BuildTime())
   }
 
   /** Mart 12 — J3 request/response correlation (SURVEY.md §2.4: declared by
@@ -416,7 +416,7 @@ object X12Gold {
       .toDF("segment_analysis_json")
     fileBuckets.crossJoin(typeJson).crossJoin(segJson)
       .withColumn("analytics_date", lit(analyticsDate))
-      .withColumn("created_at", current_timestamp())
+      .withColumn("created_at", BuildTime())
   }
 
   /** All marts keyed by their reference table name

@@ -19,6 +19,9 @@ class GraftSessionSpec extends AnyFunSuite with SparkTestBase {
       assert(s.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
       assert(s.conf.get("spark.sql.parquet.compression.codec") == "zstd")
       assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+      assert(s.conf.get("spark.sql.codegen.cache.maxEntries") ==
+        GraftSession.CodegenCacheEntries.toString)
+      assert(s.conf.get("spark.sql.artifact.isolation.enabled") == "false")
       // extensions injected the whole function family — resolvable from SQL
       assert(s.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
         .head.getDouble(0) == 11.0)

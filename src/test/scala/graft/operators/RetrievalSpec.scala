@@ -376,6 +376,20 @@ class RetrievalSpec extends AnyFunSuite with SparkTestBase {
     assert(fast.collect().toSet == shuffled.collect().toSet)
   }
 
+  test("lmCensusRatios: the census split of the inline model; a bigram " +
+      "without its prev unigram fails loudly") {
+    // the hand-computed census of "a b a b" + "a c": T = 6
+    val census = Seq("a" -> 3L, "a b" -> 2L, "b" -> 2L, "b a" -> 1L,
+      "c" -> 1L, "a c" -> 1L)
+    val (bi, w, unseen) = TextAnalysis.lmCensusRatios(census)
+    assert(bi == Seq("a b" -> 2.0 / 3, "b a" -> 1.0 / 2, "a c" -> 1.0 / 3))
+    assert(w == Seq("a" -> 6.0 / 30, "b" -> 4.0 / 30, "c" -> 2.0 / 30))
+    assert(unseen == 1.0 / 30)
+    val e = intercept[IllegalArgumentException](
+      TextAnalysis.lmCensusRatios(census.filterNot(_._1 == "b")))
+    assert(e.getMessage.contains("'b a'"), e.getMessage)
+  }
+
   test("lmDocScore: multi-position docs integer-sum per-position quantized logs") {
     import spark.implicits._
     val train = Seq((0L, "a b a b"), (2L, "a c")).toDF("doc_id", "text")

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 
 /** The append-mode sink's compaction commit protocol: a crash at ANY
   * point of `compact` must never lose rows or double-count them, and
@@ -10,12 +10,12 @@ import graft.SparkTestBase
   * end-to-end against the td49 oracle twin; these cases cut the crash
   * windows open by hand).
   */
-class PostingsStoreSpec extends AnyFunSuite with SparkTestBase {
+class PostingsStoreSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   import spark.implicits._
 
   private def freshStore(n: Int): String = {
-    val root = Files.createTempDirectory("graft_pstore_spec").toString
+    val root = tempDir("graft_pstore_spec").toString
     (0 until n).foreach { b =>
       PostingsStore.write(
         Seq((b.toLong, s"tok$b", 1L)).toDF("doc_id", "token", "tf"),
@@ -28,7 +28,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestBase {
       "partitions at the FILE level (st69's corpus layout)") {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.execution.FileSourceScanExec
-    val root = Files.createTempDirectory("graft_pstore_cells").toString
+    val root = tempDir("graft_pstore_cells").toString
     (0 until 2).foreach { b =>
       PostingsStore.write(
         (0 until 40).map(i => ((b * 100 + i).toLong, (i % 4).toLong, i.toDouble))
@@ -99,7 +99,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("compact validates partitionColumns against the fold sources' " +
       "actual dir layout — fail loud, never silently inline (r12 advice)") {
-    val root = Files.createTempDirectory("graft_pstore_layoutval").toString
+    val root = tempDir("graft_pstore_layoutval").toString
     (0 until 2).foreach { b =>
       PostingsStore.write(
         (0 until 8).map(i => ((b * 10 + i).toLong, (i % 2).toLong, i.toDouble))
@@ -132,7 +132,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("a non-uniform partition layout under a fold source fails loud — " +
       "every '='-branch is validated, not just the first (r13 advice)") {
-    val root = Files.createTempDirectory("graft_pstore_mixed").toString
+    val root = tempDir("graft_pstore_mixed").toString
     (0 until 2).foreach { b =>
       PostingsStore.write(
         (0 until 8).map(i => ((b * 10 + i).toLong, (i % 2).toLong, i.toDouble))
@@ -156,7 +156,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("readBatch/batchBytes resolve one writer batch through the store " +
       "layout and fail loud on a missing id (r13 verdict #5)") {
-    val root = Files.createTempDirectory("graft_pstore_readbatch").toString
+    val root = tempDir("graft_pstore_readbatch").toString
     PostingsStore.write(
       Seq((1L, "a", 1L), (2L, "b", 2L)).toDF("doc_id", "token", "tf"),
       root, 3L)
@@ -280,7 +280,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("tiered compact folds exactly the mergeWidth SMALLEST live " +
       "partitions; no-op below the width") {
-    val root = Files.createTempDirectory("graft_pstore_tier").toString
+    val root = tempDir("graft_pstore_tier").toString
     // batch 0 is deliberately FAT (it must never be in a 2-wide tier
     // while thinner partitions exist)
     PostingsStore.write(
@@ -310,7 +310,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("a 16-batch tiered drain: every fold reads its tier (never the " +
       "live total), cumulative volume is O(N log N), live count bounded") {
-    val root = Files.createTempDirectory("graft_pstore_drain").toString
+    val root = tempDir("graft_pstore_drain").toString
     val w = 4
     val evs = scala.collection.mutable.ArrayBuffer.empty[PostingsStore.Compaction]
     var written = 0L

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.queries.StreamingQueries
 
 /** Checkpoint-restart recovery (r9, VERDICT #3): each stateful streaming
@@ -11,7 +11,7 @@ import graft.queries.StreamingQueries
   * cases run the twins end-to-end at sf0.001, so a recovery regression
   * fails `sbt test`, not just the driver's sf0.01 verify.
   */
-class StreamingRecoverySpec extends AnyFunSuite with SparkTestBase {
+class StreamingRecoverySpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -57,10 +57,9 @@ class StreamingRecoverySpec extends AnyFunSuite with SparkTestBase {
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .withColumn("ts",
         org.apache.spark.sql.functions.col("ts").cast("timestamp"))
-    val feed = java.nio.file.Files.createTempDirectory("graft_negctl_feed")
+    val feed = tempDir("graft_negctl_feed")
     def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val d = java.nio.file.Files
-        .createTempDirectory("graft_negctl_stage").toString
+      val d = tempDir("graft_negctl_stage").toString
       df.coalesce(1).write.mode("overwrite").parquet(d)
       val part = new java.io.File(d).listFiles()
         .find(_.getName.endsWith(".parquet")).get.toPath
@@ -78,7 +77,7 @@ class StreamingRecoverySpec extends AnyFunSuite with SparkTestBase {
         .start().awaitTermination()
     }
     def newDir(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
+      tempDir(p).toString
     stage(ev, "p000.parquet")
     drain(newDir("graft_negctl_out1"), newDir("graft_negctl_ck1"))
     stage(ev, "p001.parquet") // full replay after the "restart"
@@ -93,8 +92,7 @@ class StreamingRecoverySpec extends AnyFunSuite with SparkTestBase {
 
   test("DurableState: latestBefore respects commit markers and the " +
       "strictly-below bound") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_dstate_spec").toString
+    val root = tempDir("graft_dstate_spec").toString
     assert(DurableState.latestBefore(root, 10) === None)
     import spark.implicits._
     val df = Seq((1L, 2L)).toDF("a", "b")
@@ -112,8 +110,7 @@ class StreamingRecoverySpec extends AnyFunSuite with SparkTestBase {
 
   test("DurableState.prune keeps the newest k committed versions and " +
       "sweeps crash orphans below them") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_dprune_spec").toString
+    val root = tempDir("graft_dprune_spec").toString
     import spark.implicits._
     val df = Seq((1L, 2L)).toDF("a", "b")
     (0L to 4L).foreach(b => DurableState.commit(root, b, Seq("t" -> df)))
@@ -139,8 +136,7 @@ class StreamingRecoverySpec extends AnyFunSuite with SparkTestBase {
 
   test("DurableState.fold merges from strictly below the batch id, a " +
       "replayed batch converges, and newest fails loudly before a commit") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_dfold_spec").toString
+    val root = tempDir("graft_dfold_spec").toString
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, sum}
     intercept[RuntimeException](DurableState.newest(spark, root))
@@ -171,8 +167,7 @@ class StreamingRecoverySpec extends AnyFunSuite with SparkTestBase {
     // versions, so keep >= 2 means v(b-1) is NEVER below the floor.
     // This cuts the kill window open by hand instead of leaving the
     // invariant in heads.
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_dfloor_spec").toString
+    val root = tempDir("graft_dfloor_spec").toString
     import spark.implicits._
     def trigger(b: Long, v: Long): Unit = {
       DurableState.commit(root, b, Seq("t" -> Seq((b, v)).toDF("b", "v")))

@@ -5,15 +5,15 @@ import java.sql.{Date, Timestamp}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.x12.X12TestDataGen
 
-class StreamingSpec extends AnyFunSuite with SparkTestBase {
+class StreamingSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   test("T1: file-source ingest drains the landing dir exactly once") {
-    val landing = Files.createTempDirectory("x12stream").toString
-    val out = Files.createTempDirectory("x12streamout").toString
-    val ckpt = Files.createTempDirectory("x12ckpt").toString
+    val landing = tempDir("x12stream").toString
+    val out = tempDir("x12streamout").toString
+    val ckpt = tempDir("x12ckpt").toString
     X12TestDataGen.writeCorpus(landing, 18, seed = 7L)
 
     val silver = X12Streaming.silverStream(spark, landing, "B1",
@@ -54,8 +54,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("T2: foreachBatch custom sink sees every silver row") {
-    val landing = Files.createTempDirectory("x12fb").toString
-    val ckpt = Files.createTempDirectory("x12fbckpt").toString
+    val landing = tempDir("x12fb").toString
+    val ckpt = tempDir("x12fbckpt").toString
     X12TestDataGen.writeCorpus(landing, 9, seed = 11L)
     val silver = X12Streaming.silverStream(spark, landing, "B1",
       Date.valueOf("2025-09-01"), Timestamp.valueOf("2025-09-01 12:00:00"))
@@ -67,9 +67,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("stateful dedup suppresses replayed transactions across micro-batches") {
-    val landing = Files.createTempDirectory("x12dedup").toString
-    val ckpt = Files.createTempDirectory("x12dedupckpt").toString
-    val out = Files.createTempDirectory("x12dedupout").toString
+    val landing = tempDir("x12dedup").toString
+    val ckpt = tempDir("x12dedupckpt").toString
+    val out = tempDir("x12dedupout").toString
     // same interchange content landed twice under different file names —
     // the reference's archive-move idiom would process it twice
     val rnd = new scala.util.Random(3)
