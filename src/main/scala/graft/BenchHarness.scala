@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 
 /** Shared plumbing for the measurement mains (Bench, BenchHeavy, Verify,
@@ -166,29 +167,31 @@ object BenchHarness {
   def runOracleSidecar(tablesDir: String, oracleSql: Map[String, String],
       sparkTimingsJson: String, timeoutMinutes: Long): String = try {
     val dir = Files.createTempDirectory("graft_bench")
-    val of = dir.resolve("oracle_sql.json")
-    Files.writeString(of, oracleSqlJson(oracleSql))
-    val tf = dir.resolve("spark_timings.json")
-    Files.writeString(tf, sparkTimingsJson)
-    // stderr inherits (no pipe to fill and deadlock on); stdout drains on
-    // a daemon thread so the timeout below actually fires on a hung child
-    val proc = new ProcessBuilder(
-      "python3", "tools/bench_oracle.py", tablesDir, of.toString, tf.toString)
-      .redirectError(ProcessBuilder.Redirect.INHERIT)
-      .start()
-    val outBuf = new java.util.concurrent.atomic.AtomicReference[String]("")
-    val reader = new Thread(() =>
-      try outBuf.set(new String(proc.getInputStream.readAllBytes(), "UTF-8").trim)
-      catch { case _: Throwable => })
-    reader.setDaemon(true)
-    reader.start()
-    val done = proc.waitFor(timeoutMinutes, java.util.concurrent.TimeUnit.MINUTES)
-    if (!done) { proc.destroyForcibly(); "\"oracle_timeout\"" }
-    else {
-      reader.join(10000)
-      val out = outBuf.get()
-      if (proc.exitValue() == 0 && out.startsWith("{")) out else "\"oracle_error\""
-    }
+    try {
+      val of = dir.resolve("oracle_sql.json")
+      Files.writeString(of, oracleSqlJson(oracleSql))
+      val tf = dir.resolve("spark_timings.json")
+      Files.writeString(tf, sparkTimingsJson)
+      // stderr inherits (no pipe to fill and deadlock on); stdout drains on
+      // a daemon thread so the timeout below actually fires on a hung child
+      val proc = new ProcessBuilder(
+        "python3", "tools/bench_oracle.py", tablesDir, of.toString, tf.toString)
+        .redirectError(ProcessBuilder.Redirect.INHERIT)
+        .start()
+      val outBuf = new java.util.concurrent.atomic.AtomicReference[String]("")
+      val reader = new Thread(() =>
+        try outBuf.set(new String(proc.getInputStream.readAllBytes(), "UTF-8").trim)
+        catch { case _: Throwable => })
+      reader.setDaemon(true)
+      reader.start()
+      val done = proc.waitFor(timeoutMinutes, java.util.concurrent.TimeUnit.MINUTES)
+      if (!done) { proc.destroyForcibly(); "\"oracle_timeout\"" }
+      else {
+        reader.join(10000)
+        val out = outBuf.get()
+        if (proc.exitValue() == 0 && out.startsWith("{")) out else "\"oracle_error\""
+      }
+    } finally FileUtils.deleteQuietly(dir.toFile)
   } catch { case _: Throwable => "\"oracle_error\"" }
 
   /** X12 distributed-parse throughput (transactions/sec) over a generated

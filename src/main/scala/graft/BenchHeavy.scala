@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -221,14 +222,16 @@ object BenchHeavy {
       .withColumn("__r", explode(sequence(lit(0), lit(factor - 1))))
       .withColumn(idCol, col(idCol) + col("__r").cast("long") * n)
       .drop("__r")
-    val staging = Files.createTempDirectory("graft_heavy_stage").toString
-    rep.coalesce(1).write.mode("overwrite")
-      .option("parquet.block.size", (1 << 20).toString)
-      .parquet(staging)
-    val part = new java.io.File(staging).listFiles()
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(sys.error(s"no parquet part written under $staging"))
-    Files.move(part.toPath, dst, StandardCopyOption.REPLACE_EXISTING)
+    val staging = Files.createTempDirectory("graft_heavy_stage").toFile
+    try {
+      rep.coalesce(1).write.mode("overwrite")
+        .option("parquet.block.size", (1 << 20).toString)
+        .parquet(staging.toString)
+      val part = staging.listFiles()
+        .find(_.getName.endsWith(".parquet"))
+        .getOrElse(sys.error(s"no parquet part written under $staging"))
+      Files.move(part.toPath, dst, StandardCopyOption.REPLACE_EXISTING)
+    } finally FileUtils.deleteQuietly(staging)
   }
 
   def main(args: Array[String]): Unit = {

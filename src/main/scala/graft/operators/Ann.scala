@@ -36,18 +36,19 @@ object Ann {
     */
   val DefaultMaxQueryRows: Long = 100000L
 
-  /** Build two independent (typically checkpoint-materializing) frames
-    * overlapped — under AQE a lazy localCheckpoint runs its non-final
-    * stages at construction time, so sequential construction serializes
-    * driver planning + stage jobs that share no dependency (guide §2.6).
+  /** Build independent (typically checkpoint-materializing) frames
+    * overlapped, in input order — under AQE a lazy localCheckpoint runs
+    * its non-final stages at construction time, so sequential construction
+    * serializes driver planning + stage jobs that share no dependency
+    * (guide §2.6). Each build blocks on Spark jobs inside `blocking`, so
+    * the global pool adds a thread instead of starving its other users.
     */
-  private def inParallel[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
+  private def inParallel[A](builds: (() => A)*): Seq[A] = {
+    import scala.concurrent.{Await, ExecutionContext, Future, blocking}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val fa = Future(a)
-    val fb = Future(b)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
+    Await.result(Future.traverse(builds)(b => Future(blocking(b()))),
+      Duration.Inf)
   }
 
   /** Fail-loud guard in front of every forced broadcast of a
@@ -433,26 +434,19 @@ object Ann {
     require(dim % subspaces == 0,
       s"dim $dim must divide evenly into $subspaces subspaces")
     val subDim = dim / subspaces
-    // the per-subspace fits are INDEPENDENT chains whose round frames
-    // lazily checkpoint — under AQE each checkpoint compiles its plan and
-    // materializes its exchanges eagerly, so a sequential map serializes
-    // subspaces × iters rounds of driver planning + round jobs. Build
-    // them from a thread pool instead (guide §2.6 "overlap independent
-    // jobs"): per-subspace planning and round jobs overlap, the result
-    // union is assembled in subspace order so output order (and every
+    // the per-subspace fits are INDEPENDENT chains of lazily checkpointed
+    // rounds, so a sequential map would serialize subspaces × iters rounds
+    // of driver planning + round jobs; they are built overlapped, and the
+    // union is assembled in subspace order, so output order (and every
     // fit's arithmetic — the subspaces never interact) is unchanged.
-    import scala.collection.parallel.CollectionConverters._
-    val par = (0 until subspaces).par
-    par.tasksupport = new scala.collection.parallel.ExecutionContextTaskSupport(
-      scala.concurrent.ExecutionContext.global)
-    par.map { s =>
+    inParallel((0 until subspaces).map { s => () =>
       val sub = emb.select(col(idCol),
         slice(col(embCol), s * subDim + 1, subDim).as("__sub"))
       kmeansFit(sub, idCol, "__sub", centroidsPerSub, iters, subDim,
         samplePred)
         .select(lit(s).as("subspace"), col("centroid_id"), col("n"),
           col("c_emb"))
-    }.seq.reduce(_ unionByName _)
+    }: _*).reduce(_ unionByName _)
   }
 
   /** Deterministic PQ codebook: centroid value for (subspace, centroid,
@@ -751,13 +745,11 @@ object Ann {
       centroids: DataFrame, queryPred: Column, k: Int,
       maxNprobe: Int): DataFrame = {
     require(maxNprobe >= 1, s"maxNprobe must be >= 1, got $maxNprobe")
-    // the two checkpointed corpus passes are independent; under AQE a
-    // lazy localCheckpoint still materializes its non-final stages at
-    // construction, so build them overlapped (guide §2.6 — the pqFit
-    // thread-pool discipline)
-    val (assigned, exact) = inParallel(
-      ivfAssign(emb, idCol, embCol, centroids).localCheckpoint(false),
-      cosineTopK(emb, idCol, embCol, queryPred, k).localCheckpoint(false))
+    // the two checkpointed corpus passes are independent: build them
+    // overlapped (see inParallel)
+    val Seq(assigned, exact) = inParallel(
+      () => ivfAssign(emb, idCol, embCol, centroids).localCheckpoint(false),
+      () => cosineTopK(emb, idCol, embCol, queryPred, k).localCheckpoint(false))
     val per = (1 to maxNprobe).map { np =>
       recallAtK(ivfProbe(assigned, centroids, queryPred, k, np), exact,
         "query_id", "neighbor_id")
@@ -793,10 +785,10 @@ object Ann {
     require(outDims.nonEmpty && outDims.forall(d => d >= 1 && d <= dim),
       s"outDims must be non-empty within [1, $dim], got $outDims")
     // independent corpus passes, built overlapped (the nprobeSweep note)
-    val (proj, exact) = inParallel(
-      randomProject(emb, idCol, embCol, dim, outDims.max)
+    val Seq(proj, exact) = inParallel(
+      () => randomProject(emb, idCol, embCol, dim, outDims.max)
         .localCheckpoint(false),
-      cosineTopK(emb, idCol, embCol, queryPred, k).localCheckpoint(false))
+      () => cosineTopK(emb, idCol, embCol, queryPred, k).localCheckpoint(false))
     outDims.sorted.map { od =>
       val sliced = proj.select(col("vec_id"),
         slice(col("proj"), 1, od).as("proj"))

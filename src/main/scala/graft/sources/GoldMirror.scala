@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.util.Properties
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -15,9 +15,9 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * with one deliberate deviation: PERCENTAGE/ratio columns also get the
   * wide DECIMAL(15,2), not the DDL's narrow type, because the engine's
   * variance percentages are unbounded and a 5,2 cast would overflow to
-  * NULL — only bounded 0..100 scores take DECIMAL(5,2). [[mirror]] gates
-  * the writes behind a session flag — the default deployment has no
-  * database (zero-egress), so mirroring is opt-in per session.
+  * NULL — only bounded 0..100 scores take DECIMAL(5,2). The default
+  * deployment has no database (zero-egress): calling [[mirror]] with a
+  * JDBC URL is the opt-in.
   *
   * Scale note: a JDBC mirror is for the DASHBOARD slice of gold (small
   * per-day aggregates), never the lake body — partitioned parquet remains
@@ -25,9 +25,6 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * local-dev Postgres mirror.
   */
 object GoldMirror {
-
-  /** Session flag gating [[mirror]] (default off). */
-  val EnabledKey = "spark.graft.goldMirror.enabled"
 
   /** Reference-DDL column typing: every double becomes DECIMAL(15,2)
     * (money, init.sql:59-60) unless its name marks it a quality SCORE —
@@ -71,16 +68,14 @@ object GoldMirror {
     withTypes.jdbc(url, table, properties)
   }
 
-  /** Flag-gated mirror of a mart map (as produced by X12Gold.allMarts):
-    * no-op unless `spark.graft.goldMirror.enabled=true` in the session
-    * conf. Returns the table names written.
+  /** Mirror of a mart map (as produced by X12Gold.allMarts): appends each
+    * mart to the JDBC table of its name. Returns the table names written,
+    * in sorted order.
     */
-  def mirror(spark: SparkSession, marts: Map[String, DataFrame], url: String,
+  def mirror(marts: Map[String, DataFrame], url: String,
       properties: Properties = new Properties()): Seq[String] =
-    if (!spark.conf.get(EnabledKey, "false").toBoolean) Seq.empty
-    else
-      marts.toSeq.sortBy(_._1).map { case (table, df) =>
-        writeJdbc(df, url, table, properties)
-        table
-      }
+    marts.toSeq.sortBy(_._1).map { case (table, df) =>
+      writeJdbc(df, url, table, properties)
+      table
+    }
 }

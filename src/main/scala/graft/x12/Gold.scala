@@ -15,10 +15,13 @@ import org.apache.spark.sql.functions._
   * codegen and the parquet scan reads only the payload branch a mart
   * touches.
   *
-  * Scale notes: marts all share one silver scan — `Pipeline` caches silver
-  * once before fanning out (the reference re-reads and re-counts per mart,
-  * §3.1 of SURVEY.md); every groupBy here is a partial-agg-then-shuffle on
-  * low-cardinality keys.
+  * Scale notes: each mart is its own plan over the silver frame it is
+  * given. In a written run that frame is a scan of the written silver
+  * store, so each of the 12 [[marts]] scans the store once (only the
+  * touched date's partitions, for a per-date mart in incremental mode);
+  * no mart re-counts silver on the driver the way the reference does
+  * (§3.1 of SURVEY.md). Every groupBy here is a partial-agg-then-shuffle
+  * on low-cardinality keys.
   */
 object X12Gold {
 
@@ -419,20 +422,41 @@ object X12Gold {
       .withColumn("created_at", BuildTime())
   }
 
-  /** All marts keyed by their reference table name
-    * (gold_x12_analytics.py:812-822 + the two declared-only families).
+  /** A catalogue mart: its reference table name, its builder over the valid
+    * silver rows and the processing date, and how a run keeps it current.
+    * `partitioned`: written partitioned by `processing_date` (the KPIs'
+    * single global row is not). `perDate`: every row is a function of one
+    * processing_date's rows, so an incremental run rebuilds it from the
+    * touched date alone and replaces only that partition. A whole-store
+    * mart must read the whole store: the KPIs are one row over all history,
+    * and a request/response pair joins a request to a response that may
+    * land in a LATER batch (the response side drops its date), so a rebuild
+    * from the response's date would never revisit the request's partition.
     */
-  def allMarts(silver: DataFrame, processingDate: java.sql.Date): Map[String, DataFrame] = Map(
-    "gold_transaction_summary" -> transactionSummary(silver),
-    "gold_healthcare_claim_analytics" -> claimAnalytics(silver),
-    "gold_healthcare_payment_analytics" -> paymentAnalytics(silver),
-    "gold_healthcare_enrollment_analytics" -> enrollmentAnalytics(silver),
-    "gold_trading_partner_analytics" -> tradingPartnerAnalytics(silver),
-    "gold_healthcare_preauth_request_analytics" -> preauthRequestAnalytics(silver),
-    "gold_healthcare_preauth_response_analytics" -> preauthResponseAnalytics(silver),
-    "gold_data_quality_metrics" -> dataQualityMetrics(silver),
-    "gold_business_kpis" -> businessKpis(silver, processingDate),
-    "gold_eligibility_analytics" -> eligibilityAnalytics(silver),
-    "gold_claim_status_analytics" -> claimStatusAnalytics(silver),
-    "gold_request_response_pairs" -> requestResponsePairs(silver))
+  final case class Mart(name: String, partitioned: Boolean, perDate: Boolean,
+      build: (DataFrame, java.sql.Date) => DataFrame)
+
+  private def perDateMart(name: String, build: DataFrame => DataFrame): Mart =
+    Mart(name, partitioned = true, perDate = true, (s, _) => build(s))
+
+  /** The silver marts in write order (gold_x12_analytics.py:812-822, the
+    * two declared-only families and the request/response pairs). */
+  val marts: Seq[Mart] = Seq(
+    perDateMart("gold_transaction_summary", transactionSummary),
+    perDateMart("gold_healthcare_claim_analytics", claimAnalytics),
+    perDateMart("gold_healthcare_payment_analytics", paymentAnalytics),
+    perDateMart("gold_healthcare_enrollment_analytics", enrollmentAnalytics),
+    perDateMart("gold_trading_partner_analytics", tradingPartnerAnalytics),
+    perDateMart("gold_healthcare_preauth_request_analytics", preauthRequestAnalytics),
+    perDateMart("gold_healthcare_preauth_response_analytics", preauthResponseAnalytics),
+    perDateMart("gold_data_quality_metrics", dataQualityMetrics),
+    Mart("gold_business_kpis", partitioned = false, perDate = false, businessKpis),
+    perDateMart("gold_eligibility_analytics", eligibilityAnalytics),
+    perDateMart("gold_claim_status_analytics", claimStatusAnalytics),
+    Mart("gold_request_response_pairs", partitioned = true, perDate = false,
+      (s, _) => requestResponsePairs(s)))
+
+  /** Every catalogue mart built over one silver frame, keyed by name. */
+  def allMarts(silver: DataFrame, processingDate: java.sql.Date): Map[String, DataFrame] =
+    marts.map(m => m.name -> m.build(silver, processingDate)).toMap
 }

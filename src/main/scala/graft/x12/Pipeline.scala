@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
   * (local-development/airflow/dags/x12_processing_dag.py:311:
   * `create_dirs >> check_files >> bronze >> silver >> gold >> cleanup`) with
   * one in-process runner. Differences that matter at scale:
-  *  - silver is parsed once, cached, and fanned out to all eleven marts —
-  *    the reference re-reads and re-`count()`s the silver table per mart
-  *    (SURVEY.md §3.1 step 4);
+  *  - silver is parsed once and cached; each of the 12 catalogue marts
+  *    ([[X12Gold.marts]]) is built once over a scan of the written silver
+  *    store, plus the batch-scoped daily analytics; the reference re-reads
+  *    and re-`count()`s the silver table per mart (SURVEY.md §3.1 step 4);
   *  - only files bronze marked valid reach the parser;
   *  - acknowledgments never collect() to the driver;
   *  - a processed-file ledger replaces the reference's archive-move
@@ -113,13 +114,15 @@ object X12Pipeline {
       X12Silver.summary(silver).write.mode("overwrite").json(s"$outDir/silver_summary")
     }
 
-    // Gold: valid transactions only (gold_x12_analytics.py:74). On an
-    // incremental (ledgered) run the marts must aggregate the FULL
-    // accumulated silver store, not just this run's slice — the reference
-    // reads the whole silver table per DAG run, and the overwrite-mode
-    // mart sinks would otherwise replace history with the latest batch's
-    // numbers. Batch-scoped outputs (summaries, quarantine, 997 acks,
-    // daily analytics over this batch's bronze) stay per-run by design.
+    // Gold: valid transactions only (gold_x12_analytics.py:74), read from
+    // the accumulated silver store, not just this run's slice — the
+    // reference reads the whole silver table per DAG run, and the
+    // overwrite-mode mart sinks would otherwise replace history with the
+    // latest batch's numbers. In incremental mode a per-date mart reads
+    // only the touched date and replaces only that partition (A9's group
+    // recompute: O(day), not O(history)). Batch-scoped outputs (summaries,
+    // quarantine, 997 acks, daily analytics over this batch's bronze) stay
+    // per-run by design.
     // the read-back can fail on a store with no parquet footers yet (this
     // run's silver slice was empty — e.g. every landing file failed bronze
     // validation); fall back to the in-memory slice so the run completes
@@ -129,52 +132,25 @@ object X12Pipeline {
         catch { case scala.util.control.NonFatal(_) => silver.toDF() }
       else silver.toDF()
     val silverValid = silverStore.filter(col("is_valid"))
-    val unpartitioned = Set("gold_business_kpis", "gold_daily_analytics")
-    // Marts whose rows are NOT a function of a single processing_date:
-    // request/response correlation joins a request to a response that may
-    // have arrived in a LATER batch (the response side deliberately drops
-    // its own date) — a date-scoped recompute would never revisit the
-    // request's partition and the pair would be lost forever. These marts
-    // always aggregate the full store; their pair sets only grow, so a
-    // full-input dynamic overwrite rewrites every partition they own.
-    val crossDate = Set("gold_request_response_pairs")
-    // Incremental gold maintenance (A9's group-recompute semantics at
-    // pipeline level): the per-date marts group by processing_date, so
-    // rows of one date only ever influence that date's partition. An
-    // incremental run therefore recomputes ONLY the partitions this batch
-    // touched — the mart input is the accumulated store filtered to the
-    // touched dates (a partition-pruned scan), and the write replaces just
-    // those partitions via dynamic partition overwrite. At 100 TB this
-    // turns mart maintenance from O(history) into O(day). Global
-    // single-row marts (KPIs) still aggregate the full store — they are
-    // cheap aggregates, and a date-scoped recompute would drop history.
-    val fullMarts = X12Gold.allMarts(silverValid, processingDate) +
-      ("gold_daily_analytics" ->
-        X12Gold.dailyAnalytics(bronze, silver.toDF(), processingDate))
-    val marts =
-      if (!incrementalGold) fullMarts
-      else {
-        val touched = X12Gold.allMarts(
-          silverValid.filter(col("processing_date") === lit(processingDate)),
-          processingDate)
-        fullMarts.map { case (name, df) =>
-          name -> (if (unpartitioned(name) || crossDate(name)) df
-            else touched(name))
-        }
-      }
-    if (doWrite) marts.foreach { case (name, df) =>
-      // a per-write option, not the session conf, so other writes on this
-      // session keep their own overwrite mode
-      val w =
-        if (incrementalGold)
-          df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        else df.write.mode("overwrite")
-      // summary marts keyed by processing_date partition like the reference
-      // (gold_x12_analytics.py:500 etc.); single-row globals unpartitioned
-      if (!unpartitioned(name))
-        w.partitionBy("processing_date").parquet(s"$outDir/$name")
-      else w.parquet(s"$outDir/$name")
+    val touched = silverValid.filter(col("processing_date") === lit(processingDate))
+    val silverMarts = X12Gold.marts.map { m =>
+      val sliced = incrementalGold && m.perDate
+      (m, sliced, m.build(if (sliced) touched else silverValid, processingDate))
     }
+    val daily = X12Gold.dailyAnalytics(bronze, silver.toDF(), processingDate)
+    if (doWrite) {
+      silverMarts.foreach { case (m, sliced, df) =>
+        // a per-write option, not the session conf, so other writes on
+        // this session keep their own overwrite mode
+        val w = df.write.mode("overwrite")
+          .option("partitionOverwriteMode", if (sliced) "dynamic" else "static")
+        (if (m.partitioned) w.partitionBy("processing_date") else w)
+          .parquet(s"$outDir/${m.name}")
+      }
+      daily.write.mode("overwrite").parquet(s"$outDir/gold_daily_analytics")
+    }
+    val marts = silverMarts.map { case (m, _, df) => m.name -> df }.toMap +
+      ("gold_daily_analytics" -> daily)
 
     // 997 acknowledgments per trading partner
     val acks = Ack997.validate997(

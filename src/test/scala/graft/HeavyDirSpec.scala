@@ -7,14 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the heavy-dir builder shared by BenchHeavy and MakeHeavy, and the
   * split grain every measurement session derives from the dir it reads.
   */
-class HeavyDirSpec extends AnyFunSuite with SparkTestBase {
+class HeavyDirSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private val base = "/root/testdata/sf0.001"
   private val tables = Seq("documents" -> "doc_id", "embeddings" -> "vec_id",
     "events" -> "event_id", "lineitem" -> "l_orderkey")
 
   test("ensureHeavyDir replicates four tables with distinct ids, stamps once, and sets the heavy grain") {
-    val target = Files.createTempDirectory("graft_heavy_spec")
+    val target = tempDir("graft_heavy_spec")
     val stamp = BenchHeavy.ensureHeavyDir(spark, base, 2, target)
     assert(stamp == s"base=$base factor=2 v=4")
     assert(Files.readString(target.resolve(BenchHeavy.ManifestName)) == stamp)

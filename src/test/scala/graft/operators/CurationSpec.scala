@@ -3,12 +3,12 @@ package graft.operators
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 
 /** Unit specs for the curation operators: sessionization, deterministic
   * sampling, dup-cluster formation, benchmark contamination.
   */
-class CurationSpec extends AnyFunSuite with SparkTestBase {
+class CurationSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   test("sessionize: a new session starts exactly past the gap, not at it") {
     import spark.implicits._
@@ -259,7 +259,7 @@ class CurationSpec extends AnyFunSuite with SparkTestBase {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    val dir = java.nio.file.Files.createTempDirectory("graft_curr_scan")
+    val dir = tempDir("graft_curr_scan")
     val n = 2000L
     (0L until n).map(i => (i, i % 4)).toDF("doc_id", "tier")
       .coalesce(1).write.mode("overwrite").parquet(dir.toString)

@@ -3,16 +3,17 @@ package graft.queries
 import java.nio.file.{Files, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 import org.scalatest.funsuite.AnyFunSuite
+import graft.TempDirs
 
 /** The dd56 store-stamp fingerprint (r14 verdict #2): renaming a
   * partition subdirectory with byte-identical children must change the
   * stamp — the store would otherwise serve clusters computed under the
   * old layout after a layout-only regeneration.
   */
-class StoreFingerprintSpec extends AnyFunSuite {
+class StoreFingerprintSpec extends AnyFunSuite with TempDirs {
 
   private def fixture(): java.nio.file.Path = {
-    val root = Files.createTempDirectory("graft_fp_spec")
+    val root = tempDir("graft_fp_spec")
     val sub = Files.createDirectories(root.resolve("key=a"))
     val f = sub.resolve("part-000.parquet")
     Files.writeString(f, "payload")

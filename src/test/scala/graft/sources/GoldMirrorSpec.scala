@@ -60,14 +60,12 @@ class GoldMirrorSpec extends AnyFunSuite with SparkTestBase {
       .compareTo(new java.math.BigDecimal("1234.50")) == 0)
   }
 
-  test("mirror is a no-op unless the session flag enables it") {
-    val marts = Map("gold_mirror_flagged" -> sampleMart)
-    spark.conf.unset(GoldMirror.EnabledKey)
-    assert(GoldMirror.mirror(spark, marts, url, props).isEmpty)
-    spark.conf.set(GoldMirror.EnabledKey, "true")
-    try {
-      assert(GoldMirror.mirror(spark, marts, url, props) == Seq("gold_mirror_flagged"))
-      assert(spark.read.jdbc(url, "gold_mirror_flagged", props).count() == 2)
-    } finally spark.conf.unset(GoldMirror.EnabledKey)
+  test("mirror writes every mart and returns the names in sorted order") {
+    val marts = Map("gold_mirror_b" -> sampleMart,
+      "gold_mirror_a" -> sampleMart.limit(1))
+    assert(GoldMirror.mirror(marts, url, props) ==
+      Seq("gold_mirror_a", "gold_mirror_b"))
+    assert(spark.read.jdbc(url, "gold_mirror_a", props).count() == 1)
+    assert(spark.read.jdbc(url, "gold_mirror_b", props).count() == 2)
   }
 }

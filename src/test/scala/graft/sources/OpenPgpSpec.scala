@@ -2,9 +2,10 @@ package graft.sources
 
 import java.nio.file.{Files, Path}
 import scala.sys.process._
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 
 /** GnuPG-interop specs for the pure-JDK OpenPGP decryptor: every fixture
   * is generated by REAL gpg 2.2 at test time (key generation, binary and
@@ -13,13 +14,18 @@ import graft.SparkTestBase
   * is verified against the producer the reference deployment actually
   * uses — not against our own encoder.
   */
-class OpenPgpSpec extends AnyFunSuite with SparkTestBase {
+class OpenPgpSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private lazy val gpgAvailable = scala.util.Try(
     Seq("gpg", "--version").!!(ProcessLogger(_ => ()))).isSuccess
 
+  private val homeDir = Files.createTempDirectory("graft_gpg_home")
+
+  override def afterAll(): Unit =
+    try FileUtils.deleteQuietly(homeDir.toFile) finally super.afterAll()
+
   private lazy val home: Path = {
-    val h = Files.createTempDirectory("graft_gpg_home")
+    val h = homeDir
     Files.setPosixFilePermissions(h,
       java.nio.file.attribute.PosixFilePermissions.fromString("rwx------"))
     val gen = h.resolve("gen")
@@ -107,7 +113,7 @@ class OpenPgpSpec extends AnyFunSuite with SparkTestBase {
     assume(gpgAvailable, "gpg not installed")
     val keys = OpenPgp.parseSecretKeys(secretKey)
     // a second, unrelated key cannot decrypt
-    val other = Files.createTempDirectory("graft_gpg_other")
+    val other = tempDir("graft_gpg_other")
     Files.setPosixFilePermissions(other,
       java.nio.file.attribute.PosixFilePermissions.fromString("rwx------"))
     val gen = other.resolve("gen")
@@ -159,7 +165,7 @@ class OpenPgpSpec extends AnyFunSuite with SparkTestBase {
 
   test("passphrase-protected keys are rejected with a clear reason") {
     assume(gpgAvailable, "gpg not installed")
-    val prot = Files.createTempDirectory("graft_gpg_prot")
+    val prot = tempDir("graft_gpg_prot")
     Files.setPosixFilePermissions(prot,
       java.nio.file.attribute.PosixFilePermissions.fromString("rwx------"))
     val gen = prot.resolve("gen")

@@ -2,16 +2,17 @@ package graft.x12
 
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.TempDirs
 
 /** Corpus-reuse contract: writeCorpus is idempotent per (dir, seed, n,
   * generator version) via a manifest file — NOT per file count alone. A
   * same-sized corpus from a different seed or an older generator must
   * regenerate, or golden pins would silently run against stale data.
   */
-class TestDataGenSpec extends AnyFunSuite {
+class TestDataGenSpec extends AnyFunSuite with TempDirs {
 
   test("corpus reuse is manifest-keyed: same key reuses, wrong key regenerates") {
-    val dir = Files.createTempDirectory("x12gen").toString
+    val dir = tempDir("x12gen").toString
     val probe = Paths.get(dir, "test_x12_837_000.x12")
     X12TestDataGen.writeCorpus(dir, 9, seed = 3L)
     val original = Files.readString(probe)

@@ -2,6 +2,7 @@ package graft.x12
 
 import java.nio.file.Files
 import java.sql.{Date, Timestamp}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
@@ -14,8 +15,13 @@ import graft.SparkTestBase
   */
 class X12GoldenSpec extends AnyFunSuite with SparkTestBase {
 
+  private val corpus = Files.createTempDirectory("x12golden").toString
+
+  override def afterAll(): Unit =
+    try FileUtils.deleteQuietly(new java.io.File(corpus))
+    finally super.afterAll()
+
   private lazy val silver = {
-    val corpus = Files.createTempDirectory("x12golden").toString
     X12TestDataGen.writeCorpus(corpus, 45, seed = 42L)
     import spark.implicits._
     val bronze = X12Bronze.ingest(spark, corpus, "BATCH_Q", Date.valueOf("2025-09-01"))

@@ -3,19 +3,25 @@ package graft.x12
 import java.nio.file.{Files, Paths}
 import java.sql.{Date, Timestamp}
 import java.time.LocalDateTime
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 
 /** End-to-end medallion test: generated X12 corpus → bronze → silver →
   * gold marts → 997 acks, all on local Spark with real parquet/text writes.
   */
-class X12PipelineSpec extends AnyFunSuite with SparkTestBase {
+class X12PipelineSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   private val corpusDir = Files.createTempDirectory("x12corpus").toString
   private val outDir = Files.createTempDirectory("x12out").toString
   private val nFiles = 45
   private val totalFiles = nFiles + X12TestDataGen.extraFiles
+
+  override def afterAll(): Unit =
+    try Seq(corpusDir, outDir).foreach(d => FileUtils.deleteQuietly(new java.io.File(d)))
+    finally super.afterAll()
 
   private lazy val result: X12Pipeline.Result = {
     X12TestDataGen.writeCorpus(corpusDir, nFiles, seed = 42L)
@@ -358,9 +364,9 @@ class X12PipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("incremental gold: partition-scoped recompute equals the full recompute") {
-    val corpus2 = Files.createTempDirectory("x12corpus_inc").toString
-    val outInc = Files.createTempDirectory("x12out_inc").toString
-    val outFull = Files.createTempDirectory("x12out_full").toString
+    val corpus2 = tempDir("x12corpus_inc").toString
+    val outInc = tempDir("x12out_inc").toString
+    val outFull = tempDir("x12out_full").toString
     X12TestDataGen.writeCorpus(corpus2, 18, seed = 9L)
     val d = Date.valueOf("2025-09-05")
     val ts = Timestamp.valueOf("2025-09-05 12:00:00")
@@ -402,11 +408,11 @@ class X12PipelineSpec extends AnyFunSuite with SparkTestBase {
     // a LATER batch — it must recompute over the full store even in
     // incremental mode (a date-scoped recompute would lose the pair forever)
     def twoDateSequence(incremental: Boolean): String = {
-      val corpus = Files.createTempDirectory("x12corpus_cd").toString
-      val out = Files.createTempDirectory("x12out_cd").toString
+      val corpus = tempDir("x12corpus_cd").toString
+      val out = tempDir("x12out_cd").toString
       X12TestDataGen.writeCorpus(corpus, 9, seed = 13L)
       // hold back every correlated RESPONSE file until day 2
-      val hold = Files.createTempDirectory("x12hold_cd")
+      val hold = tempDir("x12hold_cd")
       import scala.jdk.CollectionConverters._
       val responses = {
         val s = Files.list(Paths.get(corpus))
@@ -450,6 +456,42 @@ class X12PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(incSummary.exceptAll(refSummary).isEmpty &&
       refSummary.exceptAll(incSummary).isEmpty,
       "incremental summary mart must keep day 1's partition")
+  }
+
+  test("mart catalogue: per-date marts read only the touched date, " +
+      "and each mart is written with its catalogue partitioning") {
+    val corpus = tempDir("x12corpus_cat").toString
+    val out = tempDir("x12out_cat").toString
+    X12TestDataGen.writeCorpus(corpus, 9, seed = 13L)
+    X12Pipeline.run(spark, corpus, out, "CAT1",
+      Date.valueOf("2025-09-08"), Timestamp.valueOf("2025-09-08 12:00:00"),
+      LocalDateTime.of(2025, 9, 8, 12, 0, 0), incrementalGold = true)
+    // a late file lands: the second run meets a store holding day 1
+    Files.copy(Paths.get(corpus, "test_x12_837_000.x12"),
+      Paths.get(corpus, "late_cat.x12"))
+    val run2 = X12Pipeline.run(spark, corpus, out, "CAT2",
+      Date.valueOf("2025-09-09"), Timestamp.valueOf("2025-09-09 12:00:00"),
+      LocalDateTime.of(2025, 9, 9, 12, 0, 0), incrementalGold = true)
+    val names = X12Gold.marts.map(_.name)
+    assert(names.size == 12 && names.distinct == names)
+    assert(run2.marts.keySet == names.toSet + "gold_daily_analytics")
+    X12Gold.marts.foreach { m =>
+      val scans = run2.marts(m.name).queryExecution.sparkPlan.collect {
+        case s: FileSourceScanExec => s
+      }
+      assert(scans.nonEmpty, s"${m.name} reads the silver store")
+      scans.foreach { s =>
+        val datePruned = s.partitionFilters
+          .exists(_.references.exists(_.name == "processing_date"))
+        assert(datePruned == m.perDate,
+          s"${m.name} partition filters: ${s.partitionFilters}")
+      }
+    }
+    def dateDirs(mart: String): Boolean =
+      Option(new java.io.File(s"$out/$mart").list()).toSeq.flatten
+        .exists(_.startsWith("processing_date="))
+    X12Gold.marts.foreach(m => assert(dateDirs(m.name) == m.partitioned, m.name))
+    assert(!dateDirs("gold_daily_analytics"))
   }
 
   test("processed-file ledger: a late-arriving file is picked up incrementally") {

@@ -2,14 +2,20 @@ package graft.x12
 
 import java.nio.file.Files
 import java.sql.{Date, Timestamp}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 
 class X12ViewsSpec extends AnyFunSuite with SparkTestBase {
 
+  private val corpus = Files.createTempDirectory("x12views").toString
+
+  override def afterAll(): Unit =
+    try FileUtils.deleteQuietly(new java.io.File(corpus))
+    finally super.afterAll()
+
   private lazy val (bronze, silver) = {
-    val corpus = Files.createTempDirectory("x12views").toString
     X12TestDataGen.writeCorpus(corpus, 27, seed = 5L)
     import spark.implicits._
     val b = X12Bronze.ingest(spark, corpus, "B1", Date.valueOf("2025-09-01")).cache()
