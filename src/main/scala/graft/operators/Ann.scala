@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Jobs
 import graft.functions.GraftFunctions
 
 /** Reusable approximate-nearest-neighbor operators over an embedding column
@@ -35,21 +36,6 @@ object Ann {
     * brute-force/probe search and should fail loud, not OOM the driver.
     */
   val DefaultMaxQueryRows: Long = 100000L
-
-  /** Build independent (typically checkpoint-materializing) frames
-    * overlapped, in input order — under AQE a lazy localCheckpoint runs
-    * its non-final stages at construction time, so sequential construction
-    * serializes driver planning + stage jobs that share no dependency
-    * (guide §2.6). Each build blocks on Spark jobs inside `blocking`, so
-    * the global pool adds a thread instead of starving its other users.
-    */
-  private def inParallel[A](builds: (() => A)*): Seq[A] = {
-    import scala.concurrent.{Await, ExecutionContext, Future, blocking}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(Future.traverse(builds)(b => Future(blocking(b()))),
-      Duration.Inf)
-  }
 
   /** Fail-loud guard in front of every forced broadcast of a
     * caller-supplied frame (query sets, centroid sets, blocklists): the
@@ -439,7 +425,7 @@ object Ann {
     // of driver planning + round jobs; they are built overlapped, and the
     // union is assembled in subspace order, so output order (and every
     // fit's arithmetic — the subspaces never interact) is unchanged.
-    inParallel((0 until subspaces).map { s => () =>
+    Jobs.inParallel(emb.sparkSession)((0 until subspaces).map { s => () =>
       val sub = emb.select(col(idCol),
         slice(col(embCol), s * subDim + 1, subDim).as("__sub"))
       kmeansFit(sub, idCol, "__sub", centroidsPerSub, iters, subDim,
@@ -746,8 +732,8 @@ object Ann {
       maxNprobe: Int): DataFrame = {
     require(maxNprobe >= 1, s"maxNprobe must be >= 1, got $maxNprobe")
     // the two checkpointed corpus passes are independent: build them
-    // overlapped (see inParallel)
-    val Seq(assigned, exact) = inParallel(
+    // overlapped (see Jobs.inParallel)
+    val Seq(assigned, exact) = Jobs.inParallel(emb.sparkSession)(
       () => ivfAssign(emb, idCol, embCol, centroids).localCheckpoint(false),
       () => cosineTopK(emb, idCol, embCol, queryPred, k).localCheckpoint(false))
     val per = (1 to maxNprobe).map { np =>
@@ -785,7 +771,7 @@ object Ann {
     require(outDims.nonEmpty && outDims.forall(d => d >= 1 && d <= dim),
       s"outDims must be non-empty within [1, $dim], got $outDims")
     // independent corpus passes, built overlapped (the nprobeSweep note)
-    val Seq(proj, exact) = inParallel(
+    val Seq(proj, exact) = Jobs.inParallel(emb.sparkSession)(
       () => randomProject(emb, idCol, embCol, dim, outDims.max)
         .localCheckpoint(false),
       () => cosineTopK(emb, idCol, embCol, queryPred, k).localCheckpoint(false))

@@ -262,9 +262,7 @@ object X12Gold {
 
   /** Mart 9 — global business KPIs (gold_x12_analytics.py:773-796, A4).
     * Fixes the reference bug of counting a column before it exists
-    * (:778 vs :788): distinct partner pairs are computed inline. The exact
-    * `countDistinct`s come with `approx_count_distinct` twins in
-    * [[businessKpisApprox]] for the 100 TB path.
+    * (:778 vs :788): distinct partner pairs are computed inline.
     */
   def businessKpis(silver: DataFrame, processingDate: java.sql.Date): DataFrame = {
     def cnt(t: String): Column =
@@ -288,19 +286,6 @@ object X12Gold {
       .withColumn("processing_date", lit(processingDate))
       .withColumn("created_at", BuildTime())
   }
-
-  /** 100 TB twin of [[businessKpis]]: one pass, no expand — each exact
-    * `countDistinct` becomes an HLL sketch (SURVEY.md §7.4.6).
-    */
-  def businessKpisApprox(silver: DataFrame): DataFrame =
-    silver.agg(
-      count(lit(1)).as("total_transactions"),
-      approx_count_distinct(col("transaction_type")).as("unique_transaction_types"),
-      approx_count_distinct(col("sender_id")).as("unique_senders"),
-      approx_count_distinct(col("receiver_id")).as("unique_receivers"),
-      approx_count_distinct(concat_ws("-", col("sender_id"), col("receiver_id")))
-        .as("unique_trading_pairs"),
-      avg("quality_score").as("overall_quality_score"))
 
   /** Mart 10 — 270/271 eligibility metrics (UDF at
     * gold_x12_analytics.py:214-257, registered :430 but never written to a

@@ -3,6 +3,7 @@ package graft.x12
 import java.time.LocalDateTime
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Jobs
 
 /** End-to-end medallion run: bronze → silver → gold → 997 acks.
   *
@@ -25,6 +26,21 @@ import org.apache.spark.sql.functions._
   *    it on the next run — re-running over the same landing dir appends no
   *    duplicate silver rows. The streaming path gets the same guarantee
   *    from checkpointed file tracking (Streaming.scala).
+  *
+  * Write order. Bronze's four sinks, then silver and its summary, then the
+  * 13 gold writes (the 12 catalogue marts and `gold_daily_analytics`),
+  * then the two 997-ack writes, then the ledger append. The gold writes
+  * run concurrently through [[graft.Jobs.inParallel]]: each moves a few
+  * hundred rows, so its time is fixed per-write cost (planning, codegen
+  * lookup, commit, rename) that overlaps well; the reference writes its
+  * marts one by one from separate notebook cells
+  * (gold_x12_analytics.py:812-822). Everything else stays sequential.
+  * Overlapping the ack writes, or bronze's sinks with silver's, cut the
+  * medallion benchmark's wall time further but raised its peak RSS by
+  * 7-17% (4 cores, x12_daily_incremental, 3 paired runs each). The ledger
+  * is last and starts only after every gold write has ended: a file is
+  * processed only once every sink above has been written, so a run whose
+  * mart write fails throws and leaves no ledger row.
   */
 object X12Pipeline {
 
@@ -139,15 +155,18 @@ object X12Pipeline {
     }
     val daily = X12Gold.dailyAnalytics(bronze, silver.toDF(), processingDate)
     if (doWrite) {
-      silverMarts.foreach { case (m, sliced, df) =>
-        // a per-write option, not the session conf, so other writes on
-        // this session keep their own overwrite mode
+      // the 13 gold writes overlap (see the object's scaladoc); the
+      // launcher returns once every write has ended, failed or not
+      val martWrites = silverMarts.map { case (m, sliced, df) => () =>
+        // a per-write option, not the session conf, so the concurrent
+        // writes on this session keep their own overwrite mode
         val w = df.write.mode("overwrite")
           .option("partitionOverwriteMode", if (sliced) "dynamic" else "static")
         (if (m.partitioned) w.partitionBy("processing_date") else w)
           .parquet(s"$outDir/${m.name}")
       }
-      daily.write.mode("overwrite").parquet(s"$outDir/gold_daily_analytics")
+      Jobs.inParallel(spark)(martWrites :+ (() =>
+        daily.write.mode("overwrite").parquet(s"$outDir/gold_daily_analytics")): _*)
     }
     val marts = silverMarts.map { case (m, _, df) => m.name -> df }.toMap +
       ("gold_daily_analytics" -> daily)

@@ -8,34 +8,44 @@ import org.apache.spark.sql.SparkSession
   * bronze→silver→gold→ack every 15 minutes; here the scheduler invokes this
   * main).
   *
-  * Usage: runMain graft.x12.RunPipeline <landingDir> <outDir> [batchId]
+  * Usage: runMain graft.x12.RunPipeline <landingDir> <outDir> [batchId] [--quality-acks]
+  *
+  * `--quality-acks` picks the quality-driven 997 ack codes: each
+  * transaction set's AK5 reads `A` or `E` by its validity, and a group's
+  * AK9 reads `E` when any of its sets failed ([[Ack997.acknowledgments]]).
+  * Without it every set is acknowledged `A`, as the reference does. The Spark master
+  * comes from spark-submit or `-Dspark.master` when set, else
+  * `local[$SPARK_GRAFT_CPUS]` (default 4).
   */
 object RunPipeline {
+  private val Usage =
+    "usage: RunPipeline <landingDir> <outDir> [batchId] [--quality-acks]"
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: RunPipeline <landingDir> <outDir> [batchId]")
-    val landingDir = args(0)
-    val outDir = args(1)
+    val (flags, positional) = args.partition(_.startsWith("--"))
+    require(positional.length >= 2 && positional.length <= 3 &&
+      flags.forall(_ == "--quality-acks"), Usage)
+    val landingDir = positional(0)
+    val outDir = positional(1)
     val now = LocalDateTime.now()
     // sanitized so the summary line below stays valid JSON and the id is
     // safe inside generated file names
-    val batchId = (if (args.length > 2) args(2)
+    val batchId = (if (positional.length > 2) positional(2)
       else "BATCH_" + now.format(java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd_HHmmss")))
       .replaceAll("[^A-Za-z0-9_-]", "_")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the session factory carries the engine's scale stance (AQE + skew
     // join, zstd, UTC, graft functions); shuffle partitions sized to cores
-    val spark = graft.GraftSession.getOrCreate(
-      SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-        .appName(s"graft-x12-$batchId"),
+    val builder = SparkSession.builder().appName(s"graft-x12-$batchId")
+    if (!sys.props.contains("spark.master")) builder.master(s"local[$cpus]")
+    val spark = graft.GraftSession.getOrCreate(builder,
       shufflePartitions = cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     try {
       val result = X12Pipeline.run(spark, landingDir, outDir, batchId,
         java.sql.Date.valueOf(now.toLocalDate),
         java.sql.Timestamp.valueOf(now), now,
-        qualityDrivenAckCode =
-          sys.env.get("SPARK_GRAFT_ACK_QUALITY").contains("1"))
+        qualityDrivenAckCode = flags.contains("--quality-acks"))
       val files = result.bronze.count()
       val txs = result.silver.count()
       val acks = result.acks.count()
