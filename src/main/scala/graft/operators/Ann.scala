@@ -162,9 +162,9 @@ object Ann {
     * `maxBucketSize` (0 = off) caps the quadratic within-bucket self-join —
     * the 100 TB guard against a degenerate bucket (all-similar embeddings
     * hashing to one cell) turning into a single straggler task. Oversize
-    * buckets are anti-joined away (unhinted — AQE broadcasts the oversize
-    * set when its runtime size fits) before the self-join; audit them via
-    * [[lshBuckets]]' bucket_size.
+    * buckets are dropped before the self-join by the shared cap
+    * ([[TextDedup.dropOversize]], contract in the TextDedup header); audit
+    * them via [[lshBuckets]]' bucket_size.
     */
   def lshNearPairs(emb: DataFrame, idCol: String, embCol: String,
       planes: Int, dim: Int, threshold: Double, maxBucketSize: Long = 0L): DataFrame = {
@@ -176,14 +176,7 @@ object Ann {
     val e1 = withNorm(emb.select(col(idCol).as("vec_id"), col(embCol).as("emb")), "emb")
       .withColumn("bucket", lshBucket("emb", planes, dim).cast("int"))
     val e0 = if (maxBucketSize > 0) e1.cache() else e1
-    val e =
-      if (maxBucketSize > 0) {
-        val oversize = e0.groupBy("bucket").agg(count(lit(1)).as("n"))
-          .filter(col("n") > maxBucketSize).select("bucket")
-        // unhinted: bounded by 2^planes distinct buckets, but consistent
-        // with the other cap anti-joins — AQE broadcasts when it fits
-        e0.join(oversize, Seq("bucket"), "left_anti")
-      } else e0
+    val e = TextDedup.dropOversize(e0, "bucket", lit(1), maxBucketSize)
     val cosine = dot(col("x.emb"), col("y.emb")) / (col("x.norm") * col("y.norm"))
     e.as("x").join(e.as("y"),
         col("x.bucket") === col("y.bucket") && col("x.vec_id") < col("y.vec_id"))
@@ -870,13 +863,8 @@ object Ann {
       maxClusterSize: Long = 0L): DataFrame = {
     val assigned = ivfAssign(emb, idCol, embCol, centroids)
       .select("vec_id", "centroid_id", "emb", "norm").cache()
-    val screened =
-      if (maxClusterSize > 0) {
-        val oversize = assigned.groupBy("centroid_id")
-          .agg(count(lit(1)).as("n")).filter(col("n") > maxClusterSize)
-          .select("centroid_id")
-        assigned.join(oversize, Seq("centroid_id"), "left_anti")
-      } else assigned
+    val screened = TextDedup.dropOversize(assigned, "centroid_id", lit(1),
+      maxClusterSize)
     val cosine = dot(col("x.emb"), col("y.emb")) / (col("x.norm") * col("y.norm"))
     val dups = screened.as("x").join(screened.as("y"),
         col("x.centroid_id") === col("y.centroid_id")

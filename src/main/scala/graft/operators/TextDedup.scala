@@ -12,6 +12,18 @@ import org.apache.spark.sql.functions._
   *  - every near-dup candidate generator is BLOCKED (caller-chosen blocking
   *    column, LSH band bucket) so no all-pairs join exists;
   *  - hashes are md5-based, reproducible in any engine.
+  *
+  * Generators split into one candidate filter ([[bucketPairs]]) and one
+  * exact verify ([[jaccardVerify]]), the REPOSE / incremental top-k shape.
+  *
+  * Oversize-key cap ([[dropOversize]]; every `maxDocFreq`/`maxBucketSize`
+  * here and in [[Ann]]): a key whose summed weight exceeds the cap loses
+  * all its rows. The weight counts DOCUMENTS (a collapsed group weighs its
+  * member count), so capped results equal the uncollapsed form's; 0 is
+  * off; the anti-join is unhinted because the heavy set is O(rows/cap),
+  * unbounded on boilerplate — AQE broadcasts it only when its runtime size
+  * fits (the [[applyDedup]] stance); pairs inside a dropped key are lost by
+  * design (audit: [[minhashLshBucketStats]]).
   */
 object TextDedup {
 
@@ -26,6 +38,84 @@ object TextDedup {
   private def pairwise(arr: Column, f: (Column, Column) => Column): Column =
     flatten(transform(arr, (x, i) =>
       transform(slice(arr, i + 2, size(arr)), y => f(x, y))))
+
+  /** Exploded (doc_a, doc_b) pairs of one group's sorted member ids. */
+  private def idPairs(ids: Column): Column =
+    explode(pairwise(ids, (x, y) => struct(x.as("doc_a"), y.as("doc_b"))))
+
+  /** In-bucket pair expansion: ONE shuffle collects each `key` bucket's
+    * `item`s sorted, and its pairs explode locally as `f(x, y)` into `__p`
+    * — no self-join (graft.queries.Dedup.dd33 says why that matters). */
+  private def bucketPairs(rows: DataFrame, key: String, item: Column,
+      f: (Column, Column) => Column): DataFrame =
+    rows.groupBy(key).agg(sort_array(collect_list(item)).as("__xs"))
+      .filter(size(col("__xs")) > 1)
+      .select(explode(pairwise(col("__xs"), f)).as("__p"))
+
+  /** Every member of group A against every member of group B (`ids_a` ×
+    * `ids_b`), normalized to doc_a < doc_b, with `carry` riding along. */
+  private def crossMembers(pairs: DataFrame, carry: String*): DataFrame = {
+    val rest = carry.map(col)
+    pairs.select(Seq(explode(col("ids_a")).as("__x"), col("ids_b")) ++ rest: _*)
+      .select(Seq(col("__x"), explode(col("ids_b")).as("__y")) ++ rest: _*)
+      .select(Seq(least(col("__x"), col("__y")).as("doc_a"),
+        greatest(col("__x"), col("__y")).as("doc_b")) ++ rest: _*)
+  }
+
+  /** Member pairs of a collapsed (bucket, `gkey`, ids) frame: cross-group
+    * pairs from co-bucketed groups, within-group pairs from each surviving
+    * bucket row (so a cap gates them as in the uncollapsed form). Returns
+    * (doc_a, doc_b, key_a, key_b); repeats across buckets — distinct(). */
+  private def memberPairs(buckets: DataFrame, gkey: String): DataFrame = {
+    val cross = crossMembers(
+      bucketPairs(buckets, "bucket", struct(col(gkey), col("ids")), (x, y) =>
+        struct(x.getField("ids").as("ids_a"), y.getField("ids").as("ids_b"),
+          x.getField(gkey).as("key_a"), y.getField(gkey).as("key_b")))
+        .select("__p.*"),
+      "key_a", "key_b")
+    val within = buckets.filter(size(col("ids")) >= 2)
+      .select(idPairs(col("ids")).as("__p"),
+        col(gkey).as("key_a"), col(gkey).as("key_b"))
+      .select("__p.doc_a", "__p.doc_b", "key_a", "key_b")
+    cross.unionByName(within)
+  }
+
+  /** The Jaccard score every verifier here emits: round(common/union, 6). */
+  private def jaccard(common: Column, union: Column): Column =
+    round(common.cast("double") / union, 6)
+
+  /** Exact Jaccard verify of candidate pairs carrying both sides' shingle
+    * arrays in `a` and `b`, intersected locally: [[jaccard]] >= threshold. */
+  private def jaccardVerify(cand: DataFrame, a: String, b: String,
+      threshold: Double): DataFrame =
+    cand.withColumn("__common", size(array_intersect(col(a), col(b))))
+      .withColumn("__union", size(col(a)) + size(col(b)) - col("__common"))
+      .filter(col("__union") > 0 &&
+        jaccard(col("__common"), col("__union")) >= threshold)
+
+  /** The cap's census: (key, `__n` = summed `weight`, `__dropped`). */
+  private[operators] def keyCensus(rows: DataFrame, key: String,
+      weight: Column, max: Long): DataFrame =
+    rows.groupBy(key).agg(sum(weight).as("__n"))
+      .withColumn("__dropped", lit(max > 0) && col("__n") > max)
+
+  /** The keys a cap of `max` drops, censused over `census` (which may span
+    * more than the capped frame: [[dedupAgainstIndex]]'s two sides). */
+  private[operators] def oversizeKeys(census: DataFrame, key: String,
+      weight: Column, max: Long): DataFrame =
+    keyCensus(census, key, weight, max).filter(col("__dropped")).select(key)
+
+  /** `rows` minus the `oversize` keys: the cap's one, unhinted anti-join. */
+  private[operators] def dropOversize(rows: DataFrame, key: String,
+      oversize: DataFrame): DataFrame =
+    rows.join(oversize, Seq(key), "left_anti")
+
+  /** The cap over one frame; the identity when `max <= 0`. It never
+    * checkpoints or caches: callers materialize where their plan needs. */
+  private[operators] def dropOversize(rows: DataFrame, key: String,
+      weight: Column, max: Long): DataFrame =
+    if (max <= 0) rows
+    else dropOversize(rows, key, oversizeKeys(rows, key, weight, max))
 
   /** One row per DISTINCT text: representative id (the minimum), the
     * sorted member-id array, and the text itself — the exact-duplicate
@@ -169,17 +259,9 @@ object TextDedup {
     val sh0 = groups.select(col("rep").as("doc_id"), col("block"),
       col("gsize"), explode(graft.functions.GraftFunctions.shingles(col("__text")))
         .as("shingle"))
-    val sh = materialize(if (maxDocFreq > 0) {
-        // df = sum of group sizes: the cap keeps counting DOCUMENTS, so
-        // capped results are identical to the uncollapsed formulation
-        val hot = sh0.groupBy("shingle").agg(sum(col("gsize")).as("df"))
-          .filter(col("df") > maxDocFreq).select("shingle")
-        // deliberately UNHINTED (the applyDedup stance): the hot-shingle set
-        // is O(shingles/cap), unbounded on a boilerplate-heavy corpus — a
-        // forced broadcast ships it to every executor or OOMs the driver.
-        // AQE broadcasts when the runtime size fits the threshold.
-        sh0.join(hot, Seq("shingle"), "left_anti")
-      } else sh0)
+    // the hot-shingle cap weighs each posting by its group size, so
+    // document frequency keeps counting DOCUMENTS
+    val sh = materialize(dropOversize(sh0, "shingle", col("gsize"), maxDocFreq))
     val n = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val repPairs = sh.as("a")
       .join(sh.as("b"),
@@ -190,28 +272,22 @@ object TextDedup {
       .agg(count(lit(1)).as("common"))
       .join(n.select(col("doc_id").as("rep_a"), col("n_sh").as("n_a")), "rep_a")
       .join(n.select(col("doc_id").as("rep_b"), col("n_sh").as("n_b")), "rep_b")
-      .withColumn("jaccard", round(
-        col("common").cast("double") / (col("n_a") + col("n_b") - col("common")), 6))
+      .withColumn("jaccard",
+        jaccard(col("common"), col("n_a") + col("n_b") - col("common")))
       .filter(col("jaccard") >= threshold)
-    // 3a. expand cross-group pairs: every member of A against every member
-    // of B, normalized to doc_a < doc_b; (common, jaccard) carry over since
+    // 3a. expand cross-group pairs; (common, jaccard) carry over since
     // members are byte-identical to their representative
-    val cross = repPairs
+    val cross = crossMembers(repPairs
       .join(groups.select(col("rep").as("rep_a"), col("ids").as("ids_a")), "rep_a")
-      .join(groups.select(col("rep").as("rep_b"), col("ids").as("ids_b")), "rep_b")
-      .withColumn("x", explode(col("ids_a")))
-      .withColumn("y", explode(col("ids_b")))
-      .select(least(col("x"), col("y")).as("doc_a"),
-        greatest(col("x"), col("y")).as("doc_b"),
-        col("common"), col("jaccard"))
+      .join(groups.select(col("rep").as("rep_b"), col("ids").as("ids_b")), "rep_b"),
+      "common", "jaccard")
     // 3b. within-group pairs: J = 1.0 exactly; the join with n drops groups
     // whose representative has no (surviving) shingles — identical to the
     // uncollapsed formulation, where such docs never enter the index
-    if (threshold > 1.0) return cross.select("doc_a", "doc_b", "common", "jaccard")
+    if (threshold > 1.0) return cross
     val within = groups.filter(col("gsize") >= 2)
       .join(n.select(col("doc_id").as("rep"), col("n_sh")), "rep")
-      .select(explode(pairwise(col("ids"), (x, y) =>
-        struct(x.as("doc_a"), y.as("doc_b")))).as("p"), col("n_sh"))
+      .select(idPairs(col("ids")).as("p"), col("n_sh"))
       .select(col("p.doc_a"), col("p.doc_b"), col("n_sh").as("common"),
         lit(1.0).as("jaccard"))
     cross.unionByName(within).select("doc_a", "doc_b", "common", "jaccard")
@@ -355,28 +431,20 @@ object TextDedup {
     * graft.queries.Dedup.dd33 scaladoc for why that shape matters).
     * `rowsPerBand` consecutive signature columns hash into one band bucket.
     *
-    * `maxBucketSize` (0 = off) is the 100 TB safety knob, mirroring
-    * ngramJaccardPairs' `maxDocFreq`: a degenerate bucket (boilerplate-heavy
-    * corpus collapsing to one signature) would otherwise accumulate an
-    * unbounded id list in one task and expand quadratically. Oversize
-    * buckets are dropped BEFORE the collect (an unhinted anti-join against
-    * the oversize-bucket set — AQE broadcasts it only when its runtime size
-    * fits, since heavy hitters are O(rows/cap)), never materialized; audit them with
-    * [[minhashLshBucketStats]]. Near-dups inside a dropped bucket are by
-    * construction near-identical boilerplate — at scale those route to
-    * exact dedup on the band hash instead of pairwise scoring.
+    * `maxBucketSize` (0 = off) caps a band bucket's population in
+    * documents: a degenerate bucket (boilerplate-heavy corpus collapsing to
+    * one signature) would otherwise accumulate an unbounded id list in one
+    * task and expand quadratically. Oversize buckets are dropped BEFORE the
+    * collect, never materialized (cap contract: object header).
     */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
       bands: Int, rowsPerBand: Int, maxBucketSize: Long = 0L): DataFrame = {
     // round-5 collapse (the simhashNearPairs treatment): identical texts
     // share every signature and hence every band bucket, so signatures —
     // k digests per shingle, the dominant cost — are computed once per
-    // DISTINCT text, with the member-id array riding through the banding.
-    // Cross-group pairs explode the two arrays where the bucket already
-    // co-located them; within-group pairs fall out of each surviving
-    // bucket row (so the bucket cap and the null-signature filter gate
-    // them exactly as the uncollapsed form did); the final distinct()
-    // dedups multi-band emissions as before. No join is introduced.
+    // DISTINCT text, with the member-id array riding through the banding
+    // into [[memberPairs]]; the final distinct() dedups multi-band
+    // emissions. No join is introduced.
     // the banding frame feeds two consumers (cross + within; three with
     // the cap census) under different shuffle boundaries — lazily
     // checkpoint-materialize so the signature stage (k digests per
@@ -385,32 +453,11 @@ object TextDedup {
       "__text", bands, rowsPerBand, extraCols = Seq("ids"))
       .localCheckpoint(false)
     val capped =
-      if (maxBucketSize > 0) {
-        // the cap keeps counting DOCUMENTS (sum of member counts), so
-        // capped results are identical to the uncollapsed formulation
-        val oversize = bandsDf.groupBy("bucket")
-          .agg(sum(size(col("ids"))).as("n"))
-          .filter(col("n") > maxBucketSize).select("bucket")
-        // unhinted: the oversize-bucket set is O(rows/cap), not bounded —
-        // AQE broadcasts it only when its runtime size fits (applyDedup stance)
-        bandsDf.join(oversize, Seq("bucket"), "left_anti")
+      if (maxBucketSize > 0)
+        dropOversize(bandsDf, "bucket", size(col("ids")), maxBucketSize)
           .localCheckpoint(false)
-      } else bandsDf
-    val cross = capped.groupBy("bucket")
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("ids")))).as("xs"))
-      .filter(size(col("xs")) > 1)
-      .select(explode(pairwise(col("xs"), (x, y) =>
-        struct(x.getField("ids").as("ids_a"),
-          y.getField("ids").as("ids_b")))).as("p"))
-      .select(explode(col("p.ids_a")).as("x"), col("p.ids_b"))
-      .select(col("x"), explode(col("ids_b")).as("y"))
-      .select(least(col("x"), col("y")).as("doc_a"),
-        greatest(col("x"), col("y")).as("doc_b"))
-    val within = capped.filter(size(col("ids")) >= 2)
-      .select(explode(pairwise(col("ids"), (x, y) =>
-        struct(x.as("doc_a"), y.as("doc_b")))).as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"))
-    cross.unionByName(within).distinct()
+      else bandsDf
+    memberPairs(capped, "doc_id").select("doc_a", "doc_b").distinct()
   }
 
   /** Duplicate-cluster formation: connected components over a near-dup
@@ -837,35 +884,23 @@ object TextDedup {
     val bandsDf = lshBandBuckets(groups, "rep", "__text", bands, rowsPerBand,
       extraCols = Seq("ids")).localCheckpoint(false)
     val capped =
-      if (maxBucketSize > 0) {
-        val oversize = bandsDf.groupBy("bucket")
-          .agg(sum(size(col("ids"))).as("n"))
-          .filter(col("n") > maxBucketSize).select("bucket")
-        // unhinted: oversize-bucket set is O(rows/cap) (applyDedup stance)
-        bandsDf.join(oversize, Seq("bucket"), "left_anti")
+      if (maxBucketSize > 0)
+        dropOversize(bandsDf, "bucket", size(col("ids")), maxBucketSize)
           .localCheckpoint(false)
-      } else bandsDf
-    // candidate REP pairs: local in-bucket expansion, no join (the
-    // minhashLshPairs plan), distinct across multi-band emissions
-    val cand = capped.groupBy("bucket")
-      .agg(sort_array(collect_list(col("doc_id"))).as("xs"))
-      .filter(size(col("xs")) > 1)
-      .select(explode(pairwise(col("xs"), (x, y) =>
-        struct(x.as("rep_a"), y.as("rep_b")))).as("p"))
-      .select(col("p.rep_a"), col("p.rep_b")).distinct()
+      else bandsDf
+    // candidate REP pairs: in-bucket expansion of the representative ids
+    // only (no member arrays, no join), distinct across multi-band emissions
+    val cand = bucketPairs(capped, "bucket", col("doc_id"), (x, y) =>
+        struct(x.as("rep_a"), y.as("rep_b")))
+      .select(col("__p.rep_a"), col("__p.rep_b")).distinct()
     // stage 2: exact verification on candidates only — ship each side's
-    // shingle array to the pair (bounded by LSH fan-out) and intersect
-    // locally; round(j, 6) matches ngramJaccardPairs' scorer exactly
+    // shingle array to the pair (bounded by LSH fan-out)
     val shArr = groups.select(col("rep"),
       graft.functions.GraftFunctions.shingles(col("__text")).as("__sh"))
-    val verified = cand
+    val verified = jaccardVerify(cand
       .join(shArr.select(col("rep").as("rep_a"), col("__sh").as("__sh_a")), "rep_a")
-      .join(shArr.select(col("rep").as("rep_b"), col("__sh").as("__sh_b")), "rep_b")
-      .withColumn("__common", size(array_intersect(col("__sh_a"), col("__sh_b"))))
-      .withColumn("__union",
-        size(col("__sh_a")) + size(col("__sh_b")) - col("__common"))
-      .filter(col("__union") > 0 &&
-        round(col("__common").cast("double") / col("__union"), 6) >= threshold)
+      .join(shArr.select(col("rep").as("rep_b"), col("__sh").as("__sh_b")), "rep_b"),
+      "__sh_a", "__sh_b", threshold)
       .select(col("rep_a").as("doc_a"), col("rep_b").as("doc_b"))
     // stage 3: connected components over the rep graph (nodes = distinct
     // texts — the d²-smaller graph)
@@ -911,8 +946,7 @@ object TextDedup {
     *     a join — batch buckets against reference buckets — and stays
     *     bounded by bucket populations (`maxBucketSize` caps the COMBINED
     *     population, counting documents on both sides);
-    *  3. exact Jaccard verify on candidates only (the [[nearDedupPipeline]]
-    *     array-intersect form, round(j,6) >= threshold);
+    *  3. exact Jaccard verify on candidates only ([[jaccardVerify]]);
     *  4. expand — drop every member of a batch group whose representative
     *     matched any reference representative.
     *
@@ -990,28 +1024,23 @@ object TextDedup {
     val rBands = index.bandBuckets
     val (bCapped, rCapped) =
       if (maxBucketSize > 0) {
-        // combined population, counting documents (sum of member counts on
-        // both sides) — the degenerate-boilerplate guard, same stance as
-        // minhashLshPairs; the oversize set is unbounded, so unhinted
-        val oversize = bBands.select(col("bucket"), size(col("ids")).as("__n"))
-          .unionByName(rBands.select(col("bucket"), size(col("__r_ids")).as("__n")))
-          .groupBy("bucket").agg(sum(col("__n")).as("__tot"))
-          .filter(col("__tot") > maxBucketSize).select("bucket")
-        (bBands.join(oversize, Seq("bucket"), "left_anti"),
-          rBands.join(oversize, Seq("bucket"), "left_anti"))
+        // one census over the COMBINED population (member counts on both
+        // sides), applied to each side
+        val oversize = oversizeKeys(
+          bBands.select(col("bucket"), size(col("ids")).as("__w"))
+            .unionByName(rBands.select(col("bucket"), size(col("__r_ids")).as("__w"))),
+          "bucket", col("__w"), maxBucketSize)
+        (dropOversize(bBands, "bucket", oversize),
+          dropOversize(rBands, "bucket", oversize))
       } else (bBands, rBands)
     val cand = bCapped.join(rCapped, "bucket")
       .select("b_rep", "r_rep").distinct()
     // 3. verify on candidates only; reference shingles come from the index
     val bSh = bGroups.select(col("rep").as("b_rep"),
       graft.functions.GraftFunctions.shingles(col("__text")).as("__sh_b"))
-    val matchedReps = cand
-      .join(bSh, "b_rep").join(index.shingles, "r_rep")
-      .withColumn("__common", size(array_intersect(col("__sh_b"), col("__sh_r"))))
-      .withColumn("__union",
-        size(col("__sh_b")) + size(col("__sh_r")) - col("__common"))
-      .filter(col("__union") > 0 &&
-        round(col("__common").cast("double") / col("__union"), 6) >= threshold)
+    val matchedReps = jaccardVerify(
+        cand.join(bSh, "b_rep").join(index.shingles, "r_rep"),
+        "__sh_b", "__sh_r", threshold)
       .select(col("b_rep")).distinct()
     // 4. expand matched groups to member ids, anti-join (unhinted — the
     // near-dup id set is O(batch) on a redundant feed)
@@ -1088,17 +1117,16 @@ object TextDedup {
   /** Audit companion to [[minhashLshPairs]]: per-bucket population and
     * whether the cap would drop it — the "dropped bucket" metric a 100 TB
     * run monitors (dropped buckets ⇒ candidate recall loss on boilerplate).
+    * It is the cap's own census ([[keyCensus]]) over the same collapsed
+    * banding, so the audit cannot drift from the cap it audits.
     */
   def minhashLshBucketStats(docs: DataFrame, idCol: String, textCol: String,
       bands: Int, rowsPerBand: Int, maxBucketSize: Long): DataFrame =
-    // same collapsed banding as minhashLshPairs, so the audit costs what
-    // the operator it monitors costs; bucket_size keeps DOCUMENT-count
-    // semantics via the member arrays
-    lshBandBuckets(textGroups(docs, idCol, textCol), "rep", "__text",
-      bands, rowsPerBand, extraCols = Seq("ids"))
-      .groupBy("bucket").agg(sum(size(col("ids"))).as("bucket_size"))
-      .withColumn("dropped",
-        lit(maxBucketSize > 0) && col("bucket_size") > maxBucketSize)
+    keyCensus(lshBandBuckets(textGroups(docs, idCol, textCol), "rep", "__text",
+        bands, rowsPerBand, extraCols = Seq("ids")),
+      "bucket", size(col("ids")), maxBucketSize)
+      .select(col("bucket"), col("__n").as("bucket_size"),
+        col("__dropped").as("dropped"))
 
   /** SimHash fingerprint: per-token md5-derived `bits`-bit hash, each bit
     * votes ±1 weighted by token frequency. Token hashes come from the
@@ -1146,12 +1174,10 @@ object TextDedup {
     * (chunk index, chunk value) bucket — ONE shuffle, local pair expansion
     * inside each bucket (the minhashLshPairs shape), never an all-pairs
     * join — then exact-filtered with `bit_count(a ^ b)`. At 100 TB the
-    * chunk id is the layout key, and `maxBucketSize` (0 = off) is the
-    * same degenerate-bucket guard as minhashLshPairs': a boilerplate
-    * corpus collapsing to one fingerprint would otherwise accumulate an
-    * unbounded id list in one task; oversize buckets are anti-joined away
-    * before the collect, and their members — near-identical by
-    * construction — belong in exact dedup on the fingerprint instead.
+    * chunk id is the layout key, and `maxBucketSize` (0 = off) caps a
+    * chunk bucket's population in documents — the same degenerate-bucket
+    * guard as minhashLshPairs' (cap contract: object header); members of a
+    * dropped bucket belong in exact dedup on the fingerprint instead.
     */
   def simhashNearPairs(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, maxBucketSize: Long = 0L): DataFrame = {
@@ -1160,13 +1186,10 @@ object TextDedup {
     // round-5 collapse (the ngramJaccardPairs treatment): identical texts
     // share a fingerprint and identical fingerprints share every chunk
     // bucket, so each DISTINCT fingerprint goes through the chunk-blocked
-    // index once, with its member-id array riding along — on a corpus with
-    // duplication factor d the in-bucket quadratic expansion shrinks d².
-    // No join is introduced: cross-group pairs explode the two id arrays
-    // where the bucket already co-located them, within-group pairs
-    // (hamming 0) fall out of each surviving bucket row — which makes the
-    // bucket cap gate them exactly as the uncollapsed form did — and the
-    // final distinct() dedups multi-bucket emissions as before.
+    // index once, with its member-id array riding along into
+    // [[memberPairs]] — on a corpus with duplication factor d the in-bucket
+    // quadratic expansion shrinks d². The final distinct() dedups
+    // multi-bucket emissions.
     val groups = simhash(docs, idCol, textCol, bits = 64)
       .groupBy(col("simhash"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
@@ -1180,40 +1203,16 @@ object TextDedup {
       explode(array(chunks: _*)).as("bucket"))
       .localCheckpoint(false)
     val buckets =
-      if (maxBucketSize > 0) {
-        // the cap keeps counting DOCUMENTS (sum of member counts), so
-        // capped results are identical to the uncollapsed formulation
-        val oversize = buckets0.groupBy("bucket")
-          .agg(sum(size(col("ids"))).as("n"))
-          .filter(col("n") > maxBucketSize).select("bucket")
-        // unhinted: O(rows/cap) heavy-hitter set — AQE sizes the join
-        buckets0.join(oversize, Seq("bucket"), "left_anti")
+      if (maxBucketSize > 0)
+        dropOversize(buckets0, "bucket", size(col("ids")), maxBucketSize)
           .localCheckpoint(false)
-      } else buckets0
-    val cross = buckets.groupBy("bucket")
-      .agg(sort_array(collect_list(struct(col("simhash"), col("ids")))).as("xs"))
-      .filter(size(col("xs")) > 1)
-      .select(explode(pairwise(col("xs"), (x, y) =>
-        struct(x.getField("ids").as("ids_a"),
-          y.getField("ids").as("ids_b"),
-          x.getField("simhash").as("fp_a"),
-          y.getField("simhash").as("fp_b")))).as("p"))
-      .select(explode(col("p.ids_a")).as("x"), col("p.ids_b"),
-        col("p.fp_a"), col("p.fp_b"))
-      .select(col("x"), explode(col("ids_b")).as("y"),
-        col("fp_a"), col("fp_b"))
-      .select(least(col("x"), col("y")).as("doc_a"),
-        greatest(col("x"), col("y")).as("doc_b"),
-        bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).as("hamming"))
-    // hamming written as fp^fp (not a 0 literal) so a null fingerprint
-    // group yields null and is filtered — byte-identical to the
-    // uncollapsed form's null semantics
-    val within = buckets.filter(size(col("ids")) >= 2)
-      .select(explode(pairwise(col("ids"), (x, y) =>
-        struct(x.as("doc_a"), y.as("doc_b")))).as("p"),
-        bit_count(col("simhash").bitwiseXOR(col("simhash"))).as("hamming"))
-      .select(col("p.doc_a"), col("p.doc_b"), col("hamming"))
-    cross.unionByName(within)
+      else buckets0
+    // hamming from the two fingerprints: a within-group pair's fp ^ fp
+    // (not a 0 literal) leaves a null fingerprint group null, filtered —
+    // byte-identical to the uncollapsed form's null semantics
+    memberPairs(buckets, "simhash")
+      .select(col("doc_a"), col("doc_b"),
+        bit_count(col("key_a").bitwiseXOR(col("key_b"))).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
   }
@@ -1226,10 +1225,10 @@ object TextDedup {
     * plus the shared count, keeping pairs where EITHER direction clears
     * `threshold`. Same blocked inverted-index economics as
     * [[ngramJaccardPairs]] (block column + optional `maxDocFreq` hot-
-    * shingle cap, unhinted anti-join); denominators are each side's FULL
-    * distinct-shingle count even when the cap trims the index, so a
-    * capped run can only UNDER-report containment (recall-for-
-    * boundedness, never a false positive).
+    * shingle cap); denominators are each side's FULL distinct-shingle
+    * count even when the cap trims the index, so a capped run can only
+    * UNDER-report containment (recall-for-boundedness, never a false
+    * positive).
     */
   def ngramContainmentPairs(docs: DataFrame, idCol: String, textCol: String,
       blockCol: String, threshold: Double,
@@ -1240,12 +1239,7 @@ object TextDedup {
         .as("shingle"))
       .localCheckpoint(true)
     val n = sh0.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    val sh =
-      if (maxDocFreq > 0) {
-        val hot = sh0.groupBy("shingle").agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxDocFreq).select("shingle")
-        sh0.join(hot, Seq("shingle"), "left_anti")
-      } else sh0
+    val sh = dropOversize(sh0, "shingle", lit(1), maxDocFreq)
     sh.as("a")
       .join(sh.as("b"),
         col("a.shingle") === col("b.shingle") &&

@@ -258,6 +258,21 @@ class PlanContractsSpec extends AnyFunSuite with SparkTestBase {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      // the shared cap itself, both forms: the LSH generators run it under
+      // a lazy localCheckpoint, so their returned plans end at a scan and
+      // cannot show its anti-join — its own plan must
+      val keyed = docs.select(col("doc_id"), col("text").as("bucket"))
+      val heavy = TextDedup.oversizeKeys(keyed.unionByName(keyed), "bucket",
+        lit(1), 8L)
+      for ((name, capped) <- Seq(
+          "dropOversize" -> TextDedup.dropOversize(keyed, "bucket", lit(1), 8L),
+          "dropOversize(key set)" -> TextDedup.dropOversize(keyed, "bucket",
+            heavy))) {
+        val plan = capped.queryExecution.executedPlan.toString
+        assert(plan.contains("LeftAnti") && !plan.contains("BroadcastExchange"),
+          s"$name must anti-join the oversize keys unhinted:\n$plan")
+        assert(capped.count() == 100L) // the 400 boilerplate rows are dropped
+      }
       for ((name, capped) <- Seq(
           "minhashLshPairs" -> TextDedup.minhashLshPairs(docs, "doc_id", "text",
             bands = 2, rowsPerBand = 2, maxBucketSize = 8L),
@@ -273,7 +288,13 @@ class PlanContractsSpec extends AnyFunSuite with SparkTestBase {
             docs.filter(col("doc_id") % 2 === 0),
             docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
             bands = 2, rowsPerBand = 2, threshold = 0.5,
-            maxBucketSize = 8L))) {
+            maxBucketSize = 8L),
+          "nearDedupPipeline" -> TextDedup.nearDedupPipeline(docs, "doc_id",
+            "text", bands = 2, rowsPerBand = 2, threshold = 0.5,
+            maxBucketSize = 8L),
+          "ngramContainmentPairs" -> TextDedup.ngramContainmentPairs(docs,
+            "doc_id", "text", blockCol = "source", threshold = 0.5,
+            maxDocFreq = 8L))) {
         val plan = capped.queryExecution.executedPlan.toString
         assert(!plan.contains("BroadcastExchange"),
           s"$name cap side over threshold must not broadcast:\n$plan")

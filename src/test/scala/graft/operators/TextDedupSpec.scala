@@ -239,6 +239,40 @@ class TextDedupSpec extends AnyFunSuite with SparkTestBase {
     assert(capped.join(uncapped, Seq("doc_a", "doc_b"), "left_anti").count() == 0)
   }
 
+  test("containment df cap: subset of uncapped, containment never rises, a hot shingle alone pairs nothing") {
+    import spark.implicits._
+    type Pair = (Long, Long)
+    def pairs(d: org.apache.spark.sql.DataFrame, cap: Long): Map[Pair, (Double, Double)] =
+      TextDedup.ngramContainmentPairs(d, "doc_id", "text", "source", 0.3,
+        maxDocFreq = cap).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getDouble(3), r.getDouble(4))))
+        .toMap
+    // docs 1-4 share only "hot phrase" (containment 1/3 each way); 5 and 6
+    // also share two cold shingles; "hot phrase" sits in all six, over a
+    // cap of 3
+    val rows = Seq(
+      (1L, "hot phrase alpha one"), (2L, "hot phrase beta two"),
+      (3L, "hot phrase gamma three"), (4L, "hot phrase delta four"),
+      (5L, "hot phrase shared tail end"), (6L, "hot phrase shared tail stop"))
+      .map { case (id, t) => (id, "s1", t) }.toDF("doc_id", "source", "text")
+    for ((corpus, cap) <- Seq(rows -> 3L, docs -> 3L)) {
+      val full = pairs(corpus, 0L)
+      val capped = pairs(corpus, cap)
+      // (1) dropping hot shingles can only remove pairs
+      assert(capped.keySet.subsetOf(full.keySet))
+      // (2) denominators stay full counts, so containment can only fall
+      capped.foreach { case (p, (ca, cb)) =>
+        assert(ca <= full(p)._1 && cb <= full(p)._2, s"pair $p rose under the cap")
+      }
+    }
+    val full = pairs(rows, 0L)
+    val capped = pairs(rows, 3L)
+    assert(full.contains((1L, 2L)) && full((5L, 6L)) == ((0.75, 0.75)))
+    // (3) the hot shingle alone yields no pair; 5-6 keep their two cold
+    // shingles over their FULL four-shingle denominators
+    assert(capped == Map((5L, 6L) -> ((0.5, 0.5))))
+  }
+
   test("simhash64: identical texts share a fingerprint; hamming pairs find them at distance 0") {
     import spark.implicits._
     val docs = Seq(
