@@ -101,7 +101,6 @@ object Classification {
     val lsRows = labelStats.select(col("label"), col("docs_l"), col("tok_l"))
       .orderBy("label").collect()
     require(lsRows.nonEmpty, "nbClassify: empty training corpus")
-    val nLabels = lsRows.length
     val cCounts = counts.localCheckpoint(false)
     val cnt = cCounts.count()
     // test side, two plan shapes with IDENTICAL integer output
@@ -119,19 +118,8 @@ object Classification {
     //    token-keyed lookup join (broadcast under the bound, else
     //    key-bounded shuffle-hash), ONE per-doc aggregate (partial
     //    aggregation collapses per doc map-side).
-    // cnt ≤ vocab × nLabels bounds the collect decision exactly:
-    // cnt > maxFusedVocabRows × nLabels ⇒ vocab > maxFusedVocabRows.
-    val collected =
-      if (fused.getOrElse(true) && cnt <= maxFusedVocabRows * nLabels)
-        Some(cCounts.collect())
-      else None
-    val vocab: Long = collected match {
-      case Some(rows) =>
-        val seen = new java.util.HashSet[String]()
-        rows.foreach(r => seen.add(r.getString(1)))
-        seen.size.toLong
-      case None => cCounts.select("token").distinct().count()
-    }
+    val (collected, vocab) =
+      censusRows(cCounts, cnt, fused.getOrElse(true), maxFusedVocabRows)
     val useFused = fused match {
       case Some(true) =>
         // fail-loud, not OOM, when the fused path is FORCED past the
@@ -271,16 +259,32 @@ object Classification {
     val cCounts = nbCensus(train, textCol, labelCol).localCheckpoint(false)
     val cnt = cCounts.count()
     // cnt ≤ vocab × L: past this bound the vocabulary provably exceeds
-    // the fused bound — never collect it
+    // the fused bound — not even its size is needed
     if (cnt > maxFusedVocabRows * lsRows.length) return None
-    val rows = cCounts.collect()
-    val seen = new java.util.HashSet[String]()
-    rows.foreach(r => seen.add(r.getString(1)))
-    val vocab = seen.size.toLong
-    if (vocab > maxFusedVocabRows) None
-    else {
+    val (collected, vocab) =
+      censusRows(cCounts, cnt, collect = true, maxFusedVocabRows)
+    collected.map { rows =>
       val labelRows = nbLabelRows(spark, lsRows, nTrain, vocab, quantScale)
-      Some((labelRows, nbLut(spark, rows, labelRows.map(_._1), quantScale)))
+      (labelRows, nbLut(spark, rows, labelRows.map(_._1), quantScale))
     }
   }
+
+  /** The checkpointed census `cCounts` (`cnt` rows) and its vocabulary
+    * size, the census collected only when `collect` and the vocabulary
+    * fits `maxFusedVocabRows`. The bound holds BEFORE the collect runs:
+    * cnt ≥ vocab, so at cnt ≤ the bound the collect is safe and yields
+    * the vocabulary; past it the distinct-token count decides first.
+    */
+  private def censusRows(cCounts: DataFrame, cnt: Long, collect: Boolean,
+      maxFusedVocabRows: Long): (Option[Array[org.apache.spark.sql.Row]], Long) =
+    if (collect && cnt <= maxFusedVocabRows) {
+      val rows = cCounts.collect()
+      val seen = new java.util.HashSet[String]()
+      rows.foreach(r => seen.add(r.getString(1)))
+      (Some(rows), seen.size.toLong)
+    } else {
+      val vocab = cCounts.select("token").distinct().count()
+      (Option.when(collect && vocab <= maxFusedVocabRows)(cCounts.collect()),
+        vocab)
+    }
 }

@@ -24,6 +24,11 @@ import org.apache.spark.sql.functions._
   * unbounded on boilerplate — AQE broadcasts it only when its runtime size
   * fits (the [[applyDedup]] stance); pairs inside a dropped key are lost by
   * design (audit: [[minhashLshBucketStats]]).
+  *
+  * Read-once ([[nearDedupPipeline]], the composed operator a curation run
+  * calls): it reads its input once and returns its survivors lazily
+  * materialized, so its lineage is truncated there and no consumer re-runs
+  * the plan above it.
   */
 object TextDedup {
 
@@ -866,9 +871,18 @@ object TextDedup {
     * approximate. A run that wants unconditional exact dedup composes
     * [[exactDedup]] upstream.
     *
+    * Read-once contract: the operator reads `docs` ONCE — one lazy
+    * checkpoint of the input feeds both the collapse and the final
+    * anti-join — and its result is itself lazily materialized, so its
+    * lineage is truncated there. A consumer that runs driver jobs on the
+    * survivors ([[TextAnalysis.modelGate]]'s model collects) re-runs
+    * neither the upstream plan nor the dedup; the curation chain's
+    * front door runs once.
+    *
     * `reliable` hardens the iterative clustering stage's checkpoints (the
-    * [[dupClusters]] knob and caveats); the candidate/verify frames use
-    * lazy local checkpoints as in [[minhashLshPairs]].
+    * [[dupClusters]] knob and caveats) and makes the input and result
+    * checkpoints reliable too; the candidate/verify frames use lazy local
+    * checkpoints as in [[minhashLshPairs]].
     */
   def nearDedupPipeline(docs: DataFrame, idCol: String, textCol: String,
       bands: Int, rowsPerBand: Int, threshold: Double,
@@ -876,8 +890,13 @@ object TextDedup {
       reliable: Boolean = false): DataFrame = {
     // `fast` is ignored; medbench's CurationChain passes it by name
     graft.functions.GraftFunctions.register(docs.sparkSession)
+    def materialize(df: DataFrame): DataFrame =
+      if (reliable) df.checkpoint(false) else df.localCheckpoint(false)
+    // the input is read ONCE: the collapse below and the final anti-join
+    // both read this copy, so an upstream plan never runs twice
+    val in = materialize(docs)
     // stage 0: the shared exact-duplicate collapse — one scan of the corpus
-    val groups = textGroups(docs, idCol, textCol).localCheckpoint(false)
+    val groups = textGroups(in, idCol, textCol).localCheckpoint(false)
     // stage 1: banding over representatives only; `ids` rides along unused
     // so the frame is shared with minhashLshPairs' shape (and the bucket
     // cap keeps counting DOCUMENTS via member counts, not groups)
@@ -916,8 +935,9 @@ object TextDedup {
       .select(explode(col("ids")).as(idCol), col("__canon"))
       .filter(col(idCol) =!= col("__canon"))
       .select(col(idCol))
-    // unhinted anti-join: the duplicate-id set is O(corpus) (applyDedup)
-    docs.join(dupIds, Seq(idCol), "left_anti")
+    // unhinted anti-join: the duplicate-id set is O(corpus) (applyDedup);
+    // materialized, so every consumer reads the survivors, not the chain
+    materialize(in.join(dupIds, Seq(idCol), "left_anti"))
   }
 
   /** Incremental dedup of a NEW batch against an existing REFERENCE corpus

@@ -105,4 +105,43 @@ class ClassificationSpec extends AnyFunSuite with SparkTestBase {
       .nbClassify(train, test, "doc_id", "text", "label").head()
     assert(r.getString(1) == "l1")
   }
+
+  test("the census collect is bounded before it runs: in the band " +
+      "maxFusedVocabRows < vocab <= maxFusedVocabRows x labels the join " +
+      "form is chosen and the census never reaches the driver") {
+    import spark.implicits._
+    // 3 labels, census of 6 (label, token) rows over a 5-token vocabulary
+    val train = Seq(
+      (0L, "aa bb cc", "x"),
+      (2L, "aa dd", "y"),
+      (4L, "ee ee", "z")).toDF("doc_id", "text", "label")
+    val test = Seq(
+      (1L, "aa bb"), (3L, "dd ee ee"), (5L, "cc zz")).toDF("doc_id", "text")
+    def classify(bound: Long, fused: Option[Boolean] = None) =
+      executionsOf {
+        val out = Classification.nbClassifyFromModel(
+          Classification.nbCensus(train, "text", "label"),
+          Classification.nbLabelStats(train, "text", "label"), 3L, test,
+          "doc_id", "text", fused = fused, maxFusedVocabRows = bound)
+        (out.queryExecution.executedPlan.toString, out.collect().toSet)
+      }
+    def censusCollects(runs: Seq[(String, org.apache.spark.sql.execution.QueryExecution)]) =
+      runs.count { case (f, qe) =>
+        f == "collect" && qe.analyzed.output.map(_.name) == Seq("label", "token", "c") }
+    val ((_, joinRows), _) = classify(1000L, fused = Some(false))
+    // 3 < vocab 5 <= 9 (and census 6 <= 9, which once collected it)
+    val ((plan, rows), runs) = classify(3L)
+    assert(plan.contains("Join") && !plan.contains("graft_nb_seen"), plan)
+    assert(censusCollects(runs) == 0,
+      s"the census was collected: ${runs.map(_._1)}")
+    assert(rows == joinRows)
+    // past the bound with the vocabulary inside it, the distinct count
+    // decides and the census collects once — the detection is not vacuous
+    // (the fused projection over this local test frame folds to a
+    // LocalTableScan, so its plan shows no join)
+    val ((fusedPlan, fusedRows), fusedRuns) = classify(5L)
+    assert(!fusedPlan.contains("Join"), fusedPlan)
+    assert(censusCollects(fusedRuns) == 1)
+    assert(fusedRows == joinRows)
+  }
 }

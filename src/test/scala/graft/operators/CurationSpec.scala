@@ -256,9 +256,6 @@ class CurationSpec extends AnyFunSuite with SparkTestBase with TempDirs {
       "validation: no construction-time action plans a FileScan (r14 " +
       "verdict #1)") {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
     val dir = tempDir("graft_curr_scan")
     val n = 2000L
     (0L until n).map(i => (i, i % 4)).toDF("doc_id", "tier")
@@ -272,35 +269,23 @@ class CurationSpec extends AnyFunSuite with SparkTestBase with TempDirs {
     // contain a file scan. (The one real file read happens inside the
     // checkpoint RDD's lineage, invisible to these plans — exactly the
     // point: it is the shared pass.)
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val ql = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(ql)
-    try {
-      val out = Sampling.curriculumShuffle(docs, "doc_id", "tier", 5L, 4)
-      // construction is eager (guard count + validation head) — wait for
-      // the async listener bus to deliver both
-      var tries = 0
-      while (plans.size() < 2 && tries < 100) { Thread.sleep(100); tries += 1 }
-      assert(plans.size() >= 2,
-        "expected the offsets guard count + tier validation to run at " +
-          s"construction, saw ${plans.size()} executions")
-      // the checkpoint materialization itself legitimately scans the file
-      // (a pure Project — the shared pass); what must NOT exist is an
-      // AGGREGATE directly over the file scan (the old standalone
-      // min/max dial check)
-      val scans = plans.asScala.filter(p => p.contains("FileScan") &&
-        p.contains("Aggregate"))
-      assert(scans.isEmpty,
-        "a construction-time aggregate re-scanned the source instead of " +
-          s"riding the offsets pass:\n${scans.headOption.getOrElse("")}")
-      assert(out.count() == n)
-    } finally spark.listenerManager.unregister(ql)
+    // construction is eager (guard count + validation head)
+    val (out, runs) = executionsOf(
+      Sampling.curriculumShuffle(docs, "doc_id", "tier", 5L, 4))
+    val plans = runs.map(_._2.executedPlan.toString)
+    assert(plans.size >= 2,
+      "expected the offsets guard count + tier validation to run at " +
+        s"construction, saw ${plans.size} executions")
+    // the checkpoint materialization itself legitimately scans the file
+    // (a pure Project — the shared pass); what must NOT exist is an
+    // AGGREGATE directly over the file scan (the old standalone
+    // min/max dial check)
+    val scans = plans.filter(p => p.contains("FileScan") &&
+      p.contains("Aggregate"))
+    assert(scans.isEmpty,
+      "a construction-time aggregate re-scanned the source instead of " +
+        s"riding the offsets pass:\n${scans.headOption.getOrElse("")}")
+    assert(out.count() == n)
   }
 
   test("packStream: per-shard packing in manifest order equals the " +
@@ -897,6 +882,55 @@ class CurationSpec extends AnyFunSuite with SparkTestBase with TempDirs {
         perDomainK = 5, maxBlocklistRows = 10L)
     }
     assert(e.getMessage.contains("crawlFrontDoor"))
+  }
+
+  test("the composed curation chain reads its input once: front door -> " +
+      "nearDedupPipeline -> modelGate -> tokenBudget") {
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    // 500 fixture documents plus 100 re-fetches behind tracking noise (the
+    // front door collapses them) on 20 source domains, one blocklisted
+    val base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select("doc_id", "text", "lang", "source")
+      .withColumn("url", concat(lit("https://"), col("source"),
+        lit(".example.com/p"), col("doc_id").cast("string")))
+    val raw = base.unionByName(base.filter(col("doc_id") % 5 === 0)
+      .withColumn("url", concat(col("url"), lit("?utm_source=x")))
+      .withColumn("doc_id", col("doc_id") + 100000L))
+    val nIn = raw.count()
+    val blocked = Seq("src3.example.com").toDF("domain")
+    def frontDoor(docs: org.apache.spark.sql.DataFrame) =
+      Curation.crawlFrontDoor(docs, "url", "doc_id", "text", blocked,
+        perDomainK = 20)
+    // every evaluation of an input row bumps the accumulator; the UDF is
+    // nondeterministic, so no plan may fold or duplicate it away
+    val reads = spark.sparkContext.longAccumulator("chain input reads")
+    val bump = udf { (id: Long) => reads.add(1L); id }.asNondeterministic()
+    val dedup = TextDedup.nearDedupPipeline(
+      frontDoor(raw.withColumn("doc_id", bump(col("doc_id")))),
+      "doc_id", "text", bands = 2, rowsPerBand = 2, threshold = 0.5)
+    val ruleText = concat(col("text"),
+      when(col("doc_id") % 2 === 0, lit(" and so that was the end of it all"))
+        .otherwise(lit("")))
+    val gated = TextAnalysis.modelGate(dedup.filter(col("doc_id") % 2 === 0),
+        dedup, "doc_id", "text", ruleText, "lang",
+        Seq("source" -> col("source"),
+          "n_tokens" -> size(split(col("text"), " "))))
+      .filter(col("keep") && col("pred_label") === col("lang"))
+    val mix = Sampling.tokenBudget(gated.select("doc_id", "source", "n_tokens"),
+      "source", "doc_id", "n_tokens", Map.empty, 400L)
+    graft.BenchHarness.executeFully(mix)
+    assert(reads.value == nIn,
+      s"the chain evaluated ${reads.value} input rows for $nIn inputs")
+    // the chain did real work at every layer
+    val survivors = dedup.select("doc_id").collect().map(_.getLong(0)).toSet
+    val fd = frontDoor(raw)
+    assert(fd.count() < nIn && survivors.size < fd.count())
+    assert(mix.count() > 0)
+    // and its dedup layer keeps exactly the hand-wired chain's survivors
+    assert(survivors == TextDedupSpec.handWired(fd, bands = 2,
+      rowsPerBand = 2, threshold = 0.5))
+    graft.BenchHarness.unpersistLeaked(spark, Set.empty)
   }
 
   test("gopherScreen: each signal trips on its own fixture, keep is the conjunction") {

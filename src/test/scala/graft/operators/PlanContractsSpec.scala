@@ -289,9 +289,6 @@ class PlanContractsSpec extends AnyFunSuite with SparkTestBase {
             docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
             bands = 2, rowsPerBand = 2, threshold = 0.5,
             maxBucketSize = 8L),
-          "nearDedupPipeline" -> TextDedup.nearDedupPipeline(docs, "doc_id",
-            "text", bands = 2, rowsPerBand = 2, threshold = 0.5,
-            maxBucketSize = 8L),
           "ngramContainmentPairs" -> TextDedup.ngramContainmentPairs(docs,
             "doc_id", "text", blockCol = "source", threshold = 0.5,
             maxDocFreq = 8L))) {
@@ -300,39 +297,31 @@ class PlanContractsSpec extends AnyFunSuite with SparkTestBase {
           s"$name cap side over threshold must not broadcast:\n$plan")
         capped.count() // and the shuffled anti-join actually executes
       }
-      // ngramJaccardPairs runs its cap anti-join INSIDE the eager
-      // localCheckpoint, so the returned frame's plan no longer shows it —
-      // capture the checkpoint execution's plan through a listener instead
-      val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            durationNs: Long): Unit = captured.add(qe.executedPlan.toString)
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            exception: Exception): Unit = ()
+      // ngramJaccardPairs and nearDedupPipeline run their anti-joins inside
+      // checkpoints, so the returned frames' plans end at an RDD scan and
+      // cannot show them — assert on the executed plans instead, keyed by
+      // the anti-join's key so neither assertion can hold vacuously
+      val antiKey = """Join \[(\w+)#\d+L?\], \[\w+#\d+L?\], LeftAnti""".r
+      def antiJoins(name: String, body: => Unit): Map[String, Seq[String]] = {
+        val plans = executionsOf(body)._2.map(_._2.executedPlan.toString)
+        val byKey = plans.flatMap(p => antiKey.findAllMatchIn(p)
+          .map(m => m.group(1) -> p)).groupMap(_._1)(_._2)
+        byKey.values.flatten.foreach(p =>
+          assert(!p.contains("BroadcastExchange"),
+            s"$name: an anti-join over threshold must not broadcast:\n$p"))
+        byKey
       }
-      spark.listenerManager.register(listener)
-      try {
+      val ngram = antiJoins("ngramJaccardPairs",
         TextDedup.ngramJaccardPairs(docs, "doc_id", "text", blockCol = "source",
-          threshold = 0.5, maxDocFreq = 8L).count()
-        // listener delivery is async — poll for the plan containing the
-        // hot-shingle anti-join
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        def antiJoinPlans() = {
-          val it = captured.iterator()
-          var found = List.empty[String]
-          while (it.hasNext) { val p = it.next(); if (p.contains("LeftAnti")) found ::= p }
-          found
-        }
-        var plans = antiJoinPlans()
-        while (plans.isEmpty && System.nanoTime() < deadline) {
-          Thread.sleep(100); plans = antiJoinPlans()
-        }
-        assert(plans.nonEmpty, "expected to observe the checkpointed anti-join execution")
-        plans.foreach(p => assert(!p.contains("BroadcastExchange"),
-          s"hot-shingle set over threshold must not broadcast:\n$p"))
-      } finally spark.listenerManager.unregister(listener)
+          threshold = 0.5, maxDocFreq = 8L).count())
+      assert(ngram.contains("shingle"),
+        s"expected the hot-shingle anti-join to run, saw keys ${ngram.keySet}")
+      // the bucket cap and the final duplicate-id anti-join
+      val near = antiJoins("nearDedupPipeline",
+        TextDedup.nearDedupPipeline(docs, "doc_id", "text", bands = 2,
+          rowsPerBand = 2, threshold = 0.5, maxBucketSize = 8L).count())
+      assert(near.contains("bucket") && near.contains("doc_id"),
+        s"expected the cap and duplicate-id anti-joins to run, saw keys ${near.keySet}")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 

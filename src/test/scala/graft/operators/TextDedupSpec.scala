@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
@@ -164,6 +165,11 @@ class TextDedupSpec extends AnyFunSuite with SparkTestBase {
         spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
       assert(leaked.size <= 1,
         s"reliable dupClusters leaked ${leaked.size} persisted RDDs")
+      // nearDedupPipeline's input and result checkpoints take the knob too
+      def near(reliable: Boolean) = TextDedup.nearDedupPipeline(docs, "doc_id",
+        "text", bands = 2, rowsPerBand = 2, threshold = 0.5, reliable = reliable)
+        .select("doc_id").collect().toSet
+      assert(near(true) == near(false))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(dir)
       org.apache.commons.io.FileUtils.deleteDirectory(ccDir)
@@ -297,25 +303,9 @@ class TextDedupSpec extends AnyFunSuite with SparkTestBase {
   test("nearDedupPipeline equals the hand-wired candidates -> verify -> clusters -> apply chain") {
     graft.functions.GraftFunctions.register(spark)
     val corpus = docs.select("doc_id", "text", "source", "lang")
-    // hand-wired: dd33-style candidates, dd31's scorer on ONLY those pairs,
-    // dd36 clustering, dd38 apply — the sequence the pipeline composes
-    def handWired(cap: Long): Set[Long] = {
-      val cand = TextDedup.minhashLshPairs(corpus, "doc_id", "text",
-        bands = 2, rowsPerBand = 2, maxBucketSize = cap)
-      val sh = corpus.select(col("doc_id"),
-        graft.functions.GraftFunctions.shingles(col("text")).as("sh"))
-      val verified = cand
-        .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-        .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-        .withColumn("common", size(array_intersect(col("sh_a"), col("sh_b"))))
-        .withColumn("u", size(col("sh_a")) + size(col("sh_b")) - col("common"))
-        .filter(col("u") > 0 &&
-          round(col("common").cast("double") / col("u"), 6) >= 0.5)
-        .select("doc_a", "doc_b")
-      val clusters = TextDedup.dupClusters(verified)
-      TextDedup.applyDedup(corpus, "doc_id", clusters)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-    }
+    def handWired(cap: Long): Set[Long] =
+      TextDedupSpec.handWired(corpus, bands = 2, rowsPerBand = 2,
+        threshold = 0.5, maxBucketSize = cap)
     def pipeline(cap: Long): Set[Long] =
       TextDedup.nearDedupPipeline(corpus, "doc_id", "text",
         bands = 2, rowsPerBand = 2, threshold = 0.5, maxBucketSize = cap)
@@ -781,5 +771,31 @@ class TextDedupSpec extends AnyFunSuite with SparkTestBase {
     // exactly docs' columns + (split_key, split)
     val out = TextDedup.clusterSafeSplit(base, "doc_id", clusters, 0.6, 0.2)
     assert(out.columns.toSeq == Seq("doc_id", "text", "split_key", "split"))
+  }
+}
+
+object TextDedupSpec {
+
+  /** Survivor ids of the hand-wired near-dedup chain — dd33-style
+    * candidates, dd31's scorer on ONLY those pairs, dd36 clustering, dd38
+    * apply: the sequence [[TextDedup.nearDedupPipeline]] composes.
+    */
+  def handWired(corpus: DataFrame, bands: Int, rowsPerBand: Int,
+      threshold: Double, maxBucketSize: Long = 0L): Set[Long] = {
+    val cand = TextDedup.minhashLshPairs(corpus, "doc_id", "text",
+      bands = bands, rowsPerBand = rowsPerBand, maxBucketSize = maxBucketSize)
+    val sh = corpus.select(col("doc_id"),
+      graft.functions.GraftFunctions.shingles(col("text")).as("sh"))
+    val verified = cand
+      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
+      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
+      .withColumn("common", size(array_intersect(col("sh_a"), col("sh_b"))))
+      .withColumn("u", size(col("sh_a")) + size(col("sh_b")) - col("common"))
+      .filter(col("u") > 0 &&
+        round(col("common").cast("double") / col("u"), 6) >= threshold)
+      .select("doc_a", "doc_b")
+    val clusters = TextDedup.dupClusters(verified)
+    TextDedup.applyDedup(corpus, "doc_id", clusters)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
   }
 }
