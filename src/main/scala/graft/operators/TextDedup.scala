@@ -503,8 +503,8 @@ object TextDedup {
     * re-key, the jump reply re-key home. Duplicate edges are NOT removed:
     * min is insensitive to them and the map-side combine absorbs them.
     * The loop grain is scale-adaptive: the partition count derives from
-    * the measured edge count (graft.cc.rowsPerPartition, default 2M edges
-    * — ~32 MB packed — per task), capped at spark.sql.shuffle.partitions.
+    * the measured edge count (2M edges, ~32 MB packed, per task), capped
+    * at spark.sql.shuffle.partitions.
     *
     * Fault tolerance: edges and label generations are persisted, so a
     * lost block recomputes from lineage back to `pairs`. When the
@@ -518,7 +518,17 @@ object TextDedup {
     * spark.cleaner.referenceTracking.cleanCheckpoints=true.
     */
   def dupClusters(pairs: DataFrame, maxIter: Int = 20,
-      reliable: Boolean = false): DataFrame = {
+      reliable: Boolean = false): DataFrame =
+    dupClustersAt(pairs, maxIter, reliable, EdgesPerTask)
+
+  /** The cluster loop's grain: 2M edges (~32 MB packed) per task. */
+  private val EdgesPerTask = 2000000L
+
+  /** [[dupClusters]] at an explicit loop grain of `edgesPerTask` edges per
+    * task; a spec reaches a multi-partition loop on a small graph here.
+    */
+  private[operators] def dupClustersAt(pairs: DataFrame, maxIter: Int,
+      reliable: Boolean, edgesPerTask: Long): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     val idTypes = Seq("doc_a", "doc_b").map(pairs.schema(_).dataType)
     require(idTypes.forall(_ == org.apache.spark.sql.types.LongType),
@@ -544,23 +554,21 @@ object TextDedup {
     // pure overhead — measured at sf0.1/32 partitions as ~0.5 s per
     // convergence-check job against ~3k live label rows.
     // The partition count therefore derives from the MEASURED edge count
-    // (graft.cc.rowsPerPartition edges per task, default 2M ≈ 32 MB of
-    // serialized long pairs), capped at the session's shuffle partitions —
-    // a big graph on a real cluster still gets the full configured
-    // parallelism, a small one stops paying 32× floors. The count job
-    // materializes the raw edge RDD (the upstream candidate pipeline runs
-    // exactly once, same as before — it previously ran inside round 1's
-    // first stage), and the partitioned copy replaces it immediately.
+    // (`edgesPerTask` edges per task), capped at the session's shuffle
+    // partitions — a big graph on a real cluster still gets the full
+    // configured parallelism, a small one stops paying 32× floors. The
+    // count job materializes the raw edge RDD (the upstream candidate
+    // pipeline runs exactly once, same as before — it previously ran inside
+    // round 1's first stage), and the partitioned copy replaces it
+    // immediately.
     val raw: RDD[(Long, Long)] = pairs
       .select(col("doc_a"), col("doc_b")).as[(Long, Long)].rdd
       .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
     val edgeCnt = raw.count()
-    val rowsPerPart = spark.conf.getOption("graft.cc.rowsPerPartition")
-      .map(_.toLong).filter(_ >= 1).getOrElse(2000000L)
     val confN = spark.sessionState.conf.numShufflePartitions
     val n = math.max(1L, math.min(confN.toLong,
-      (edgeCnt + rowsPerPart - 1) / rowsPerPart)).toInt
+      (edgeCnt + edgesPerTask - 1) / edgesPerTask)).toInt
     val part = new HashPartitioner(n)
     // PACKED edge storage (r16; guide §1.2 per-task work): every round
     // re-reads the whole edge set, and the r15 form paid ~150 ms/round at

@@ -57,10 +57,7 @@ object X12Queries extends QuerySet {
           }
           X12TestDataGen.writeCorpus(corpusDir, 45, seed = 42L)
           val bronze = X12Bronze.ingest(s, corpusDir, "BATCH_Q", date).cache()
-          import s.implicits._
-          val valid = bronze.filter(col("file_is_valid"))
-            .select("file_name", "content").as[(String, String)]
-          val silver = X12Silver.parse(valid, "BATCH_Q", date, ts).cache()
+          val silver = X12Silver.parseValid(bronze, "BATCH_Q", date, ts).cache()
           // persist the oracle tables (small corpus → single file each)
           bronze.drop("content").coalesce(1)
             .write.mode("overwrite").parquet(s"$tablesDir/bronze")
@@ -152,8 +149,7 @@ object X12Queries extends QuerySet {
     */
   def x12FileEligibility(s: SparkSession, dir: String): DataFrame = {
     X12TestDataGen.writeCorpus(corpusDir, 45, seed = 42L)
-    s.read.format("text").option("wholetext", "true")
-      .option("pathGlobFilter", "*.x12").load(corpusDir)
+    s.read.format("text").options(X12Silver.landingOptions).load(corpusDir)
       .select(col("_metadata.file_name").as("file_name"),
         col("_metadata.file_size").as("file_size"),
         col("_metadata.file_modification_time").as("mtime"))

@@ -28,15 +28,10 @@ object X12Streaming {
       processingDate: java.sql.Date,
       processingTs: java.sql.Timestamp,
       maxFilesPerTrigger: Int = 100): Dataset[SilverRecord] = {
-    import spark.implicits._
-    val files = spark.readStream
-      .format("text")
-      .option("wholetext", "true")
-      .option("pathGlobFilter", "*.x12")
+    val files = X12Silver.fileRows(spark.readStream.format("text")
+      .options(X12Silver.landingOptions)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .load(landingDir)
-      .select(col("_metadata.file_name").as("file_name"), col("value"))
-      .as[(String, String)]
+      .load(landingDir))
     X12Silver.parse(files, batchId, processingDate, processingTs)
   }
 

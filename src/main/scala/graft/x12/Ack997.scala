@@ -72,41 +72,21 @@ object Ack997 {
     (Seq(isa, gs, st, ak1) ++ akPairs ++ Seq(ak9, se, ge, iea)).mkString("\n")
   }
 
-  /** All-A content generator UDF (reference parity). */
-  private def genAllA(now: LocalDateTime) =
-    udf { (sender: String, receiver: String, gcn: String, tcns: Seq[String]) =>
-      generate997(sender.trim, receiver.trim, Option(gcn).getOrElse(""),
-        tcns, "A", now)
-    }
-
-  /** Quality-driven per-set content generator UDF. */
-  private def genPerSet(now: LocalDateTime) =
+  /** The content generator UDF: one 997 per envelope group from its
+    * (control number, is_valid) sets. In parity mode every set is coded `A`,
+    * so the group code is `A` and AK904 = n: byte-for-byte [[generate997]]
+    * with code `A`.
+    */
+  private def gen997(now: LocalDateTime, qualityDriven: Boolean) =
     udf { (sender: String, receiver: String, gcn: String,
         sets: Seq[org.apache.spark.sql.Row]) =>
       val perSet = sets.map(r =>
-        (r.getString(0), if (r.getBoolean(1)) "A" else "E"))
+        (r.getString(0), if (!qualityDriven || r.getBoolean(1)) "A" else "E"))
       val accepted = perSet.count(_._2 == "A")
       val groupCode = if (accepted == perSet.length) "A" else "E"
       generate997PerSet(sender.trim, receiver.trim,
         Option(gcn).getOrElse(""), perSet, groupCode, accepted, now)
     }
-
-  /** Shared tail: content from the grouped envelope frame. `gcn` is the
-    * functional-group control number column the 997 AK1 references.
-    */
-  private def buildContent(base: DataFrame, gcn: org.apache.spark.sql.Column,
-      now: LocalDateTime, qualityDrivenAckCode: Boolean): DataFrame =
-    if (qualityDrivenAckCode)
-      base
-        .withColumn("ack_code",
-          when(exists(col("tx_sets"), x => !x.getField("is_valid")), lit("E"))
-            .otherwise(lit("A")))
-        .withColumn("acknowledgment_content",
-          genPerSet(now)(col("sender_id"), col("receiver_id"), gcn, col("tx_sets")))
-    else
-      base.withColumn("acknowledgment_content",
-        genAllA(now)(col("sender_id"), col("receiver_id"), gcn,
-          col("transaction_numbers")))
 
   /** A5 + P19: per-partner envelope aggregation then 997 generation
     * (generate_x12_acknowledgments.py:155-186). Control-number lists are
@@ -118,15 +98,14 @@ object Ack997 {
     * `qualityDrivenAckCode=true` implements that declaration at the correct
     * grain: each AK5 carries ITS transaction set's code (A for valid, E for
     * invalid), the group-level AK9 is E when any set failed, and AK904
-    * reports the true accepted count. With the default false, output is
-    * schema- and byte-identical to reference parity (all-A, AK904 = n).
+    * reports the true accepted count; an `ack_code` column carries the
+    * group code. With the default false, output is schema- and
+    * byte-identical to reference parity (all-A, AK904 = n).
     *
     * State bound: the per-partner collect_list grows with a partner's batch
     * volume. Reference semantics are batch-bounded (100 files/batch,
-    * generate_x12_acknowledgments.py's batch loop), so parity grain is safe
-    * at parity scale; for unbounded batches use [[acknowledgmentsPerGroup]],
-    * which bounds state structurally at the (partner, functional group)
-    * grain.
+    * generate_x12_acknowledgments.py's batch loop), so the partner grain is
+    * safe at that scale.
     */
   def acknowledgments(silver: DataFrame, batchId: String, now: LocalDateTime,
       qualityDrivenAckCode: Boolean = false): DataFrame = {
@@ -143,45 +122,19 @@ object Ack997 {
         sort_array(collect_list("file_name")).as("processed_files"))
       .withColumn("transaction_numbers",
         transform(col("tx_sets"), x => x.getField("tcn")))
-    buildContent(base, element_at(col("group_numbers"), 1), now, qualityDrivenAckCode)
+    val coded =
+      if (qualityDrivenAckCode)
+        base.withColumn("ack_code",
+          when(exists(col("tx_sets"), x => !x.getField("is_valid")), lit("E"))
+            .otherwise(lit("A")))
+      else base
+    coded
+      .withColumn("acknowledgment_content",
+        gen997(now, qualityDrivenAckCode)(col("sender_id"), col("receiver_id"),
+          element_at(col("group_numbers"), 1), col("tx_sets")))
       .drop("tx_sets")
       .withColumn("ack_filename",
         concat(trim(col("sender_id")), lit("_997_"), lit(batchId), lit(".x12")))
-      .withColumn("generation_timestamp", BuildTime())
-  }
-
-  /** 997 generation at the (partner, functional group) grain — one ack per
-    * functional group, which is both closer to X12 practice (a 997 responds
-    * to ONE functional group: its AK1 names that group's control number
-    * directly, never "the first group we happened to see") and structurally
-    * state-bounded: the collect_list never exceeds one group's transaction
-    * sets regardless of a partner's batch volume, so a hot partner cannot
-    * OOM the aggregation task. Filenames carry the group control number so
-    * one partner's acks land as distinct files.
-    */
-  def acknowledgmentsPerGroup(silver: DataFrame, batchId: String,
-      now: LocalDateTime, qualityDrivenAckCode: Boolean = false): DataFrame = {
-    val base = silver
-      .groupBy("sender_id", "receiver_id", "functional_group_number")
-      .agg(
-        sort_array(collect_list("interchange_control_number")).as("interchange_numbers"),
-        sort_array(collect_list(struct(
-          col("transaction_set_control_number").as("tcn"),
-          col("is_valid")))).as("tx_sets"),
-        count(lit(1)).as("file_count"),
-        max("processing_timestamp").as("last_processed"),
-        sort_array(collect_list("file_name")).as("processed_files"))
-      .withColumn("transaction_numbers",
-        transform(col("tx_sets"), x => x.getField("tcn")))
-    buildContent(base, col("functional_group_number"), now, qualityDrivenAckCode)
-      .drop("tx_sets")
-      // filename carries BOTH partners: group control numbers are
-      // per-partner-PAIR counters in X12, so the same sender may reuse a
-      // number toward two receivers in one batch
-      .withColumn("ack_filename",
-        concat(trim(col("sender_id")), lit("_"), trim(col("receiver_id")),
-          lit("_997_"), lit(batchId), lit("_"),
-          coalesce(col("functional_group_number"), lit("NOGROUP")), lit(".x12")))
       .withColumn("generation_timestamp", BuildTime())
   }
 

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: each mart is its own plan over the silver frame it is
   * given. In a written run that frame is a scan of the written silver
-  * store, so each of the 12 [[marts]] scans the store once (only the
-  * touched date's partitions, for a per-date mart in incremental mode);
+  * store, so each of the 12 [[marts]] scans the store once (a per-date
+  * mart scans only the touched date's partitions);
   * no mart re-counts silver on the driver the way the reference does
   * (§3.1 of SURVEY.md). Every groupBy here is a partial-agg-then-shuffle
   * on low-cardinality keys.
@@ -411,12 +411,12 @@ object X12Gold {
     * silver rows and the processing date, and how a run keeps it current.
     * `partitioned`: written partitioned by `processing_date` (the KPIs'
     * single global row is not). `perDate`: every row is a function of one
-    * processing_date's rows, so an incremental run rebuilds it from the
-    * touched date alone and replaces only that partition. A whole-store
-    * mart must read the whole store: the KPIs are one row over all history,
-    * and a request/response pair joins a request to a response that may
-    * land in a LATER batch (the response side drops its date), so a rebuild
-    * from the response's date would never revisit the request's partition.
+    * processing_date's rows, so a run rebuilds it from the touched date
+    * alone and replaces only that partition. A whole-store mart must read
+    * the whole store: the KPIs are one row over all history, and a
+    * request/response pair joins a request to a response that may land in
+    * a LATER batch (the response side drops its date), so a rebuild from
+    * the response's date would never revisit the request's partition.
     */
   final case class Mart(name: String, partitioned: Boolean, perDate: Boolean,
       build: (DataFrame, java.sql.Date) => DataFrame)

@@ -14,7 +14,9 @@ import graft.Jobs
   *  - silver is parsed once and cached; each of the 12 catalogue marts
   *    ([[X12Gold.marts]]) is built once over a scan of the written silver
   *    store, plus the batch-scoped daily analytics; the reference re-reads
-  *    and re-`count()`s the silver table per mart (SURVEY.md §3.1 step 4);
+  *    and re-`count()`s the silver table per mart (SURVEY.md §3.1 step 4)
+  *    and rebuilds every mart each DAG run (gold_x12_analytics.py:812-822);
+  *    a per-date mart here rebuilds only this run's `processing_date`;
   *  - only files bronze marked valid reach the parser;
   *  - acknowledgments never collect() to the driver;
   *  - a processed-file ledger replaces the reference's archive-move
@@ -44,6 +46,10 @@ import graft.Jobs
   */
 object X12Pipeline {
 
+  /** What a run built. `marts` holds each gold mart's frame under its table
+    * name; a per-date mart's frame (`X12Gold.Mart.perDate`) holds this
+    * run's `processing_date` only, which is all the run rewrote of it.
+    */
   final case class Result(
       bronze: DataFrame,
       silver: Dataset[SilverRecord],
@@ -73,6 +79,10 @@ object X12Pipeline {
       }
   }
 
+  /** One medallion batch over the landing files not yet in `outDir`'s
+    * ledger. `incrementalGold` is ignored (gold has one maintenance mode);
+    * medbench's medallion run passes it by name.
+    */
   def run(
       spark: SparkSession,
       landingDir: String,
@@ -84,8 +94,6 @@ object X12Pipeline {
       write: Boolean = true,
       qualityDrivenAckCode: Boolean = false,
       incrementalGold: Boolean = false): Result = {
-    import spark.implicits._
-
     // Bronze: validate + metadata; landing write partitioned by y/m/d.
     // Already-ledgered files are dropped up front (anti-join on the
     // file-name ledger), so a re-run is incremental, not a dup.
@@ -120,10 +128,8 @@ object X12Pipeline {
         .write.mode("overwrite").json(s"$outDir/bronze_quarantine")
     }
 
-    // Silver: parse only bronze-valid files (F-gate before the flatMap)
-    val validFiles = bronze.filter(col("file_is_valid"))
-      .select(col("file_name"), col("content")).as[(String, String)]
-    val silver = X12Silver.parse(validFiles, batchId, processingDate, processingTs)
+    // Silver: parse only bronze-valid files
+    val silver = X12Silver.parseValid(bronze, batchId, processingDate, processingTs)
     silver.cache()
     if (doWrite) {
       X12Silver.write(silver, s"$outDir/silver")
@@ -131,12 +137,11 @@ object X12Pipeline {
     }
 
     // Gold: valid transactions only (gold_x12_analytics.py:74), read from
-    // the accumulated silver store, not just this run's slice — the
-    // reference reads the whole silver table per DAG run, and the
-    // overwrite-mode mart sinks would otherwise replace history with the
-    // latest batch's numbers. In incremental mode a per-date mart reads
-    // only the touched date and replaces only that partition (A9's group
-    // recompute: O(day), not O(history)). Batch-scoped outputs (summaries,
+    // the accumulated silver store. A per-date mart reads only the touched
+    // date and replaces only that partition (A9's group recompute: O(day),
+    // not O(history)): silver is append-only, so the other dates'
+    // partitions already hold what a full recompute would write. The other
+    // marts read the whole store. Batch-scoped outputs (summaries,
     // quarantine, 997 acks, daily analytics over this batch's bronze) stay
     // per-run by design.
     // the read-back can fail on a store with no parquet footers yet (this
@@ -149,26 +154,24 @@ object X12Pipeline {
       else silver.toDF()
     val silverValid = silverStore.filter(col("is_valid"))
     val touched = silverValid.filter(col("processing_date") === lit(processingDate))
-    val silverMarts = X12Gold.marts.map { m =>
-      val sliced = incrementalGold && m.perDate
-      (m, sliced, m.build(if (sliced) touched else silverValid, processingDate))
-    }
+    val silverMarts = X12Gold.marts.map(m =>
+      m -> m.build(if (m.perDate) touched else silverValid, processingDate))
     val daily = X12Gold.dailyAnalytics(bronze, silver.toDF(), processingDate)
     if (doWrite) {
       // the 13 gold writes overlap (see the object's scaladoc); the
       // launcher returns once every write has ended, failed or not
-      val martWrites = silverMarts.map { case (m, sliced, df) => () =>
+      val martWrites = silverMarts.map { case (m, df) => () =>
         // a per-write option, not the session conf, so the concurrent
         // writes on this session keep their own overwrite mode
         val w = df.write.mode("overwrite")
-          .option("partitionOverwriteMode", if (sliced) "dynamic" else "static")
+          .option("partitionOverwriteMode", if (m.perDate) "dynamic" else "static")
         (if (m.partitioned) w.partitionBy("processing_date") else w)
           .parquet(s"$outDir/${m.name}")
       }
       Jobs.inParallel(spark)(martWrites :+ (() =>
         daily.write.mode("overwrite").parquet(s"$outDir/gold_daily_analytics")): _*)
     }
-    val marts = silverMarts.map { case (m, _, df) => m.name -> df }.toMap +
+    val marts = silverMarts.map { case (m, df) => m.name -> df }.toMap +
       ("gold_daily_analytics" -> daily)
 
     // 997 acknowledgments per trading partner

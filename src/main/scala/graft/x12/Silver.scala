@@ -16,20 +16,41 @@ import org.apache.spark.sql.functions._
   */
 object X12Silver {
 
+  /** The landing scan's text-source options, batch and streaming alike:
+    * `wholetext` keeps one row per file, and the glob admits `.x12` files
+    * only.
+    */
+  val landingOptions: Map[String, String] =
+    Map("wholetext" -> "true", "pathGlobFilter" -> "*.x12")
+
   /** S1+S2: landing-dir scan with extension filter and whole-file rows
     * (reference lists+filters then head-reads per file,
-    * bronze_x12_ingestion.py:209-236). `wholetext` keeps one row per file;
-    * the hidden `_metadata` column supplies the file name without a
-    * non-deterministic `input_file_name()`.
+    * bronze_x12_ingestion.py:209-236). The hidden `_metadata` column
+    * supplies the file name without a non-deterministic
+    * `input_file_name()`.
     */
-  def readFiles(spark: SparkSession, dir: String): Dataset[(String, String)] = {
-    import spark.implicits._
-    spark.read.format("text")
-      .option("wholetext", "true")
-      .option("pathGlobFilter", "*.x12")
-      .load(dir)
-      .select(col("_metadata.file_name").as("file_name"), col("value"))
+  def readFiles(spark: SparkSession, dir: String): Dataset[(String, String)] =
+    fileRows(spark.read.format("text").options(landingOptions).load(dir))
+
+  /** (file name, content) rows of a landing scan, batch or streaming. */
+  def fileRows(scan: DataFrame): Dataset[(String, String)] = {
+    import scan.sparkSession.implicits._
+    scan.select(col("_metadata.file_name").as("file_name"), col("value"))
       .as[(String, String)]
+  }
+
+  /** The parse gate: only the files bronze marked valid reach the parser
+    * (the F-gate before the flatMap).
+    */
+  def parseValid(
+      bronze: DataFrame,
+      batchId: String,
+      processingDate: java.sql.Date,
+      processingTs: java.sql.Timestamp): Dataset[SilverRecord] = {
+    import bronze.sparkSession.implicits._
+    parse(bronze.filter(col("file_is_valid"))
+      .select(col("file_name"), col("content")).as[(String, String)],
+      batchId, processingDate, processingTs)
   }
 
   /** Parse files → one typed row per transaction set

@@ -542,19 +542,11 @@ class CurationSpec extends AnyFunSuite with SparkTestBase with TempDirs {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L,
       20L -> 20L, 21L -> 20L), got)
-    // and an explicit grain override is honored end-to-end
-    val prev = spark.conf.getOption("graft.cc.rowsPerPartition")
-    try {
-      spark.conf.set("graft.cc.rowsPerPartition", "2")
-      val again = TextDedup.dupClusters(pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(again == got, "partition grain must not change the fixed point")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("graft.cc.rowsPerPartition", v)
-        case None => spark.conf.unset("graft.cc.rowsPerPartition")
-      }
-    }
+    // and a 2-edge grain runs the loop over several partitions
+    val again = TextDedup.dupClustersAt(pairs, 20, reliable = false,
+      edgesPerTask = 2).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(again == got, "partition grain must not change the fixed point")
     graft.BenchHarness.unpersistLeaked(spark, Set.empty)
   }
 

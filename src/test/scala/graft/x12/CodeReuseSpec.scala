@@ -28,7 +28,7 @@ class CodeReuseSpec extends AnyFunSuite with SparkTestBase with TempDirs {
       X12Gold.allMarts(silver.filter(col("is_valid")), date).toSeq
         .sortBy(_._1).map(_._2) ++
         Seq(Ack997.acknowledgments(silver, "B1", now),
-          Ack997.acknowledgmentsPerGroup(silver, "B1", now))
+          Ack997.acknowledgments(silver, "B1", now, qualityDrivenAckCode = true))
     // the code of each executed plan, without the comments that name
     // expression ids
     def code(frames: Seq[DataFrame]): Seq[String] = frames.flatMap { df =>

@@ -296,34 +296,6 @@ class X12PipelineSpec extends AnyFunSuite with SparkTestBase with TempDirs {
       sm.getAs[Long]("transactions_processed"))
   }
 
-  test("per-functional-group 997 grain bounds state and preserves coverage") {
-    val now = LocalDateTime.of(2025, 9, 1, 12, 0, 0)
-    val perPartner = result.acks
-    val perGroup = Ack997.validate997(
-      Ack997.acknowledgmentsPerGroup(result.silver.toDF(), "BATCH_T1", now)).cache()
-    // grain: exactly one ack per distinct (sender, receiver, group)
-    val expected = result.silver.toDF()
-      .select("sender_id", "receiver_id", "functional_group_number")
-      .distinct().count()
-    assert(perGroup.count() == expected)
-    assert(perGroup.count() >= perPartner.count())
-    // same total transaction coverage as the per-partner grain
-    val covered = perGroup.agg(sum(size(col("transaction_numbers")))).head.getLong(0)
-    assert(covered == result.silver.count())
-    // state bound: no group list exceeds the largest per-partner list
-    val maxPartner = perPartner.agg(max(size(col("transaction_numbers")))).head.getInt(0)
-    val maxGroup = perGroup.agg(max(size(col("transaction_numbers")))).head.getInt(0)
-    assert(maxGroup <= maxPartner)
-    // every ack structurally valid, AK1 names its OWN group control number
-    assert(perGroup.filter(!col("ack_is_valid")).count() == 0)
-    val ak1Mismatch = perGroup.filter(
-      !col("acknowledgment_content").contains(
-        concat(lit("*"), col("functional_group_number"), lit("~"))))
-    assert(ak1Mismatch.count() == 0)
-    // filenames are unique (group control number suffix)
-    assert(perGroup.select("ack_filename").distinct().count() == perGroup.count())
-  }
-
   // keep last in the suite: the re-runs below mutate outDir artifacts that
   // the earlier tests read
 
@@ -357,6 +329,18 @@ class X12PipelineSpec extends AnyFunSuite with SparkTestBase with TempDirs {
     assert(ackFiles == before, "re-run must not re-emit 997 files")
   }
 
+  /** A mart frame for content comparison: `created_at` (a run-time stamp by
+    * design, not part of the contract) dropped and doubles rounded, since
+    * two silver stores in different append orders can sum floats to
+    * different ulps.
+    */
+  private def canon(df: org.apache.spark.sql.DataFrame) =
+    df.select(df.schema.fields.filter(_.name != "created_at")
+      .map(f => f.dataType match {
+        case org.apache.spark.sql.types.DoubleType => round(col(f.name), 6).as(f.name)
+        case _ => col(f.name)
+      }).toSeq: _*)
+
   test("incremental gold: partition-scoped recompute equals the full recompute") {
     val corpus2 = tempDir("x12corpus_inc").toString
     val outInc = tempDir("x12out_inc").toString
@@ -365,28 +349,17 @@ class X12PipelineSpec extends AnyFunSuite with SparkTestBase with TempDirs {
     val d = Date.valueOf("2025-09-05")
     val ts = Timestamp.valueOf("2025-09-05 12:00:00")
     val now = LocalDateTime.of(2025, 9, 5, 12, 0, 0)
-    X12Pipeline.run(spark, corpus2, outInc, "INC1", d, ts, now,
-      incrementalGold = true)
-    // a late file lands; the second incremental run processes only it and
-    // rewrites only the touched processing_date partition of each mart
+    X12Pipeline.run(spark, corpus2, outInc, "INC1", d, ts, now)
+    // a late file lands; the second run processes only it and rewrites
+    // only the touched processing_date partition of each per-date mart
     Files.copy(Paths.get(corpus2, "test_x12_837_000.x12"),
       Paths.get(corpus2, "late_inc.x12"))
-    val run2 = X12Pipeline.run(spark, corpus2, outInc, "INC2", d, ts, now,
-      incrementalGold = true)
+    val run2 = X12Pipeline.run(spark, corpus2, outInc, "INC2", d, ts, now)
     assert(run2.bronze.count() == 1)
-    // reference: one combined run over the full corpus
+    // reference: one combined run over the full corpus on a fresh store,
+    // where the one touched date is the whole store — a full recompute
     val full = X12Pipeline.run(spark, corpus2, outFull, "FULL", d, ts, now)
     // every mart on disk must be content-identical to the combined run's
-    // (doubles canonicalized: append order differs between the two silver
-    // stores, so float sums can differ in ulps)
-    def canon(df0: org.apache.spark.sql.DataFrame) = {
-      // created_at is a run-time stamp by design — not part of the contract
-      val df = if (df0.columns.contains("created_at")) df0.drop("created_at") else df0
-      df.select(df.schema.fields.map(f => f.dataType match {
-        case org.apache.spark.sql.types.DoubleType => round(col(f.name), 6).as(f.name)
-        case _ => col(f.name)
-      }).toSeq: _*)
-    }
     // daily analytics is batch-scoped by design (this batch's bronze)
     full.marts.keys.filterNot(_ == "gold_daily_analytics").foreach { mart =>
       val a = canon(spark.read.parquet(s"$outInc/$mart"))
@@ -399,57 +372,50 @@ class X12PipelineSpec extends AnyFunSuite with SparkTestBase with TempDirs {
 
   test("incremental gold: cross-date request/response pairs survive") {
     // the correlation mart joins a request to a response that may arrive in
-    // a LATER batch — it must recompute over the full store even in
-    // incremental mode (a date-scoped recompute would lose the pair forever)
-    def twoDateSequence(incremental: Boolean): String = {
-      val corpus = tempDir("x12corpus_cd").toString
-      val out = tempDir("x12out_cd").toString
-      X12TestDataGen.writeCorpus(corpus, 9, seed = 13L)
-      // hold back every correlated RESPONSE file until day 2
-      val hold = tempDir("x12hold_cd")
-      import scala.jdk.CollectionConverters._
-      val responses = {
-        val s = Files.list(Paths.get(corpus))
-        try s.iterator().asScala.filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith("test_x12_277_pair") || n.startsWith("test_x12_271_pair")
-        }.toList finally s.close()
-      }
-      assert(responses.nonEmpty)
-      responses.foreach(p => Files.move(p, hold.resolve(p.getFileName)))
-      X12Pipeline.run(spark, corpus, out, "CD1",
-        Date.valueOf("2025-09-06"), Timestamp.valueOf("2025-09-06 12:00:00"),
-        LocalDateTime.of(2025, 9, 6, 12, 0, 0), incrementalGold = incremental)
-      responses.foreach(p =>
-        Files.move(hold.resolve(p.getFileName), Paths.get(corpus, p.getFileName.toString)))
-      X12Pipeline.run(spark, corpus, out, "CD2",
-        Date.valueOf("2025-09-07"), Timestamp.valueOf("2025-09-07 12:00:00"),
-        LocalDateTime.of(2025, 9, 7, 12, 0, 0), incrementalGold = incremental)
-      out
+    // a LATER batch — it must recompute over the full store (a date-scoped
+    // recompute would lose the pair forever)
+    val corpus = tempDir("x12corpus_cd").toString
+    val out = tempDir("x12out_cd").toString
+    X12TestDataGen.writeCorpus(corpus, 9, seed = 13L)
+    // hold back every correlated RESPONSE file until day 2
+    val hold = tempDir("x12hold_cd")
+    import scala.jdk.CollectionConverters._
+    val responses = {
+      val s = Files.list(Paths.get(corpus))
+      try s.iterator().asScala.filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith("test_x12_277_pair") || n.startsWith("test_x12_271_pair")
+      }.toList finally s.close()
     }
-    val inc = twoDateSequence(incremental = true)
-    val ref = twoDateSequence(incremental = false)
-    val incPairs = spark.read.parquet(s"$inc/gold_request_response_pairs")
-      .drop("created_at")
-    val refPairs = spark.read.parquet(s"$ref/gold_request_response_pairs")
-      .drop("created_at")
+    assert(responses.nonEmpty)
+    responses.foreach(p => Files.move(p, hold.resolve(p.getFileName)))
+    X12Pipeline.run(spark, corpus, out, "CD1",
+      Date.valueOf("2025-09-06"), Timestamp.valueOf("2025-09-06 12:00:00"),
+      LocalDateTime.of(2025, 9, 6, 12, 0, 0))
+    responses.foreach(p =>
+      Files.move(hold.resolve(p.getFileName), Paths.get(corpus, p.getFileName.toString)))
+    val day2 = Date.valueOf("2025-09-07")
+    X12Pipeline.run(spark, corpus, out, "CD2",
+      day2, Timestamp.valueOf("2025-09-07 12:00:00"),
+      LocalDateTime.of(2025, 9, 7, 12, 0, 0))
+    // reference: every catalogue mart recomputed over the whole written
+    // silver store
+    val store = spark.read.parquet(s"$out/silver").filter(col("is_valid"))
+    X12Gold.marts.foreach { m =>
+      val onDisk = canon(spark.read.parquet(s"$out/${m.name}"))
+      val ref = canon(m.build(store, day2)).select(onDisk.columns.map(col).toSeq: _*)
+      assert(onDisk.count() == ref.count(), s"${m.name} row count")
+      assert(onDisk.exceptAll(ref).isEmpty && ref.exceptAll(onDisk).isEmpty,
+        s"${m.name} on disk diverges from the full-store recompute")
+    }
     // the correlated pairs really cross the two processing dates
-    assert(incPairs.filter(col("corr_ref").startsWith("CORR")).count() >= 6,
-      "cross-date CORR pairs must survive incremental maintenance")
-    assert(incPairs.count() == refPairs.count())
-    assert(incPairs.exceptAll(refPairs).isEmpty &&
-      refPairs.exceptAll(incPairs).isEmpty,
-      "incremental pair mart must equal the full-recompute baseline")
-    // a per-date mart: day 2's incremental write replaces only its own
-    // partition, so day 1's rows must still be there next to it
-    val incSummary = spark.read.parquet(s"$inc/gold_transaction_summary")
-      .drop("created_at")
-    val refSummary = spark.read.parquet(s"$ref/gold_transaction_summary")
-      .drop("created_at")
-    assert(incSummary.select("processing_date").distinct().count() == 2)
-    assert(incSummary.exceptAll(refSummary).isEmpty &&
-      refSummary.exceptAll(incSummary).isEmpty,
-      "incremental summary mart must keep day 1's partition")
+    val pairs = spark.read.parquet(s"$out/gold_request_response_pairs")
+    assert(pairs.filter(col("corr_ref").startsWith("CORR")).count() >= 6,
+      "cross-date CORR pairs must survive")
+    // a per-date mart: day 2's write replaces only its own partition, so
+    // day 1's rows must still be there next to it
+    assert(spark.read.parquet(s"$out/gold_transaction_summary")
+      .select("processing_date").distinct().count() == 2)
   }
 
   test("mart catalogue: per-date marts read only the touched date, " +
@@ -459,13 +425,13 @@ class X12PipelineSpec extends AnyFunSuite with SparkTestBase with TempDirs {
     X12TestDataGen.writeCorpus(corpus, 9, seed = 13L)
     X12Pipeline.run(spark, corpus, out, "CAT1",
       Date.valueOf("2025-09-08"), Timestamp.valueOf("2025-09-08 12:00:00"),
-      LocalDateTime.of(2025, 9, 8, 12, 0, 0), incrementalGold = true)
+      LocalDateTime.of(2025, 9, 8, 12, 0, 0))
     // a late file lands: the second run meets a store holding day 1
     Files.copy(Paths.get(corpus, "test_x12_837_000.x12"),
       Paths.get(corpus, "late_cat.x12"))
     val run2 = X12Pipeline.run(spark, corpus, out, "CAT2",
       Date.valueOf("2025-09-09"), Timestamp.valueOf("2025-09-09 12:00:00"),
-      LocalDateTime.of(2025, 9, 9, 12, 0, 0), incrementalGold = true)
+      LocalDateTime.of(2025, 9, 9, 12, 0, 0))
     val names = X12Gold.marts.map(_.name)
     assert(names.size == 12 && names.distinct == names)
     assert(run2.marts.keySet == names.toSet + "gold_daily_analytics")
@@ -506,12 +472,20 @@ class X12PipelineSpec extends AnyFunSuite with SparkTestBase with TempDirs {
     assert(X12Pipeline.processedFiles(spark, out).count() == 0,
       "a run whose mart write failed must ledger nothing")
     // every other gold write had ended when run threw: committed, with no
-    // task output still staged
+    // task output still staged. A static write marks its commit with
+    // _SUCCESS; a per-date mart's dynamic write commits by moving its
+    // partition out of a `.spark-staging-<job>` dir, which it then deletes
     val others = X12Gold.marts.map(_.name).filterNot(_ == "gold_business_kpis") :+
       "gold_daily_analytics"
+    val perDate = X12Gold.marts.filter(_.perDate).map(_.name).toSet
     others.foreach { m =>
-      assert(Files.exists(Paths.get(out, m, "_SUCCESS")), s"$m was not committed")
-      assert(!Files.exists(Paths.get(out, m, "_temporary")), s"$m still staging")
+      val entries = Option(new java.io.File(s"$out/$m").list()).toSeq.flatten
+      val committed =
+        if (perDate(m)) entries.contains("processing_date=2025-09-10")
+        else entries.contains("_SUCCESS")
+      assert(committed, s"$m was not committed: $entries")
+      assert(!entries.exists(e => e == "_temporary" || e.startsWith(".spark-staging")),
+        s"$m still staging: $entries")
     }
     assert(Files.isSymbolicLink(obstacle))
     // the obstacle goes: the re-run processes the whole batch and ledgers it
