@@ -16,6 +16,13 @@ import graft.functions.GraftFunctions
   * `GraftFunctions.register(spark)` once per session (every public method
   * here assumes it; the query layer does it via `withDot`).
   *
+  * Top-k contract (every search here, one helper — `topK`): per query,
+  * candidates rank by score — cosine descending, or PQ asymmetric distance
+  * ascending — with ties broken by candidate id ascending; rank is 1..k,
+  * the candidate id is emitted as `neighbor_id`, and a cosine score is
+  * emitted as `cos` rounded to 4 places (`adc` is emitted raw). The
+  * sim* oracles hash against exactly this ordering.
+  *
   * Scale contracts:
   *  - brute-force top-k broadcasts the query set and runs one scan with a
   *    per-group heap (row_number window) — embarrassingly parallel;
@@ -27,8 +34,33 @@ object Ann {
 
   private def dot(a: Column, b: Column): Column = GraftFunctions.dot(a, b)
 
-  private def withNorm(emb: DataFrame, embCol: String): DataFrame =
-    emb.withColumn("norm", sqrt(dot(col(embCol), col(embCol))))
+  /** (vec_id, emb, norm) over a caller's id and embedding columns. */
+  private def normed(emb: DataFrame, idCol: String, embCol: String): DataFrame =
+    emb.select(col(idCol).as("vec_id"), col(embCol).as("emb"))
+      .withColumn("norm", sqrt(dot(col("emb"), col("emb"))))
+
+  /** Cosine of a candidate (emb, norm) against its query (q_emb, q_norm). */
+  private def candCos: Column =
+    dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm"))
+
+  /** The per-query top-k every search ends in (contract in the header).
+    * `cands` holds one row per (query_id, vec_id) candidate; `score` is
+    * its cosine, or its PQ distance when `adc`. With `cell` the
+    * candidate's centroid_id is kept as `cell`.
+    */
+  private def topK(cands: DataFrame, score: Column, adc: Boolean, k: Int,
+      cell: Boolean): DataFrame = {
+    val s = col("__score")
+    val w = Window.partitionBy("query_id")
+      .orderBy(if (adc) s.asc else s.desc, col("vec_id").asc)
+    val out = Seq(col("query_id"), col("rank"), col("vec_id").as("neighbor_id")) ++
+      (if (cell) Seq(col("centroid_id").as("cell")) else Nil) :+
+      (if (adc) s.as("adc") else round(s, 4).as("cos"))
+    cands.withColumn("__score", score)
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(out: _*)
+  }
 
   /** Default ceiling on a forced-broadcast query set (rows). 100k rows of
     * 64-dim doubles is a ~60-80 MB broadcast — already generous for a
@@ -63,59 +95,44 @@ object Ann {
   }
 
   /** Brute-force cosine top-k of `k` neighbors for each row matching
-    * `queryPred`, deterministic tiebreak on id. `maxQueryRows` bounds the
-    * forced query-set broadcast (fail-loud contract, not a sampling knob).
+    * `queryPred`. `maxQueryRows` bounds the forced query-set broadcast
+    * (fail-loud contract, not a sampling knob).
     */
   def cosineTopK(emb: DataFrame, idCol: String, embCol: String,
       queryPred: Column, k: Int,
       maxQueryRows: Long = DefaultMaxQueryRows): DataFrame = {
-    val e = withNorm(emb.select(col(idCol).as("vec_id"), col(embCol).as("emb")), "emb")
+    val e = normed(emb, idCol, embCol)
     val q = e.filter(queryPred)
       .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
         col("norm").as("q_norm"))
     requireSmallQuerySet(q, "cosineTopK", maxQueryRows)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_full").desc, col("vec_id").asc)
-    e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos_full",
-        dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        round(col("cos_full"), 4).as("cos"))
+    topK(e.join(broadcast(q), col("vec_id") =!= col("query_id")), candCos,
+      adc = false, k, cell = false)
   }
 
-  /** md5-seeded ±1 hyperplane sign vectors (reproducible in SQL engines):
-    * plane j's i-th component is +1 iff the first hex digit of
-    * md5("j-i") < '8'. Precomputed once — inlining the digests into the row
-    * expression costs planes×dim md5 calls per row.
+  /** md5-seeded ±1 sign matrix (reproducible in SQL engines): row j's
+    * i-th component is +1 iff the first hex digit of md5(salt + "j-i")
+    * < '8'. Precomputed once — inlining the digests into the row
+    * expression costs rows×dim md5 calls per row.
     */
-  def hyperplaneSigns(planes: Int, dim: Int): IndexedSeq[IndexedSeq[Double]] = {
+  private def md5Signs(salt: String, rows: Int,
+      dim: Int): IndexedSeq[IndexedSeq[Double]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    (0 until planes).map { j =>
-      (1 to dim).map { i =>
-        val hex = md.digest(s"$j-$i".getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        if (hex.charAt(0) < '8') 1.0 else -1.0
-      }
-    }
+    (0 until rows).map(j => (1 to dim).map { i =>
+      val h = md.digest(s"$salt$j-$i".getBytes("UTF-8"))
+      if (((h(0) >> 4) & 0xf) < 8) 1.0 else -1.0
+    })
   }
 
-  /** md5-seeded ±1 random-projection matrix — the [[hyperplaneSigns]]
-    * stream under an "rp" salt, so projections and LSH planes draw
-    * independent signs. Row j's i-th component is +1 iff the first hex
-    * digit of md5("rp-j-i") < '8'; reproducible in any SQL engine.
+  /** LSH hyperplane signs: [[md5Signs]] unsalted, md5("j-i"). */
+  def hyperplaneSigns(planes: Int, dim: Int): IndexedSeq[IndexedSeq[Double]] =
+    md5Signs("", planes, dim)
+
+  /** Random-projection signs: [[md5Signs]] under the "rp-" salt,
+    * md5("rp-j-i"), so projections and LSH planes draw independent signs.
     */
-  def projectionSigns(outDim: Int, dim: Int): IndexedSeq[IndexedSeq[Double]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    (0 until outDim).map { j =>
-      (1 to dim).map { i =>
-        val hex = md.digest(s"rp-$j-$i".getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        if (hex.charAt(0) < '8') 1.0 else -1.0
-      }
-    }
-  }
+  def projectionSigns(outDim: Int, dim: Int): IndexedSeq[IndexedSeq[Double]] =
+    md5Signs("rp-", outDim, dim)
 
   /** Deterministic random-projection dimensionality reduction (the ±1
     * matrix of Achlioptas 2003 — JL-style distance preservation at
@@ -173,7 +190,7 @@ object Ann {
     // instead of recomputing planes×dim dot products per consumer. cache()
     // not eager localCheckpoint: laziness means constructing the frame
     // launches no job, and lineage survives executor loss
-    val e1 = withNorm(emb.select(col(idCol).as("vec_id"), col(embCol).as("emb")), "emb")
+    val e1 = normed(emb, idCol, embCol)
       .withColumn("bucket", lshBucket("emb", planes, dim).cast("int"))
     val e0 = if (maxBucketSize > 0) e1.cache() else e1
     val e = TextDedup.dropOversize(e0, "bucket", lit(1), maxBucketSize)
@@ -186,115 +203,102 @@ object Ann {
         col("x.bucket").as("bucket"), col("cos"))
   }
 
-  /** IVF coarse assignment against a broadcast centroid frame
-    * (centroid_id, c_emb, c_norm); nearest-by-cosine with deterministic
-    * tiebreak (cos desc, centroid_id asc). Keeps emb/norm columns for
-    * downstream probing.
+  /** The one cell ranking, which [[ivfAssign]] (rank 1) and [[probeCells]]
+    * (ranks 1..nprobe) read: every centroid of the frame (centroid_id,
+    * c_emb, c_norm) scored against each row's `emb`/`norm` as
+    * `__cells`, an array of struct(cos, -id, c). Struct order is the
+    * ranking — cos desc, then centroid_id asc, with Spark's NaN-greatest
+    * double order — so centroid ids must be numeric (the tiebreak negates
+    * them); both fixture families use long ids.
     *
     * Plan shape (the 100 TB contract, pinned in PlanContractsSpec): the
-    * argmin is a PURE PROJECTION — the centroid frame is collapsed to a
-    * single-row `array<struct>` (one tiny single-partition aggregate over
-    * k centroid rows), nested-loop-broadcast onto the corpus (adds one
-    * array column per row, NO row expansion), and the winner picked with
-    * `array_max` over per-centroid `struct(cos, -id, id)` (struct ordering
-    * = cos desc then id asc, with Spark's NaN-greatest double semantics —
-    * identical to the `row_number` ordering this replaces). The corpus
-    * never passes through an exchange at corpus×k width; the earlier
-    * crossJoin+window form shuffled that expanded frame, which at
-    * SemDeDup-scale centroid counts (~100k clusters) is a 100,000× row
-    * amplification through a hash exchange. Centroid ids must be numeric
-    * (the tiebreak negates them); both fixture families use long ids.
+    * centroid frame is collapsed to a single-row `array<struct>` (one tiny
+    * single-partition aggregate over k centroid rows) and
+    * nested-loop-broadcast onto the rows (one array column per row, NO row
+    * expansion). The rows never pass through an exchange at rows×k width;
+    * a crossJoin+window form shuffles that expanded frame, which
+    * at SemDeDup-scale centroid counts (~100k clusters) is a 100,000× row
+    * amplification through a hash exchange.
+    */
+  private def scoreCells(rows: DataFrame, centroids: DataFrame, emb: String,
+      norm: String): DataFrame = {
+    val cents = centroids.agg(collect_list(
+      struct(col("centroid_id"), col("c_emb"), col("c_norm"))).as("__cents"))
+    // collect_list order is nondeterministic — irrelevant: every reader
+    // ranks the scored structs by value
+    rows.crossJoin(broadcast(cents))
+      .withColumn("__cells", transform(col("__cents"), c => struct(
+        (dot(col(emb), c("c_emb")) / (col(norm) * c("c_norm"))).as("cos_full"),
+        (-c("centroid_id")).as("__neg_id"),
+        c.as("c"))))
+  }
+
+  /** IVF coarse assignment against a broadcast centroid frame
+    * (centroid_id, c_emb, c_norm): each vector's rank-1 cell of
+    * [[scoreCells]], picked with `array_max` — a PURE PROJECTION argmin.
+    * Keeps emb/norm columns for downstream probing.
     *
     * `maxCentroids` bounds the forced broadcast of the centroid array
     * (same fail-loud stance as [[requireSmallQuerySet]] — 100k × 64-dim
     * doubles ≈ 51 MB is the sane ceiling, not a sampling knob).
     */
   def ivfAssign(emb: DataFrame, idCol: String, embCol: String,
-      centroids: DataFrame, maxCentroids: Long = DefaultMaxQueryRows): DataFrame = {
-    requireSmallQuerySet(centroids, "ivfAssign centroids", maxCentroids)
-    val e = withNorm(emb.select(col(idCol).as("vec_id"), col(embCol).as("emb")), "emb")
-    val cents = centroids.agg(collect_list(
-      struct(col("centroid_id"), col("c_emb"), col("c_norm"))).as("__cents"))
-    // collect_list order is nondeterministic — irrelevant: array_max over
-    // the scored structs is order-independent
-    val best = array_max(transform(col("__cents"), c =>
-      struct(
-        (dot(col("emb"), c("c_emb")) / (col("norm") * c("c_norm"))).as("cos_full"),
-        (-c("centroid_id")).as("__neg_id"),
-        c("centroid_id").as("centroid_id"))))
-    e.crossJoin(broadcast(cents))
-      .withColumn("__best", best)
-      .filter(col("__best").isNotNull) // empty centroid set assigns nothing
-      .select(col("vec_id"), col("__best.centroid_id").as("centroid_id"),
-        col("emb"), col("norm"),
-        round(col("__best.cos_full"), 4).as("cos"))
-  }
+      centroids: DataFrame, maxCentroids: Long = DefaultMaxQueryRows): DataFrame =
+    nearestCell(normed(emb, idCol, embCol), centroids, maxCentroids)
+      .select("vec_id", "centroid_id", "emb", "norm", "cos")
 
-  /** IVF probe with nprobe=1: top-k neighbors searched only inside each
-    * query's own centroid cell.
+  /** [[ivfAssign]] over a [[normed]] frame, keeping its other columns and
+    * adding the cell's centroid as `c_emb`.
     */
-  def ivfProbe(assigned: DataFrame, queryPred: Column, k: Int,
-      maxQueryRows: Long = DefaultMaxQueryRows): DataFrame = {
-    val q = assigned.filter(queryPred).select(
-      col("vec_id").as("query_id"), col("centroid_id").as("q_cell"),
-      col("emb").as("q_emb"), col("norm").as("q_norm"))
-    requireSmallQuerySet(q, "ivfProbe", maxQueryRows)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cand_cos").desc, col("vec_id").asc)
-    assigned.join(broadcast(q),
-        col("centroid_id") === col("q_cell") && col("vec_id") =!= col("query_id"))
-      .withColumn("cand_cos",
-        dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("centroid_id").as("cell"), round(col("cand_cos"), 4).as("cos"))
+  private def nearestCell(e: DataFrame, centroids: DataFrame,
+      maxCentroids: Long = DefaultMaxQueryRows): DataFrame = {
+    requireSmallQuerySet(centroids, "ivfAssign centroids", maxCentroids)
+    scoreCells(e, centroids, "emb", "norm")
+      .withColumn("__best", array_max(col("__cells")))
+      .filter(col("__best").isNotNull) // empty centroid set assigns nothing
+      .withColumn("centroid_id", col("__best.c.centroid_id"))
+      .withColumn("c_emb", col("__best.c.c_emb"))
+      .withColumn("cos", round(col("__best.cos_full"), 4))
+      .drop("__cents", "__cells", "__best")
   }
 
-  /** IVF probe with configurable nprobe: each query searches its `nprobe`
-    * nearest centroid cells (ranked against the broadcast centroid frame,
-    * deterministic tiebreak), unioned before the per-query top-k heap. The
-    * production recall knob — nprobe=1 misses neighbors that sit just across
-    * a cell boundary; candidates stay bounded at nprobe × mean cell size.
-    * The probe-cell expansion is still one broadcast join: probe rows =
+  /** Each query's `nprobe` nearest cells: ranks 1..nprobe of
+    * [[scoreCells]], so cell rank 1 is the query's own [[ivfAssign]] cell.
+    * `q` is (query_id, q_emb, q_norm); the result adds the cell's
+    * centroid_id and c_emb, one row per probed cell. The broadcast side of
+    * the probe join is queries × nprobe rows, so the guard bounds that
+    * product.
+    */
+  private def probeCells(q: DataFrame, centroids: DataFrame, nprobe: Int,
+      what: String, maxQueryRows: Long): DataFrame = {
+    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+    requireSmallQuerySet(q, what, math.max(1L, maxQueryRows / nprobe))
+    scoreCells(q, centroids, "q_emb", "q_norm")
+      .withColumn("__cell",
+        explode(slice(sort_array(col("__cells"), asc = false), 1, nprobe)))
+      .withColumn("centroid_id", col("__cell.c.centroid_id"))
+      .withColumn("c_emb", col("__cell.c.c_emb"))
+  }
+
+  /** IVF probe: each query searches its `nprobe` nearest centroid cells
+    * ([[probeCells]]) for its top-k. nprobe is the production recall knob
+    * — nprobe=1 (the query's own cell) misses neighbors that sit just
+    * across a cell boundary; candidates stay bounded at nprobe × mean cell
+    * size. The probe-cell expansion is one broadcast join: probe rows =
     * queries × nprobe, tiny next to the candidate table.
     */
   def ivfProbe(assigned: DataFrame, centroids: DataFrame, queryPred: Column,
-      k: Int, nprobe: Int): DataFrame =
-    ivfProbe(assigned, centroids, queryPred, k, nprobe, DefaultMaxQueryRows)
-
-  /** [[ivfProbe]] (nprobe variant) with an explicit broadcast bound; only
-    * one overload may carry default arguments, hence the delegation.
-    */
-  def ivfProbe(assigned: DataFrame, centroids: DataFrame, queryPred: Column,
-      k: Int, nprobe: Int,
-      maxQueryRows: Long): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+      k: Int, nprobe: Int = 1,
+      maxQueryRows: Long = DefaultMaxQueryRows): DataFrame = {
     val q = assigned.filter(queryPred).select(
       col("vec_id").as("query_id"), col("emb").as("q_emb"),
       col("norm").as("q_norm"))
-    // the broadcast frame is queries × nprobe probe rows — bound the product
-    requireSmallQuerySet(q, "ivfProbe(nprobe)",
-      math.max(1L, maxQueryRows / nprobe))
-    val wc = Window.partitionBy("query_id")
-      .orderBy(col("c_cos").desc, col("centroid_id").asc)
-    val probeCells = q.crossJoin(broadcast(centroids))
-      .withColumn("c_cos",
-        dot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
-      .withColumn("cell_rank", row_number().over(wc))
-      .filter(col("cell_rank") <= nprobe)
+    val probe = probeCells(q, centroids, nprobe, "ivfProbe", maxQueryRows)
       .select(col("query_id"), col("q_emb"), col("q_norm"),
         col("centroid_id").as("q_cell"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cand_cos").desc, col("vec_id").asc)
-    assigned.join(broadcast(probeCells),
-        col("centroid_id") === col("q_cell") && col("vec_id") =!= col("query_id"))
-      .withColumn("cand_cos",
-        dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("centroid_id").as("cell"), round(col("cand_cos"), 4).as("cos"))
+    topK(assigned.join(broadcast(probe),
+        col("centroid_id") === col("q_cell") && col("vec_id") =!= col("query_id")),
+      candCos, adc = false, k, cell = true)
   }
 
   /** Fixed-point scale for [[kmeansFit]] mean updates: components are
@@ -445,17 +449,6 @@ object Ann {
       }))
   }
 
-  /** Product quantization encode — the OTHER standard ANN index
-    * compression next to [[quantizeInt8]]: the vector is split into
-    * `subspaces` contiguous blocks and each block is replaced by the id of
-    * its nearest codebook centroid (squared L2, first-index tiebreak), so
-    * a 64-dim float vector compresses to `subspaces` small ints + a shared
-    * codebook. Pure per-row projection — no shuffle, no UDF; the argmin is
-    * `array_position(ds, array_min(ds))` over the per-centroid distance
-    * array, with every squared-difference term expanded as a codegen'd
-    * arithmetic expression (left-associated sum, the same evaluation order
-    * the SQL oracle uses, so distances are bit-identical across engines).
-    */
   /** The PQ codebook as the nested literal the fused kernels inline. */
   private def bookSeq(subspaces: Int, centroidsPerSub: Int,
       dim: Int): Seq[Seq[Seq[Double]]] = {
@@ -489,6 +482,16 @@ object Ann {
     graft.functions.GraftFunctions.pqAdc(col(qEmbCol), col(codesCol),
       bookSeq(subspaces, centroidsPerSub, dim))
 
+  /** Product quantization encode — the OTHER standard ANN index
+    * compression next to [[quantizeInt8]]: the vector is split into
+    * `subspaces` contiguous blocks and each block is replaced by the id of
+    * its nearest codebook centroid (squared L2, first-index tiebreak), so
+    * a 64-dim float vector compresses to `subspaces` small ints + a shared
+    * codebook. Pure per-row projection — no shuffle; the codes come from
+    * one `graft_pq_codes` node ([[pqCodesArr]]), left-associated sums in
+    * the SQL oracle's evaluation order, so distances are bit-identical
+    * across engines.
+    */
   def pqEncode(emb: DataFrame, idCol: String, embCol: String,
       subspaces: Int, centroidsPerSub: Int, dim: Int): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
@@ -514,7 +517,7 @@ object Ann {
     * arithmetic — no shuffle of the corpus beyond the final per-query
     * top-k window. Distances are left-associated sums of products of
     * dyadic codebook literals and the query's doubles — bit-identical in
-    * any engine evaluating the same order, so `adc` is emitted unrounded.
+    * any engine evaluating the same order.
     */
   def pqTopK(emb: DataFrame, idCol: String, embCol: String,
       queryPred: Column, k: Int, subspaces: Int, centroidsPerSub: Int,
@@ -527,15 +530,9 @@ object Ann {
     requireSmallQuerySet(q, "pqTopK", maxQueryRows)
     // per subspace: the query's exact distance to each of the centroids,
     // looked up by the corpus row's code
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("vec_id").asc)
-    codes.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("adc",
-        pqAdcExpr("q_emb", "__codes", subspaces, centroidsPerSub, dim))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("adc"))
+    topK(codes.join(broadcast(q), col("vec_id") =!= col("query_id")),
+      pqAdcExpr("q_emb", "__codes", subspaces, centroidsPerSub, dim),
+      adc = true, k, cell = false)
   }
 
   /** IVF-PQ top-k — the production ANN index shape (Jégou et al. 2011's
@@ -557,36 +554,39 @@ object Ann {
   def ivfPqTopK(emb: DataFrame, idCol: String, embCol: String,
       centroids: DataFrame, queryPred: Column, k: Int, nprobe: Int,
       subspaces: Int, centroidsPerSub: Int, dim: Int,
-      maxQueryRows: Long = DefaultMaxQueryRows): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+      maxQueryRows: Long = DefaultMaxQueryRows): DataFrame =
+    ivfPq(emb, idCol, embCol, centroids, queryPred, k, nprobe, subspaces,
+      centroidsPerSub, dim, maxQueryRows, residual = false)
+
+  /** The one IVF-PQ search behind [[ivfPqTopK]] and [[ivfPqResidualTopK]]:
+    * they differ only in what is PQ-coded — the vector, or its residual
+    * `x − c(x)` — and what builds each probed cell's lookup table — the
+    * query, or its per-cell residual `q − c`.
+    */
+  private def ivfPq(emb: DataFrame, idCol: String, embCol: String,
+      centroids: DataFrame, queryPred: Column, k: Int, nprobe: Int,
+      subspaces: Int, centroidsPerSub: Int, dim: Int, maxQueryRows: Long,
+      residual: Boolean): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
-    val assigned = ivfAssign(emb, idCol, embCol, centroids)
+    val assigned = nearestCell(normed(emb, idCol, embCol), centroids)
+    // the vector, or its residual against the cell's centroid `c_emb`
+    def resid(v: String): Column =
+      if (residual) zip_with(col(v), col("c_emb"), (x, c) => x - c) else col(v)
     // corpus index: cell + codes ONLY — raw embeddings never leave the
     // projection that encodes them
-    val codes = assigned.select(col("vec_id"), col("centroid_id"),
-      pqCodesArr("emb", subspaces, centroidsPerSub, dim).as("__codes"))
+    val codes = assigned.withColumn("__pq", resid("emb")).select(
+      col("vec_id"), col("centroid_id"),
+      pqCodesArr("__pq", subspaces, centroidsPerSub, dim).as("__codes"))
     val q = assigned.filter(queryPred).select(col("vec_id").as("query_id"),
       col("emb").as("q_emb"), col("norm").as("q_norm"))
-    // the broadcast frame is queries × nprobe probe rows — bound the product
-    requireSmallQuerySet(q, "ivfPqTopK", math.max(1L, maxQueryRows / nprobe))
-    val wc = Window.partitionBy("query_id")
-      .orderBy(col("c_cos").desc, col("centroid_id").asc)
-    val probeCells = q.crossJoin(broadcast(centroids))
-      .withColumn("c_cos",
-        dot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
-      .withColumn("cell_rank", row_number().over(wc))
-      .filter(col("cell_rank") <= nprobe)
-      .select(col("query_id"), col("q_emb"), col("centroid_id").as("q_cell"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("vec_id").asc)
-    codes.join(broadcast(probeCells),
-        col("centroid_id") === col("q_cell") && col("vec_id") =!= col("query_id"))
-      .withColumn("adc",
-        pqAdcExpr("q_emb", "__codes", subspaces, centroidsPerSub, dim))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("centroid_id").as("cell"), col("adc"))
+    val probe = probeCells(q, centroids, nprobe,
+      if (residual) "ivfPqResidualTopK" else "ivfPqTopK", maxQueryRows)
+      .select(col("query_id"), resid("q_emb").as("__q_lut"),
+        col("centroid_id").as("q_cell"))
+    topK(codes.join(broadcast(probe),
+        col("centroid_id") === col("q_cell") && col("vec_id") =!= col("query_id")),
+      pqAdcExpr("__q_lut", "__codes", subspaces, centroidsPerSub, dim),
+      adc = true, k, cell = true)
   }
 
   /** Bulk kNN graph over the WHOLE corpus — every vector is a query. The
@@ -599,11 +599,12 @@ object Ann {
     * equi-join whose exchange carries O(corpus) rows, never a broadcast
     * and never an all-pairs product; candidate volume is Σ cell², so the
     * centroid count is the scale knob exactly as in [[semanticDedup]],
-    * and `maxCellSize` (0 = off) skips degenerate cells
-    * (recall-for-boundedness, audit via the absent rows). Neighbors
+    * and `maxCellSize` (0 = off) skips degenerate cells through the
+    * shared cap [[TextDedup.dropOversize]] (recall-for-boundedness,
+    * audit via the absent rows). Neighbors
     * within the same cell only — nprobe>1 bulk form would union shifted
     * assignments; compose if needed. Output: (query_id, rank,
-    * neighbor_id, cell, cos), rank 1..k by cos desc / id asc.
+    * neighbor_id, cell, cos).
     */
   def knnGraph(emb: DataFrame, idCol: String, embCol: String,
       centroids: DataFrame, k: Int, maxCellSize: Long = 0L): DataFrame =
@@ -614,33 +615,20 @@ object Ann {
       k, maxCellSize)
 
   /** [[knnGraph]]'s core over a prebuilt (vec_id, centroid_id, emb, norm)
-    * assignment frame — exposed so [[knnGraphIncremental]] can run it over
-    * the batch-touched cells only.
+    * assignment frame — exposed so [[knnGraphIncremental]] and st69 can run
+    * it over the batch-touched cells only.
     */
   def knnGraphFromAssigned(assigned0: DataFrame, k: Int,
       maxCellSize: Long = 0L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val assigned =
-      if (maxCellSize <= 0) assigned0
-      else {
-        val ok = assigned0.groupBy("centroid_id")
-          .agg(count(lit(1)).as("__n")).filter(col("__n") <= maxCellSize)
-          .select("centroid_id")
-        assigned0.join(ok, Seq("centroid_id"))
-      }
+    val assigned = TextDedup.dropOversize(assigned0, "centroid_id", lit(1),
+      maxCellSize)
     val q = assigned.select(col("centroid_id"),
       col("vec_id").as("query_id"), col("emb").as("q_emb"),
       col("norm").as("q_norm"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cand_cos").desc, col("vec_id").asc)
-    assigned.join(q, Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cand_cos",
-        dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("centroid_id").as("cell"), round(col("cand_cos"), 4).as("cos"))
+    topK(assigned.join(q, Seq("centroid_id"))
+        .filter(col("vec_id") =!= col("query_id")),
+      candCos, adc = false, k, cell = true)
   }
 
   /** Incremental kNN-graph maintenance — the dd46/dd51 ingest pattern
@@ -649,53 +637,31 @@ object Ann {
     * within-cell computation), so the existing graph's rows for untouched
     * cells are kept verbatim and only the touched cells re-run the
     * self-join — cost proportional to the batch's cell footprint, never
-    * the corpus. `oldGraph` is a prior [[knnGraph]] output over
-    * `allEmb.filter(!batchPred)`; returns the graph over ALL of
-    * `allEmb`, row-identical to a full rebuild (spec + oracle pin it).
+    * the corpus. `oldGraph` is a prior [[knnGraph]] output over `corpus`,
+    * the pre-batch vector set; `batch` is the arriving one, as a frame —
+    * the form a streaming maintenance loop needs (`foreachBatch` hands
+    * the batch ROWS); corpus ∪ batch is assigned once with its batch rows
+    * tagged, and the touched cells are the tagged rows' cells. Returns
+    * the graph over corpus ∪ batch, row-identical to a full rebuild
+    * (sim54's oracle is sim52's full graph; st57 parity-requires it
+    * across micro-batch partitionings).
     * `maxCellSize` must match the value the old graph was built with —
     * recomputed touched cells apply the same degenerate-cell skip, so
     * the row-identity contract holds for capped builds too (0 = off,
     * the default, matching [[knnGraph]]'s).
     */
-  def knnGraphIncremental(oldGraph: DataFrame, allEmb: DataFrame,
-      idCol: String, embCol: String, centroids: DataFrame, k: Int,
-      batchPred: Column, maxCellSize: Long = 0L): DataFrame = {
-    val assigned = ivfAssign(allEmb, idCol, embCol, centroids)
-      .select("vec_id", "centroid_id", "emb", "norm")
-      .localCheckpoint(false)
-    val touched = assigned.filter(batchPred)
-      .select(col("centroid_id")).distinct().localCheckpoint(false)
-    knnGraphPatch(oldGraph, assigned, touched, k, maxCellSize)
-  }
-
-  /** [[knnGraphIncremental]] with the batch as a FRAME instead of a
-    * predicate — the form a streaming maintenance loop needs
-    * (`foreachBatch` hands the batch ROWS; deriving a predicate would
-    * mean collecting batch ids to the driver). `corpus` is the pre-batch
-    * vector set `oldGraph` covers; `batch` is the arriving one. Same
-    * row-identity-to-full-rebuild contract (st57 parity-requires it
-    * against the ORACLED sim52 twin across micro-batch partitionings);
-    * the batch re-assigns through a second `ivfAssign` projection —
-    * batch-sized, no exchange.
-    */
-  def knnGraphIncrementalBatch(oldGraph: DataFrame, corpus: DataFrame,
+  def knnGraphIncremental(oldGraph: DataFrame, corpus: DataFrame,
       batch: DataFrame, idCol: String, embCol: String,
       centroids: DataFrame, k: Int, maxCellSize: Long = 0L): DataFrame = {
-    val all = corpus.select(col(idCol), col(embCol))
-      .unionByName(batch.select(col(idCol), col(embCol)))
-    val assigned = ivfAssign(all, idCol, embCol, centroids)
-      .select("vec_id", "centroid_id", "emb", "norm")
+    def tagged(df: DataFrame, fresh: Boolean): DataFrame =
+      normed(df, idCol, embCol).withColumn("__fresh", lit(fresh))
+    val assigned = nearestCell(
+        tagged(corpus, fresh = false).unionByName(tagged(batch, fresh = true)),
+        centroids)
+      .select("vec_id", "centroid_id", "emb", "norm", "__fresh")
       .localCheckpoint(false)
-    val touched = ivfAssign(batch, idCol, embCol, centroids)
+    val touched = assigned.filter(col("__fresh"))
       .select(col("centroid_id")).distinct().localCheckpoint(false)
-    knnGraphPatch(oldGraph, assigned, touched, k, maxCellSize)
-  }
-
-  /** Shared patch step: keep untouched cells' rows verbatim, re-run the
-    * within-cell self-join over touched cells only.
-    */
-  private def knnGraphPatch(oldGraph: DataFrame, assigned: DataFrame,
-      touched: DataFrame, k: Int, maxCellSize: Long): DataFrame = {
     val kept = oldGraph.join(
       touched.withColumnRenamed("centroid_id", "cell"), Seq("cell"),
       "left_anti")
@@ -785,56 +751,17 @@ object Ann {
     * builds its lookup tables from `q − c` PER PROBED CELL — residuals
     * concentrate around 0 far more tightly than raw vectors, so the same
     * codebook budget quantizes them with much lower distortion (the
-    * reason production IVFADC always encodes residuals). Same two-pass
-    * shuffle-free corpus shape as [[ivfPqTopK]]: one projection to
-    * (cell, residual codes) — the centroid join is a guarded broadcast,
-    * never an exchange — and one broadcast-probe scan; the per-cell query
-    * LUT means probe rows carry `q_res` instead of `q_emb`, everything
-    * else identical. Distances stay bit-identical cross-engine: the
-    * residual is an element-wise double subtraction and the ADC terms are
-    * the same left-associated sums over it.
+    * reason production IVFADC always encodes residuals). The search and
+    * its plan shape are [[ivfPqTopK]]'s. Distances stay bit-identical
+    * cross-engine: the residual is an element-wise double subtraction and
+    * the ADC terms are the same left-associated sums over it.
     */
   def ivfPqResidualTopK(emb: DataFrame, idCol: String, embCol: String,
       centroids: DataFrame, queryPred: Column, k: Int, nprobe: Int,
       subspaces: Int, centroidsPerSub: Int, dim: Int,
-      maxQueryRows: Long = DefaultMaxQueryRows): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    graft.functions.GraftFunctions.register(emb.sparkSession)
-    val assigned = ivfAssign(emb, idCol, embCol, centroids)
-    val cSlim = centroids.select(col("centroid_id"), col("c_emb"))
-    // corpus index: cell + residual codes only; the residual is computed
-    // once in the same projection that encodes it
-    val withRes = assigned.join(broadcast(cSlim), Seq("centroid_id"))
-      .withColumn("__res", zip_with(col("emb"), col("c_emb"), (x, c) => x - c))
-    val codes = withRes.select(col("vec_id"), col("centroid_id"),
-      pqCodesArr("__res", subspaces, centroidsPerSub, dim).as("__codes"))
-    val q = assigned.filter(queryPred).select(col("vec_id").as("query_id"),
-      col("emb").as("q_emb"), col("norm").as("q_norm"))
-    requireSmallQuerySet(q, "ivfPqResidualTopK",
-      math.max(1L, maxQueryRows / nprobe))
-    val wc = Window.partitionBy("query_id")
-      .orderBy(col("c_cos").desc, col("centroid_id").asc)
-    // probe rows carry the query's PER-CELL residual — LUTs are built
-    // against the same centroid the candidate codes are relative to
-    val probeCells = q.crossJoin(broadcast(centroids))
-      .withColumn("c_cos",
-        dot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
-      .withColumn("cell_rank", row_number().over(wc))
-      .filter(col("cell_rank") <= nprobe)
-      .select(col("query_id"),
-        zip_with(col("q_emb"), col("c_emb"), (x, c) => x - c).as("__q_res"),
-        col("centroid_id").as("q_cell"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("vec_id").asc)
-    codes.join(broadcast(probeCells),
-        col("centroid_id") === col("q_cell") && col("vec_id") =!= col("query_id"))
-      .withColumn("adc",
-        pqAdcExpr("__q_res", "__codes", subspaces, centroidsPerSub, dim))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        col("centroid_id").as("cell"), col("adc"))
-  }
+      maxQueryRows: Long = DefaultMaxQueryRows): DataFrame =
+    ivfPq(emb, idCol, embCol, centroids, queryPred, k, nprobe, subspaces,
+      centroidsPerSub, dim, maxQueryRows, residual = true)
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
     * arXiv:2303.09540): cluster the corpus by nearest centroid, then inside
@@ -956,21 +883,13 @@ object Ann {
   def rerankTopK(emb: DataFrame, idCol: String, embCol: String,
       candidates: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val full = withNorm(emb.select(col(idCol).as("vec_id"),
-      col(embCol).as("emb")), "emb")
+    val full = normed(emb, idCol, embCol)
     val q = full.select(col("vec_id").as("query_id"),
       col("emb").as("q_emb"), col("norm").as("q_norm"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_full").desc, col("neighbor_id").asc)
-    candidates.select("query_id", "neighbor_id")
-      .join(full.withColumnRenamed("vec_id", "neighbor_id"), Seq("neighbor_id"))
-      .join(q, Seq("query_id"))
-      .withColumn("cos_full",
-        dot(col("emb"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos_full"), 4).as("cos"))
+    topK(candidates.select(col("query_id"), col("neighbor_id").as("vec_id"))
+        .join(full, Seq("vec_id"))
+        .join(q, Seq("query_id")),
+      candCos, adc = false, k, cell = false)
   }
 
   /** Symmetric per-vector int8 scalar quantization — the 4× memory

@@ -61,8 +61,8 @@ object Similarity extends QuerySet {
   /** IVF probe (nprobe=1): queries vec_id<5 search only their own cell. */
   def sim40(s0: SparkSession, dir: String): DataFrame = {
     val s = withDot(s0)
-    Ann.ivfProbe(
-      Ann.ivfAssign(embD(s, dir), "vec_id", "emb", centroids(s, dir)),
+    val c = centroids(s, dir)
+    Ann.ivfProbe(Ann.ivfAssign(embD(s, dir), "vec_id", "emb", c), c,
       queryPred = col("vec_id") < 5, k = 3)
   }
 
@@ -178,8 +178,8 @@ object Similarity extends QuerySet {
   def sim50(s0: SparkSession, dir: String): DataFrame = {
     val s = withDot(s0)
     val e = embD(s, dir)
-    val approx = Ann.ivfProbe(
-      Ann.ivfAssign(e, "vec_id", "emb", centroids(s, dir)),
+    val c = centroids(s, dir)
+    val approx = Ann.ivfProbe(Ann.ivfAssign(e, "vec_id", "emb", c), c,
       queryPred = col("vec_id") < 5, k = 3)
     val exact = Ann.cosineTopK(e, "vec_id", "emb",
       queryPred = col("vec_id") < 5, k = 3)
@@ -225,7 +225,7 @@ object Similarity extends QuerySet {
   }
 
   /** Incremental kNN-graph maintenance (sim54): the even half's graph is
-    * the pre-existing state, the odd half arrives as a batch, and only
+    * the pre-existing state, the odd half arrives as a batch frame, and only
     * the batch-touched cells re-run the self-join — cost proportional to
     * the batch's cell footprint. Because assignment is per-vector and
     * neighbor lists are within-cell, the maintained graph is
@@ -237,10 +237,10 @@ object Similarity extends QuerySet {
     val s = withDot(s0)
     val e = embD(s, dir)
     val c = centroids(s, dir)
-    val old = Ann.knnGraph(e.filter(col("vec_id") % 2 === 0),
+    val evens = e.filter(col("vec_id") % 2 === 0)
+    val old = Ann.knnGraph(evens, "vec_id", "emb", c, k = 3)
+    Ann.knnGraphIncremental(old, evens, e.filter(col("vec_id") % 2 === 1),
       "vec_id", "emb", c, k = 3)
-    Ann.knnGraphIncremental(old, e, "vec_id", "emb", c, k = 3,
-      batchPred = col("vec_id") % 2 === 1)
   }
 
   /** nprobe recall sweep (sim55): the recall@k tuning loop run for

@@ -452,7 +452,7 @@ object StreamingQueries extends QuerySet {
     * pre-stream state; the odd half arrives as THREE staged files drained
     * `maxFilesPerTrigger=1`, so the maintenance loop runs across three
     * real micro-batches, each patching ONLY its batch's touched cells via
-    * `Ann.knnGraphIncrementalBatch` (the st50/st51 prebuilt-state pattern
+    * `Ann.knnGraphIncremental` (the st50/st51 prebuilt-state pattern
     * applied to the graph family — the batch arrives as a FRAME, no
     * driver-side id collection). State (graph + corpus-so-far) is
     * checkpoint-materialized per trigger — the deliberately
@@ -478,7 +478,7 @@ object StreamingQueries extends QuerySet {
     drain(feed(s, staged, perTrigger = 1).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val b = Q.vecEmb(batch)
-        graph = graft.operators.Ann.knnGraphIncrementalBatch(
+        graph = graft.operators.Ann.knnGraphIncremental(
           graph, corpus, b, "vec_id", "emb", centroids, k = 3)
           .localCheckpoint(true)
         corpus = corpus.unionByName(b).localCheckpoint(true)

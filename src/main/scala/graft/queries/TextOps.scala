@@ -399,7 +399,7 @@ object TextOps extends QuerySet {
       .select(col("cid").as("centroid_id"), col("emb").as("c_emb"),
         col("norm").as("c_norm"))
     val assigned = graft.operators.Ann.ivfAssign(embedded, "cid", "emb", cents)
-    graft.operators.Ann.ivfProbe(assigned,
+    graft.operators.Ann.ivfProbe(assigned, cents,
       queryPred = col("vec_id") < 200000, k = 3)
   }
 

@@ -161,12 +161,19 @@ object X12Pipeline {
       // the 13 gold writes overlap (see the object's scaladoc); the
       // launcher returns once every write has ended, failed or not
       val martWrites = silverMarts.map { case (m, df) => () =>
+        val path = s"$outDir/${m.name}"
+        // a dynamic overwrite commits through a staging dir that it then
+        // deletes, _SUCCESS included, so a per-date mart's marker is kept
+        // here: removed before the write, created once the write committed
+        val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
+        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (m.perDate) fs.delete(marker, false)
         // a per-write option, not the session conf, so the concurrent
         // writes on this session keep their own overwrite mode
         val w = df.write.mode("overwrite")
           .option("partitionOverwriteMode", if (m.perDate) "dynamic" else "static")
-        (if (m.partitioned) w.partitionBy("processing_date") else w)
-          .parquet(s"$outDir/${m.name}")
+        (if (m.partitioned) w.partitionBy("processing_date") else w).parquet(path)
+        if (m.perDate) fs.create(marker, true).close()
       }
       Jobs.inParallel(spark)(martWrites :+ (() =>
         daily.write.mode("overwrite").parquet(s"$outDir/gold_daily_analytics")): _*)

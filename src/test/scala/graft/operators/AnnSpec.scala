@@ -38,7 +38,7 @@ class AnnSpec extends AnyFunSuite with SparkTestBase {
 
   test("ivfProbe nprobe=2 is a superset search: top-k cosines never worse than nprobe=1") {
     val assigned = Ann.ivfAssign(emb, "vec_id", "emb", centroids).cache()
-    val p1 = Ann.ivfProbe(assigned, col("vec_id") < 5, k = 3)
+    val p1 = Ann.ivfProbe(assigned, centroids, col("vec_id") < 5, k = 3)
     val p2 = Ann.ivfProbe(assigned, centroids, col("vec_id") < 5, k = 3, nprobe = 2)
     // per (query, rank) the 2-cell candidate pool contains the 1-cell pool,
     // so the rank-r cosine can only improve
@@ -46,10 +46,6 @@ class AnnSpec extends AnyFunSuite with SparkTestBase {
       .join(p2.select(col("query_id"), col("rank"), col("cos").as("cos2")),
         Seq("query_id", "rank"))
     assert(j.filter(col("cos2") < col("cos1")).count() == 0)
-    // nprobe=1 must equal the dedicated single-cell implementation
-    val p1viaMulti = Ann.ivfProbe(assigned, centroids, col("vec_id") < 5, k = 3,
-      nprobe = 1)
-    assert(p1.collect().toSet == p1viaMulti.collect().toSet)
   }
 
   test("oversized query sets fail loud before the forced broadcast") {
@@ -63,15 +59,15 @@ class AnnSpec extends AnyFunSuite with SparkTestBase {
     assert(eTop.getMessage.contains("cosineTopK"))
     val assigned = Ann.ivfAssign(emb, "vec_id", "emb", centroids)
     val e1 = intercept[IllegalArgumentException] {
-      Ann.ivfProbe(assigned, wide, k = 3, maxQueryRows = 5L)
+      Ann.ivfProbe(assigned, centroids, wide, k = 3, maxQueryRows = 5L)
     }
-    assert(e1.getMessage.contains("ivfProbe"))
+    assert(e1.getMessage.contains("ivfProbe: frame has > 5 rows"))
     val e2 = intercept[IllegalArgumentException] {
       // nprobe divides the budget: 10 queries x nprobe 2 > 12
       Ann.ivfProbe(assigned, centroids, col("vec_id") < 10, k = 3,
         nprobe = 2, maxQueryRows = 12L)
     }
-    assert(e2.getMessage.contains("ivfProbe(nprobe)"))
+    assert(e2.getMessage.contains("ivfProbe: frame has > 6 rows"))
     // within-bound predicates pass through unchanged
     assert(Ann.cosineTopK(emb, "vec_id", "emb", col("vec_id") < 3, k = 2,
       maxQueryRows = 5L).count() > 0)
@@ -431,19 +427,19 @@ class AnnSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("knnGraphIncremental recomputes ONLY touched cells and equals a full rebuild") {
-    import spark.implicits._
     val evens = emb.filter(col("vec_id") % 2 === 0)
+    val odds = emb.filter(col("vec_id") % 2 === 1)
     val old = Ann.knnGraph(evens, "vec_id", "emb", centroids, k = 3)
       .localCheckpoint(true)
     val full = Ann.knnGraph(emb, "vec_id", "emb", centroids, k = 3)
-    val inc = Ann.knnGraphIncremental(old, emb, "vec_id", "emb", centroids,
-      k = 3, batchPred = col("vec_id") % 2 === 1)
+    val inc = Ann.knnGraphIncremental(old, evens, odds, "vec_id", "emb",
+      centroids, k = 3)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("query_id", "rank").collect().toSeq
     assert(canon(inc) == canon(full))
 
     // untouched cells must be carried VERBATIM: restrict the batch to one
-    // cell and poison an old row in a DIFFERENT cell — the poison survives
+    // vector and poison an old row in a DIFFERENT cell — the poison survives
     val assigned = Ann.ivfAssign(emb, "vec_id", "emb", centroids)
     val cells = assigned.select("vec_id", "centroid_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -452,8 +448,8 @@ class AnnSpec extends AnyFunSuite with SparkTestBase {
     val poisoned = old.withColumn("cos",
       when(col("cell") === otherCell && col("rank") === 1, lit(99.0))
         .otherwise(col("cos")))
-    val inc2 = Ann.knnGraphIncremental(poisoned, emb, "vec_id", "emb",
-      centroids, k = 3, batchPred = col("vec_id") === odd)
+    val inc2 = Ann.knnGraphIncremental(poisoned, evens,
+      emb.filter(col("vec_id") === odd), "vec_id", "emb", centroids, k = 3)
     assert(inc2.filter(col("cos") === 99.0).count() > 0,
       "rows of untouched cells must be kept verbatim, not recomputed")
     assert(inc2.filter(col("cell") === cells(odd) && col("cos") === 99.0)
@@ -469,18 +465,42 @@ class AnnSpec extends AnyFunSuite with SparkTestBase {
       maxCellSize = cap).localCheckpoint(true)
     val fullCapped = Ann.knnGraph(emb, "vec_id", "emb", centroids, k = 3,
       maxCellSize = cap)
-    val incCapped = Ann.knnGraphIncremental(oldCapped, emb, "vec_id", "emb",
-      centroids, k = 3, batchPred = col("vec_id") % 2 === 1, maxCellSize = cap)
+    val incCapped = Ann.knnGraphIncremental(oldCapped, evens, odds,
+      "vec_id", "emb", centroids, k = 3, maxCellSize = cap)
     assert(canon(incCapped) == canon(fullCapped),
       "capped incremental must equal a capped full rebuild")
+  }
 
-    // batch-as-frame form (the streaming foreachBatch shape): identical
-    // to the predicate form and hence to the full rebuild
-    val odds = emb.filter(col("vec_id") % 2 === 1)
-    val incBatch = Ann.knnGraphIncrementalBatch(old, evens, odds,
-      "vec_id", "emb", centroids, k = 3)
-    assert(canon(incBatch) == canon(full),
-      "frame-batch incremental must equal the full rebuild")
+  test("equal scores rank by candidate id ascending in every top-k search") {
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    // ids 5, 3, 4 duplicate query 1's vector: equal top cosine, and equal
+    // PQ codes, hence the least ADC. The top 2 must be 3 then 4.
+    val q = Seq(1.0, 0.0, 0.0, 0.0)
+    val vecs = Seq((1L, q), (5L, q), (3L, q), (4L, q),
+      (2L, Seq(0.0, 1.0, 0.0, 0.0)), (6L, Seq(0.5, 0.5, 0.0, 0.0)))
+      .toDF("vec_id", "emb")
+    // one centroid: every vector shares one cell
+    val cents = Seq((0L, Seq(1.0, 1.0, 0.0, 0.0))).toDF("centroid_id", "c_emb")
+      .withColumn("c_norm",
+        sqrt(graft.functions.GraftFunctions.dot(col("c_emb"), col("c_emb"))))
+    val isQ = col("vec_id") === 1
+    def top(df: org.apache.spark.sql.DataFrame): Seq[(Int, Long)] =
+      df.filter(col("query_id") === 1).select("rank", "neighbor_id")
+        .as[(Int, Long)].collect().sortBy(_._1).toSeq
+    val want = Seq(1 -> 3L, 2 -> 4L)
+    val results = Seq(
+      "cosineTopK" -> Ann.cosineTopK(vecs, "vec_id", "emb", isQ, k = 2),
+      "ivfProbe" -> Ann.ivfProbe(Ann.ivfAssign(vecs, "vec_id", "emb", cents),
+        cents, isQ, k = 2),
+      "knnGraph" -> Ann.knnGraph(vecs, "vec_id", "emb", cents, k = 2),
+      "pqTopK" -> Ann.pqTopK(vecs, "vec_id", "emb", isQ, k = 2,
+        subspaces = 2, centroidsPerSub = 8, dim = 4),
+      "ivfPqTopK" -> Ann.ivfPqTopK(vecs, "vec_id", "emb", cents, isQ, k = 2,
+        nprobe = 1, subspaces = 2, centroidsPerSub = 8, dim = 4),
+      "rerankTopK" -> Ann.rerankTopK(vecs, "vec_id", "emb",
+        Seq(5L, 4L, 3L, 2L).map(1L -> _).toDF("query_id", "neighbor_id"), k = 2))
+    results.foreach { case (name, df) => assert(top(df) == want, name) }
   }
 
   test("nprobeSweep: recall is monotone in nprobe and reaches 1.0 once every cell is probed") {

@@ -363,6 +363,12 @@ class PlanContractsSpec extends AnyFunSuite with SparkTestBase {
     }.toMap
     assigned.select("vec_id", "centroid_id").as[(Long, Long)].collect()
       .foreach { case (id, cid) => assert(brute(id) == cid, s"vec $id") }
+    // probing reads the same cell ranking as a projection: an nprobe
+    // search's only hash exchange is its per-query top-k window
+    val probe = Ann.ivfProbe(assigned, centroids, col("vec_id") < 5, k = 3,
+      nprobe = 2).queryExecution.executedPlan.toString
+    assert(countOf(probe, "Exchange hashpartitioning") == 1,
+      s"expected only the query_id top-k window exchange:\n$probe")
   }
 
   test("bloomScreen prunes the reference scan map-side: might_contain below any exchange") {

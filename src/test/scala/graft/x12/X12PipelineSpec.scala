@@ -471,19 +471,14 @@ class X12PipelineSpec extends AnyFunSuite with SparkTestBase with TempDirs {
     intercept[Exception](runOnce())
     assert(X12Pipeline.processedFiles(spark, out).count() == 0,
       "a run whose mart write failed must ledger nothing")
-    // every other gold write had ended when run threw: committed, with no
-    // task output still staged. A static write marks its commit with
-    // _SUCCESS; a per-date mart's dynamic write commits by moving its
-    // partition out of a `.spark-staging-<job>` dir, which it then deletes
+    // every other gold write had ended when run threw: committed, marked
+    // by _SUCCESS, with no task output still staged (a per-date mart's
+    // dynamic write stages in a `.spark-staging-<job>` dir)
     val others = X12Gold.marts.map(_.name).filterNot(_ == "gold_business_kpis") :+
       "gold_daily_analytics"
-    val perDate = X12Gold.marts.filter(_.perDate).map(_.name).toSet
     others.foreach { m =>
       val entries = Option(new java.io.File(s"$out/$m").list()).toSeq.flatten
-      val committed =
-        if (perDate(m)) entries.contains("processing_date=2025-09-10")
-        else entries.contains("_SUCCESS")
-      assert(committed, s"$m was not committed: $entries")
+      assert(entries.contains("_SUCCESS"), s"$m was not committed: $entries")
       assert(!entries.exists(e => e == "_temporary" || e.startsWith(".spark-staging")),
         s"$m still staging: $entries")
     }
